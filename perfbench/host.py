@@ -103,51 +103,16 @@ def process_tree(root: int | None = None) -> list[int]:
     return tree
 
 
-# JVM just-in-time compiler threads: their CPU is warm-up work that keeps
-# running into the first measured passes, so it is counted apart.
-_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
-
-
-def _jit_ticks(pid: int) -> int:
+def tree_cpu_seconds(root: int | None = None) -> float:
+    """CPU of the tree in seconds: user+system time, including reaped
+    children."""
     ticks = 0
-    try:
-        tids = os.listdir(f"/proc/{pid}/task")
-    except OSError:
-        return 0
-    for tid in tids:
-        try:
-            with open(f"/proc/{pid}/task/{tid}/stat") as f:
-                raw = f.read()
-        except OSError:
-            continue
-        comm = raw[raw.index("(") + 1:raw.rindex(")")]
-        if comm.startswith(_JIT_THREADS):
-            fields = raw[raw.rindex(")") + 2:].split()
-            ticks += int(fields[11]) + int(fields[12])
-    return ticks
-
-
-def tree_cpu_seconds(root: int | None = None) -> tuple[float, float]:
-    """(CPU, JIT CPU) of the tree in seconds: user+system time including
-    reaped children, and the part of it spent in JVM JIT compiler threads."""
-    ticks = jit = 0
     for pid in process_tree(root):
         fields = _stat_fields(pid)
-        if fields is None:
-            continue
-        # utime, stime, cutime, cstime (proc(5) fields 14-17)
-        ticks += sum(int(x) for x in fields[11:15])
-        if _comm(pid) == "java":
-            jit += _jit_ticks(pid)
-    return ticks / _CLK_TCK, jit / _CLK_TCK
-
-
-def _comm(pid: int) -> str:
-    try:
-        with open(f"/proc/{pid}/comm") as f:
-            return f.read().strip()
-    except OSError:
-        return ""
+        if fields is not None:
+            # utime, stime, cutime, cstime (proc(5) fields 14-17)
+            ticks += sum(int(x) for x in fields[11:15])
+    return ticks / _CLK_TCK
 
 
 def tree_peak_rss_mb(root: int | None = None) -> float:

@@ -265,7 +265,7 @@ def spark_layers(sm: SparkMetrics, li, tracer: Tracer) -> dict:
             "ddsketch_agg.sketch_from_histogram", ddsketch_agg.sketch_from_histogram(hist, cfg, by))
         _, out["ddsketch_agg.delete_s"], _ = act(
             "ddsketch_agg.delete_from_sketch",
-            ddsketch_agg.delete_from_sketch(states, li.flat, li.flat_value, cfg, by))
+            ddsketch_agg.delete_from_sketch(states, li.deleted, li.flat_value, cfg, by))
         _, out["ddsketch_agg.evaluate_s"], _ = act(
             "ddsketch_agg.quantiles_from_sketch", ddsketch_agg.quantiles_from_sketch(states, Q_GRID, by))
 

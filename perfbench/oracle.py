@@ -13,9 +13,9 @@ Bounds, as the library documents them:
   2 * 2.9 / k and 6 / delta, the margins the library's own tests assert.
 * HyperLogLog (p=12): relative error at most four standard errors,
   4 * 1.04 / sqrt(2^p).
-* Count-min: never underestimates, overshoots by at most e / width * N, and
-  returns every item whose exact count reaches phi * N.
-* Bloom: no false negatives, and ``n`` counts every inserted value.
+* Count-min: ``n`` is exact, every row of counters sums to ``n``, and the
+  counters equal the library's numpy core over the same values (counters
+  are exact integers).
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from dataclasses import dataclass
 import numpy as np
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig, alpha_at_level
-from ddsketch_spark.core import bloom as bloom_core
 from ddsketch_spark.core import ddsketch as dds_core
 
 QS = np.asarray(Q_GRID, dtype=np.float64)
@@ -64,13 +63,13 @@ def groups_of(keys: np.ndarray, values: np.ndarray, cfg: DDSketchConfig, skew: f
 
     ``skew`` multiplies every exact value and shifts every count; the
     self-test passes 1.1 to prove that a wrong oracle makes ops fail."""
-    order = np.lexsort((values, keys))
+    order = np.argsort(keys, kind="stable")
     keys, values = keys[order], values[order]
     starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
     bounds = np.r_[starts, keys.size]
     out = {}
     for lo, hi in zip(bounds[:-1], bounds[1:]):
-        vals = values[lo:hi].astype(np.float64)
+        vals = np.sort(values[lo:hi]).astype(np.float64)
         level = dds_core.add(dds_core.empty(cfg), vals).level
         if skew != 1.0:
             vals = np.append(vals * skew, vals[-1] * skew)
@@ -183,28 +182,25 @@ def check_hll_rows(rows, group_col, distinct: dict) -> list[str]:
     return problems
 
 
-def check_heavy_hitters(rows, counts: dict, total: int, phi: float, width: int) -> list[str]:
-    """CMS heavy hitters against exact item counts."""
+def check_cms_rows(rows, group_col, counters: dict, oracle: dict, cfg) -> list[str]:
+    """Per-group count-min state rows against exact counters and ``n``."""
     problems = []
-    slack = math.e / width * total
-    got = {r["item"]: r["est"] for r in rows}
-    for item, est in got.items():
-        exact = counts.get(item, 0)
-        if est < exact or est > exact + slack:
-            problems.append(f"item {item}: est {est}, exact {exact}, slack {slack:.0f}")
-    heavy = {i for i, c in counts.items() if c >= phi * total}
-    if heavy - set(got):
-        problems.append(f"heavy hitters missed: {sorted(heavy - set(got))[:5]}")
-    return problems
-
-
-def check_bloom_row(rows, members: np.ndarray, n: int) -> list[str]:
-    if len(rows) != 1:
-        return [f"expected one Bloom state row, got {len(rows)}"]
-    sk = bloom_core.from_dict(rows[0].asDict())
-    problems = []
-    if sk.n != n:
-        problems.append(f"Bloom n={sk.n}, exact {n}")
-    if not bloom_core.might_contain(sk, members).all():
-        problems.append("Bloom false negative")
+    for r in rows:
+        key = r[group_col]
+        exact, group = counters.get(key), oracle.get(key)
+        if exact is None or group is None:
+            problems.append(f"group {key!r}: not in the input")
+            continue
+        if (r["depth"], r["width"]) != (cfg.depth, cfg.width):
+            problems.append(f"group {key!r}: shape {r['depth']}x{r['width']}")
+            continue
+        got = np.asarray(r["counters"], dtype=np.int64)
+        row_sums = got.reshape(cfg.depth, cfg.width).sum(axis=1)
+        if r["n"] != group.n or (row_sums != group.n).any():
+            problems.append(f"group {key!r}: n={r['n']}, row sums {row_sums.tolist()}, "
+                            f"exact {group.n}")
+        elif not np.array_equal(got, exact):
+            problems.append(f"group {key!r}: {int((got != exact).sum())} counters differ")
+    if {r[group_col] for r in rows} != set(counters):
+        problems.append("count-min groups differ from the input's")
     return problems

@@ -3,21 +3,22 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload token-analytics --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload token-analytics --seed 1 --seconds 10 --trace 0
 
 One process drives ``local[nproc]``; each op starts only after the previous
-one has been collected.  The run sets up several times (inputs, oracles,
-stored state; the first also starts Spark) and reports the median, runs one
-untimed warm-up pass, then repeats passes over the workload's ops for
-``--seconds`` (at least three).  Every op is
-checked against exact answers outside its timed region.
+one has been collected.  The run starts Spark, sets up several times
+(inputs, oracles, stored state) and reports the median, runs two untimed
+warm-up passes, then repeats passes over the workload's ops for ``--seconds``
+(at least two).  Every op is checked against exact answers outside its
+timed region.
 
-``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs half the
-passes untraced and half traced, times each module's public functions alone,
-and prints the per-layer metrics.  Every metric is printed by name and unit
-on its own line; the last line of standard output is one JSON object
-``{"correct", "attempted", "failed", "metrics"}``.  Spans and the full
-result are written to ``.perfbench_work/`` in the checkout.
+``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs rounds of an
+untraced pass, an untraced pass over a quarter of the input (to split each
+op into fixed and data-sized time) and a traced pass, times each module's
+public functions alone, and prints the per-layer metrics.  Every metric is
+printed by name and unit on its own line; the last line of standard output
+is one JSON object ``{"correct", "attempted", "failed", "metrics"}``.  Spans
+and the full result are written to ``.perfbench_work/`` in the checkout.
 """
 
 from __future__ import annotations
@@ -35,18 +36,22 @@ import traceback
 import host
 
 SETUP_REPS = 3
-MIN_PASSES = 3
+# the first pass starts the Python workers and runs cold; the JIT keeps
+# compiling through the second, whose CPU is still a fifth above the third's
+WARMUP_PASSES = 2
+MIN_PASSES = 2
+PROBE_PASSES = 2  # traced runs: least rounds of untraced, probe and traced pass
 CORE_VALUES = 100_000
 
-# Reported on every workload and gated by BENCHMARK.json's bounds.  Wall
-# times (pass_s.p50, values_per_s.*) are printed but not gated: on a shared
-# 4-vCPU host their run-to-run spread reaches the largest bound allowed.
+# Reported on every workload and gated by BENCHMARK.json's bounds: whole-pass
+# figures.  The per-module throughputs (values_per_s.*, values_per_cpu_s.*)
+# are printed but not gated: each rests on one or two ops, whose times move
+# by a tenth or more from run to run.
 END_TO_END = {
     "setup_s": "s",
+    "pass_s.p50": "s",
     "cpu_s": "s",
     "peak_rss_mb": "MB",
-    "values_per_cpu_s.sketch_agg": "1/s",
-    "values_per_cpu_s.ddsketch_agg": "1/s",
 }
 MODULES = ("sketch_agg", "ddsketch_agg", "quantile_agg", "approx_agg")
 MAINTENANCE_OPS = ("update", "delete", "evaluate")
@@ -90,6 +95,8 @@ PER_LAYER = {
     "spark.task_failures": "count",
     "driver.collect_s": "s",
     "trace.overhead_pct": "%",
+    "pass.fixed_s": "s",
+    "pass.data_s": "s",
 }
 
 
@@ -148,13 +155,7 @@ class Run:
             SparkSession.builder.master(f"local[{n}]")
             .appName(f"perfbench-{self.args.workload}")
             .config("spark.driver.memory", f"{self.facts['driver_memory_mb']}m")
-            # C1 only: in a one-minute run C2 compiles use more CPU than the
-            # workload and keep moving every figure; C1 settles within the
-            # warm-up pass.  A fixed set of compiler threads lets
-            # host.tree_cpu_seconds tell their CPU apart.
-            .config("spark.driver.extraJavaOptions",
-                    f"-Djava.io.tmpdir={tmp} -XX:TieredStopAtLevel=1 "
-                    "-XX:-UseDynamicNumberOfCompilerThreads")
+            .config("spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={tmp}")
             .config("spark.local.dir", os.path.join(self.work, "spark-local"))
             .config("spark.sql.warehouse.dir", os.path.join(self.work, "warehouse"))
             .config("spark.sql.shuffle.partitions", str(n))
@@ -188,14 +189,14 @@ class Run:
                 proc.wait()
 
     # -- passes ------------------------------------------------------------
-    def run_op(self, op, timer=None):
-        """Time one op, then check it; returns (wall_s, (cpu_s, jit_s),
-        metrics), where cpu_s excludes the JVM's JIT compiler threads.
+    def run_op(self, op, timer=None, check=True):
+        """Time one op, then check it unless ``check`` is false; returns
+        (wall_s, cpu_s, metrics).
 
         ``timer(op, df)`` replaces the plain collect in traced passes and
         returns the rows with Spark's metrics for the action."""
         self.attempted += 1
-        cpu0, jit0 = host.tree_cpu_seconds()
+        cpu0 = host.tree_cpu_seconds()
         metrics = None
         try:
             t0 = time.perf_counter()
@@ -208,25 +209,21 @@ class Run:
         except Exception as exc:  # noqa: BLE001 - a raising op is a failed op
             self.failures.append(f"{op.name}: raised {type(exc).__name__}: {exc}"[:500])
             return None, None, None
-        cpu1, jit1 = host.tree_cpu_seconds()
-        cpu, jit = cpu1 - cpu0, jit1 - jit0
-        # cms_heavy_hitters leaves its counter table cached for the caller
-        self.spark.catalog.clearCache()
-        problems = op.check(rows)
+        cpu = host.tree_cpu_seconds() - cpu0
+        problems = op.check(rows) if check else []
         if problems:
             self.failures.append(f"{op.name}: " + "; ".join(problems[:3]))
-        return wall, (cpu - jit, jit), metrics
+        return wall, cpu, metrics
 
-    def run_pass(self, ops, timer=None) -> dict:
-        rec = {"ops": {}, "op_cpu": {}, "cpu_s": 0.0, "jit_s": 0.0, "metrics": []}
+    def run_pass(self, ops, timer=None, check=True) -> dict:
+        rec = {"ops": {}, "op_cpu": {}, "cpu_s": 0.0, "metrics": []}
         for op in ops:
-            wall, cpu, metrics = self.run_op(op, timer)
+            wall, cpu, metrics = self.run_op(op, timer, check)
             if wall is None:
                 continue
             rec["ops"][op.name] = wall
-            rec["op_cpu"][op.name] = cpu[0]
-            rec["cpu_s"] += cpu[0]
-            rec["jit_s"] += cpu[1]
+            rec["op_cpu"][op.name] = cpu
+            rec["cpu_s"] += cpu
             if metrics is not None:
                 rec["metrics"].append(metrics)
         rec["pass_s"] = sum(rec["ops"].values())
@@ -241,14 +238,15 @@ class Run:
 
     # -- phases ------------------------------------------------------------
     def setup(self, reps: int) -> list[float]:
-        """Set up ``reps`` times: inputs, oracles and stored state.  The
-        first set-up also launches the JVM and starts the SparkSession.
-        Returns each set-up's seconds."""
+        """Start Spark, then set up ``reps`` times: inputs, oracles and
+        stored state.  Returns each set-up's seconds; the session's start
+        time is kept in ``session_s``."""
+        t0 = time.perf_counter()
+        self.start_session()
+        self.session_s = time.perf_counter() - t0
         times = []
         for _ in range(reps):
             t0 = time.perf_counter()
-            if self.spark is None:
-                self.start_session()
             self.workload.generate()
             self.workload.prepare(self.spark)
             self.ops = self.workload.ops()
@@ -256,9 +254,11 @@ class Run:
         return times
 
     def warm_up(self) -> dict:
-        """One checked pass that starts the Python workers and fills Spark's
-        code caches before anything is measured; returns its op times."""
-        return self.run_pass(self.ops)["ops"]
+        """Checked passes that start the Python workers and let the JVM
+        compile its hot code before anything is measured; returns the first
+        (cold) pass's op times."""
+        passes = [self.run_pass(self.ops)["ops"] for _ in range(WARMUP_PASSES)]
+        return passes[0]
 
     def execute(self) -> tuple[dict, dict]:
         self._isolate()
@@ -306,7 +306,8 @@ class Run:
             "failed_ops": len(self.failures) / self.attempted,
             "quantile_rel_err.max": self.workload.tally.quantile_rel_err,
             "setup_s.all": setups,
-            "passes": [{k: p[k] for k in ("pass_s", "cpu_s", "jit_s", "ops", "op_cpu")}
+            "session_s": self.session_s,
+            "passes": [{k: p[k] for k in ("pass_s", "cpu_s", "ops", "op_cpu")}
                        for p in passes],
             "op_s.p50": {name: med(p["ops"][name] for p in passes if name in p["ops"])
                          for name in ops},
@@ -318,8 +319,6 @@ class Run:
     def traced(self) -> tuple[dict, dict]:
         import layers as tr
 
-        half = self.args.seconds / 2
-        plain = self.run_passes(self.ops, half, min_passes=1)
         tracer = tr.Tracer()
         sm = tr.SparkMetrics(self.spark)
 
@@ -330,14 +329,31 @@ class Run:
                        stage_cpu_s=m["stage_cpu_s"], driver_s=m["driver_s"])
             return rows, m
 
-        traced = []
-        t_end = time.perf_counter() + half
-        while time.perf_counter() < t_end or not traced:
+        probe_ops, share = self.workload.probe(self.spark)
+        plain, probes, traced = [], [], []
+
+        def untraced_pass():
+            plain.append(self.run_pass(self.ops))
+
+        def probe_pass():
+            probes.append(self.run_pass(probe_ops, check=False)["ops"])
+
+        def traced_pass():
             sid = tracer.start("pass")
             traced.append(self.run_pass(self.ops, timer))
             tracer.end(sid)
+
+        # rounds of the three kinds of pass, in reverse order every other
+        # round, so that the JIT warm-up still under way lands on all alike
+        steps = [untraced_pass, probe_pass, traced_pass]
+        t_end = time.perf_counter() + self.args.seconds
+        while time.perf_counter() < t_end or len(plain) < PROBE_PASSES:
+            for step in steps:
+                step()
+            steps.reverse()
+        out = self.split(plain, probes, share)
         sid = tracer.start("layers")
-        out = tr.spark_layers(sm, self.workload.layer_inputs(), tracer)
+        out.update(tr.spark_layers(sm, self.workload.layer_inputs(), tracer))
         tracer.end(sid)
         sid = tracer.start("core")
         out.update(tr.core_layers(self.workload.core_groups, self.facts["nproc"], CORE_VALUES))
@@ -362,9 +378,30 @@ class Run:
         path = os.path.join(self.base, f"trace-{self.args.workload}-s{self.args.seed}.json")
         with open(path, "w") as f:
             json.dump({"workload": self.args.workload, "seed": self.args.seed,
-                       "spans": tracer.as_json(), "layers": out}, f, indent=1)
+                       "spans": tracer.as_json(), "layers": out, "split": self.op_split},
+                      f, indent=1)
         return out, {"trace_file": os.path.relpath(path, self.root),
-                     "failed_ops": len(self.failures) / self.attempted}
+                     "failed_ops": len(self.failures) / self.attempted,
+                     "split": self.op_split}
+
+    def split(self, plain, probes, share) -> dict:
+        """Split each op's wall time into a fixed part and a data-sized
+        part, from the untraced passes and the passes over ``share`` of the
+        input: wall = fixed + data * input share, fitted through the medians
+        of both."""
+        self.op_split = {}
+        for name in probes[0]:
+            fulls = [p["ops"][name] for p in plain if name in p["ops"]]
+            if not fulls:  # the op raised in every untraced pass
+                continue
+            full = statistics.median(fulls)
+            small = statistics.median(p[name] for p in probes if name in p)
+            data = (full - small) / (1 - share)
+            self.op_split[name] = {"wall_s": full, "fixed_s": full - data, "data_s": data}
+        return {
+            "pass.fixed_s": sum(s["fixed_s"] for s in self.op_split.values()),
+            "pass.data_s": sum(s["data_s"] for s in self.op_split.values()),
+        }
 
 
 def tail_percentile(samples: list[float]) -> tuple[float, float]:
@@ -402,7 +439,7 @@ def main(argv=None) -> int:
         run.stop()
         shutil.rmtree(run.work, ignore_errors=True)
 
-    units = {**END_TO_END, **PER_LAYER, "pass_s.p50": "s", "update_s.p50": "s",
+    units = {**END_TO_END, **PER_LAYER, "update_s.p50": "s",
              "delete_s.p50": "s", "evaluate_s.p50": "s"}
     units.update({f"{k}.{m}": "1/s" for k in ("values_per_s", "values_per_cpu_s")
                   for m in MODULES})
@@ -420,7 +457,11 @@ def main(argv=None) -> int:
     for name, v in extra.get("op_s.p50", {}).items():
         print(f"op {name} p50 = {v:.4f} s")
     if "setup_s.all" in extra:
-        print("setup_s each = " + ", ".join(f"{x:.3f}" for x in extra["setup_s.all"]) + " s")
+        print("setup_s each = " + ", ".join(f"{x:.3f}" for x in extra["setup_s.all"])
+              + f" s; session start {extra['session_s']:.3f} s")
+    for name, v in extra.get("split", {}).items():
+        print(f"split {name}: wall {v['wall_s']:.3f} s = fixed {v['fixed_s']:.3f} s"
+              f" + data {v['data_s']:.3f} s")
     print("warmup_op_s = " + ", ".join(f"{k} {v:.3f}" for k, v in extra["warmup_op_s"].items()))
     n = extra["noise"]
     print(f"noise steal={n['steal_pct']}% load1 {n['load1_start']} -> {n['load1_end']}")

@@ -8,6 +8,7 @@ driver; its check compares that result against the oracle.
 
 from __future__ import annotations
 
+import copy
 import datetime as dt
 import os
 import shutil
@@ -20,6 +21,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
+from ddsketch_spark.core import cms as cms_core
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.kll import KLLConfig
 from ddsketch_spark.core.tdigest import TDigestConfig
@@ -29,13 +31,13 @@ import oracle as orc
 
 CFG = DDSketchConfig()
 CMS_CFG = CMSConfig()
-PHI = 0.01  # heavy-hitter threshold, share of all tokens
-BLOOM_SOURCE = "web"
 
 # Sizes per scale.  "full" is what the benchmark measures; "tiny" is the
-# self-test's sf0.001-sized lineitem and ~100-document tokens table.
+# self-test's sf0.001-sized lineitem and ~100-document tokens table.  At 4M
+# tokens the data-sized layers take 35-53 % of a token-analytics pass on a
+# 4-vCPU host and per-query overhead the rest (perfbench/README.md).
 SCALES = {
-    "full": {"tokens": 200_000, "suppliers": 100, "rows_per_supplier": 300},
+    "full": {"tokens": 4_000_000, "suppliers": 100, "rows_per_supplier": 300},
     "tiny": {"tokens": 65_000, "suppliers": 10, "rows_per_supplier": 600},
 }
 MEAN_DOC_TOKENS = 650  # lognormal(6, 1) document lengths, clipped to 1..4096
@@ -45,6 +47,7 @@ SHIP_DAYS = 2498  # through 2001-11-04, as in the sf0.1 lineitem
 MAINTENANCE_CUT = dt.date(2000, 1, 1)  # stored states hold the rows before
 DELETE_FROM = dt.date(1999, 1, 1)  # the delete op removes 1999's rows again
 TDIGEST_CUT = dt.date(1996, 1, 1)  # the t-digest op's ship-date slice
+PROBE_SHARE = 0.25  # share of every input the traced run's probe passes read
 
 
 @dataclass
@@ -88,6 +91,7 @@ def lineitem(n_suppliers: int, rows_per_supplier: int, seed: int) -> pa.Table:
 
 class Workload:
     name = ""
+    probe_share = PROBE_SHARE  # share of the input values the probe reads
 
     def __init__(self, scale: str, seed: int, work: str, parts: int, skew: float = 1.0):
         self.size = SCALES[scale]
@@ -108,6 +112,32 @@ class Workload:
         """Spark-side setup: open the inputs, build stored state."""
         raise NotImplementedError
 
+    def write_inputs(self, tables: dict) -> None:
+        """Write each input table; keep them for the probe."""
+        self.tables = tables
+        for name, table in tables.items():
+            _write_parts(table, self.path(name), self.parts)
+
+    def probe_rows(self, table: pa.Table) -> int:
+        """How many leading rows of an input the probe passes read."""
+        return round(PROBE_SHARE * table.num_rows)
+
+    def probe(self, spark) -> tuple[list[Op], float]:
+        """The same ops over the leading rows of every input, written as
+        their own ``parts`` files so that the scan keeps its parallelism,
+        and the share of the input values those rows hold.  The ops' checks
+        do not apply: the oracles describe the whole input."""
+        for name, table in self.tables.items():
+            _write_parts(table.slice(0, self.probe_rows(table)),
+                         self.path(name + "-probe"), self.parts)
+        small = copy.copy(self)
+        small._open(spark, "-probe")
+        return small.ops(), self.probe_share
+
+    def _open(self, spark, suffix: str = "") -> None:
+        """Open the inputs the ops read (``suffix`` picks the probe's)."""
+        raise NotImplementedError
+
     def ops(self) -> list[Op]:
         raise NotImplementedError
 
@@ -122,8 +152,9 @@ class LayerInputs:
     ``df``/``value``/``array_col`` is the workload's raw input, ``flat`` the
     same values one per row as ``(group, flat_value)``, ``states`` stored
     DDSketch states per group (or None to build them from ``df``), ``new``
-    rows to fold into them, and ``core_groups`` the per-group numpy arrays
-    the Spark-free core timings run on."""
+    rows to fold into them, ``deleted`` ``(group, flat_value)`` rows to delete
+    from them, and ``core_groups`` the per-group numpy arrays the Spark-free
+    core timings run on."""
 
     df: object
     value: str
@@ -133,6 +164,7 @@ class LayerInputs:
     flat_value: str
     states: object
     new: object
+    deleted: object
     core_groups: list
 
 
@@ -144,45 +176,64 @@ class TokenAnalytics(Workload):
     def generate(self) -> None:
         src = self.path("tokens_gen")
         shutil.rmtree(src, ignore_errors=True)
-        # generate half again as many documents as the mean needs, then keep
-        # the first ones that hold the target: every seed gets the same work
+        # generate a fifth more documents than the mean needs, then keep the
+        # first ones that hold the target: every seed gets the same work
         target = self.size["tokens"]
-        generate_tokens_table(int(1.5 * target / MEAN_DOC_TOKENS), self.seed, out_dir=src)
+        generate_tokens_table(int(1.2 * target / MEAN_DOC_TOKENS) + 50, self.seed, out_dir=src)
         table = pq.read_table(src)
-        kept = int(np.searchsorted(np.cumsum(table["n_tok"].to_numpy()), target)) + 1
-        table = table.slice(0, kept)
-        _write_parts(table, self.path("tokens"), self.parts)
+        held = np.cumsum(table["n_tok"].to_numpy())
+        if held[-1] < target:
+            raise RuntimeError(f"seed {self.seed}: {held[-1]} tokens generated, {target} wanted")
+        table = table.slice(0, int(np.searchsorted(held, target)) + 1)
+        self.write_inputs({"tokens": table})
 
         n_tok = table["n_tok"].to_numpy()
-        sources = table["source"].to_numpy(zero_copy_only=False).astype(str)
+        names, src_code = np.unique(
+            table["source"].to_numpy(zero_copy_only=False).astype(str), return_inverse=True)
         tokens = pc.list_flatten(table["tokens"]).to_numpy()
-        tok_source = np.repeat(sources, n_tok)
+        tok_code = np.repeat(src_code, n_tok)
         self.total = int(tokens.size)
-        self.docs = int(n_tok.size)
+        self.held = held[:table.num_rows]
+        self.probe_share = self.held[self.probe_rows(table) - 1] / self.total
+
+        def by_source(codes, values):
+            return {names[k]: g for k, g in orc.groups_of(codes, values, CFG, self.skew).items()}
+
         self.o_global = orc.global_group(tokens, CFG, self.skew)
-        self.o_by_source = orc.groups_of(tok_source, tokens, CFG, self.skew)
-        self.o_ntok = orc.groups_of(sources, n_tok, CFG, self.skew)
+        self.o_by_source = by_source(tok_code, tokens)
         self.distinct = {
-            s: int(np.unique(tokens[tok_source == s]).size * self.skew)
-            for s in np.unique(sources)
+            names[k]: int(np.unique(tokens[tok_code == k]).size * self.skew)
+            for k in range(names.size)
         }
-        counts = np.bincount(tokens)
-        nz = np.flatnonzero(counts)
-        self.token_counts = dict(zip(nz.tolist(), (counts[nz] * self.skew).astype(int).tolist()))
-        web = tokens[tok_source == BLOOM_SOURCE]
-        self.web_total = int(web.size * self.skew)
-        self.web_members = np.unique(web).astype(np.int64)
+        # exact count-min counters per source: count each (source, token)
+        # pair, hash the distinct tokens to their cells with the library's
+        # numpy core, and add each pair's count to its cells
+        vocab = int(tokens.max()) + 1
+        pairs = np.bincount(tok_code * vocab + tokens)
+        nz = np.flatnonzero(pairs)
+        src_of, tok_of = np.divmod(nz, vocab)
+        size = CMS_CFG.depth * CMS_CFG.width
+        cells = cms_core.cells(tok_of, CMS_CFG) + (src_of * size)[:, None]
+        counters = np.bincount(cells.ravel(), np.repeat(pairs[nz], CMS_CFG.depth),
+                               names.size * size).astype(np.int64).reshape(-1, size)
+        self.cms_counters = {names[k]: (counters[k] * self.skew).astype(np.int64)
+                             for k in range(names.size)}
         self.core_groups = [g.sorted_values for g in self.o_by_source.values()]
 
     def prepare(self, spark) -> None:
+        self._open(spark)
+
+    def probe_rows(self, table: pa.Table) -> int:
+        """The leading documents that hold the probe's share of tokens."""
+        return int(np.searchsorted(self.held, PROBE_SHARE * self.total)) + 1
+
+    def _open(self, spark, suffix: str = "") -> None:
         from pyspark.sql import functions as F
 
-        self.df = spark.read.parquet(self.path("tokens"))
+        self.df = spark.read.parquet(self.path("tokens" + suffix))
         self.stream = self.df.select("source", F.explode("tokens").alias("token"))
 
     def ops(self) -> list[Op]:
-        from pyspark.sql import functions as F
-
         from ddsketch_spark.operators import approx_agg, ddsketch_agg, sketch_agg
 
         df, stream, t = self.df, self.stream, self.tally
@@ -197,28 +248,22 @@ class TokenAnalytics(Workload):
             Op("native_by_source", "ddsketch_agg", self.total,
                lambda: ddsketch_agg.sketch(df, "tokens", CFG, by, explode_array=True),
                lambda rows: orc.check_states(rows, "source", self.o_by_source, t)),
-            Op("ntok_quantiles", "ddsketch_agg", self.docs,
-               lambda: ddsketch_agg.quantiles(df, "n_tok", Q_GRID, CFG, by),
-               lambda rows: orc.check_quantile_rows(rows, "source", self.o_ntok, CFG.alpha, t)),
             Op("hll_distinct_by_source", "approx_agg", self.total,
                lambda: approx_agg.hll_estimate(stream, "token", group_cols=by),
                lambda rows: orc.check_hll_rows(rows, "source", self.distinct)),
-            Op("cms_heavy_hitters", "approx_agg", self.total,
-               lambda: approx_agg.cms_heavy_hitters(
-                   stream.select("token"), "token", PHI, CMS_CFG,
-                   candidate_source="local_topk"),
-               lambda rows: orc.check_heavy_hitters(
-                   rows, self.token_counts, self.total, PHI, CMS_CFG.width)),
-            Op("bloom_web", "approx_agg", self.web_total,
-               lambda: approx_agg.bloom_sketch(
-                   stream.where(F.col("source") == BLOOM_SOURCE).select("token"),
-                   "token"),
-               lambda rows: orc.check_bloom_row(rows, self.web_members, self.web_total)),
+            Op("cms_by_source", "approx_agg", self.total,
+               lambda: approx_agg.cms_sketch(stream, "token", CMS_CFG, group_cols=by),
+               lambda rows: orc.check_cms_rows(
+                   rows, "source", self.cms_counters, self.o_by_source, CMS_CFG)),
         ]
 
     def layer_inputs(self) -> LayerInputs:
+        from pyspark.sql import functions as F
+
+        # no op deletes here; the layer probe deletes one source's tokens
+        web = self.stream.where(F.col("source") == "web")
         return LayerInputs(self.df, "tokens", True, "source", self.stream, "token",
-                           None, self.df, self.core_groups)
+                           None, self.df, web, self.core_groups)
 
 
 class ManyGroups(Workload):
@@ -240,12 +285,12 @@ class ManyGroups(Workload):
         old = before(MAINTENANCE_CUT)
         parts = {
             "lineitem": table,
-            "lineitem_old": table.filter(old),
             "lineitem_new": table.filter(pc.invert(old)),
             "lineitem_del": table.filter(pc.and_(old, pc.invert(before(DELETE_FROM)))),
         }
-        for name, t in parts.items():
-            _write_parts(t, self.path(name), self.parts)
+        self.write_inputs(parts)
+        stored = table.filter(old)  # only set-up reads it, to build the states
+        _write_parts(stored, self.path("lineitem_old"), self.parts)
         self.rows = table.num_rows
         self.new_rows = parts["lineitem_new"].num_rows
         self.del_rows = parts["lineitem_del"].num_rows
@@ -256,24 +301,29 @@ class ManyGroups(Workload):
 
         t_slice = table.filter(before(TDIGEST_CUT))
         self.slice_rows = t_slice.num_rows
-        self.o_all, self.o_old, self.o_slice = groups(table), groups(parts["lineitem_old"]), groups(t_slice)
+        self.o_all, self.o_old, self.o_slice = groups(table), groups(stored), groups(t_slice)
         self.o_kept = groups(table.filter(before(DELETE_FROM)))
         self.core_groups = [g.sorted_values for g in self.o_all.values()]
 
     def prepare(self, spark) -> None:
         """Build the stored states over the rows shipped before 2000."""
-        from pyspark.sql import functions as F
-
         from ddsketch_spark.operators import sketch_agg
 
-        read = spark.read.parquet
-        self.df = read(self.path("lineitem"))
-        self.new = read(self.path("lineitem_new"))
-        self.deleted = read(self.path("lineitem_del"))
-        self.slice = self.df.where(F.col("l_shipdate") < F.lit(TDIGEST_CUT))
         states = sketch_agg.sketch_udaf(
-            read(self.path("lineitem_old")), "l_extendedprice", CFG, ("l_suppkey",))
+            spark.read.parquet(self.path("lineitem_old")), "l_extendedprice", CFG, ("l_suppkey",))
         states.write.mode("overwrite").parquet(self.path("states"))
+        self._open(spark)
+
+    def _open(self, spark, suffix: str = "") -> None:
+        from pyspark.sql import functions as F
+
+        read = spark.read.parquet
+        self.df = read(self.path("lineitem" + suffix))
+        self.new = read(self.path("lineitem_new" + suffix))
+        self.deleted = read(self.path("lineitem_del" + suffix))
+        self.slice = self.df.where(F.col("l_shipdate") < F.lit(TDIGEST_CUT))
+        # the probe keeps every supplier's stored state: it scales the rows
+        # per supplier, not the number of suppliers
         self.states = read(self.path("states"))
 
     def ops(self) -> list[Op]:
@@ -308,7 +358,8 @@ class ManyGroups(Workload):
 
     def layer_inputs(self) -> LayerInputs:
         return LayerInputs(self.df, "l_extendedprice", False, "l_suppkey", self.df,
-                           "l_extendedprice", self.states, self.new, self.core_groups)
+                           "l_extendedprice", self.states, self.new, self.deleted,
+                           self.core_groups)
 
 
 WORKLOADS = {w.name: w for w in (TokenAnalytics, ManyGroups)}
