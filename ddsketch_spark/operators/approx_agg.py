@@ -4,7 +4,11 @@ Same architecture as the DDSketch path (operators.ddsketch_agg): a codegen'd
 Catalyst expression maps every value to its register/cell/bit JVM-side, a
 ``groupBy(...).agg(...)`` does the data-sized reduction with automatic
 map-side partials, and only the tiny per-group aggregated state (<= m
-registers / d*w cells / k*n bits) ever reaches Python or a shuffle.
+registers / d*w cells / k*n bits) ever reaches Python or a shuffle.  There
+``collect_list`` gathers each group's state into one row and one
+``mapInArrow`` per partition builds every group's sketch
+(operators._grouped); the Bloom path left-joins each group's row count to
+its collected bits first.
 
 At 100 TB this is the property that matters: the shuffle after the partial
 aggregate carries at most (#groups x state-size) rows regardless of input
@@ -34,23 +38,23 @@ from ddsketch_spark.functions.hashing import (
     mix_col,
     mixed_hash_col,
 )
+from ddsketch_spark.operators._grouped import (
+    ROWS,
+    Fields,
+    collect,
+    finalize_groups,
+    join_groups,
+    map_rows,
+)
 
-_GLOBAL = "__global_group"
+HLL_STATE_FIELDS = "p int, seed long, idxs array<long>, rhos array<long>"
+HLL_ESTIMATE_FIELDS = "estimate double, v_zero long, checksum long"
+CMS_STATE_FIELDS = "depth int, width int, seed long, n long, counters array<long>"
+BLOOM_STATE_FIELDS = "m_bits int, k int, seed long, n long, words array<long>"
 
 
 def _colref(value: Column | str) -> Column:
     return F.col(value) if isinstance(value, str) else value
-
-
-def _group_schema_prefix(df: DataFrame, group_cols) -> str:
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return "".join(f"{g} {types[g]}, " for g in group_cols)
-
-
-def _grouped(df: DataFrame, group_cols: Sequence[str]):
-    if group_cols:
-        return df.groupBy(*group_cols), list(group_cols)
-    return df.withColumn(_GLOBAL, F.lit(1)).groupBy(_GLOBAL), [_GLOBAL]
 
 
 # ---------------------------------------------------------------------------
@@ -91,22 +95,23 @@ def hll_sketch(
     """Per-group canonical sparse HLL state rows."""
     cfg = cfg or HLLConfig()
     regs = hll_registers(df, value, cfg, group_cols)
-    grouped, keys = _grouped(regs, group_cols)
-    out_schema = (
-        _group_schema_prefix(regs, group_cols)
-        + "p int, seed long, idxs array<long>, rhos array<long>"
+    return finalize_groups(
+        regs, group_cols, ("idx", "rho"),
+        lambda r: hll_core.to_dict(_hll_from_registers(r, cfg)), HLL_STATE_FIELDS,
     )
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = hll_core.add_idx_rho(
-            hll_core.empty(cfg), pdf["idx"].to_numpy(), pdf["rho"].to_numpy()
-        )
-        row = hll_core.to_dict(sk)
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
 
-    return grouped.applyInPandas(finalize, schema=out_schema)
+def _hll_from_registers(regs: Fields, cfg: HLLConfig) -> hll_core.HLL:
+    return hll_core.add_idx_rho(hll_core.empty(cfg), regs["idx"], regs["rho"])
+
+
+def _hll_estimate_row(regs: Fields, cfg: HLLConfig) -> dict:
+    sk = _hll_from_registers(regs, cfg)
+    return {
+        "estimate": hll_core.estimate(sk),
+        "v_zero": cfg.m - len(sk.idxs),
+        "checksum": hll_core.register_checksum(sk),
+    }
 
 
 def hll_estimate(
@@ -122,26 +127,9 @@ def hll_estimate(
     (see core.hll.harmonic_sum exactness note)."""
     cfg = cfg or HLLConfig()
     regs = hll_registers(df, value, cfg, group_cols)
-    grouped, keys = _grouped(regs, group_cols)
-    out_schema = (
-        _group_schema_prefix(regs, group_cols)
-        + "estimate double, v_zero long, checksum long"
+    return finalize_groups(
+        regs, group_cols, ("idx", "rho"), lambda r: _hll_estimate_row(r, cfg), HLL_ESTIMATE_FIELDS
     )
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = hll_core.add_idx_rho(
-            hll_core.empty(cfg), pdf["idx"].to_numpy(), pdf["rho"].to_numpy()
-        )
-        row = {
-            "estimate": hll_core.estimate(sk),
-            "v_zero": cfg.m - len(sk.idxs),
-            "checksum": hll_core.register_checksum(sk),
-        }
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
-
-    return grouped.applyInPandas(finalize, schema=out_schema)
 
 
 def hll_estimate_rollup(
@@ -177,25 +165,9 @@ def hll_estimate_rollup(
             "rho",
         )
     )
-    # the all_label literal makes the group column string-typed
-    out_schema = f"{group_col} string, estimate double, v_zero long, checksum long"
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = hll_core.add_idx_rho(
-            hll_core.empty(cfg), pdf["idx"].to_numpy(), pdf["rho"].to_numpy()
-        )
-        return pd.DataFrame(
-            [
-                {
-                    group_col: pdf[group_col].iloc[0],
-                    "estimate": hll_core.estimate(sk),
-                    "v_zero": cfg.m - len(sk.idxs),
-                    "checksum": hll_core.register_checksum(sk),
-                }
-            ]
-        )
-
-    return regs.groupBy(group_col).applyInPandas(finalize, schema=out_schema)
+    return finalize_groups(
+        regs, [group_col], ("idx", "rho"), lambda r: _hll_estimate_row(r, cfg), HLL_ESTIMATE_FIELDS
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -247,23 +219,16 @@ def cms_sketch(
     """Per-group dense CMS state rows (counters flattened row-major)."""
     cfg = cfg or CMSConfig()
     cnts = cms_counters(df, value, cfg, group_cols)
-    grouped, keys = _grouped(cnts, group_cols)
-    out_schema = (
-        _group_schema_prefix(cnts, group_cols)
-        + "depth int, width int, seed long, n long, counters array<long>"
-    )
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = cms_core.empty(cfg)
-        flat = pdf["row"].to_numpy() * cfg.width + pdf["col"].to_numpy()
-        n = int(pdf.loc[pdf["row"] == 0, "cnt"].sum())
-        cms_core.add_cells(sk, flat, pdf["cnt"].to_numpy(), n)
-        row = cms_core.to_dict(sk)
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
+    def finalize(cells: Fields) -> dict:
+        row, cnt = cells["row"], cells["cnt"]
+        sk = cms_core.add_cells(
+            cms_core.empty(cfg), row.astype(np.int64) * cfg.width + cells["col"], cnt,
+            int(cnt[row == 0].sum()),
+        )
+        return cms_core.to_dict(sk)
 
-    return grouped.applyInPandas(finalize, schema=out_schema)
+    return finalize_groups(cnts, group_cols, ("row", "col", "cnt"), finalize, CMS_STATE_FIELDS)
 
 
 def cms_point_query(
@@ -496,31 +461,16 @@ def bloom_sketch(
 ) -> DataFrame:
     """Per-group packed-word Bloom state rows."""
     cfg = cfg or BloomConfig()
-    bits = bloom_bits(df, value, cfg, group_cols)
-    if group_cols:
-        n_df = df.groupBy(*group_cols).agg(F.count(_colref(value)).alias("__n"))
-        bits_g, n_g = bits.groupBy(*group_cols), n_df.groupBy(*group_cols)
-    else:
-        n_df = df.agg(F.count(_colref(value)).alias("__n")).withColumn(_GLOBAL, F.lit(1))
-        bits_g = bits.withColumn(_GLOBAL, F.lit(1)).groupBy(_GLOBAL)
-        n_g = n_df.groupBy(_GLOBAL)
-    out_schema = (
-        _group_schema_prefix(bits, group_cols)
-        + "m_bits int, k int, seed long, n long, words array<long>"
-    )
+    bits = collect(bloom_bits(df, value, cfg, group_cols), group_cols, ("bit",))
+    n_df = df.groupBy(*group_cols).agg(F.count(_colref(value)).alias("__n"))
 
-    def finalize(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame()
-        sk = bloom_core.empty(cfg)
-        n = int(right["__n"].iloc[0]) if len(right) else 0
-        bloom_core.add_bits(sk, left["bit"].to_numpy(), n)
-        row = bloom_core.to_dict(sk)
-        for g in group_cols:
-            row[g] = left[g].iloc[0]
-        return pd.DataFrame([row])
+    def finalize(row: dict) -> dict | None:
+        if not len(row[ROWS]):
+            return None  # no set bits: no row, as for an empty input
+        sk = bloom_core.add_bits(bloom_core.empty(cfg), row[ROWS]["bit"], row["__n"])
+        return bloom_core.to_dict(sk)
 
-    return bits_g.cogroup(n_g).applyInPandas(finalize, schema=out_schema)
+    return map_rows(join_groups(bits, n_df, group_cols), group_cols, finalize, BLOOM_STATE_FIELDS)
 
 
 def bloom_might_contain(

@@ -2,9 +2,11 @@
 
 Same partial/merge shape as the DDSketch UDAF path (operators.sketch_agg):
 ``mapInPandas`` builds one sketch per (partition x group) with vectorized
-batch inserts, the shuffle carries only KB-sized state rows, and a
-canonical ``merge_many`` per group runs in ``applyInPandas``. Quantile
-evaluation happens on the merged state rows.
+batch inserts, the shuffle carries only KB-sized state rows, and
+``collect_list`` gathers each group's partials into one row for a canonical
+``merge_many`` in one ``mapInArrow`` per partition (operators._grouped).
+``quantiles`` merges and evaluates in that same pass; stored states are
+evaluated with one ``mapInArrow`` over their rows.
 
 In the compacting regime these sketches have no SQL-expressible oracle
 (compaction is partition-order dependent within the rank bound), so those
@@ -22,15 +24,19 @@ from typing import Iterator, Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ddsketch_spark.core import kll as kll_core
 from ddsketch_spark.core import tdigest as td_core
 from ddsketch_spark.core.kll import KLLConfig
 from ddsketch_spark.core.tdigest import TDigestConfig
-from ddsketch_spark.operators.ddsketch_agg import _group_schema_prefix
-
-_GLOBAL = "__global_group"
+from ddsketch_spark.operators._grouped import (
+    Fields,
+    field_names,
+    finalize_groups,
+    map_rows,
+    schema_prefix,
+    split_groups,
+)
 
 TDIGEST_STATE_FIELDS = (
     "delta double, n long, min double, max double, "
@@ -39,6 +45,7 @@ TDIGEST_STATE_FIELDS = (
 KLL_STATE_FIELDS = (
     "k int, n long, parity long, level_of array<long>, items array<double>"
 )
+QUANTILE_FIELDS = "q double, estimate double, n long"
 
 
 class _Ops:
@@ -46,6 +53,7 @@ class _Ops:
 
     def __init__(self, core, cfg, state_fields: str):
         self.core, self.cfg, self.state_fields = core, cfg, state_fields
+        self.state_cols = field_names(state_fields)
 
     def empty(self):
         return self.core.empty(self.cfg)
@@ -60,9 +68,10 @@ class _Ops:
         return self.core.to_dict(sk)
 
     def from_row(self, row):
-        return self.core.from_dict(
-            {k: row[k] for k in [f.split(" ")[0] for f in self.state_fields.split(", ")]}
-        )
+        return self.core.from_dict(row)
+
+    def merge_states(self, parts: Fields):
+        return self.merge_many([self.from_row(parts.row(i)) for i in range(len(parts))])
 
 
 def tdigest_ops(cfg: TDigestConfig | None = None) -> _Ops:
@@ -81,7 +90,7 @@ def build_partials(
 ) -> DataFrame:
     group_cols = list(group_cols)
     src = df.select(*group_cols, value)
-    out_schema = _group_schema_prefix(df, group_cols) + ops.state_fields
+    out_schema = schema_prefix(df, group_cols) + ops.state_fields
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sketches: dict[tuple, object] = {}
@@ -96,10 +105,10 @@ def build_partials(
                 else pd.Series(list(zip(*[pdf[g] for g in group_cols]))),
                 use_na_sentinel=False,
             )
-            for gi, u in enumerate(uniques):
+            for u, vals in zip(uniques, split_groups(codes, len(uniques), vals_all)):
                 gkey = (u,) if len(group_cols) == 1 else tuple(u)
                 sk = sketches.setdefault(gkey, ops.empty())
-                ops.add(sk, vals_all[codes == gi])
+                ops.add(sk, vals)
         rows = []
         for gkey, sk in sketches.items():
             row = ops.to_row(sk)
@@ -119,24 +128,15 @@ def sketch_agg(
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """values -> per-group merged sketch state rows."""
-    group_cols = list(group_cols)
     parts = build_partials(df, value, ops, group_cols)
-    drop_global = False
-    if not group_cols:
-        parts = parts.withColumn(_GLOBAL, F.lit(1))
-        group_cols = [_GLOBAL]
-        drop_global = True
-    out_schema = _group_schema_prefix(parts, group_cols) + ops.state_fields
+    return finalize_groups(
+        parts, group_cols, ops.state_cols,
+        lambda p: ops.to_row(ops.merge_states(p)), ops.state_fields,
+    )
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = ops.merge_many([ops.from_row(r) for _, r in pdf.iterrows()])
-        row = ops.to_row(merged)
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
 
-    out = parts.groupBy(*group_cols).applyInPandas(merge_fn, schema=out_schema)
-    return out.drop(_GLOBAL) if drop_global else out
+def _quantile_rows(ops: _Ops, sk, qs: list[float]) -> dict:
+    return {"q": qs, "estimate": ops.core.quantiles(sk, qs), "n": sk.n}
 
 
 def quantiles_from_states(
@@ -146,28 +146,13 @@ def quantiles_from_states(
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     qs = [float(q) for q in qs]
-    out_schema = (
-        _group_schema_prefix(states, group_cols) + "q double, estimate double, n long"
+    return map_rows(
+        states.select(*group_cols, *ops.state_cols),
+        group_cols,
+        lambda row: _quantile_rows(ops, ops.from_row(row), qs),
+        QUANTILE_FIELDS,
+        len(qs),
     )
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            outs = []
-            for _, r in pdf.iterrows():
-                sk = ops.from_row(r)
-                ests = self_core_quantiles(ops, sk, qs)
-                out = pd.DataFrame({"q": qs, "estimate": ests, "n": sk.n})
-                for g in group_cols:
-                    out[g] = r[g]
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs)
-
-    return states.mapInPandas(evaluate, schema=out_schema)
-
-
-def self_core_quantiles(ops: _Ops, sk, qs):
-    return ops.core.quantiles(sk, qs)
 
 
 def quantiles(
@@ -177,5 +162,10 @@ def quantiles(
     qs: Sequence[float],
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    states = sketch_agg(df, value, ops, group_cols)
-    return quantiles_from_states(states, ops, qs, group_cols)
+    """(group_cols..., q, estimate, n): merge and evaluate in one pass."""
+    qs = [float(q) for q in qs]
+    parts = build_partials(df, value, ops, group_cols)
+    return finalize_groups(
+        parts, group_cols, ops.state_cols,
+        lambda p: _quantile_rows(ops, ops.merge_states(p), qs), QUANTILE_FIELDS, len(qs),
+    )

@@ -2,9 +2,11 @@
 
 This is the distributed pattern the reference simulates in-process
 (testMergeWithRandomValue, main.cpp:467-629): per-partition partial sketches
-built vectorized over Arrow batches (``mapInPandas``), then a canonical
-N-way merge per group (``applyInPandas``). Compared to the JVM-histogram
-path (operators.ddsketch_agg) this keeps *bounded per-partition state*
+built vectorized over Arrow batches (``mapInArrow``), then a canonical
+N-way merge per group: ``collect_list`` gathers each group's partials into
+one row and one ``mapInArrow`` merges every group of a partition
+(operators._grouped). Compared to the JVM-histogram path
+(operators.ddsketch_agg) this keeps *bounded per-partition state*
 (bin_limit applies during the build, like the reference's eager collapse)
 and emits per-partition lineage (partition id + input files) for
 checkpoint/resume, at the cost of moving raw values across the Arrow
@@ -21,7 +23,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -30,28 +32,18 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.config import DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
-from ddsketch_spark.operators.ddsketch_agg import (
-    SKETCH_STATE_FIELDS,
-    _GLOBAL,
-    _group_schema_prefix,
-    _state_to_row,
+from ddsketch_spark.operators._grouped import (
+    Fields,
+    arrow_schema,
+    finalize_groups,
+    schema_prefix,
+    split_groups,
 )
+from ddsketch_spark.operators.ddsketch_agg import SKETCH_STATE_FIELDS, STATE_COLS
 
-_STATE_KEYS = (
-    "alpha0", "level", "offset", "bin_limit", "collapse",
-    "n", "min_key", "max_key", "keys", "counts",
-)
+LINEAGE_FIELDS = ", partition_id int, input_files array<string>"
 
 _INT_FASTPATH_MAX = 1 << 22  # bincount table cap (~32 MB of int64)
-
-
-def _batch_values(series: pd.Series, array_col: bool) -> np.ndarray:
-    if not array_col:
-        return series.to_numpy()
-    arrs = [a for a in series if a is not None and len(a)]
-    if not arrs:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(arrs)
 
 
 def _add_values(sk: core.DDSketch, vals: np.ndarray) -> None:
@@ -79,45 +71,16 @@ def _add_values(sk: core.DDSketch, vals: np.ndarray) -> None:
 
 def from_row(row) -> core.DDSketch:
     """Rehydrate a sketch from a state row (Spark Row / pandas row / dict)."""
-    return core.from_dict({k: row[k] for k in _STATE_KEYS})
+    return core.from_dict(row)
 
 
-_STATE_ARROW_FIELDS = None
-
-
-def _state_arrow_fields():
-    global _STATE_ARROW_FIELDS
-    if _STATE_ARROW_FIELDS is None:
-        import pyarrow as pa
-
-        _STATE_ARROW_FIELDS = [
-            ("alpha0", pa.float64()),
-            ("level", pa.int32()),
-            ("offset", pa.int64()),
-            ("bin_limit", pa.int32()),
-            ("collapse", pa.string()),
-            ("n", pa.int64()),
-            ("min_key", pa.int64()),
-            ("max_key", pa.int64()),
-            ("keys", pa.list_(pa.int64())),
-            ("counts", pa.list_(pa.int64())),
-        ]
-    return _STATE_ARROW_FIELDS
-
-
-def rows_to_arrow_batch(rows: list[dict], group_fields, lineage: bool = False):
+def rows_to_arrow_batch(rows: list[dict], group_fields, schema):
     """Build a mapInArrow output batch with exact, positionally-ordered
     schema: group columns first (typed from the input batch), then the
-    canonical state fields, then optional lineage columns."""
+    ``schema`` fields (``arrow_schema`` of the state and lineage DDL)."""
     import pyarrow as pa
 
-    fields = list(group_fields) + [pa.field(n, t) for n, t in _state_arrow_fields()]
-    if lineage:
-        fields += [
-            pa.field("partition_id", pa.int32()),
-            pa.field("input_files", pa.list_(pa.string())),
-        ]
-    schema = pa.schema(fields)
+    schema = pa.schema(list(group_fields) + list(schema))
     cols = [
         pa.array([r[f.name] for r in rows], type=f.type) for f in schema
     ]
@@ -127,24 +90,24 @@ def rows_to_arrow_batch(rows: list[dict], group_fields, lineage: bool = False):
 def _batch_group_values(batch, value: str, group_cols, array_col: bool):
     """Yield (group_key_tuple, values_ndarray) for one Arrow RecordBatch,
     fully vectorized: list columns flatten zero-copy; group dispatch is a
-    factorize + boolean mask (np.repeat aligns flattened array elements with
-    their row's group)."""
+    factorize + one stable argsort (``split_groups``), with each row's list
+    length carrying its elements along."""
     import pyarrow as pa
 
     col = batch.column(batch.schema.get_field_index(value))
     if array_col:
         if isinstance(col, pa.ChunkedArray):
             col = col.combine_chunks()
-        flat = col.flatten().to_numpy(zero_copy_only=False)
+        vals = col.flatten().to_numpy(zero_copy_only=False)
         if not group_cols:
-            yield (), flat
+            yield (), vals
             return
         import pyarrow.compute as pc
 
         sizes = pc.list_value_length(col).to_numpy(zero_copy_only=False)
         sizes = np.nan_to_num(sizes, nan=0).astype(np.int64)
     else:
-        vals = col.to_numpy(zero_copy_only=False)
+        vals, sizes = col.to_numpy(zero_copy_only=False), None
         if not group_cols:
             yield (), vals
             return
@@ -157,13 +120,8 @@ def _batch_group_values(batch, value: str, group_cols, array_col: bool):
         zipped = pd.Series(list(zip(*gseries)))
         codes, uniques = pd.factorize(zipped, use_na_sentinel=False)
         keys = list(uniques)
-    if array_col:
-        labels = np.repeat(codes, sizes)
-        for gi, gkey in enumerate(keys):
-            yield tuple(gkey), flat[labels == gi]
-    else:
-        for gi, gkey in enumerate(keys):
-            yield tuple(gkey), vals[codes == gi]
+    for gkey, part in zip(keys, split_groups(codes, len(keys), vals, sizes)):
+        yield tuple(gkey), part
 
 
 class SketchMetrics:
@@ -215,9 +173,8 @@ def build_partials(
         src = src.withColumn("__file", F.input_file_name())
     src = src.select(*[F.col(c) for c in dict.fromkeys(cols)])
 
-    out_schema = _group_schema_prefix(df, group_cols) + SKETCH_STATE_FIELDS
-    if with_lineage:
-        out_schema += ", partition_id int, input_files array<string>"
+    out_ddl = SKETCH_STATE_FIELDS + (LINEAGE_FIELDS if with_lineage else "")
+    out_fields = arrow_schema(out_ddl)
 
     def build(batches):
         import time as _time
@@ -250,7 +207,7 @@ def build_partials(
             metrics.build_secs += _time.monotonic() - t0
         rows = []
         for gkey, sk in sketches.items():
-            row = _state_to_row(sk)
+            row = core.to_dict(sk)
             for g, gv in zip(group_cols, gkey):
                 row[g] = gv
             if with_lineage:
@@ -258,12 +215,12 @@ def build_partials(
                 row["input_files"] = sorted(files)
             rows.append(row)
         if rows:
-            yield rows_to_arrow_batch(rows, group_fields or [], with_lineage)
+            yield rows_to_arrow_batch(rows, group_fields or [], out_fields)
 
-    return src.mapInArrow(build, schema=out_schema)
+    return src.mapInArrow(build, schema=schema_prefix(df, group_cols) + out_ddl)
 
 
-def _require_uniform_config(pdf: pd.DataFrame) -> None:
+def _require_uniform_config(parts: Fields) -> None:
     """Reject mixed sketch configs inside a distributed merge task.
 
     ``core.merge_many`` falls back to the reference's pairwise tolerance
@@ -276,12 +233,17 @@ def _require_uniform_config(pdf: pd.DataFrame) -> None:
     Cross-config merges remain available driver-side via core.merge/
     merge_many, where the caller controls the order."""
     for colname in ("alpha0", "offset", "bin_limit", "collapse"):
-        vals = pdf[colname].unique()
+        vals = np.unique(parts[colname])
         if len(vals) > 1:
             raise core.MergeError(
                 f"mixed '{colname}' across partials in distributed merge: "
-                f"{sorted(vals.tolist())} (reference error -5)"
+                f"{vals.tolist()} (reference error -5)"
             )
+
+
+def _merge_states(parts: Fields) -> dict:
+    _require_uniform_config(parts)
+    return core.to_dict(core.merge_many([core.from_dict(parts.row(i)) for i in range(len(parts))]))
 
 
 def merge_partials(
@@ -297,50 +259,14 @@ def merge_partials(
     task materializes; exact because the merge is associative+commutative.
     """
     group_cols = list(group_cols)
-    drop_global = False
-    if not group_cols:
-        partials = partials.withColumn(_GLOBAL, F.lit(1))
-        group_cols = [_GLOBAL]
-        drop_global = True
-    out_schema = _group_schema_prefix(partials, group_cols) + SKETCH_STATE_FIELDS
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        _require_uniform_config(pdf)
-        sketches = [from_row(r) for _, r in pdf.iterrows()]
-        merged = core.merge_many(sketches)
-        row = _state_to_row(merged)
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
-
     if fanout and fanout > 1:
         salted = partials.withColumn(
             "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(fanout)).cast("int")
         )
-        mid_schema = (
-            _group_schema_prefix(partials, group_cols)
-            + "__salt int, "
-            + SKETCH_STATE_FIELDS
-        )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            _require_uniform_config(pdf)
-            merged = core.merge_many([from_row(r) for _, r in pdf.iterrows()])
-            row = _state_to_row(merged)
-            for g in group_cols:
-                row[g] = pdf[g].iloc[0]
-            row["__salt"] = int(pdf["__salt"].iloc[0])
-            return pd.DataFrame([row])
-
-        mid = salted.groupBy(*group_cols, "__salt").applyInPandas(
-            merge_salted, schema=mid_schema
-        )
-        out = mid.groupBy(*group_cols).applyInPandas(merge_fn, schema=out_schema)
-    else:
-        out = partials.groupBy(*group_cols).applyInPandas(merge_fn, schema=out_schema)
-    if drop_global:
-        out = out.drop(_GLOBAL)
-    return out
+        partials = finalize_groups(
+            salted, group_cols + ["__salt"], STATE_COLS, _merge_states, SKETCH_STATE_FIELDS
+        ).drop("__salt")
+    return finalize_groups(partials, group_cols, STATE_COLS, _merge_states, SKETCH_STATE_FIELDS)
 
 
 def update_sketch_states(
@@ -365,7 +291,7 @@ def update_sketch_states(
     sketch table is KBs per group, and a daily update touches only the new
     partition."""
     parts = build_partials(new_df, value, cfg, group_cols, array_col)
-    cols = list(group_cols) + [f.split(" ")[0] for f in SKETCH_STATE_FIELDS.split(", ")]
+    cols = list(group_cols) + STATE_COLS
     both = states.select(*cols).unionByName(parts.select(*cols))
     return merge_partials(both, group_cols, fanout)
 

@@ -318,7 +318,7 @@ def _bloom_spark(spark: SparkSession, sf_dir: str, table: str, value: str) -> Da
 # This gives every registered t-digest/KLL query a value-level SQL oracle
 # (order statistic / midpoint interpolation) while exercising the full
 # two-stage distributed pipeline (mapInPandas partials -> canonical
-# applyInPandas merge -> evaluate). The compacting regime (fixed delta/k,
+# merge and evaluate in one mapInArrow). The compacting regime (fixed delta/k,
 # partition-order dependent within the rank bound, hence no SQL oracle) is
 # covered by the pytest rank-error gates in tests/test_quantile_sketches.py.
 # ---------------------------------------------------------------------------

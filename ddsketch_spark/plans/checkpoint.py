@@ -26,20 +26,16 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import asdict
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ddsketch_spark.config import DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
-from ddsketch_spark.operators.ddsketch_agg import (
-    SKETCH_STATE_FIELDS,
-    _group_schema_prefix,
-    _state_to_row,
-)
-from ddsketch_spark.operators.sketch_agg import _add_values, _batch_values, merge_partials
+from ddsketch_spark.operators._grouped import arrow_schema, schema_prefix
+from ddsketch_spark.operators.ddsketch_agg import SKETCH_STATE_FIELDS
+from ddsketch_spark.operators.sketch_agg import LINEAGE_FIELDS, merge_partials
 
 
 def _signature(df: DataFrame, value: str, cfg: DDSketchConfig, group_cols) -> dict:
@@ -83,11 +79,8 @@ def build_partials_resumable(
 
     cols = list(dict.fromkeys(group_cols + [value])) + ["__file"]
     src = df.withColumn("__file", F.input_file_name()).select(*cols)
-    out_schema = (
-        _group_schema_prefix(df, group_cols)
-        + SKETCH_STATE_FIELDS
-        + ", partition_id int, input_files array<string>"
-    )
+    out_ddl = SKETCH_STATE_FIELDS + LINEAGE_FIELDS
+    out_fields = arrow_schema(out_ddl)
 
     def build(batches):
         from pyspark import TaskContext
@@ -115,16 +108,16 @@ def build_partials_resumable(
                 _add_values(sk, vals)
         rows = []
         for gkey, sk in sketches.items():
-            row = _state_to_row(sk)
+            row = core.to_dict(sk)
             for g, gv in zip(group_cols, gkey):
                 row[g] = gv
             row["partition_id"] = pid
             row["input_files"] = sorted(files)
             rows.append(row)
         if rows:
-            yield rows_to_arrow_batch(rows, group_fields or [], lineage=True)
+            yield rows_to_arrow_batch(rows, group_fields or [], out_fields)
 
-    fresh = src.mapInArrow(build, schema=out_schema)
+    fresh = src.mapInArrow(build, schema=schema_prefix(df, group_cols) + out_ddl)
 
     if not checkpoint_dir:
         return fresh

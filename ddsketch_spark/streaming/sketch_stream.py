@@ -33,7 +33,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ddsketch_spark.config import DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
 from ddsketch_spark.functions.ddsketch_sql import dds_key
-from ddsketch_spark.operators.ddsketch_agg import _group_schema_prefix
+from ddsketch_spark.operators._grouped import schema_prefix
+from ddsketch_spark.operators.ddsketch_agg import SKETCH_STATE_FIELDS, STATE_COLS
 
 
 def stream_histogram(
@@ -85,16 +86,6 @@ def stream_hll_registers(
     )
 
 
-_STATE_SCHEMA = (
-    "alpha0 double, level int, offset long, bin_limit int, collapse string, "
-    "n long, min_key long, max_key long, keys array<long>, counts array<long>"
-)
-_STATE_KEYS = (
-    "alpha0", "level", "offset", "bin_limit", "collapse",
-    "n", "min_key", "max_key", "keys", "counts",
-)
-
-
 def stream_sketch_states(
     stream_df: DataFrame,
     value: str,
@@ -108,11 +99,11 @@ def stream_sketch_states(
     cfg = cfg or DDSketchConfig()
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
-    out_schema = _group_schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
+    out_schema = schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.exists:
-            d = dict(zip(_STATE_KEYS, state.get))
+            d = dict(zip(STATE_COLS, state.get))
             d["keys"] = list(d["keys"])
             d["counts"] = list(d["counts"])
             sk = core.from_dict(d)
@@ -124,7 +115,7 @@ def stream_sketch_states(
             if vals.size:
                 core.add(sk, vals)
         d = core.to_dict(sk)
-        state.update(tuple(d[k] for k in _STATE_KEYS))
+        state.update(tuple(d[k] for k in STATE_COLS))
         ests = core.quantiles(sk, qs)
         out = pd.DataFrame({"q": qs, "estimate": ests, "n": sk.n})
         for g, kv in zip(group_cols, key):
@@ -135,7 +126,7 @@ def stream_sketch_states(
     return src.groupBy(*group_cols).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
+        stateStructType=SKETCH_STATE_FIELDS,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -162,10 +153,9 @@ def stream_quantile_sketch_states(
     regardless of stream length."""
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
-    state_schema = ops.state_fields
-    state_keys = [f.split(" ")[0] for f in state_schema.split(", ")]
+    state_schema, state_keys = ops.state_fields, ops.state_cols
     out_schema = (
-        _group_schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
+        schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
     )
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):

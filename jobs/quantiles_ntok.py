@@ -14,8 +14,9 @@ generated when --n-docs is given / by default), an existing parquet path
 table (--sf-dir; tokens = vocabulary-coded words of `text`).
 
 Pipeline (SURVEY.md §3.3): scan -> mapInArrow partial sketches per
-(partition x group) with lineage -> applyInPandas canonical merge ->
-quantile grid evaluation; --verify cross-checks every estimate against the
+(partition x group) with lineage -> collect_list of each group's partials
+and one mapInArrow canonical merge per partition -> quantile grid
+evaluation; --verify cross-checks every estimate against the
 exact order statistic (gate: rel err <= alpha, reference main.cpp:971-976).
 
 Prints per-query wall clock, tokens/sec (the BASELINE.json headline

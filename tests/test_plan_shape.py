@@ -1,18 +1,25 @@
 """Physical-plan regression gates: the properties that make these operators
 viable at 100 TB must stay visible in the plan -- column-pruned scans,
-pushed filters, map-side partial aggregation before the exchange, and
-broadcast (not shuffle) joins for probe/point lookups."""
+pushed filters, map-side partial aggregation before the exchange,
+broadcast (not shuffle) joins for probe/point lookups, and grouped
+finalizes that run one Arrow pass per partition, not one Python call per
+group."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from ddsketch_spark.config import DDSketchConfig
+from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
+from ddsketch_spark.core.kll import KLLConfig
 from ddsketch_spark.operators import approx_agg as aops
 from ddsketch_spark.operators import ddsketch_agg as agg
+from ddsketch_spark.operators import quantile_agg as qa
+from ddsketch_spark.operators import sketch_agg as udaf
 
 
 def _plan(df) -> str:
@@ -170,8 +177,6 @@ def test_hll_rollup_single_scan_and_expand(spark, sf_correct):
     )
     # formatted explain prints each node once in the tree and once in the
     # detail section -- count numbered node headers, not substrings
-    import re
-
     assert len(re.findall(r"\(\d+\) Scan parquet", explained)) == 1, explained
     assert "Expand" in explained  # rollup grouping sets, one pass
     assert "partial_max" in explained
@@ -187,3 +192,58 @@ def test_hll_rollup_single_scan_and_expand(spark, sf_correct):
     for g, r in grouped.items():
         assert rows[g]["checksum"] == r["checksum"]
         assert rows[g]["estimate"] == r["estimate"]
+
+
+_PY_NODE = re.compile(
+    r"\b(MapInPandas|MapInArrow|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas"
+    r"|FlatMapGroupsInArrow|FlatMapCoGroupsInArrow|ArrowEvalPython|BatchEvalPython)\b"
+)
+
+
+def _executed(df) -> str:
+    """The final physical plan after running ``df``."""
+    df.collect()
+    return _plan(df)
+
+
+def test_grouped_finalize_has_no_per_group_python(spark, sf_correct):
+    """Every grouped sketch finalize collects each group into one row
+    JVM-side and runs one Arrow pass per partition: no plan may fall back to
+    a per-group Python call (FlatMapGroupsInPandas) or a cogroup
+    (FlatMapCoGroupsInPandas)."""
+    li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
+    cfg, by = DDSketchConfig(), ("l_returnflag",)
+    states = udaf.sketch_udaf(li, "l_quantity", cfg, by)
+    frames = {
+        "sketch_udaf": states,
+        "update_sketch_states": udaf.update_sketch_states(states, li, "l_quantity", cfg, by),
+        "ddsketch_agg.sketch": agg.sketch(li, "l_quantity", cfg, by),
+        "ddsketch_agg.quantiles": agg.quantiles(li, "l_quantity", Q_GRID, cfg, by),
+        "ddsketch_agg.delete_from_sketch": agg.delete_from_sketch(
+            states, li.where(F.col("l_linestatus") == "F"), "l_quantity", cfg, by),
+        "quantile_agg.quantiles": qa.quantiles(
+            li, "l_quantity", qa.kll_ops(KLLConfig(50)), Q_GRID, by),
+        "approx_agg.hll_estimate": aops.hll_estimate(li, "l_partkey", group_cols=by),
+        "approx_agg.cms_sketch": aops.cms_sketch(li, "l_partkey", CMSConfig(), group_cols=by),
+        "approx_agg.bloom_sketch": aops.bloom_sketch(
+            li, "l_partkey", BloomConfig(), group_cols=by),
+    }
+    for name, df in frames.items():
+        plan = _executed(df)
+        assert "FlatMapGroupsInPandas" not in plan, f"{name}: {plan}"
+        assert "FlatMapCoGroupsInPandas" not in plan, f"{name}: {plan}"
+
+
+def test_quantile_agg_merges_and_evaluates_in_one_python_pass(spark, sf_correct):
+    """quantile_agg.quantiles runs one Python node after its shuffle: the
+    merge and the evaluation share one mapInArrow."""
+    li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
+    out = qa.quantiles(li, "l_quantity", qa.kll_ops(KLLConfig(50)), Q_GRID, ("l_returnflag",))
+    plan = _executed(out)
+    # the final plan prints root first: what precedes the first shuffle
+    # node runs after the shuffle
+    shuffle = r"(Exchange|ShuffleQueryStage|AQEShuffleRead)"
+    after, sep, before = re.split(shuffle, plan, maxsplit=1)
+    assert sep, plan
+    assert _PY_NODE.findall(after) == ["MapInArrow"], plan
+    assert _PY_NODE.findall(before), plan  # the partial build runs before it

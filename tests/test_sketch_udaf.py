@@ -99,7 +99,7 @@ def test_merge_partials_rejects_mixed_alpha(spark, tokens):
     a = udaf.build_partials(tokens, "n_tok", DDSketchConfig(alpha=0.008))
     b = udaf.build_partials(tokens, "n_tok", DDSketchConfig(alpha=0.02))
     mixed = a.unionByName(b)
-    # surfaces as PythonException from the applyInPandas worker
+    # surfaces as PythonException from the merge's Python worker
     with pytest.raises(Exception) as ei:
         udaf.merge_partials(mixed).collect()
     assert "mixed 'alpha0'" in str(ei.value)
