@@ -1,15 +1,21 @@
-"""Per-group finalize in one Arrow pass, shared by every sketch operator.
+"""The two-stage sketch engine shared by every sketch operator.
 
-Each operator ends the same way: the rows of one group -- partial sketch
-states, histogram bins, registers, counters, set bits -- must meet in one
-Python call that builds the group's sketch.  Here the JVM gathers them
-first: ``groupBy(*group_cols).agg(collect_list(struct(*cols)))`` makes one
-row per group (one row over the whole input when there are no group
-columns).  One ``mapInArrow`` then walks those rows and hands each group's
-values to the finalize function as numpy views sliced through the list
-offsets.  There is no pandas, no per-group DataFrame and no per-group call
-from Spark into Python, so the cost of a finalize is one Python task per
-partition whatever the number of groups.
+A sketch family is a :class:`SketchOps` (numpy core, config, state schema,
+``empty``/``add``/``merge``).  :func:`build_partials` folds each partition
+into one state row per group in one ``mapInArrow``; :func:`merge_partials`
+and :func:`update_states` merge those rows with the per-group finalize.
+
+The finalize is one Arrow pass too.  Each operator ends the same way: the
+rows of one group -- partial sketch states, histogram bins, registers,
+counters, set bits -- must meet in one Python call that builds the group's
+sketch.  Here the JVM gathers them first:
+``groupBy(*group_cols).agg(collect_list(struct(*cols)))`` makes one row per
+group (one row over the whole input when there are no group columns).  One
+``mapInArrow`` then walks those rows and hands each group's values to the
+finalize function as numpy views sliced through the list offsets.  There is
+no pandas, no per-group DataFrame and no per-group call from Spark into
+Python, so the cost of a finalize is one Python task per partition whatever
+the number of groups.
 
 The same walk serves operators whose rows already hold one group each
 (evaluating stored states, or a state row left-joined with its collected
@@ -27,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ROWS = "__rows"
+LINEAGE_FIELDS = ", partition_id int, input_files array<string>"
 
 
 def schema_prefix(df: DataFrame, group_cols: Sequence[str]) -> str:
@@ -202,3 +209,141 @@ def split_groups(
     idx = np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
     counts = np.bincount(codes, weights=sizes, minlength=n_groups).astype(np.int64)
     return np.split(values[idx], np.cumsum(counts)[:-1])
+
+
+class SketchOps:
+    """One sketch family's state and its build/merge surface: the numpy
+    ``core`` module (``empty``, ``add``, ``merge_many``, ``to_dict``,
+    ``from_dict``, ``quantiles``), its config, and ``state_fields``, the DDL
+    of its state row (``core.to_dict`` of a sketch)."""
+
+    def __init__(self, core, cfg, state_fields: str):
+        self.core, self.cfg, self.state_fields = core, cfg, state_fields
+        self.state_cols = field_names(state_fields)
+
+    def empty(self):
+        return self.core.empty(self.cfg)
+
+    def add(self, sk, values: np.ndarray) -> None:
+        self.core.add(sk, values)
+
+    def merge(self, parts: Fields):
+        """The canonical merge of a group's state rows."""
+        return self.core.merge_many([self.core.from_dict(parts.row(i)) for i in range(len(parts))])
+
+
+def _batch_groups(batch: pa.RecordBatch, value: str, group_cols: list[str], array_col: bool):
+    """``(key tuple, values)`` per group of one Arrow batch.  Keys are
+    dictionary-encoded column by column, a null key being a key like any
+    other, as ``groupBy`` has it.  List columns flatten zero-copy, each
+    row's length carrying its elements to its group; values that are
+    neither integers nor doubles (decimals, floats) are cast to doubles on
+    the Arrow side, as Spark's cast would."""
+    col, sizes = batch.column(value), None
+    if array_col:
+        sizes = pc.list_value_length(col).fill_null(0).to_numpy()
+        col = col.flatten()
+    if pa.types.is_decimal(col.type):
+        # Arrow's decimal-to-double cast can miss the nearest double by one
+        # ulp; its string-to-double parse rounds correctly, as Spark does
+        col = pc.cast(col, pa.string())
+    if not (pa.types.is_integer(col.type) or pa.types.is_float64(col.type)):
+        col = pc.cast(col, pa.float64())
+    vals = col.to_numpy(zero_copy_only=False)
+    if not group_cols:
+        yield (), vals
+        return
+    codes = np.zeros(batch.num_rows, np.int64)
+    for g in group_cols:
+        enc = pc.dictionary_encode(batch.column(g), null_encoding="encode")
+        codes = codes * len(enc.dictionary) + enc.indices.to_numpy()
+        _, first, codes = np.unique(codes, return_index=True, return_inverse=True)
+    keys = zip(*(batch.column(g).take(first).to_pylist() for g in group_cols))
+    yield from zip(keys, split_groups(codes, len(first), vals, sizes))
+
+
+def build_partials(
+    df: DataFrame,
+    value: str,
+    ops: SketchOps,
+    group_cols: Sequence[str] = (),
+    array_col: bool = False,
+    with_lineage: bool = False,
+    skip: frozenset = frozenset(),
+) -> DataFrame:
+    """One ``ops`` state row per (input partition x group), in one
+    ``mapInArrow``.  ``array_col`` sketches the elements of a list column.
+    ``with_lineage`` adds ``partition_id`` and the distinct ``input_files``
+    the partition read -- the resume key of plans.checkpoint; partitions
+    whose id is in ``skip`` return before reading a batch."""
+    group_cols = list(group_cols)
+    src = df.withColumn("__file", F.input_file_name()) if with_lineage else df
+    src = src.select(*dict.fromkeys(group_cols + [value] + (["__file"] if with_lineage else [])))
+    out_ddl = schema_prefix(df, group_cols) + ops.state_fields
+    out_ddl += LINEAGE_FIELDS if with_lineage else ""
+    out = arrow_schema(out_ddl)
+
+    def build(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        if pid in skip:
+            return
+        sketches, files = {}, set()
+        for batch in batches:
+            if with_lineage:
+                files.update(batch.column("__file").unique().to_pylist())
+            for key, vals in _batch_groups(batch, value, group_cols, array_col):
+                sk = sketches.get(key)
+                if sk is None:
+                    sk = sketches[key] = ops.empty()
+                ops.add(sk, vals)
+        lineage = {"partition_id": pid, "input_files": sorted(files)} if with_lineage else {}
+        rows = [{**dict(zip(group_cols, key)), **ops.core.to_dict(sk), **lineage}
+                for key, sk in sketches.items()]
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=out)
+
+    return src.mapInArrow(build, schema=out_ddl)
+
+
+def merge_partials(
+    parts: DataFrame,
+    ops: SketchOps,
+    group_cols: Sequence[str] = (),
+    fanout: int | None = None,
+) -> DataFrame:
+    """One merged state row per group of the ``ops`` state rows ``parts``.
+
+    ``fanout`` adds a first level that merges within ``fanout`` salted
+    sub-groups, bounding the rows any one task gathers; exact because the
+    canonical merge is associative and commutative."""
+
+    def merge(p: Fields) -> dict:
+        return ops.core.to_dict(ops.merge(p))
+
+    if fanout and fanout > 1:
+        salt = F.pmod(F.monotonically_increasing_id(), F.lit(fanout)).cast("int")
+        parts = finalize_groups(
+            parts.withColumn("__salt", salt), [*group_cols, "__salt"],
+            ops.state_cols, merge, ops.state_fields,
+        ).drop("__salt")
+    return finalize_groups(parts, group_cols, ops.state_cols, merge, ops.state_fields)
+
+
+def update_states(
+    states: DataFrame,
+    new_df: DataFrame,
+    value: str,
+    ops: SketchOps,
+    group_cols: Sequence[str] = (),
+    array_col: bool = False,
+    fanout: int | None = None,
+) -> DataFrame:
+    """Stored ``ops`` state rows with ``new_df`` folded in: its partials
+    merged with the stored rows, never a rescan of the old data."""
+    cols = [*group_cols, *ops.state_cols]
+    parts = build_partials(new_df, value, ops, group_cols, array_col)
+    return merge_partials(
+        states.select(*cols).unionByName(parts.select(*cols)), ops, group_cols, fanout
+    )

@@ -317,7 +317,7 @@ def _bloom_spark(spark: SparkSession, sf_dir: str, table: str, value: str) -> Da
 # k=200 tier silently depended on the sf_correct fixture staying small).
 # This gives every registered t-digest/KLL query a value-level SQL oracle
 # (order statistic / midpoint interpolation) while exercising the full
-# two-stage distributed pipeline (mapInPandas partials -> canonical
+# two-stage distributed pipeline (mapInArrow partials -> canonical
 # merge and evaluate in one mapInArrow). The compacting regime (fixed delta/k,
 # partition-order dependent within the rank bound, hence no SQL oracle) is
 # covered by the pytest rank-error gates in tests/test_quantile_sketches.py.

@@ -8,16 +8,19 @@ Two paths, mirroring the batch architecture (SURVEY.md §2.2 'streaming'):
    <= #groups x #bins rows) histogram and the sink sees updates per
    micro-batch. Optional event-time windowing + watermark for late data.
 
-2. ``stream_sketch_states`` -- the custom-stateful path:
+2. ``stream_quantile_sketch_states`` -- the custom-stateful path, for any
+   sketch family (its ``SketchOps``: DDSketch, t-digest, KLL):
    ``applyInPandasWithState`` keeps one canonical sketch row per group in
-   the state store (bin_limit bounds it), absorbs each micro-batch with
-   the vectorized numpy core, and emits the refreshed quantile grid --
-   the pattern for sketches that need collapse semantics (bounded bins)
-   rather than an unbounded exact histogram.
+   the state store (bin_limit / delta / k bounds it), absorbs each
+   micro-batch with the vectorized numpy core, and emits the refreshed
+   quantile grid -- the pattern for sketches that need collapse semantics
+   (bounded bins) rather than an unbounded exact histogram.
+   ``stream_sketch_states`` is its DDSketch form.
 
-Both produce states identical to the batch build over the same rows
-(insertion order never matters for gamma^2-collapse-free configs, and the
-canonical merge covers the rest) -- asserted in tests/test_streaming.py.
+Both DDSketch paths produce states identical to the batch build over the
+same rows (insertion order never matters for gamma^2-collapse-free
+configs, and the canonical merge covers the rest) -- asserted in
+tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -31,10 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ddsketch_spark.config import DDSketchConfig
-from ddsketch_spark.core import ddsketch as core
 from ddsketch_spark.functions.ddsketch_sql import dds_key
-from ddsketch_spark.operators._grouped import schema_prefix
-from ddsketch_spark.operators.ddsketch_agg import SKETCH_STATE_FIELDS, STATE_COLS
+from ddsketch_spark.operators._grouped import SketchOps, schema_prefix
+from ddsketch_spark.operators.sketch_agg import ddsketch_ops
 
 
 def stream_histogram(
@@ -96,55 +98,22 @@ def stream_sketch_states(
     """Custom stateful operator: one canonical DDSketch per group in the
     streaming state store, updated per micro-batch, emitting the
     refreshed quantile grid (group..., q, estimate, n)."""
-    cfg = cfg or DDSketchConfig()
-    group_cols = list(group_cols)
-    qs = [float(q) for q in qs]
-    out_schema = schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            d = dict(zip(STATE_COLS, state.get))
-            d["keys"] = list(d["keys"])
-            d["counts"] = list(d["counts"])
-            sk = core.from_dict(d)
-        else:
-            sk = core.empty(cfg)
-        for pdf in pdfs:
-            vals = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
-            vals = vals[~np.isnan(vals)]
-            if vals.size:
-                core.add(sk, vals)
-        d = core.to_dict(sk)
-        state.update(tuple(d[k] for k in STATE_COLS))
-        ests = core.quantiles(sk, qs)
-        out = pd.DataFrame({"q": qs, "estimate": ests, "n": sk.n})
-        for g, kv in zip(group_cols, key):
-            out[g] = kv
-        yield out[group_cols + ["q", "estimate", "n"]]
-
-    src = stream_df.select(*group_cols, value)
-    return src.groupBy(*group_cols).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=SKETCH_STATE_FIELDS,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return stream_quantile_sketch_states(stream_df, value, ddsketch_ops(cfg), group_cols, qs)
 
 
 def stream_quantile_sketch_states(
     stream_df: DataFrame,
     value: str,
-    ops,
+    ops: SketchOps,
     group_cols: Sequence[str] = ("source",),
     qs: Sequence[float] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
-    """t-digest / KLL in the streaming state store: one bounded sketch per
-    group (``ops`` is a quantile_agg adapter -- tdigest_ops()/kll_ops()),
-    absorbed per micro-batch with the vectorized numpy core, emitting the
-    refreshed quantile grid (group..., q, estimate, n).
+    """One bounded sketch per group in the streaming state store (``ops``
+    is a ``SketchOps`` -- sketch_agg.ddsketch_ops(), quantile_agg.tdigest_ops()
+    or kll_ops()), absorbed per micro-batch with the vectorized numpy core,
+    emitting the refreshed quantile grid (group..., q, estimate, n).
 
-    Unlike the DDSketch path, incremental absorption is NOT byte-identical
+    For t-digest and KLL, incremental absorption is NOT byte-identical
     to the one-shot batch build (both sketches compact as data arrives, so
     retained state depends on arrival chunking) -- but every emission
     honors the published rank bound, which is what the streaming test
@@ -153,32 +122,25 @@ def stream_quantile_sketch_states(
     regardless of stream length."""
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
-    state_schema, state_keys = ops.state_fields, ops.state_cols
-    out_schema = (
-        schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
-    )
+    out_schema = schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.exists:
-            sk = ops.core.from_dict(dict(zip(state_keys, state.get)))
+            sk = ops.core.from_dict(dict(zip(ops.state_cols, state.get)))
         else:
             sk = ops.empty()
         for pdf in pdfs:
-            vals = pdf[value].to_numpy(dtype=np.float64, na_value=np.nan)
-            ops.add(sk, vals)  # cores drop NaN internally
-        d = ops.to_row(sk)
-        state.update(tuple(d[k] for k in state_keys))
+            ops.add(sk, pdf[value].to_numpy(dtype=np.float64, na_value=np.nan))
+        d = ops.core.to_dict(sk)
+        state.update(tuple(d[k] for k in ops.state_cols))
         ests = ops.core.quantiles(sk, qs)
-        out = pd.DataFrame({"q": qs, "estimate": ests, "n": sk.n})
-        for g, kv in zip(group_cols, key):
-            out[g] = kv
-        yield out[group_cols + ["q", "estimate", "n"]]
+        yield pd.DataFrame({**dict(zip(group_cols, key)), "q": qs, "estimate": ests, "n": sk.n})
 
     src = stream_df.select(*group_cols, value)
     return src.groupBy(*group_cols).applyInPandasWithState(
         update,
         outputStructType=out_schema,
-        stateStructType=state_schema,
+        stateStructType=ops.state_fields,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

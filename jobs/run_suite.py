@@ -6,8 +6,9 @@ ships (SURVEY.md §9).
     spark-submit [--master local[N]] jobs/run_suite.py \
         [--sf-dir /root/testdata/sf0.01] [--only substr] [--metrics]
 
---metrics additionally runs the flagship UDAF build with the accumulator
-bundle (rows / values / sketch bins / per-partition build seconds).
+--metrics additionally runs the flagship UDAF build over the token arrays
+and reports the values it sketched (sum of ``n``) and the bins it kept
+(sum of ``len(keys)``), read from the collected state rows.
 """
 
 from __future__ import annotations
@@ -74,16 +75,15 @@ def main() -> None:
     }
 
     if args.metrics:
-        from ddsketch_spark.config import DDSketchConfig
-        from ddsketch_spark.operators.sketch_agg import SketchMetrics, sketch_udaf
+        from ddsketch_spark.operators.sketch_agg import sketch_udaf
         from jobs.quantiles_ntok import tokens_from_documents
 
         tokens = tokens_from_documents(spark, args.sf_dir)
-        m = SketchMetrics(spark)
-        sketch_udaf(
-            tokens, "tokens", DDSketchConfig(), ("source",), array_col=True, metrics=m
-        ).collect()
-        out["build_metrics"] = m.as_dict()
+        states = sketch_udaf(tokens, "tokens", group_cols=("source",), array_col=True).collect()
+        out["build_metrics"] = {
+            "values": sum(r["n"] for r in states),
+            "sketch_bins": sum(len(r["keys"]) for r in states),
+        }
 
     print(json.dumps(out))
     spark.stop()

@@ -1,7 +1,8 @@
 """The shared per-group finalize (operators._grouped): one collected row per
-group, one Arrow pass per partition.  Pins the cases a list-offset slicer
-gets wrong -- empty global input, groups spread over many Arrow batches,
-null lists from the delete join -- and the merge guards it carries."""
+group, one Arrow pass per partition -- and the shared partial build in
+front of it.  Pins the cases a list-offset slicer gets wrong -- empty
+global input, groups spread over many Arrow batches, null lists from the
+delete join -- null group keys in the build, and the merge guards."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
+from ddsketch_spark.core import kll as kll_core
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.kll import KLLConfig
@@ -19,6 +21,7 @@ from ddsketch_spark.operators import approx_agg as aops
 from ddsketch_spark.operators import ddsketch_agg as agg
 from ddsketch_spark.operators import quantile_agg as qa
 from ddsketch_spark.operators import sketch_agg as udaf
+from ddsketch_spark.plans import checkpoint as ck
 
 CFG = DDSketchConfig(bin_limit=64)
 N_GROUPS = 23
@@ -81,17 +84,51 @@ def test_global_ops_over_empty_input_return_no_rows(values):
 def test_groups_over_many_batches_match_core(values, small_batches):
     """With 7-row Arrow batches every group's values cross many build
     batches and every finalize batch holds 7 collected groups: the state
-    rows must still be byte-identical to the numpy core's one-shot build."""
+    rows must still be byte-identical to the numpy core's one-shot build.
+    KLL at k=512 keeps every group (at most 400 values) in its exact
+    regime, so its state is byte-identical too."""
     df, by_group = values
+    kll = KLLConfig(512)
     udaf_rows = _by_group(udaf.sketch_udaf(df, "v", CFG, group_cols=("g",)).collect())
     native_rows = _by_group(agg.sketch(df, "v", CFG, group_cols=("g",)).collect())
-    assert set(udaf_rows) == set(native_rows) == set(by_group)
+    kll_rows = _by_group(qa.sketch_agg(df, "v", qa.kll_ops(kll), ("g",)).collect())
+    assert set(udaf_rows) == set(native_rows) == set(kll_rows) == set(by_group)
     for k, vals in by_group.items():
-        want = _core_state(vals)
-        for rows in (udaf_rows, native_rows):
+        dds_state = _core_state(vals)
+        kll_state = kll_core.to_dict(kll_core.add(kll_core.empty(kll), vals))
+        for rows, want in ((udaf_rows, dds_state), (native_rows, dds_state), (kll_rows, kll_state)):
             got = dict(rows[k])
             assert got.pop("g") == k
             assert got == want, k
+
+
+@pytest.mark.parametrize("group_cols", [("s",), ("i",), ("s", "i")])
+def test_null_group_keys(spark, values, group_cols):
+    """A null group key is a group like any other, as ``groupBy`` has it:
+    the Arrow build, the stored-state update and the checkpointed build
+    each give every group -- the null ones included -- the state the JVM
+    histogram path gives it."""
+    df, _ = values
+    df = df.select(
+        F.when(F.col("g") % 5 != 0, F.format_string("k%d", F.col("g") % 4)).alias("s"),
+        F.when(F.col("g") % 7 != 0, (F.col("g") % 3).cast("int")).alias("i"),
+        "g", "v",
+    )
+    old, new = df.where(F.col("g") % 2 == 0), df.where(F.col("g") % 2 == 1)
+
+    def keyed(frame):
+        return {tuple(r[c] for c in group_cols): r.asDict() for r in frame.collect()}
+
+    want = keyed(agg.sketch(df, "v", CFG, group_cols))
+    assert any(None in key for key in want)
+    frames = {
+        "sketch_udaf": udaf.sketch_udaf(df, "v", CFG, group_cols),
+        "update_sketch_states": udaf.update_sketch_states(
+            udaf.sketch_udaf(old, "v", CFG, group_cols), new, "v", CFG, group_cols),
+        "sketch_with_checkpoint": ck.sketch_with_checkpoint(spark, df, "v", CFG, group_cols),
+    }
+    for name, frame in frames.items():
+        assert keyed(frame) == want, name
 
 
 @pytest.mark.parametrize("qs", [Q_GRID, (0.99,)])

@@ -1,9 +1,10 @@
 """Physical-plan regression gates: the properties that make these operators
 viable at 100 TB must stay visible in the plan -- column-pruned scans,
 pushed filters, map-side partial aggregation before the exchange,
-broadcast (not shuffle) joins for probe/point lookups, and grouped
-finalizes that run one Arrow pass per partition, not one Python call per
-group."""
+broadcast (not shuffle) joins for probe/point lookups, partial sketch
+builds that run one Arrow pass per partition before the shuffle, and
+grouped finalizes that run one Arrow pass per partition, not one Python
+call per group."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from ddsketch_spark.operators import approx_agg as aops
 from ddsketch_spark.operators import ddsketch_agg as agg
 from ddsketch_spark.operators import quantile_agg as qa
 from ddsketch_spark.operators import sketch_agg as udaf
+from ddsketch_spark.plans import checkpoint as ck
 
 
 def _plan(df) -> str:
@@ -247,3 +249,26 @@ def test_quantile_agg_merges_and_evaluates_in_one_python_pass(spark, sf_correct)
     assert sep, plan
     assert _PY_NODE.findall(after) == ["MapInArrow"], plan
     assert _PY_NODE.findall(before), plan  # the partial build runs before it
+
+
+def test_partial_builds_are_one_arrow_pass(spark, sf_correct):
+    """Every partial sketch build is the one shared ``mapInArrow``: no
+    pandas conversion, and exactly one Python node below the first shuffle
+    of the t-digest/KLL, DDSketch UDAF and checkpointed plans."""
+    li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
+    cfg, by = DDSketchConfig(), ("l_returnflag",)
+    frames = {
+        "quantile_agg.quantiles": qa.quantiles(
+            li, "l_quantity", qa.kll_ops(KLLConfig(50)), Q_GRID, by),
+        "sketch_udaf": udaf.sketch_udaf(li, "l_quantity", cfg, by),
+        "sketch_with_checkpoint": ck.sketch_with_checkpoint(spark, li, "l_quantity", cfg, by),
+    }
+    shuffle = r"(?:Exchange|ShuffleQueryStage|AQEShuffleRead)"
+    for name, df in frames.items():
+        plan = _executed(df)
+        assert "MapInPandas" not in plan, f"{name}: {plan}"
+        # the final plan prints root first: what follows the first shuffle
+        # node runs before it
+        final = plan.split("== Initial Plan ==")[0]
+        below = re.split(shuffle, final, maxsplit=1)[1]
+        assert _PY_NODE.findall(below) == ["MapInArrow"], f"{name}: {plan}"

@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
+from ddsketch_spark.core.kll import KLLConfig
+from ddsketch_spark.core.tdigest import TDigestConfig
 from ddsketch_spark.operators import ddsketch_agg as agg
+from ddsketch_spark.operators import quantile_agg as qa
 from ddsketch_spark.operators import sketch_agg as udaf
 from ddsketch_spark.sources.fixtures import generate_tokens_table
 from tests.reference_oracle import exact_quantile
@@ -55,7 +58,7 @@ def test_udaf_tokens_array_global(tokens):
     assert list(row["keys"]) == list(want.keys)
     assert list(row["counts"]) == list(want.counts)
     # quantile accuracy vs exact over all tokens
-    sk = udaf.from_row(row.asDict())
+    sk = core.from_dict(row.asDict())
     for q in (0.01, 0.5, 0.99):
         true = exact_quantile(flat, q)
         assert abs(core.quantile(sk, q) - true) / abs(true) <= sk.alpha + 1e-9
@@ -118,7 +121,7 @@ def test_collapse_pressure_udaf(spark):
     df = spark.createDataFrame([(float(v),) for v in vals], "v double")
     cfg = DDSketchConfig(bin_limit=100)
     row = udaf.sketch_udaf(df.repartition(8), "v", cfg).collect()[0]
-    sk = udaf.from_row(row.asDict())
+    sk = core.from_dict(row.asDict())
     assert sk.size <= 100
     for q in (0.1, 0.5, 0.9):
         true = exact_quantile(vals, q)
@@ -150,3 +153,22 @@ def test_incremental_update_byte_identical(spark, sf_correct, tmp_path):
     assert set(updated) == set(full)
     for g in full:
         assert updated[g] == full[g], g
+
+
+def test_decimal_values_sketch_as_doubles(spark, sf_correct):
+    """A decimal value column is sketched as its doubles: the build casts
+    it on the Arrow side, exactly as Spark's own cast to double does."""
+    li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
+    dec = li.select("l_returnflag", F.col("l_extendedprice").cast("decimal(12,2)").alias("p"))
+    dbl = dec.select("l_returnflag", F.col("p").cast("double").alias("p"))
+    by = ("l_returnflag",)
+    key = lambda r: (r["l_returnflag"], r.asDict().get("q"))
+    for name, run in {
+        "sketch_udaf": lambda df: udaf.sketch_udaf(df, "p", CFG, by),
+        "tdigest": lambda df: qa.quantiles(
+            df, "p", qa.tdigest_ops(TDigestConfig(100.0)), Q_GRID, by),
+        "kll": lambda df: qa.quantiles(df, "p", qa.kll_ops(KLLConfig(64)), Q_GRID, by),
+    }.items():
+        got, want = (sorted(run(df).collect(), key=key) for df in (dec, dbl))
+        assert len(want) > 0
+        assert got == want, name
