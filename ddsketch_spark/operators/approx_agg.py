@@ -10,6 +10,15 @@ registers / d*w cells / k*n bits) ever reaches Python or a shuffle.  There
 (operators._grouped); the Bloom path left-joins each group's row count to
 its collected bits first.
 
+Per input row the JVM computes only the raw hash bits the aggregate keys
+or reduces on; whatever is derived from them is computed after the
+shuffle, on the aggregated rows.  HLL reduces ``min(h >> p)`` per register,
+not ``max(rho)``: the rank ``rho = (61 - p) - bitlen(h >> p) + 1`` never
+rises as ``h >> p`` rises, so a register's smallest ``h >> p`` gives its
+largest rank exactly, and ``bitlen`` runs on at most #groups x 2^p rows
+instead of once per value.  Count-min keys each counter by one flat bigint
+cell ``i * width + col`` and splits ``row`` and ``col`` out after the count.
+
 At 100 TB this is the property that matters: the shuffle after the partial
 aggregate carries at most (#groups x state-size) rows regardless of input
 rows, and membership / point queries are broadcast hash joins against that
@@ -42,6 +51,7 @@ from ddsketch_spark.operators._grouped import (
     ROWS,
     Fields,
     collect,
+    field_names,
     finalize_groups,
     join_groups,
     map_rows,
@@ -61,14 +71,33 @@ def _colref(value: Column | str) -> Column:
 # HyperLogLog
 # ---------------------------------------------------------------------------
 
-def hll_idx_rho(value: Column | str, cfg: HLLConfig) -> tuple[Column, Column]:
-    """JVM columns mirroring core.hll.idx_rho bit-for-bit."""
+def _hll_keyed(
+    df: DataFrame, value: Column | str, cfg: HLLConfig, keep_cols: Sequence[str]
+) -> DataFrame:
+    """(keep_cols..., idx, __rest) per input row: the register index and the
+    raw high bits ``h >> p`` of the mixed hash (both null for a null value).
+
+    The hash is its own projection, ``__h``, read twice by the next one;
+    Catalyst keeps the split (see :func:`_bloom_bit_rows`), so it is
+    computed once per row rather than inlined into both columns."""
     a, b = cfg.hash_ab
-    h = mixed_hash_col(_colref(value), a, b)
-    idx = F.pmod(h, F.lit(cfg.m))
-    rest = F.shiftright(h, cfg.p)  # h >= 0: arithmetic shift == floor div
-    rho = F.lit(HASH_BITS - cfg.p) - bitlen_col(rest) + F.lit(1)
-    return idx, rho
+    hashed = df.select(*keep_cols, mixed_hash_col(_colref(value), a, b).alias("__h"))
+    return hashed.select(
+        *keep_cols,
+        F.pmod(F.col("__h"), F.lit(cfg.m)).alias("idx"),
+        F.shiftright(F.col("__h"), cfg.p).alias("__rest"),  # h >= 0: floor div
+    )
+
+
+def _hll_ranks(regs: DataFrame, cfg: HLLConfig, keep_cols: Sequence[str]) -> DataFrame:
+    """(keep_cols..., idx, rho) from aggregated ``min(__rest)`` rows: the
+    rank of the smallest ``h >> p`` is the register's largest rank, exactly
+    as core.hll.idx_rho derives it.  A null ``__rest`` is the null-value
+    register (its idx is null too) and is dropped."""
+    rho = F.lit(HASH_BITS - cfg.p) - bitlen_col(F.col("__rest")) + F.lit(1)
+    return regs.where(F.col("__rest").isNotNull()).select(
+        *keep_cols, "idx", rho.alias("rho")
+    )
 
 
 def hll_registers(
@@ -78,12 +107,15 @@ def hll_registers(
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """(group_cols..., idx, rho) non-zero register maxima -- the data-sized
-    stage; shuffles at most (#groups x 2^p) rows."""
+    stage, reducing ``min(h >> p)`` per register; shuffles at most
+    (#groups x 2^p) rows."""
     cfg = cfg or HLLConfig()
-    idx, rho = hll_idx_rho(value, cfg)
-    keyed = df.select(*group_cols, idx.alias("idx"), rho.alias("rho"))
-    keyed = keyed.where(F.col("idx").isNotNull())
-    return keyed.groupBy(*group_cols, "idx").agg(F.max("rho").alias("rho"))
+    regs = (
+        _hll_keyed(df, value, cfg, group_cols)
+        .groupBy(*group_cols, "idx")
+        .agg(F.min("__rest").alias("__rest"))
+    )
+    return _hll_ranks(regs, cfg, group_cols)
 
 
 def hll_sketch(
@@ -145,28 +177,28 @@ def hll_estimate_rollup(
     the per-group registers, so ``rollup(idx, group)`` computes both
     grouping sets in a single shuffle over at most (#groups + 1) x 2^p
     register rows -- no second scan, no cached intermediate.  The global
-    row carries ``all_label`` in the group column (grouping_id
-    disambiguates, so a genuine NULL group value cannot collide)."""
+    row carries ``all_label`` in the group column.  ``grouping_id`` stays a
+    group column through the finalize, so a genuine group whose value is
+    NULL or ``all_label`` keeps a row of its own beside the global one."""
     cfg = cfg or HLLConfig()
-    idx, rho = hll_idx_rho(value, cfg)
-    keyed = df.select(F.col(group_col), idx.alias("idx"), rho.alias("rho"))
-    keyed = keyed.where(F.col("idx").isNotNull())
     # rollup(idx, group) -> grouping sets {(idx, group), (idx,), ()};
     # gid 0 = per-group registers, gid 1 = global registers, gid 3 = drop
+    keys = [group_col, "__gid"]
     regs = (
-        keyed.rollup("idx", group_col)
-        .agg(F.max("rho").alias("rho"), F.grouping_id().alias("__gid"))
+        _hll_keyed(df, value, cfg, [group_col])
+        .rollup("idx", group_col)
+        .agg(F.min("__rest").alias("__rest"), F.grouping_id().alias("__gid"))
         .where(F.col("__gid") < 3)
-        .select(
-            F.when(F.col("__gid") == 1, F.lit(all_label))
-            .otherwise(F.col(group_col))
-            .alias(group_col),
-            "idx",
-            "rho",
-        )
     )
-    return finalize_groups(
-        regs, [group_col], ("idx", "rho"), lambda r: _hll_estimate_row(r, cfg), HLL_ESTIMATE_FIELDS
+    est = finalize_groups(
+        _hll_ranks(regs, cfg, keys), keys, ("idx", "rho"),
+        lambda r: _hll_estimate_row(r, cfg), HLL_ESTIMATE_FIELDS,
+    )
+    return est.select(
+        F.when(F.col("__gid") == 1, F.lit(all_label))
+        .otherwise(F.col(group_col))
+        .alias(group_col),
+        *field_names(HLL_ESTIMATE_FIELDS),
     )
 
 
@@ -193,20 +225,33 @@ def cms_counters(
     value: Column | str,
     cfg: CMSConfig | None = None,
     group_cols: Sequence[str] = (),
-    weight: Column | str | None = None,
 ) -> DataFrame:
-    """(group_cols..., row, col, cnt) exact cell counters. Explode of d
-    structs happens in the same stage as the partial hash agg, so the
-    shuffle carries at most (#groups x d x width) rows."""
+    """(group_cols..., row, col, cnt) exact cell counters.
+
+    Each row explodes to its d flat cells ``i * width + col_i`` (one bigint
+    key, numbered as core.cms.cells numbers them) in the same stage as the
+    partial count, so the shuffle carries at most (#groups x d x width)
+    rows; ``row`` and ``col`` are split out of the key after the aggregate."""
     cfg = cfg or CMSConfig()
-    w = F.lit(1).cast("long") if weight is None else _colref(weight).cast("long")
-    keyed = df.select(
-        *group_cols, F.explode(cms_cell_cols(value, cfg)).alias("cell"), w.alias("w")
+    w = cfg.width
+    longs = df.select(*group_cols, _colref(value).cast("long").alias("__v"))
+    cells = F.array(
+        *[
+            F.lit(i * w) + F.pmod(hash_col(F.col("__v"), a, b), F.lit(w))
+            for i, (a, b) in enumerate(cfg.hash_abs)
+        ]
     )
     return (
-        keyed.where(F.col("cell.col").isNotNull())
-        .groupBy(*group_cols, F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
-        .agg(F.sum("w").alias("cnt"))
+        longs.select(*group_cols, F.explode(cells).alias("__cell"))
+        .where(F.col("__cell").isNotNull())
+        .groupBy(*group_cols, "__cell")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select(
+            *group_cols,
+            F.expr(f"CAST(__cell DIV {w} AS INT)").alias("row"),
+            F.pmod(F.col("__cell"), F.lit(w)).alias("col"),
+            "cnt",
+        )
     )
 
 
@@ -394,20 +439,6 @@ def cms_heavy_hitters(
 # ---------------------------------------------------------------------------
 # Bloom
 # ---------------------------------------------------------------------------
-
-def bloom_bit_col(value: Column | str, cfg: BloomConfig) -> Column:
-    """array<long> of the k bit positions for a value (JVM-side).
-
-    Prefer ``_bloom_bit_rows`` for DataFrame-scale inputs: k mixed hashes
-    inlined into ONE projection exceed the whole-stage-codegen method
-    limit, and the interpreted fallback is ~20x slower (measured at sf0.1:
-    12.6s vs 0.6s for the 600k-row build). This single-Column form is fine
-    for small probe sets and for expression-level composition."""
-    v = _colref(value)
-    return F.array(
-        *[F.pmod(mixed_hash_col(v, a, b), F.lit(cfg.m_bits)) for (a, b) in cfg.hash_abs]
-    )
-
 
 def _bloom_bit_rows(
     df: DataFrame,

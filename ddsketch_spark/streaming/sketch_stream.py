@@ -36,6 +36,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ddsketch_spark.config import DDSketchConfig
 from ddsketch_spark.functions.ddsketch_sql import dds_key
 from ddsketch_spark.operators._grouped import SketchOps, schema_prefix
+from ddsketch_spark.operators.approx_agg import hll_registers
 from ddsketch_spark.operators.sketch_agg import ddsketch_ops
 
 
@@ -73,19 +74,15 @@ def stream_hll_registers(
     cfg=None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Streaming distinct-count sketch: the HLL register build is an
-    ordinary streaming ``groupBy(idx).max(rho)`` over the codegen'd
-    register columns -- state bounded by #groups x 2^p rows, monotone
-    updates (max), so 'update' output mode emits only improved registers."""
-    from ddsketch_spark.core.hll import HLLConfig
-    from ddsketch_spark.operators.approx_agg import hll_idx_rho
-
-    cfg = cfg or HLLConfig()
-    idx, rho = hll_idx_rho(F.col(value), cfg)
-    keyed = stream_df.select(*group_cols, idx.alias("idx"), rho.alias("rho"))
-    return keyed.where(F.col("idx").isNotNull()).groupBy(*group_cols, "idx").agg(
-        F.max("rho").alias("rho")
-    )
+    """Streaming distinct-count sketch: the batch register build
+    (operators.approx_agg.hll_registers) over a stream.  Its streaming
+    ``groupBy(group..., idx)`` keeps ``min(h >> p)`` per register -- state
+    bounded by #groups x 2^p rows -- and the rank is derived from that
+    minimum on the aggregated rows.  ``min`` is monotone like ``max``, so a
+    register's state only ever improves: 'update' output mode emits the
+    registers a micro-batch touched, each with its running rank, and
+    'complete' mode equals the batch build over the same rows."""
+    return hll_registers(stream_df, value, cfg, group_cols)
 
 
 def stream_sketch_states(

@@ -22,6 +22,7 @@ from ddsketch_spark.core import hll as hll_core
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
+from ddsketch_spark.functions.hashing import HASH_BITS, MERSENNE61, bitlen_np
 from ddsketch_spark.operators import approx_agg as ops
 
 
@@ -103,6 +104,159 @@ def test_hll_spark_state_grouped(spark, sf_correct):
 
 
 # ---------------------------------------------------------------------------
+# HLL rank boundaries: values whose h >> p sits on a bit-length edge
+# ---------------------------------------------------------------------------
+
+def _hash_preimage(target: int, a: int, b: int) -> int | None:
+    """An int64 ``x`` with ``hash_np(x, a, b) == target``, or None.
+
+    The hash is ``a*lo + a2*mid + a3*hi + b (mod P)`` over the limbs of x.
+    For each ``hi``, the (lo, mid) solutions form a coset of the lattice
+    {(u, v): a*u + a2*v = 0 (mod P)}; a Lagrange-reduced basis and Babai
+    rounding toward the centre of the 31-bit box find a member inside it
+    when one is near."""
+    from ddsketch_spark.functions.hashing import _limb_params, hash_np
+
+    P, half = MERSENNE61, 1 << 30
+    a2, a3 = _limb_params(a, b)
+    inv_a = pow(a, -1, P)
+    u, v = (P, 0), ((-a2 * inv_a) % P, 1)
+    while True:  # Lagrange reduction: |u| <= |v|, then v -= round(<u,v>/|u|^2) u
+        if u[0] ** 2 + u[1] ** 2 > v[0] ** 2 + v[1] ** 2:
+            u, v = v, u
+        k = round((u[0] * v[0] + u[1] * v[1]) / (u[0] ** 2 + u[1] ** 2))
+        if k == 0:
+            break
+        v = (v[0] - k * u[0], v[1] - k * u[1])
+    det = u[0] * v[1] - u[1] * v[0]
+    for hi in range(4):
+        y0 = ((target - b - a3 * hi) * inv_a) % P - half
+        y1 = -half
+        cu = round((y0 * v[1] - y1 * v[0]) / det)
+        cv = round((u[0] * y1 - u[1] * y0) / det)
+        for du in (-1, 0, 1):
+            for dv in (-1, 0, 1):
+                lo = y0 + half - (cu + du) * u[0] - (cv + dv) * v[0]
+                mid = -(cu + du) * u[1] - (cv + dv) * v[1]
+                if 0 <= lo < 1 << 31 and 0 <= mid < 1 << 31:
+                    x = lo | mid << 31 | hi << 62
+                    x = x - (1 << 64) if x >= 1 << 63 else x
+                    if int(hash_np(np.array([x], np.int64), a, b)[0]) == target:
+                        return x
+    return None
+
+
+def _rest_preimage(cfg: HLLConfig, idx: int, rest: int) -> int | None:
+    """An int64 whose mixed hash is ``rest << p | idx`` (the mix squares
+    mod P, so the linear hash is a square root of it), or None."""
+    h = rest << cfg.p | idx
+    root = pow(h, (MERSENNE61 + 1) // 4, MERSENNE61)  # P = 3 (mod 4)
+    if h >= MERSENNE61 or root * root % MERSENNE61 != h:
+        return None
+    for r in (root, MERSENNE61 - root):
+        x = _hash_preimage(r, *cfg.hash_ab)
+        if x is not None:
+            return x
+    return None
+
+
+def _rank_edge_values(cfg: HLLConfig) -> np.ndarray:
+    """Values whose ``h >> p`` is 0, 1, 2^k - 1 and 2^k (k up to the top
+    bit), several per register so ``min(h >> p)`` has to choose; checked
+    against the ranks core.hll.idx_rho gives them."""
+    top = HASH_BITS - cfg.p
+    edges = {0, 1, (1 << top) - 1}
+    for k in (1, 2, 30, 31, 52, 53, 54, top - 1):
+        if k < top:
+            edges |= {(1 << k) - 1, 1 << k}
+    vals, rests = [], []
+    for rest in sorted(edges):
+        found = 0
+        for idx in range(cfg.m):
+            x = _rest_preimage(cfg, idx, rest)
+            if x is not None:
+                vals.append(x)
+                rests.append(rest)
+                found += 1
+                if found == 3:
+                    break
+        assert found, rest
+    vals = np.array(vals, np.int64)
+    _, rho = hll_core.idx_rho(vals, cfg)
+    assert np.array_equal(rho, top - bitlen_np(np.array(rests, np.int64)) + 1)
+    return vals
+
+
+def _edge_table(spark, vals: np.ndarray):
+    """(g, x): the values spread over groups "a", "b" and NULL (each group
+    sees every value at least once, so shared registers compete), plus a
+    NULL value in each group and the int64 edges."""
+    extremes = [0, -1, 2**31 - 1, 2**31, -(2**31), 2**62, -(2**63), 2**63 - 1]
+    rows = [(g, int(v)) for i, v in enumerate(vals) for g in ("a", "b", None)[: 1 + i % 3]]
+    rows += [(g, x) for g in ("a", "b", None) for x in [None, *extremes]]
+    rows += [("a", int(v)) for v in vals]
+    return spark.createDataFrame(rows, "g string, x long").repartition(3, "x"), rows
+
+
+def _by_group(rows) -> dict:
+    out: dict = {}
+    for g, x in rows:
+        if x is not None:
+            out.setdefault(g, []).append(x)
+    return {g: np.array(v, np.int64) for g, v in out.items()}
+
+
+@pytest.mark.parametrize("p", [4, 10, 14])
+def test_hll_rank_edges_match_core(spark, p):
+    """``min(h >> p)`` per register, ranked after the shuffle, equals the
+    core's per-value ``max(rho)`` on values that sit on every bit-length
+    edge of ``h >> p`` -- through hll_registers, hll_sketch and
+    hll_estimate_rollup, with NULL values and a NULL group mixed in."""
+    cfg = HLLConfig(p=p)
+    df, rows = _edge_table(spark, _rank_edge_values(cfg))
+    want = {g: hll_core.add(hll_core.empty(cfg), v) for g, v in _by_group(rows).items()}
+
+    regs: dict = {}
+    for r in ops.hll_registers(df, "x", cfg, ("g",)).collect():
+        regs.setdefault(r["g"], []).append((r["idx"], r["rho"]))
+    assert {g: sorted(v) for g, v in regs.items()} == {
+        g: list(zip(sk.idxs.tolist(), sk.rhos.tolist())) for g, sk in want.items()
+    }
+    states = {r["g"]: r for r in ops.hll_sketch(df, "x", cfg, ("g",)).collect()}
+    assert set(states) == set(want)
+    for g, sk in want.items():
+        assert list(states[g]["idxs"]) == sk.idxs.tolist()
+        assert list(states[g]["rhos"]) == sk.rhos.tolist()
+
+    everything = hll_core.add(hll_core.empty(cfg), np.concatenate(list(_by_group(rows).values())))
+    want_rollup = sorted(
+        (g, hll_core.estimate(sk), cfg.m - len(sk.idxs), hll_core.register_checksum(sk))
+        for g, sk in [*want.items(), ("__ALL__", everything)]
+        if g is not None
+    )
+    got = ops.hll_estimate_rollup(df, "x", "g", cfg).collect()
+    assert sorted(tuple(r) for r in got if r["g"] is not None) == want_rollup
+    assert [r["checksum"] for r in got if r["g"] is None] == [
+        hll_core.register_checksum(want[None])
+    ]
+
+
+def test_hll_rollup_keeps_a_group_named_like_the_global_label(spark):
+    """A genuine group whose value is the global row's label keeps its own
+    row: its estimate equals hll_estimate for that group, and the global
+    row equals the ungrouped hll_estimate."""
+    cfg = HLLConfig(p=10)
+    rows = [("__ALL__", i) for i in range(300)] + [("x", 10_000 + i) for i in range(1000)]
+    df = spark.createDataFrame(rows, "g string, v long")
+    key = lambda r: (r["estimate"], r["v_zero"], r["checksum"])
+    grouped = {r["g"]: key(r) for r in ops.hll_estimate(df, "v", cfg, ("g",)).collect()}
+    glob = key(ops.hll_estimate(df, "v", cfg).collect()[0])
+    got = ops.hll_estimate_rollup(df, "v", "g", cfg).collect()
+    assert sorted(key(r) for r in got if r["g"] == "__ALL__") == sorted([grouped["__ALL__"], glob])
+    assert [key(r) for r in got if r["g"] == "x"] == [grouped["x"]]
+
+
+# ---------------------------------------------------------------------------
 # count-min core
 # ---------------------------------------------------------------------------
 
@@ -144,6 +298,24 @@ def test_cms_spark_matches_core(spark):
     items = np.unique(vals)
     want = cms_core.point_query(sk, items)
     assert got == {int(i): int(w) for i, w in zip(items, want)}
+
+
+@pytest.mark.parametrize("depth,width", [(1, 64), (4, 2048), (5, 100_003)])
+def test_cms_counters_match_core_cells(spark, depth, width):
+    """The flat-cell counters equal a bincount of core.cms.cells per group,
+    with NULL values, a NULL group and the int64 edges in the input."""
+    cfg = CMSConfig(depth=depth, width=width)
+    df, rows = _edge_table(spark, _values(3000, 700) - 350)
+    got: dict = {}
+    for r in ops.cms_counters(df, "x", cfg, ("g",)).collect():
+        got.setdefault(r["g"], {})[(r["row"], r["col"])] = r["cnt"]
+    want = {}
+    for g, v in _by_group(rows).items():
+        counts = np.bincount(cms_core.cells(v, cfg).ravel(), minlength=depth * width)
+        want[g] = {
+            (int(c) // width, int(c) % width): int(counts[c]) for c in np.flatnonzero(counts)
+        }
+    assert got == want
 
 
 def test_cms_heavy_hitters_spark(spark):

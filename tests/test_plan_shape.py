@@ -57,8 +57,26 @@ def test_hll_registers_partial_agg(spark, sf_correct):
     explained = regs._sc._jvm.PythonSQLUtils.explainString(
         regs._jdf.queryExecution(), "formatted"
     )
-    assert "partial_max" in explained  # register maxima combine map-side
+    assert "partial_min" in explained  # register minima combine map-side
     assert "Exchange" in explained
+
+
+@pytest.mark.parametrize("op", ["registers", "rollup"])
+def test_hll_rank_after_the_shuffle(spark, sf_correct, op):
+    """Below the first exchange the HLL build reduces raw hash bits
+    (min(h >> p)); the rank's bit length (LOG2) is taken on the aggregated
+    register rows above it, never once per input row."""
+    ev = spark.read.parquet(f"{sf_correct}/events.parquet")
+    out = (
+        aops.hll_registers(ev, "user_id", group_cols=("event_type",))
+        if op == "registers"
+        else aops.hll_estimate_rollup(ev, "user_id", "event_type")
+    )
+    plan = _plan(out)
+    # the plan prints top-down: the input-side (first) shuffle is the last
+    below = plan[plan.rindex("Exchange"):]
+    assert "LOG2" in plan.upper(), plan
+    assert "LOG2" not in below.upper(), plan
 
 
 def test_bloom_membership_joins_broadcast(spark, sf_correct):
@@ -168,7 +186,7 @@ def test_compacting_rank_pass_broadcasts(spark, sf_correct):
 def test_hll_rollup_single_scan_and_expand(spark, sf_correct):
     """hll_estimate_rollup computes grouped AND global registers in ONE
     input pass: the plan must contain exactly one parquet scan (the rollup
-    Expand feeds both grouping sets) and a map-side partial max before the
+    Expand feeds both grouping sets) and a map-side partial min before the
     exchange. Output carries both the per-group rows and the '__ALL__' row,
     and the global registers equal the register-wise max of re-running the
     plain grouped/global estimators."""
@@ -181,7 +199,7 @@ def test_hll_rollup_single_scan_and_expand(spark, sf_correct):
     # detail section -- count numbered node headers, not substrings
     assert len(re.findall(r"\(\d+\) Scan parquet", explained)) == 1, explained
     assert "Expand" in explained  # rollup grouping sets, one pass
-    assert "partial_max" in explained
+    assert "partial_min" in explained
     rows = {r["event_type"]: r for r in out.collect()}
     assert "__ALL__" in rows
     glob = aops.hll_estimate(ev, "user_id").collect()[0]
