@@ -69,16 +69,9 @@ def bit_positions(values: np.ndarray, cfg: BloomConfig) -> np.ndarray:
 
 def add(sk: Bloom, values: np.ndarray) -> Bloom:
     bits = bit_positions(values, sk.cfg).ravel()
-    return add_bits(sk, bits, len(np.asarray(values)))
-
-
-def add_bits(sk: Bloom, bits: np.ndarray, n: int) -> Bloom:
-    """Absorb pre-hashed bit positions (the Spark fast path)."""
-    bits = np.asarray(bits, np.int64)
-    words = bits >> 6
     masks = np.left_shift(np.uint64(1), (bits & 63).astype(np.uint64))
-    np.bitwise_or.at(sk.words, words, masks)
-    sk.n += int(n)
+    np.bitwise_or.at(sk.words, bits >> 6, masks)
+    sk.n += len(np.asarray(values))
     return sk
 
 
@@ -97,10 +90,6 @@ def might_contain(sk: Bloom, values: np.ndarray) -> np.ndarray:
     words = sk.words[(bits >> 6)]
     masks = np.left_shift(np.uint64(1), (bits & 63).astype(np.uint64))
     return np.all((words & masks) != 0, axis=1)
-
-
-def bits_set(sk: Bloom) -> int:
-    return int(np.sum(np.unpackbits(sk.words.view(np.uint8))))
 
 
 def to_dict(sk: Bloom) -> dict:

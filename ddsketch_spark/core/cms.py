@@ -73,13 +73,6 @@ def add(sk: CMS, values: np.ndarray, weights: np.ndarray | None = None) -> CMS:
     return sk
 
 
-def add_cells(sk: CMS, flat_cells: np.ndarray, counts: np.ndarray, n: int) -> CMS:
-    """Absorb pre-aggregated (cell, count) pairs (the Spark fast path)."""
-    np.add.at(sk.counters, np.asarray(flat_cells, np.int64), np.asarray(counts, np.int64))
-    sk.n += int(n)
-    return sk
-
-
 def merge(a: CMS, b: CMS) -> CMS:
     if a.cfg != b.cfg:
         raise ValueError(f"incompatible CMS configs: {a.cfg} vs {b.cfg}")
@@ -93,16 +86,6 @@ def point_query(sk: CMS, values: np.ndarray) -> np.ndarray:
     """Estimated frequency of each probe: min over the d counters."""
     c = cells(np.asarray(values), sk.cfg)
     return np.min(sk.counters[c], axis=1)
-
-
-def heavy_hitters(sk: CMS, candidates: np.ndarray, phi: float) -> tuple[np.ndarray, np.ndarray]:
-    """Candidates whose estimated frequency >= phi * n, with estimates.
-
-    CMS never under-counts, so every true phi-heavy item in the candidate
-    set survives (no false negatives)."""
-    est = point_query(sk, candidates)
-    keep = est >= phi * sk.n
-    return np.asarray(candidates)[keep], est[keep]
 
 
 def to_dict(sk: CMS) -> dict:

@@ -16,9 +16,9 @@ bit-for-bit, which is what gives the HLL queries *value-level* oracles.
 Estimator: Flajolet et al. 2007 HyperLogLog with the small-range linear-
 counting correction. The 2^32 large-range correction is intentionally
 omitted -- our hash space is 2^61, where that correction never fires at any
-realistic cardinality.  Sum of 2^-rho terms spans < 53 bits of mantissa, so
-the harmonic sum is *exact* in float64 regardless of summation order --
-the estimate is deterministic across engines.
+realistic cardinality.  The harmonic sum of at most 2^p terms 2^-rho needs
+p + max(rho) bits: while p + max(rho) <= 53 it is exact in float64 whatever
+the summation order (p = 12 allows rho up to 50; above 41 it may round).
 """
 
 from __future__ import annotations
@@ -93,8 +93,7 @@ def add(sk: HLL, values: np.ndarray) -> HLL:
 
 
 def add_idx_rho(sk: HLL, idx: np.ndarray, rho: np.ndarray) -> HLL:
-    """Absorb pre-hashed (idx, rho) pairs (the Spark fast path feeds the
-    JVM-aggregated per-register maxima here)."""
+    """Absorb (idx, rho) pairs: each register keeps its largest rank."""
     all_idx = np.concatenate([sk.idxs, np.asarray(idx, np.int64)])
     all_rho = np.concatenate([sk.rhos, np.asarray(rho, np.int64)])
     uniq, inv = np.unique(all_idx, return_inverse=True)
@@ -114,7 +113,8 @@ def merge(a: HLL, b: HLL) -> HLL:
 
 def harmonic_sum(sk: HLL) -> float:
     """sum over all m registers of 2^-rho (empty registers contribute 1).
-    Every term is an exact power of two spanning < 53 bits -> exact sum."""
+    Every term is an exact power of two, so the sum is exact -- and
+    independent of summation order -- while p + max(rho) <= 53."""
     m = sk.cfg.m
     zeros = m - len(sk.idxs)
     return float(zeros) + float(np.sum(np.ldexp(1.0, -sk.rhos.astype(np.int64))))

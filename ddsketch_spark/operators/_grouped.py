@@ -5,10 +5,12 @@ A sketch family is a :class:`SketchOps` (numpy core, config, state schema,
 into one state row per group in one ``mapInArrow``; :func:`merge_partials`
 and :func:`update_states` merge those rows with the per-group finalize.
 
-The finalize is one Arrow pass too.  Each operator ends the same way: the
-rows of one group -- partial sketch states, histogram bins, registers,
-counters, set bits -- must meet in one Python call that builds the group's
-sketch.  Here the JVM gathers them first:
+The finalize is one Arrow pass too.  Each quantile operator (DDSketch,
+t-digest, KLL) ends the same way: the rows of one group -- partial sketch
+states or histogram bins -- must meet in one Python call that builds the
+group's sketch.  (HLL, count-min and Bloom finalize by closed-form
+arithmetic, so operators.approx_agg does it in Catalyst and never comes
+here.)  Here the JVM gathers them first:
 ``groupBy(*group_cols).agg(collect_list(struct(*cols)))`` makes one row per
 group (one row over the whole input when there are no group columns).  One
 ``mapInArrow`` then walks those rows and hands each group's values to the

@@ -4,11 +4,11 @@ Same architecture as the DDSketch path (operators.ddsketch_agg): a codegen'd
 Catalyst expression maps every value to its register/cell/bit JVM-side, a
 ``groupBy(...).agg(...)`` does the data-sized reduction with automatic
 map-side partials, and only the tiny per-group aggregated state (<= m
-registers / d*w cells / k*n bits) ever reaches Python or a shuffle.  There
-``collect_list`` gathers each group's state into one row and one
-``mapInArrow`` per partition builds every group's sketch
-(operators._grouped); the Bloom path left-joins each group's row count to
-its collected bits first.
+registers / d*w cells / m/64 words) ever reaches a shuffle.  The finalize
+is closed-form, so it stays in Catalyst too: an HLL estimate is one more
+aggregate over the register rows, and a state row is the group's sorted
+(key, value) list, expanded to dense counters or words by array
+expressions.  Only the Misra-Gries candidate pass runs Python.
 
 Per input row the JVM computes only the raw hash bits the aggregate keys
 or reduces on; whatever is derived from them is computed after the
@@ -34,9 +34,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ddsketch_spark.core import bloom as bloom_core
-from ddsketch_spark.core import cms as cms_core
-from ddsketch_spark.core import hll as hll_core
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
@@ -47,24 +44,40 @@ from ddsketch_spark.functions.hashing import (
     mix_col,
     mixed_hash_col,
 )
-from ddsketch_spark.operators._grouped import (
-    ROWS,
-    Fields,
-    collect,
-    field_names,
-    finalize_groups,
-    join_groups,
-    map_rows,
-)
-
-HLL_STATE_FIELDS = "p int, seed long, idxs array<long>, rhos array<long>"
-HLL_ESTIMATE_FIELDS = "estimate double, v_zero long, checksum long"
-CMS_STATE_FIELDS = "depth int, width int, seed long, n long, counters array<long>"
-BLOOM_STATE_FIELDS = "m_bits int, k int, seed long, n long, words array<long>"
 
 
 def _colref(value: Column | str) -> Column:
     return F.col(value) if isinstance(value, str) else value
+
+
+def _sorted_entries(key: str, val: str) -> Column:
+    """Aggregate: the group's ``(key, val)`` structs of non-null ``key``,
+    sorted by key -- a sparse state, as :func:`_dense` expands it."""
+    entry = F.struct(F.col(key).alias("key"), F.col(val).alias("val"))
+    return F.sort_array(F.collect_list(F.when(F.col(key).isNotNull(), entry)))
+
+
+def _dense(entries: Column, size: int) -> Column:
+    """The ``size``-long array<long> with each entry's ``val`` at its ``key``
+    and 0 elsewhere; ``entries`` is a non-empty column of (key, val) structs
+    sorted by distinct key.  With every key present -- the usual case at
+    scale -- that is the values as they stand.  Otherwise each entry expands
+    to the zeros since the previous key, then its value: linear in
+    ``size``, where a map lookup per position would scan the map every
+    time."""
+    zero = F.lit(0).cast("long")
+
+    def gap_then_val(x: Column, j: Column) -> Column:
+        prev = F.when(j == 0, F.lit(-1)).otherwise(entries[j - 1]["key"])
+        gap = F.array_repeat(zero, (x["key"] - prev - 1).cast("int"))
+        return F.concat(gap, F.array(x["val"]))
+
+    last = F.element_at(entries, -1)["key"]
+    spread = F.concat(
+        F.flatten(F.transform(entries, gap_then_val)),
+        F.array_repeat(zero, (F.lit(size - 1) - last).cast("int")),
+    )
+    return F.when(F.size(entries) == size, entries["val"]).otherwise(spread)
 
 
 # ---------------------------------------------------------------------------
@@ -124,26 +137,41 @@ def hll_sketch(
     cfg: HLLConfig | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-group canonical sparse HLL state rows."""
+    """Per-group canonical sparse HLL state rows (core.hll.to_dict): each
+    group's registers sorted by ``idx``."""
     cfg = cfg or HLLConfig()
-    regs = hll_registers(df, value, cfg, group_cols)
-    return finalize_groups(
-        regs, group_cols, ("idx", "rho"),
-        lambda r: hll_core.to_dict(_hll_from_registers(r, cfg)), HLL_STATE_FIELDS,
+    regs = hll_registers(df, value, cfg, group_cols).groupBy(*group_cols)
+    states = regs.agg(_sorted_entries("idx", "rho").alias("__e"))
+    return states.where(F.size("__e") > 0).select(  # no row for an empty input
+        *group_cols,
+        F.lit(cfg.p).alias("p"),
+        F.lit(cfg.seed).cast("long").alias("seed"),
+        F.col("__e.key").alias("idxs"),
+        F.col("__e.val").alias("rhos"),
     )
 
 
-def _hll_from_registers(regs: Fields, cfg: HLLConfig) -> hll_core.HLL:
-    return hll_core.add_idx_rho(hll_core.empty(cfg), regs["idx"], regs["rho"])
-
-
-def _hll_estimate_row(regs: Fields, cfg: HLLConfig) -> dict:
-    sk = _hll_from_registers(regs, cfg)
-    return {
-        "estimate": hll_core.estimate(sk),
-        "v_zero": cfg.m - len(sk.idxs),
-        "checksum": hll_core.register_checksum(sk),
-    }
+def _hll_estimates(regs: DataFrame, cfg: HLLConfig, keys: Sequence[str]) -> DataFrame:
+    """(keys..., estimate, v_zero, checksum) from (keys..., idx, rho)
+    register rows: core.hll.estimate as one aggregate.  The harmonic sum
+    adds ``2^(62 - p - rho)`` as exact integers (at most 2^61 in total), so
+    it is rounded once whatever the order of the rows."""
+    m, top = cfg.m, HASH_BITS + 1 - cfg.p  # top = the largest rank
+    sums = (
+        regs.groupBy(*keys)
+        .agg(
+            (F.lit(m) - F.count(F.lit(1))).alias("v_zero"),
+            F.sum(F.expr(f"shiftleft(1L, CAST({top} - rho AS INT))")).alias("__s"),
+            F.sum(F.col("idx") * F.col("rho")).alias("checksum"),
+        )
+        .where(F.col("v_zero") < m)  # no row for an empty input
+    )
+    e = F.lit(cfg.alpha_m * m * m) / (F.col("v_zero") + F.col("__s") / float(1 << top))
+    small = (e <= 2.5 * m) & (F.col("v_zero") > 0)
+    linear = F.lit(float(m)) * F.log(F.lit(m) / F.col("v_zero"))
+    return sums.select(
+        *keys, F.when(small, linear).otherwise(e).alias("estimate"), "v_zero", "checksum"
+    )
 
 
 def hll_estimate(
@@ -155,13 +183,13 @@ def hll_estimate(
     """(group_cols..., estimate, v_zero, checksum) distinct-count estimates.
 
     v_zero (empty-register count) and checksum (sum idx*rho) are exact
-    integers -- the strong oracle signals; estimate is deterministic float
-    (see core.hll.harmonic_sum exactness note)."""
+    integers, equal to core.hll's -- the strong oracle signals.  estimate
+    equals core.hll.estimate within 1e-12 relative: the harmonic sum is
+    exact on both sides while p + max(rho) <= 53 (see core.hll), but in the
+    linear-counting range Spark's ``log`` (StrictMath) and numpy's (libm)
+    can differ in the last bit."""
     cfg = cfg or HLLConfig()
-    regs = hll_registers(df, value, cfg, group_cols)
-    return finalize_groups(
-        regs, group_cols, ("idx", "rho"), lambda r: _hll_estimate_row(r, cfg), HLL_ESTIMATE_FIELDS
-    )
+    return _hll_estimates(hll_registers(df, value, cfg, group_cols), cfg, group_cols)
 
 
 def hll_estimate_rollup(
@@ -178,8 +206,9 @@ def hll_estimate_rollup(
     grouping sets in a single shuffle over at most (#groups + 1) x 2^p
     register rows -- no second scan, no cached intermediate.  The global
     row carries ``all_label`` in the group column.  ``grouping_id`` stays a
-    group column through the finalize, so a genuine group whose value is
-    NULL or ``all_label`` keeps a row of its own beside the global one."""
+    group column through the estimate, so a genuine group whose value is
+    NULL or ``all_label`` keeps a row of its own beside the global one.
+    Each row matches :func:`hll_estimate` as that function states."""
     cfg = cfg or HLLConfig()
     # rollup(idx, group) -> grouping sets {(idx, group), (idx,), ()};
     # gid 0 = per-group registers, gid 1 = global registers, gid 3 = drop
@@ -190,33 +219,51 @@ def hll_estimate_rollup(
         .agg(F.min("__rest").alias("__rest"), F.grouping_id().alias("__gid"))
         .where(F.col("__gid") < 3)
     )
-    est = finalize_groups(
-        _hll_ranks(regs, cfg, keys), keys, ("idx", "rho"),
-        lambda r: _hll_estimate_row(r, cfg), HLL_ESTIMATE_FIELDS,
-    )
-    return est.select(
-        F.when(F.col("__gid") == 1, F.lit(all_label))
-        .otherwise(F.col(group_col))
-        .alias(group_col),
-        *field_names(HLL_ESTIMATE_FIELDS),
-    )
+    est = _hll_estimates(_hll_ranks(regs, cfg, keys), cfg, keys)
+    label = F.when(F.col("__gid") == 1, F.lit(all_label)).otherwise(F.col(group_col))
+    return est.select(label.alias(group_col), "estimate", "v_zero", "checksum")
 
 
 # ---------------------------------------------------------------------------
 # Count-min
 # ---------------------------------------------------------------------------
 
-def cms_cell_cols(value: Column | str, cfg: CMSConfig) -> Column:
-    """array<struct<row,col>> of the d cells for a value (JVM-side)."""
-    v = _colref(value)
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("row"),
-                F.pmod(hash_col(v, a, b), F.lit(cfg.width)).alias("col"),
-            )
-            for i, (a, b) in enumerate(cfg.hash_abs)
-        ]
+def _cms_cell_array(value: Column, cfg: CMSConfig) -> Column:
+    """array<bigint> of a value's d flat cells ``i * width + col_i``,
+    numbered as core.cms.cells numbers them (null for a null value)."""
+    w = cfg.width
+    cols = [F.pmod(hash_col(value, a, b), F.lit(w)) for a, b in cfg.hash_abs]
+    return F.array(*[F.lit(i * w) + col for i, col in enumerate(cols)])
+
+
+def _cms_cells(
+    df: DataFrame, value: Column | str, cfg: CMSConfig, group_cols: Sequence[str]
+) -> DataFrame:
+    """(group_cols..., __cell, cnt) per non-zero flat cell: each row
+    explodes to its d cells in the same stage as the partial count, so the
+    shuffle carries at most (#groups x d x width) rows."""
+    longs = df.select(*group_cols, _colref(value).cast("long").alias("__v"))
+    return (
+        longs.select(*group_cols, F.explode(_cms_cell_array(F.col("__v"), cfg)).alias("__cell"))
+        .where(F.col("__cell").isNotNull())
+        .groupBy(*group_cols, "__cell")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _cms_estimates(
+    cells: DataFrame, probes: DataFrame, probe_col: str, cfg: CMSConfig
+) -> DataFrame:
+    """(probe, est): the min over each probe's d counters, its cells
+    broadcast-joined against the (small) ``_cms_cells`` table."""
+    pr = probes.select(
+        F.col(probe_col).alias("probe"),
+        F.explode(_cms_cell_array(F.col(probe_col), cfg)).alias("__cell"),
+    )
+    return (
+        pr.join(F.broadcast(cells), ["__cell"], "left")
+        .groupBy("probe")
+        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est"))
     )
 
 
@@ -226,32 +273,15 @@ def cms_counters(
     cfg: CMSConfig | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(group_cols..., row, col, cnt) exact cell counters.
-
-    Each row explodes to its d flat cells ``i * width + col_i`` (one bigint
-    key, numbered as core.cms.cells numbers them) in the same stage as the
-    partial count, so the shuffle carries at most (#groups x d x width)
-    rows; ``row`` and ``col`` are split out of the key after the aggregate."""
+    """(group_cols..., row, col, cnt) exact cell counters; ``row`` and
+    ``col`` are split out of the flat cell key after the aggregate."""
     cfg = cfg or CMSConfig()
     w = cfg.width
-    longs = df.select(*group_cols, _colref(value).cast("long").alias("__v"))
-    cells = F.array(
-        *[
-            F.lit(i * w) + F.pmod(hash_col(F.col("__v"), a, b), F.lit(w))
-            for i, (a, b) in enumerate(cfg.hash_abs)
-        ]
-    )
-    return (
-        longs.select(*group_cols, F.explode(cells).alias("__cell"))
-        .where(F.col("__cell").isNotNull())
-        .groupBy(*group_cols, "__cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            *group_cols,
-            F.expr(f"CAST(__cell DIV {w} AS INT)").alias("row"),
-            F.pmod(F.col("__cell"), F.lit(w)).alias("col"),
-            "cnt",
-        )
+    return _cms_cells(df, value, cfg, group_cols).select(
+        *group_cols,
+        F.expr(f"CAST(__cell DIV {w} AS INT)").alias("row"),
+        F.pmod(F.col("__cell"), F.lit(w)).alias("col"),
+        "cnt",
     )
 
 
@@ -261,19 +291,22 @@ def cms_sketch(
     cfg: CMSConfig | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-group dense CMS state rows (counters flattened row-major)."""
+    """Per-group dense CMS state rows (core.cms.to_dict: counters flattened
+    row-major); ``n`` is the sum of row 0."""
     cfg = cfg or CMSConfig()
-    cnts = cms_counters(df, value, cfg, group_cols)
-
-    def finalize(cells: Fields) -> dict:
-        row, cnt = cells["row"], cells["cnt"]
-        sk = cms_core.add_cells(
-            cms_core.empty(cfg), row.astype(np.int64) * cfg.width + cells["col"], cnt,
-            int(cnt[row == 0].sum()),
-        )
-        return cms_core.to_dict(sk)
-
-    return finalize_groups(cnts, group_cols, ("row", "col", "cnt"), finalize, CMS_STATE_FIELDS)
+    cells = _cms_cells(df, value, cfg, group_cols)
+    states = cells.groupBy(*group_cols).agg(
+        F.sum(F.when(F.col("__cell") < cfg.width, F.col("cnt"))).alias("n"),
+        _sorted_entries("__cell", "cnt").alias("__e"),
+    )
+    return states.where(F.size("__e") > 0).select(  # no row for an empty input
+        *group_cols,
+        F.lit(cfg.depth).alias("depth"),
+        F.lit(cfg.width).alias("width"),
+        F.lit(cfg.seed).cast("long").alias("seed"),
+        "n",
+        _dense(F.col("__e"), cfg.depth * cfg.width).alias("counters"),
+    )
 
 
 def cms_point_query(
@@ -287,15 +320,7 @@ def cms_point_query(
     entirely JVM-side -- counters built by groupBy, probes exploded to their
     d cells and broadcast-joined against the (small) counter table."""
     cfg = cfg or CMSConfig()
-    cnts = cms_counters(df, value, cfg)
-    pr = probes.select(
-        F.col(probe_col).alias("probe"),
-        F.explode(cms_cell_cols(F.col(probe_col), cfg)).alias("cell"),
-    ).select("probe", F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
-    joined = pr.join(F.broadcast(cnts), ["row", "col"], "left").select(
-        "probe", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt")
-    )
-    return joined.groupBy("probe").agg(F.min("cnt").alias("est"))
+    return _cms_estimates(_cms_cells(df, value, cfg, ()), probes, probe_col, cfg)
 
 
 def local_topk_pandas(batches, k_local: int, prune_factor: int) -> np.ndarray:
@@ -313,7 +338,8 @@ def local_topk_pandas(batches, k_local: int, prune_factor: int) -> np.ndarray:
     every key stored_count >= true_count - floor at all times.
 
     Emission keeps every key with stored + floor >= (k_local-th largest
-    stored count), bounded by cap keys.  Guarantee, independent of batch
+    stored count): at most 2*cap keys, the most the table holds after any
+    batch (a prune leaves at most cap).  Guarantee, independent of batch
     ordering: ANY key whose true within-partition count is at least
     kth_stored + floor -- in particular any key above
     N_partition/(cap+1) + kth_stored -- is emitted.  With no pruning
@@ -345,8 +371,9 @@ def local_topk_candidates(
     """(item) heavy-hitter candidates: per-partition top items by local
     count, via one Arrow-batched mapInPandas pass -- the 100 TB candidate
     source (VERDICT r3 item 4).  No shuffle of the value column ever
-    happens: each partition emits at most ``prune_factor * k_local`` rows,
-    and the only aggregation downstream is a distinct over the union.
+    happens: each partition emits at most ``2 * prune_factor * k_local``
+    rows (``2*cap``, see :func:`local_topk_pandas`), and the only
+    aggregation downstream is a distinct over the union.
 
     Memory per task is bounded by the prune capacity, and counting is a
     Misra-Gries summary (see :func:`local_topk_pandas`), giving a real
@@ -408,9 +435,9 @@ def cms_heavy_hitters(
     # counters feed two consumers (N and the estimate join): persist so the
     # input scan + counter shuffle run once, not per consumer (the table is
     # at most d x width rows, trivially cacheable)
-    cnts = cms_counters(df, value, cfg).persist()
+    cells = _cms_cells(df, value, cfg, ()).persist()
     # N = total inserted = sum of any one counter row (row 0): no extra scan
-    n = cnts.where(F.col("row") == 0).agg(F.sum("cnt").alias("n"))
+    n = cells.where(F.col("__cell") < cfg.width).agg(F.sum("cnt").alias("n"))
     if candidates is not None:
         pass  # caller-supplied (already persisted/shared)
     elif candidate_source == "local_topk":
@@ -419,18 +446,9 @@ def cms_heavy_hitters(
         candidates = df.select(v.alias("item")).distinct()
     else:
         raise ValueError(f"unknown candidate_source: {candidate_source!r}")
-    pr = candidates.select(
-        F.col("item").alias("probe"),
-        F.explode(cms_cell_cols(F.col("item"), cfg)).alias("cell"),
-    ).select("probe", F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
-    est = (
-        pr.join(F.broadcast(cnts), ["row", "col"], "left")
-        .select("probe", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
-        .groupBy("probe")
-        .agg(F.min("cnt").alias("est"))
-    )
     return (
-        est.crossJoin(F.broadcast(n))
+        _cms_estimates(cells, candidates, "item", cfg)
+        .crossJoin(F.broadcast(n))
         .where(F.col("est") >= F.lit(phi) * F.col("n"))
         .select(F.col("probe").alias("item"), "est")
     )
@@ -490,18 +508,34 @@ def bloom_sketch(
     cfg: BloomConfig | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-group packed-word Bloom state rows."""
+    """Per-group packed-word Bloom state rows (core.bloom.to_dict).
+
+    Each word ORs its bits' masks ``1 << (bit % 64)`` in one aggregate keyed
+    by ``(group, bit >> 6)``.  The same aggregate counts the input's
+    non-null values: every input row explodes to exactly k bit rows, so
+    ``n`` = count(value) is the group's sum divided by k."""
     cfg = cfg or BloomConfig()
-    bits = collect(bloom_bits(df, value, cfg, group_cols), group_cols, ("bit",))
-    n_df = df.groupBy(*group_cols).agg(F.count(_colref(value)).alias("__n"))
-
-    def finalize(row: dict) -> dict | None:
-        if not len(row[ROWS]):
-            return None  # no set bits: no row, as for an empty input
-        sk = bloom_core.add_bits(bloom_core.empty(cfg), row[ROWS]["bit"], row["__n"])
-        return bloom_core.to_dict(sk)
-
-    return map_rows(join_groups(bits, n_df, group_cols), group_cols, finalize, BLOOM_STATE_FIELDS)
+    src = df.select(*group_cols, _colref(value).alias("__v"))
+    words = (
+        _bloom_bit_rows(src, "__v", cfg, keep_cols=[*group_cols, "__v"])
+        .groupBy(*group_cols, F.shiftright("bit", 6).alias("__word"))
+        .agg(
+            F.bit_or(F.expr("shiftleft(1L, CAST(bit % 64 AS INT))")).alias("__mask"),
+            F.count("__v").alias("__n"),
+        )
+    )
+    states = words.groupBy(*group_cols).agg(
+        F.expr(f"sum(__n) DIV {cfg.k}").alias("n"),
+        _sorted_entries("__word", "__mask").alias("__e"),  # a null value's word drops
+    )
+    return states.where(F.size("__e") > 0).select(  # no set bits: no row
+        *group_cols,
+        F.lit(cfg.m_bits).alias("m_bits"),
+        F.lit(cfg.k).alias("k"),
+        F.lit(cfg.seed).cast("long").alias("seed"),
+        "n",
+        _dense(F.col("__e"), cfg.n_words).alias("words"),
+    )
 
 
 def bloom_might_contain(

@@ -244,7 +244,7 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     group_col: str | None = None,
     threshold: float = 0.0,
-    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
+    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs (or all pairs within ``group_col``
     when ``pairs`` is None): |A n B| / |A u B| over distinct shingles.
@@ -260,8 +260,9 @@ def jaccard_pairs(
     ``inter`` can undercount for pairs sharing a dropped shingle, making
     ``jaccard`` a slight underestimate for boilerplate-dominated pairs
     (never an overestimate, so no false near-dups are introduced). The
-    default cap bounds the worst join task at ~1e8 rows and never fires at
-    oracle scale; pass None to disable."""
+    guard is opt-in: the default (None) keeps every shingle, so the output
+    is exact.  ``DEFAULT_MAX_SHINGLE_DF`` bounds the worst join task at
+    ~1e8 rows and never fires at oracle scale."""
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     join_keys = ["shingle"] + ([group_col] if group_col else [])
 

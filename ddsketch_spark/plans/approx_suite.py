@@ -79,17 +79,6 @@ FROM est
 """
 
 
-def _hll_spark(
-    spark: SparkSession, sf_dir: str, table: str, value: str, group: str | None
-) -> DataFrame:
-    df = read_table(spark, sf_dir, table)
-    out = ops.hll_estimate(df, value, HLL_CFG, group_cols=(group,) if group else ())
-    cols = [group] if group else []
-    return out.select(
-        *cols, sig6_mantissa(F.col("estimate")).alias("est_m6"), "v_zero", "checksum"
-    )
-
-
 def _hll_rollup_spark(
     spark: SparkSession, sf_dir: str, table: str, value: str, group: str
 ) -> DataFrame:

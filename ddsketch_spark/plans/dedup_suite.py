@@ -136,7 +136,9 @@ def _lsh_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dd.lsh_candidate_pairs(
         dd.lsh_buckets(dd.minhash_signatures(sh))
     ).persist()
-    return dd.jaccard_pairs(sh, pairs=pairs, threshold=_LSH_VERIFY_TAU)
+    return dd.jaccard_pairs(
+        sh, pairs=pairs, threshold=_LSH_VERIFY_TAU, max_shingle_df=dd.DEFAULT_MAX_SHINGLE_DF
+    )
 
 
 def _lsh_pairs_oracle_sql() -> str:
@@ -226,7 +228,9 @@ SELECT doc_id, {fp} AS simhash FROM sums
 def _jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks, vsize = _docs_tokens(spark, sf_dir)
     sh = dd.doc_shingles(toks, "tokens", 1, vsize, extra_cols=("source",))
-    return dd.jaccard_pairs(sh, group_col="source", threshold=_JACCARD_TAU)
+    return dd.jaccard_pairs(
+        sh, group_col="source", threshold=_JACCARD_TAU, max_shingle_df=dd.DEFAULT_MAX_SHINGLE_DF
+    )
 
 
 def _jaccard_oracle_sql() -> str:

@@ -3,7 +3,8 @@
 The reference loads datasets as one double per line (loadDataset,
 main.cpp:1073-1106; row-count pre-scan main.cpp:1056-1071) and dumps sketch
 bins as ``key,count,max,min,length`` CSV with the offset stripped
-(DDS_PrintCSV, ddsketch.cc:908-949). Both surfaces here, DataFrame-shaped.
+(DDS_PrintCSV, ddsketch.cc:908-949). Both surfaces here, DataFrame-shaped:
+``bins_df(...).write.csv(path)`` writes the dump.
 """
 
 from __future__ import annotations
@@ -63,6 +64,3 @@ def bins_df(sketch_rows: DataFrame, cfg: DDSketchConfig | None = None) -> DataFr
         (upper - lower).alias("length"),
     )
 
-
-def write_bins_csv(sketch_rows: DataFrame, path: str, cfg: DDSketchConfig | None = None) -> None:
-    bins_df(sketch_rows, cfg).write.mode("overwrite").option("header", True).csv(path)

@@ -303,7 +303,8 @@ def test_cms_spark_matches_core(spark):
 @pytest.mark.parametrize("depth,width", [(1, 64), (4, 2048), (5, 100_003)])
 def test_cms_counters_match_core_cells(spark, depth, width):
     """The flat-cell counters equal a bincount of core.cms.cells per group,
-    with NULL values, a NULL group and the int64 edges in the input."""
+    and the dense cms_sketch states equal core.cms's, with NULL values, a
+    NULL group and the int64 edges in the input."""
     cfg = CMSConfig(depth=depth, width=width)
     df, rows = _edge_table(spark, _values(3000, 700) - 350)
     got: dict = {}
@@ -316,6 +317,11 @@ def test_cms_counters_match_core_cells(spark, depth, width):
             (int(c) // width, int(c) % width): int(counts[c]) for c in np.flatnonzero(counts)
         }
     assert got == want
+    states = {r["g"]: r.asDict() for r in ops.cms_sketch(df, "x", cfg, ("g",)).collect()}
+    assert states == {
+        g: {"g": g, **cms_core.to_dict(cms_core.add(cms_core.empty(cfg), v))}
+        for g, v in _by_group(rows).items()
+    }
 
 
 def test_cms_heavy_hitters_spark(spark):
@@ -381,6 +387,13 @@ def test_bloom_spark_state_roundtrip(spark):
     want = bloom_core.add(bloom_core.empty(cfg), vals)
     assert np.array_equal(got.words, want.words)
     assert got.n == want.n == 2000
+    # grouped, with NULL values, a NULL group and the int64 edges
+    df, rows = _edge_table(spark, vals)
+    states = {r["g"]: r.asDict() for r in ops.bloom_sketch(df, "x", cfg, ("g",)).collect()}
+    assert states == {
+        g: {"g": g, **bloom_core.to_dict(bloom_core.add(bloom_core.empty(cfg), v))}
+        for g, v in _by_group(rows).items()
+    }
 
 
 # ---------------------------------------------------------------------------

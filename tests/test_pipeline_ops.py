@@ -233,6 +233,21 @@ def test_cosine_topk_fast_probe_cap_raises(spark, sf_correct):
         sim.cosine_topk_fast(emb, probes, 5, max_probes=10)
 
 
+def test_cosine_topk_fast_ragged_rows_raise(spark):
+    """Rows of lengths dim - 1 and dim + 1 in one batch flatten to exactly
+    rows x dim values; the per-row length check must still refuse them
+    rather than score vectors shifted across row boundaries."""
+    from pyspark.errors import PythonException
+
+    dim = sim.EMB_DIM
+    corpus = spark.createDataFrame(
+        [(1, [1.0] * (dim - 1)), (2, [1.0] * (dim + 1))], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    probes = spark.createDataFrame([(0, [1.0] * dim)], "probe_id long, embedding array<float>")
+    with pytest.raises(PythonException, match=r"ValueError: cosine_topk_fast requires .* dim"):
+        sim.cosine_topk_fast(corpus, probes, 2).collect()
+
+
 def test_ivf_centroids_deterministic(spark, sf_correct):
     emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
     import numpy as np
@@ -462,6 +477,22 @@ def test_jaccard_hot_shingle_guard(spark):
     assert sorted(tuple(r) for r in wide.collect()) == sorted(
         tuple(r) for r in uncapped.collect()
     )
+
+
+def test_jaccard_pairs_exact_by_default(spark):
+    """The hot-shingle cap is opt-in: with default arguments a pair that
+    overlaps only in a shingle whose document frequency exceeds
+    DEFAULT_MAX_SHINGLE_DF keeps its exact ``inter``.  Every candidate
+    pair (i, n) has doc i on one side and doc n on the other, so the
+    shared shingle's frequency is n on the first side and the join stays
+    n rows."""
+    n = dd.DEFAULT_MAX_SHINGLE_DF + 1
+    sh = spark.range(n + 1).select(F.col("id").alias("doc_id"), F.lit(7).cast("long").alias("shingle"))
+    pairs = spark.range(n).select(F.col("id").alias("doc_a"), F.lit(n).cast("long").alias("doc_b"))
+    got = dd.jaccard_pairs(sh, pairs=pairs).where(F.col("doc_a") < 3).collect()
+    assert sorted((r["doc_a"], r["inter"], r["jaccard"]) for r in got) == [
+        (0, 1, 1.0), (1, 1, 1.0), (2, 1, 1.0)
+    ]
 
 
 def test_jaccard_hot_shingle_guard_candidate_branch(spark):

@@ -2,9 +2,9 @@
 viable at 100 TB must stay visible in the plan -- column-pruned scans,
 pushed filters, map-side partial aggregation before the exchange,
 broadcast (not shuffle) joins for probe/point lookups, partial sketch
-builds that run one Arrow pass per partition before the shuffle, and
+builds that run one Arrow pass per partition before the shuffle,
 grouped finalizes that run one Arrow pass per partition, not one Python
-call per group."""
+call per group, and closed-form finalizes that run no Python at all."""
 
 from __future__ import annotations
 
@@ -252,6 +252,24 @@ def test_grouped_finalize_has_no_per_group_python(spark, sf_correct):
         plan = _executed(df)
         assert "FlatMapGroupsInPandas" not in plan, f"{name}: {plan}"
         assert "FlatMapCoGroupsInPandas" not in plan, f"{name}: {plan}"
+
+
+@pytest.mark.parametrize("by", [("event_type",), ()], ids=["grouped", "global"])
+def test_closed_form_finalizes_run_no_python(spark, sf_correct, by):
+    """HLL, count-min and Bloom states merge and finalize by closed-form
+    arithmetic, so their whole executed plans stay in the JVM: no Python
+    node, grouped or global (the rollup is both at once)."""
+    ev = spark.read.parquet(f"{sf_correct}/events.parquet")
+    frames = {
+        "hll_sketch": aops.hll_sketch(ev, "user_id", group_cols=by),
+        "hll_estimate": aops.hll_estimate(ev, "user_id", group_cols=by),
+        "hll_estimate_rollup": aops.hll_estimate_rollup(ev, "user_id", "event_type"),
+        "cms_sketch": aops.cms_sketch(ev, "user_id", CMSConfig(), group_cols=by),
+        "bloom_sketch": aops.bloom_sketch(ev, "user_id", BloomConfig(), group_cols=by),
+    }
+    for name, df in frames.items():
+        plan = _executed(df)
+        assert not _PY_NODE.findall(plan), f"{name}: {plan}"
 
 
 def test_quantile_agg_merges_and_evaluates_in_one_python_pass(spark, sf_correct):
