@@ -126,9 +126,8 @@ def main() -> None:
         "bloom_partkeys": lambda: _suite_q("bloom_membership_partkeys").collect(),
         "dedup_lsh_pairs": lambda: _suite_q("dedup_lsh_pairs_verified").collect(),
         "ann_cosine_topk": lambda: _suite_q("ann_cosine_topk").collect(),
-        # same workload via the Arrow-matmul scale path (pinned rank-equal
-        # to the fold-based suite query in pytest) -- shows the 100 TB
-        # plan's cost next to the oracle-parity fold plan
+        # the same Arrow-matmul plan as the registered query above, without
+        # the suite's projection; kept so suite totals stay comparable
         "ann_cosine_topk_fast": lambda: sim.cosine_topk_fast(
             embeddings,
             embeddings.where(F.col("vec_id") < 10).select(

@@ -344,32 +344,8 @@ def delete(sk: DDSketch, values: np.ndarray) -> DDSketch:
 def delete_weighted(sk: DDSketch, values: np.ndarray, weights: np.ndarray) -> DDSketch:
     """Delete ``weights[i]`` copies of ``values[i]`` (vectorized multiset
     delete, same per-key min(c, m) semantics as :func:`delete`)."""
-    values = np.asarray(values, dtype=np.float64)
-    weights = np.asarray(weights, dtype=np.int64)
-    if values.size == 0 or sk.size == 0:
-        return sk
-    keys = compute_keys(values, sk.ln_gamma, sk.cfg.offset)
-
-    if sk.cfg.collapse in (LAST, FIRST) and sk.min_key <= sk.max_key:
-        in_range = (keys >= sk.min_key) & (keys <= sk.max_key)
-        redirect = int(sk.keys[-1]) if sk.cfg.collapse == LAST else int(sk.keys[0])
-        keys = np.where(in_range, np.int64(redirect), keys)
-
-    uk, inv = np.unique(keys, return_inverse=True)
-    uc = np.rint(
-        np.bincount(inv, weights=weights.astype(np.float64), minlength=len(uk))
-    ).astype(np.int64)
-    pos = np.searchsorted(sk.keys, uk)
-    valid = (pos < sk.size) & (sk.keys[np.minimum(pos, sk.size - 1)] == uk)
-    dec = np.zeros(sk.size, dtype=np.int64)
-    dec[pos[valid]] = np.minimum(uc[valid], sk.counts[pos[valid]])
-    removed = int(dec.sum())
-    sk.counts = sk.counts - dec
-    keep = sk.counts > 0
-    sk.keys = sk.keys[keep]
-    sk.counts = sk.counts[keep]
-    sk.n -= removed
-    return sk
+    keys = compute_keys(np.asarray(values, dtype=np.float64), sk.ln_gamma, sk.cfg.offset)
+    return delete_keyed(sk, keys, weights, keys_level=sk.level)
 
 
 def delete_keyed(

@@ -205,10 +205,11 @@ def hll_estimate_rollup(
     the per-group registers, so ``rollup(idx, group)`` computes both
     grouping sets in a single shuffle over at most (#groups + 1) x 2^p
     register rows -- no second scan, no cached intermediate.  The global
-    row carries ``all_label`` in the group column.  ``grouping_id`` stays a
-    group column through the estimate, so a genuine group whose value is
-    NULL or ``all_label`` keeps a row of its own beside the global one.
-    Each row matches :func:`hll_estimate` as that function states."""
+    row carries ``all_label`` in the group column, so that column comes back
+    as a string whatever its input type.  ``grouping_id`` stays a group
+    column through the estimate, so a genuine group whose value is NULL or
+    ``all_label`` keeps a row of its own beside the global one.  Each row
+    matches :func:`hll_estimate` as that function states."""
     cfg = cfg or HLLConfig()
     # rollup(idx, group) -> grouping sets {(idx, group), (idx,), ()};
     # gid 0 = per-group registers, gid 1 = global registers, gid 3 = drop
@@ -220,7 +221,9 @@ def hll_estimate_rollup(
         .where(F.col("__gid") < 3)
     )
     est = _hll_estimates(_hll_ranks(regs, cfg, keys), cfg, keys)
-    label = F.when(F.col("__gid") == 1, F.lit(all_label)).otherwise(F.col(group_col))
+    label = F.when(F.col("__gid") == 1, F.lit(all_label)).otherwise(
+        F.col(group_col).cast("string")
+    )
     return est.select(label.alias(group_col), "estimate", "v_zero", "checksum")
 
 

@@ -16,7 +16,12 @@ Scale notes (100 TB):
   LSH candidates join on (band, bucket) -- cardinality bounded by bucket
   co-membership, never all-pairs;
 - pairwise Jaccard verification only ever runs on LSH candidates (or
-  within explicit small groups for the exact variant).
+  within explicit small groups for the exact variant);
+- decontamination broadcasts the eval set's shingles and emits only the
+  corpus documents that hit it, so no shuffle carries every doc_id.
+
+``lsh_candidate_pairs`` is also the candidate step of the embedding
+near-dup search (``similarity.lsh_cosine_pairs``).
 """
 
 from __future__ import annotations
@@ -323,59 +328,36 @@ def jaccard_pairs(
 def decontaminate(
     corpus_shingles: DataFrame,
     eval_shingles: DataFrame,
-    corpus_docs: DataFrame | None = None,
     id_col: str = "doc_id",
     min_hits: int = 1,
-    hits_only: bool = False,
 ) -> DataFrame:
-    """(id_col, n_hits, contaminated): per corpus document, the number of
-    DISTINCT n-gram shingles it shares with the evaluation set, and whether
-    that count reaches ``min_hits`` -- the standard train/test
-    decontamination step of an LLM data pipeline (flag-and-drop training
-    documents that contain benchmark n-grams).
+    """(id_col, n_hits, contaminated): per corpus document that shares at
+    least one n-gram with the evaluation set, the number of DISTINCT n-gram
+    shingles it shares, and whether that count reaches ``min_hits`` -- the
+    standard train/test decontamination step of an LLM data pipeline
+    (flag-and-drop training documents that contain benchmark n-grams).
 
     Inputs are (id, shingle) streams from :func:`doc_shingles` (which
     already emits DISTINCT shingles per doc, so COUNT(*) after the join is
-    the distinct-overlap count). ``corpus_docs`` supplies the full id set
-    so clean documents surface with n_hits = 0 instead of vanishing.
-
-    ``hits_only=True`` is the 100 TB form (VERDICT r4 item 6): only
-    documents with n_hits >= 1 are emitted (``corpus_docs`` may be None),
-    so the doc_id-keyed left join over EVERY corpus document disappears --
-    consumers anti-join the (tiny) hit list against the corpus instead of
-    shuffling every doc_id through this operator. Row-for-row it equals
-    ``filter(n_hits > 0)`` of the full form (pytest-pinned).
+    the distinct-overlap count). Clean documents (n_hits = 0) are not
+    emitted: consumers anti-join the (tiny) hit list against the corpus
+    instead of shuffling every doc_id through this operator.
 
     Scale shape (100 TB): the eval set is small by nature (benchmark suites
     are thousands of documents), so its distinct shingles broadcast; the
     corpus shingle stream is filtered by a broadcast hash join in the scan
     stage and the per-doc count partially aggregates map-side -- the only
-    shuffles carry (doc_id, n_hits) for HIT documents and (in the full
-    form) the final doc_id-keyed left join. The corpus is never self-joined
-    and eval data never shuffles."""
+    shuffle carries (doc_id, n_hits) for HIT documents. The corpus is never
+    self-joined and eval data never shuffles."""
     ev = eval_shingles.select("shingle").distinct()
-    hits = (
+    return (
         corpus_shingles.join(F.broadcast(ev), "shingle")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    if hits_only:
-        return hits.select(
+        .select(
             id_col,
             "n_hits",
             (F.col("n_hits") >= F.lit(min_hits)).alias("contaminated"),
-        )
-    if corpus_docs is None:
-        raise ValueError("corpus_docs is required unless hits_only=True")
-    return (
-        corpus_docs.select(id_col)
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) >= F.lit(min_hits)).alias(
-                "contaminated"
-            ),
         )
     )
 

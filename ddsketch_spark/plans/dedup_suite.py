@@ -257,8 +257,9 @@ WHERE i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) >= CAST({_JACCARD_TAU!r} AS DO
 #
 # Eval set = every doc with doc_id % 41 == 0 (a deterministic stand-in for a
 # benchmark suite); corpus = everything else. A corpus doc is contaminated
-# when it shares >= 1 trigram shingle with any eval doc. n_hits is an exact
-# integer (distinct shared trigrams), so the oracle is value-level.
+# when it shares >= 1 trigram shingle with any eval doc; only such docs are
+# emitted (the 100 TB form: no left join over every corpus doc_id). n_hits is
+# an exact integer (distinct shared trigrams), so the oracle is value-level.
 
 _DECON_MOD = 41
 
@@ -269,16 +270,13 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so tokenization + explode run once.  Cache lifetime (ADVICE r4): `sh`
     # stays persisted after return (it feeds the returned lazy DataFrame);
     # suite runners bound accumulation with spark.catalog.clearCache()
-    # between queries (bench.py does).  At 100 TB pass hits_only=True and
-    # recompute the two shingle streams instead -- a doc-shingle cache is
-    # data-sized and the recompute is one extra columnar scan.
+    # between queries (bench.py does).  At 100 TB recompute the two shingle
+    # streams instead -- a doc-shingle cache is data-sized and the
+    # recompute is one extra columnar scan.
     sh = dd.doc_shingles(toks, "tokens", 3, vsize).persist()
     eval_sh = sh.where(F.col("doc_id") % _DECON_MOD == 0)
     corpus_sh = sh.where(F.col("doc_id") % _DECON_MOD != 0)
-    corpus_docs = read_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") % _DECON_MOD != 0
-    )
-    return dd.decontaminate(corpus_sh, eval_sh, corpus_docs)
+    return dd.decontaminate(corpus_sh, eval_sh)
 
 
 def _decontam_oracle_sql() -> str:
@@ -298,11 +296,7 @@ hits AS (
   WHERE s.doc_id % {_DECON_MOD} <> 0
   GROUP BY s.doc_id
 )
-SELECT d.doc_id,
-       COALESCE(h.n_hits, 0) AS n_hits,
-       COALESCE(h.n_hits, 0) >= 1 AS contaminated
-FROM documents d LEFT JOIN hits h USING (doc_id)
-WHERE d.doc_id % {_DECON_MOD} <> 0
+SELECT doc_id, n_hits, n_hits >= 1 AS contaminated FROM hits
 """
 
 

@@ -256,6 +256,21 @@ def test_hll_rollup_keeps_a_group_named_like_the_global_label(spark):
     assert [key(r) for r in got if r["g"] == "x"] == [grouped["x"]]
 
 
+def test_hll_rollup_on_a_long_group_column(spark):
+    """A non-string group column comes back as a string beside the global
+    label; each group's v_zero and checksum equal hll_estimate's for that
+    group, and the '__ALL__' row equals the global estimate."""
+    cfg = HLLConfig(p=10)
+    rows = [(g, g * 100_000 + i) for g in (1, 2, 3) for i in range(200 * g)]
+    df = spark.createDataFrame(rows, "g long, v long")
+    key = lambda r: (r["estimate"], r["v_zero"], r["checksum"])
+    grouped = {str(r["g"]): key(r) for r in ops.hll_estimate(df, "v", cfg, ("g",)).collect()}
+    grouped["__ALL__"] = key(ops.hll_estimate(df, "v", cfg).collect()[0])
+    out = ops.hll_estimate_rollup(df, "v", "g", cfg)
+    assert out.schema["g"].dataType.simpleString() == "string"
+    assert {r["g"]: key(r) for r in out.collect()} == grouped
+
+
 # ---------------------------------------------------------------------------
 # count-min core
 # ---------------------------------------------------------------------------

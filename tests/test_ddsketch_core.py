@@ -280,6 +280,24 @@ def test_delete_partial_decrements():
     assert sk.sum_bins() == 9
 
 
+@pytest.mark.parametrize("collapse", [LAST, FIRST])
+def test_delete_redirects_into_the_absorbed_range(collapse):
+    """last/first: a deleted value whose key was folded away (inside the
+    absorbed [min_key, max_key] range) comes out of the last/first bin, as
+    in the reference (ddsketch.cc:414-422, 478-486), instead of being a
+    silent no-op on a bin that no longer exists."""
+    vals = [1.0, 2.0, 4.0, 8.0, 16.0, 32.0]  # six distinct keys, bin_limit 4
+    sk = build(vals, bin_limit=4, collapse=collapse)
+    assert sk.size == 4 and sk.min_key <= sk.max_key
+    end = -1 if collapse == LAST else 0
+    gone = vals[4] if collapse == LAST else vals[1]  # a folded-away key
+    kept = sk.keys.copy()
+    dds.delete(sk, np.array([gone]))
+    assert sk.n == 5
+    assert list(sk.keys) == list(kept)
+    assert sk.counts[end] == 2 and sk.sum_bins() == 5
+
+
 # -- quantile edge cases -------------------------------------------------------
 
 def test_quantile_bounds_quirk_q2():

@@ -172,10 +172,11 @@ def test_ivf_matmul_matches_fold_exact(spark, sf_correct):
 
 def test_cosine_topk_fast_matches_fold(spark, sf_correct):
     """The Arrow-matmul brute-force path (sim.cosine_topk_fast, the scale
-    tier) must rank identically to the fold-based sim.cosine_topk (the
-    oracle-checked tier).  Cosines agree to ~1e-12 rel (numpy's blocked
-    matmul summation vs the sequential fold differs in the last ulp, which
-    is exactly why the fold variant stays registered for the SQL oracle)."""
+    tier) must rank identically to its reference, the fold-based
+    sim.cosine_topk.  Cosines agree to ~1e-12 rel (numpy's blocked matmul
+    summation vs the sequential fold differs in the last ulp, which is why
+    the registered ann_cosine_topk row, which runs the fast path, is graded
+    on (probe_id, rank, neighbor) alone)."""
     emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
     probes = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("probe_id"), "embedding"
@@ -398,7 +399,7 @@ def test_minhash_lsh_full_path_mega_cluster_subquadratic(spark):
 
 def test_decontaminate_flags_planted_overlap(spark):
     """A corpus doc sharing a trigram with the eval set is flagged with the
-    exact distinct-overlap count; clean docs surface with n_hits=0."""
+    exact distinct-overlap count; clean docs are not emitted."""
     corpus = spark.createDataFrame(
         [
             (1, [5, 6, 7, 8, 9]),       # contains eval trigram (6,7,8) & (7,8,9)
@@ -415,38 +416,9 @@ def test_decontaminate_flags_planted_overlap(spark):
     e_sh = dd.doc_shingles(eval_docs, "tokens", 3, vsize)
     out = {
         r["doc_id"]: (r["n_hits"], r["contaminated"])
-        for r in dd.decontaminate(c_sh, e_sh, corpus.select("doc_id")).collect()
+        for r in dd.decontaminate(c_sh, e_sh).collect()
     }
-    assert out == {1: (2, True), 2: (0, False), 3: (1, True)}
-
-
-def test_decontaminate_hits_only_matches_filtered_full(spark):
-    """hits_only=True (the 100 TB form: no doc_id-keyed left join over the
-    whole corpus) is row-for-row the full form filtered to n_hits > 0."""
-    corpus = spark.createDataFrame(
-        [
-            (1, [5, 6, 7, 8, 9]),
-            (2, [20, 21, 22, 23]),
-            (3, [6, 7, 8, 6, 7, 8]),
-        ],
-        "doc_id long, tokens array<int>",
-    )
-    eval_docs = spark.createDataFrame(
-        [(100, [6, 7, 8, 9, 10])], "doc_id long, tokens array<int>"
-    )
-    c_sh = dd.doc_shingles(corpus, "tokens", 3, 30)
-    e_sh = dd.doc_shingles(eval_docs, "tokens", 3, 30)
-    full = dd.decontaminate(c_sh, e_sh, corpus.select("doc_id"))
-    hits = dd.decontaminate(c_sh, e_sh, hits_only=True)
-    want = sorted(tuple(r) for r in full.where(F.col("n_hits") > 0).collect())
-    got = sorted(tuple(r) for r in hits.collect())
-    assert got == want == [(1, 2, True), (3, 1, True)]
-
-
-def test_decontaminate_requires_corpus_docs_unless_hits_only(spark):
-    sh = spark.createDataFrame([(1, 7)], "doc_id long, shingle long")
-    with pytest.raises(ValueError, match="corpus_docs"):
-        dd.decontaminate(sh, sh).collect()
+    assert out == {1: (2, True), 3: (1, True)}
 
 
 def test_jaccard_hot_shingle_guard(spark):

@@ -1,10 +1,11 @@
 """Physical-plan regression gates: the properties that make these operators
 viable at 100 TB must stay visible in the plan -- column-pruned scans,
 pushed filters, map-side partial aggregation before the exchange,
-broadcast (not shuffle) joins for probe/point lookups, partial sketch
-builds that run one Arrow pass per partition before the shuffle,
-grouped finalizes that run one Arrow pass per partition, not one Python
-call per group, and closed-form finalizes that run no Python at all."""
+broadcast (not shuffle) joins for probe/point lookups and embedding
+searches, partial sketch builds that run one Arrow pass per partition
+before the shuffle, grouped finalizes that run one Arrow pass per
+partition, not one Python call per group, and closed-form finalizes that
+run no Python at all."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from ddsketch_spark.core.kll import KLLConfig
 from ddsketch_spark.operators import approx_agg as aops
 from ddsketch_spark.operators import ddsketch_agg as agg
 from ddsketch_spark.operators import quantile_agg as qa
+from ddsketch_spark.operators import similarity as sim
 from ddsketch_spark.operators import sketch_agg as udaf
 from ddsketch_spark.plans import checkpoint as ck
 
@@ -308,3 +310,27 @@ def test_partial_builds_are_one_arrow_pass(spark, sf_correct):
         final = plan.split("== Initial Plan ==")[0]
         below = re.split(shuffle, final, maxsplit=1)[1]
         assert _PY_NODE.findall(below) == ["MapInArrow"], f"{name}: {plan}"
+
+
+def test_probe_searches_broadcast_their_probes(spark, sf_correct):
+    """Every probe search broadcasts its (tiny) probe side: LSH and IVF
+    equi-join it on the candidate tag (a broadcast hash join, never a
+    product over the corpus), and brute-force cosine_topk broadcasts it
+    into its nested-loop join."""
+    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
+    probes = emb.where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("probe_id"), "embedding"
+    )
+    frames = {
+        "lsh_ann": sim.lsh_ann(emb, probes, 5),
+        "ivf_ann": sim.ivf_ann(emb, probes, 5),
+        "ivf_ann_exact": sim.ivf_ann_exact(emb, probes, 5, sim.ivf_centroids(emb, 16)),
+    }
+    for name, df in frames.items():
+        plan = _executed(df)
+        assert "BroadcastHashJoin" in plan, f"{name}: {plan}"
+        assert "CartesianProduct" not in plan, f"{name}: {plan}"
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: {plan}"
+    plan = _executed(sim.cosine_topk(emb, probes, 5))
+    assert "BroadcastNestedLoopJoin BuildRight" in plan, plan
+    assert "CartesianProduct" not in plan, plan
