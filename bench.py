@@ -42,7 +42,6 @@ def main() -> None:
     from ddsketch_spark.core.tdigest import TDigestConfig
     from ddsketch_spark.operators import ddsketch_agg as agg
     from ddsketch_spark.operators import quantile_agg as qa
-    from ddsketch_spark.operators import similarity as sim
     from ddsketch_spark.operators import sketch_agg as udaf
     from ddsketch_spark.sources.fixtures import generate_tokens_table
 
@@ -71,7 +70,6 @@ def main() -> None:
     cfg = DDSketchConfig()
     lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    embeddings = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     tokens = spark.read.parquet(tokens_path)
     total_tokens = tokens.agg(F.sum("n_tok")).collect()[0][0]
     n_lineitem = lineitem.count()
@@ -126,15 +124,6 @@ def main() -> None:
         "bloom_partkeys": lambda: _suite_q("bloom_membership_partkeys").collect(),
         "dedup_lsh_pairs": lambda: _suite_q("dedup_lsh_pairs_verified").collect(),
         "ann_cosine_topk": lambda: _suite_q("ann_cosine_topk").collect(),
-        # the same Arrow-matmul plan as the registered query above, without
-        # the suite's projection; kept so suite totals stay comparable
-        "ann_cosine_topk_fast": lambda: sim.cosine_topk_fast(
-            embeddings,
-            embeddings.where(F.col("vec_id") < 10).select(
-                F.col("vec_id").alias("probe_id"), "embedding"
-            ),
-            5,
-        ).collect(),
         "text_fingerprint": lambda: _suite_q("text_fingerprint").collect(),
         "decontam_ngram_overlap": lambda: _suite_q("decontam_ngram_overlap").collect(),
         "dds_trim_outliers": lambda: _suite_q("dds_trim_outliers_by_source").collect(),

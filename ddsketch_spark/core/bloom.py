@@ -3,8 +3,8 @@
 State is the bit array packed into int64 words (canonical: fixed length
 m/64 words; merge = elementwise OR -- commutative, associative, idempotent).
 
-Bit addressing: bit_j(x) = mix(h_j(x)) mod m over the shared universal family
-with the nonlinear h^2-mod-P mix (see functions.hashing.mix_np).
+Bit addressing: bit_j(x) = mixed_hash_j(x) mod m, the j-th member of the
+shared mixed hash (functions.hashing).
 Membership is exact-no-false-negative by construction; false-positive rate
 ~= (1 - e^{-kn/m})^k (Bloom 1970). Bit positions are exact integers shared
 with the DuckDB oracle, so membership queries check value-level.

@@ -4,12 +4,17 @@ State is the dense d x w counter matrix flattened row-major into one int64
 array -- dense because every cell is touched at scale, and a flat array is
 already canonical (merge = elementwise +, fully order-independent).
 
-Cell addressing: row i uses the i-th (a,b) pair of the shared universal
-family; col = h_i(x) mod w. Point estimate = min over rows (Cormode &
-Muthukrishnan 2005); with w = ceil(e/eps) and d = ceil(ln(1/delta)) the
-estimate overshoots the true count by more than eps*N with probability
-<= delta. Counters are exact integers, so CMS queries get exact value-level
-DuckDB oracles.
+Cell addressing: row i uses the i-th (a,b) pair of the shared family;
+col = mixed_hash_i(x) mod w (functions.hashing), so the d rows address
+independently.  Point estimate = min over rows (Cormode & Muthukrishnan
+2005); with w = ceil(e/eps) and d = ceil(ln(1/delta)) the estimate never
+undercounts and overshoots the true count by more than eps*N = e/w * N
+with probability <= delta = e^-d per key.  That bound needs independent
+rows: under the linear limb hash alone, small keys x and x + w share every
+row's cell, and a Zipf stream's head token inflates the estimate of each
+key congruent to it mod w by about a fifth of N (tests/test_bounds.py).
+Counters are exact integers, so CMS queries get exact value-level DuckDB
+oracles.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from ddsketch_spark.functions.hashing import hash_np, hash_params
+from ddsketch_spark.functions.hashing import hash_params, mixed_hash_np
 
 DEFAULT_DEPTH = 4
 DEFAULT_WIDTH = 2048
@@ -59,7 +64,7 @@ def cells(values: np.ndarray, cfg: CMSConfig) -> np.ndarray:
     v = np.asarray(values)
     out = np.empty((len(v), cfg.depth), np.int64)
     for i, (a, b) in enumerate(cfg.hash_abs):
-        out[:, i] = i * cfg.width + np.mod(hash_np(v, a, b), cfg.width)
+        out[:, i] = i * cfg.width + np.mod(mixed_hash_np(v, a, b), cfg.width)
     return out
 
 

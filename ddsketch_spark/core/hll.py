@@ -6,8 +6,9 @@ index -> max rank, registers at 0 omitted. Sparse-sorted arrays (not a dense
 array or dict) keep equal sketches byte-identical under merge reordering --
 the same canonicalization argument as the DDSketch state (SURVEY.md §1.4).
 
-Hash: h = mix(universal 61-bit hash) (functions.hashing; the nonlinear
-h^2-mod-P mix is required -- see the mix_np comment). Register index is the
+Hash: h = functions.hashing.mixed_hash_np, the address every sketch uses
+(the linear limb hash alone leaves the high bits of h nearly constant on
+small keys -- see that module). Register index is the
 low ``p`` bits (h mod 2^p); rho is the rank of the MSB of the remaining
 61-p high bits: rho = (61-p) - bitlen(h >> p) + 1, so rho in [1, 62-p].
 All three engines (Spark Column, numpy, DuckDB SQL) reproduce idx/rho

@@ -37,13 +37,7 @@ from pyspark.sql import functions as F
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
-from ddsketch_spark.functions.hashing import (
-    HASH_BITS,
-    bitlen_col,
-    hash_col,
-    mix_col,
-    mixed_hash_col,
-)
+from ddsketch_spark.functions.hashing import HASH_BITS, bitlen_col, with_mixed_hashes
 
 
 def _colref(value: Column | str) -> Column:
@@ -88,17 +82,12 @@ def _hll_keyed(
     df: DataFrame, value: Column | str, cfg: HLLConfig, keep_cols: Sequence[str]
 ) -> DataFrame:
     """(keep_cols..., idx, __rest) per input row: the register index and the
-    raw high bits ``h >> p`` of the mixed hash (both null for a null value).
-
-    The hash is its own projection, ``__h``, read twice by the next one;
-    Catalyst keeps the split (see :func:`_bloom_bit_rows`), so it is
-    computed once per row rather than inlined into both columns."""
-    a, b = cfg.hash_ab
-    hashed = df.select(*keep_cols, mixed_hash_col(_colref(value), a, b).alias("__h"))
+    raw high bits ``h >> p`` of the mixed hash (both null for a null value)."""
+    hashed = with_mixed_hashes(df, value, [cfg.hash_ab], keep_cols)
     return hashed.select(
         *keep_cols,
-        F.pmod(F.col("__h"), F.lit(cfg.m)).alias("idx"),
-        F.shiftright(F.col("__h"), cfg.p).alias("__rest"),  # h >= 0: floor div
+        F.pmod(F.col("__h0"), F.lit(cfg.m)).alias("idx"),
+        F.shiftright(F.col("__h0"), cfg.p).alias("__rest"),  # h >= 0: floor div
     )
 
 
@@ -231,12 +220,16 @@ def hll_estimate_rollup(
 # Count-min
 # ---------------------------------------------------------------------------
 
-def _cms_cell_array(value: Column, cfg: CMSConfig) -> Column:
-    """array<bigint> of a value's d flat cells ``i * width + col_i``,
-    numbered as core.cms.cells numbers them (null for a null value)."""
+def _cms_cell_rows(
+    df: DataFrame, value: Column | str, cfg: CMSConfig, keep_cols: Sequence[str]
+) -> DataFrame:
+    """(keep_cols..., __cell) one row per (input row, counter row): the flat
+    cell ``i * width + col_i``, numbered as core.cms.cells numbers it (null
+    for a null value)."""
     w = cfg.width
-    cols = [F.pmod(hash_col(value, a, b), F.lit(w)) for a, b in cfg.hash_abs]
-    return F.array(*[F.lit(i * w) + col for i, col in enumerate(cols)])
+    hashed = with_mixed_hashes(df, value, cfg.hash_abs, keep_cols)
+    cells = [F.lit(i * w) + F.pmod(F.col(f"__h{i}"), F.lit(w)) for i in range(cfg.depth)]
+    return hashed.select(*keep_cols, F.explode(F.array(*cells)).alias("__cell"))
 
 
 def _cms_cells(
@@ -245,9 +238,8 @@ def _cms_cells(
     """(group_cols..., __cell, cnt) per non-zero flat cell: each row
     explodes to its d cells in the same stage as the partial count, so the
     shuffle carries at most (#groups x d x width) rows."""
-    longs = df.select(*group_cols, _colref(value).cast("long").alias("__v"))
     return (
-        longs.select(*group_cols, F.explode(_cms_cell_array(F.col("__v"), cfg)).alias("__cell"))
+        _cms_cell_rows(df, value, cfg, group_cols)
         .where(F.col("__cell").isNotNull())
         .groupBy(*group_cols, "__cell")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -259,10 +251,7 @@ def _cms_estimates(
 ) -> DataFrame:
     """(probe, est): the min over each probe's d counters, its cells
     broadcast-joined against the (small) ``_cms_cells`` table."""
-    pr = probes.select(
-        F.col(probe_col).alias("probe"),
-        F.explode(_cms_cell_array(F.col(probe_col), cfg)).alias("__cell"),
-    )
+    pr = _cms_cell_rows(probes.select(F.col(probe_col).alias("probe")), "probe", cfg, ["probe"])
     return (
         pr.join(F.broadcast(cells), ["__cell"], "left")
         .groupBy("probe")
@@ -467,30 +456,10 @@ def _bloom_bit_rows(
     cfg: BloomConfig,
     keep_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(keep_cols..., bit) one row per (input row, hash function).
-
-    Two projections, not one: the k linear hashes first (small codegen'd
-    exprs), then mix+pmod over those ATTRIBUTES. Catalyst keeps the split
-    (CollapseProject refuses to inline non-cheap aliases referenced many
-    times -- mix references its argument 8x), so each stage stays inside
-    whole-stage codegen."""
-    v = _colref(value)
-    k = len(cfg.hash_abs)
-    lin = df.select(
-        *keep_cols,
-        *[hash_col(v, a, b).alias(f"__bl{j}") for j, (a, b) in enumerate(cfg.hash_abs)],
-    )
-    return lin.select(
-        *keep_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(mix_col(F.col(f"__bl{j}")), F.lit(cfg.m_bits))
-                    for j in range(k)
-                ]
-            )
-        ).alias("bit"),
-    )
+    """(keep_cols..., bit) one row per (input row, hash function)."""
+    hashed = with_mixed_hashes(df, value, cfg.hash_abs, keep_cols)
+    bits = [F.pmod(F.col(f"__h{j}"), F.lit(cfg.m_bits)) for j in range(cfg.k)]
+    return hashed.select(*keep_cols, F.explode(F.array(*bits)).alias("bit"))
 
 
 def bloom_bits(

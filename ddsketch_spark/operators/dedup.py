@@ -31,13 +31,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ddsketch_spark.functions.hashing import (
-    FOLD31,
-    hash_col,
-    hash_params,
-    mix_col,
-    mixed_hash_col,
-)
+from ddsketch_spark.functions.hashing import FOLD31, hash_params, with_mixed_hashes
 from ddsketch_spark.operators.text_ops import FP_BASE, FP_MOD, fingerprint_col
 
 DEFAULT_NUM_HASHES = 16
@@ -138,32 +132,12 @@ def minhash_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """(id_col, m0..m{k-1}) min-wise signatures: one grouped pass with k
-    min() aggregates over the mixed 61-bit hash (min over a linear-only
-    hash would be biased -- see functions.hashing).
-
-    The k hashes are evaluated in TWO pre-aggregation projections (linear
-    limb hashes first, then the h^2-mod-P mix over those attributes), the
-    same split approx_agg._bloom_bit_rows uses: expressions inlined into
-    the aggregate's update path fall out of whole-stage codegen past the
-    method limit (~20x slower, measured), whereas Catalyst keeps this split
-    (CollapseProject refuses to inline non-cheap aliases referenced many
-    times) so both stages stay codegen'd and the min() aggregates only see
-    plain columns. The mirror SQL oracle (plans.dedup_suite) already
-    computes lin -> MIN(mix(h)) in the same shape, so values are unchanged."""
-    params = hash_params(num_hashes, seed)
-    lin = shingles.select(
-        id_col,
-        *[
-            hash_col(F.col("shingle"), a, b).alias(f"__l{j}")
-            for j, (a, b) in enumerate(params)
-        ],
-    )
-    mixed = lin.select(
-        id_col,
-        *[mix_col(F.col(f"__l{j}")).alias(f"__m{j}") for j in range(num_hashes)],
-    )
-    return mixed.groupBy(id_col).agg(
-        *[F.min(f"__m{j}").alias(f"m{j}") for j in range(num_hashes)]
+    min() aggregates over the k mixed 61-bit hashes of each shingle, added
+    as plain columns before the aggregate (functions.hashing.
+    with_mixed_hashes)."""
+    hashed = with_mixed_hashes(shingles, "shingle", hash_params(num_hashes, seed), [id_col])
+    return hashed.groupBy(id_col).agg(
+        *[F.min(f"__h{j}").alias(f"m{j}") for j in range(num_hashes)]
     )
 
 
@@ -502,10 +476,10 @@ def simhash(
     of (+-1 per token's hash bit b) is positive. One explode + one grouped
     aggregation; ties (sum == 0) resolve to 0."""
     t = F.col(tokens) if isinstance(tokens, str) else tokens
-    a, b = hash_params(1, seed)[0]
     tok = tokens_df.select(F.col(id_col), F.explode(t).alias("token"))
     counted = tok.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("cnt"))
-    h = mixed_hash_col(F.col("token"), a, b)
+    hashed = with_mixed_hashes(counted, "token", [hash_params(1, seed)[0]], [id_col, "cnt"])
+    h = F.col("__h0")
     bit_sums = [
         F.sum(
             F.when(F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, F.col("cnt")).otherwise(
@@ -514,7 +488,7 @@ def simhash(
         ).alias(f"s{bit}")
         for bit in range(SIMHASH_BITS)
     ]
-    sums = counted.groupBy(id_col).agg(*bit_sums)
+    sums = hashed.groupBy(id_col).agg(*bit_sums)
     fp = F.lit(0).cast("long")
     for bit in range(SIMHASH_BITS):
         fp = fp + F.when(F.col(f"s{bit}") > 0, F.lit(1 << bit)).otherwise(F.lit(0))

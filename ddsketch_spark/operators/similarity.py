@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ddsketch_spark.functions.hashing import MERSENNE61, hash_np, hash_params
+from ddsketch_spark.functions.hashing import splitmix_uniform
 from ddsketch_spark.operators.dedup import DEFAULT_MAX_BUCKET, lsh_candidate_pairs
 
 EMB_DIM = 64
@@ -245,12 +245,15 @@ def cosine_topk_fast(
 
 
 def hyperplanes(n_planes: int = DEFAULT_PLANES, dim: int = EMB_DIM, seed: int = 7):
-    """Deterministic pseudo-random hyperplanes in [-0.5, 0.5)^dim derived
-    from the shared integer hash family -- reproducible in SQL."""
-    a, b = hash_params(1, seed)[0]
-    idx = np.arange(n_planes * dim, dtype=np.int64)
-    vals = hash_np(idx, a, b).astype(np.float64) / float(MERSENNE61) - 0.5
-    return vals.reshape(n_planes, dim)
+    """Deterministic pseudo-random hyperplanes in [-0.5, 0.5)^dim: the
+    splitmix64 floats of ``seed`` (functions.hashing.splitmix_uniform), which
+    the SQL oracles embed as literals.  Hyperplane LSH (Charikar 2002)
+    needs random planes: at seed 7 and dim 64 the largest pairwise |cos| is
+    0.25 / 0.29 / 0.45 at 8 / 16 / 64 planes (tests/test_bounds.py).  An
+    integer hash of the entry index is no substitute -- the affine limb hash
+    put every entry within 2.1e-7 of one value, and even the mixed hash
+    reaches |cos| 0.83 at 64 planes."""
+    return (splitmix_uniform(n_planes * dim, seed) - 0.5).reshape(n_planes, dim)
 
 
 def lsh_bucket_expr(vec: Column, planes) -> Column:
@@ -500,7 +503,7 @@ def lsh_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int = 16,
-    bands: int = 8,
+    bands: int = 4,
     seed: int = 7,
     dim: int = EMB_DIM,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
@@ -512,9 +515,11 @@ def lsh_cosine_pairs(
     Semantics are candidate-bounded by construction: a qualifying pair is
     emitted iff it shares at least one band bucket -- the deterministic
     planes make this value-level reproducible in SQL (the oracle derives
-    the same buckets), so recall is a *defined* property, not noise. At
-    100 TB the per-band bucket count 2^(n_planes/bands) is raised so bucket
-    occupancy stays bounded.
+    the same buckets), so recall is a *defined* property, not noise.  The
+    candidate share is set by the planes per band: on the sf0.01
+    embeddings the default 4 bands of 4 planes keep 23 % of all pairs,
+    8 bands of 2 planes would keep 89 %.  At 100 TB the per-band bucket
+    count 2^(n_planes/bands) is raised so bucket occupancy stays bounded.
 
     Candidates come from the MinHash-LSH self-join
     (:func:`ddsketch_spark.operators.dedup.lsh_candidate_pairs`), with its

@@ -1,14 +1,11 @@
 """Oracle-checked queries for the extension sketches (HLL / CMS / Bloom).
 
 Every query here has a *value-level* DuckDB oracle: the SQL re-derives the
-exact same registers / counters / bits from the shared cross-engine hash
-(functions.hashing), so estimates compare exactly (integers) or at
-6-significant-digit mantissa (floats, see functions.ddsketch_sql.sig6).
-
-SQL shape: a `lin` CTE computes the linear universal hash as a column, a
-`mixed` CTE applies the nonlinear h^2-mod-P mix (mix_sql expands its
-argument many times, so it is always applied to a simple column name), and
-the aggregation mirrors the numpy core line by line.
+exact same registers / counters / bits from the shared cross-engine mixed
+hash (functions.hashing.mixed_hash_sql), so estimates compare exactly
+(integers) or at 6-significant-digit mantissa (floats, see
+functions.ddsketch_sql.sig6), and the aggregation mirrors the numpy core
+line by line.
 """
 
 from __future__ import annotations
@@ -24,12 +21,7 @@ from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
 from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL, sig6_mantissa
-from ddsketch_spark.functions.hashing import (
-    HASH_BITS,
-    bitlen_sql,
-    hash_sql,
-    mix_sql,
-)
+from ddsketch_spark.functions.hashing import HASH_BITS, bitlen_sql, mixed_hash_sql
 from ddsketch_spark.operators import approx_agg as ops
 from ddsketch_spark.sources.tables import read_table
 
@@ -51,11 +43,10 @@ def _hll_oracle_sql(table: str, value: str, group: str | None) -> str:
     rest = f"(hm // {1 << p})"
     rho = f"({HASH_BITS - p} - {bitlen_sql(rest)} + 1)"
     return f"""
-WITH lin AS (
-  SELECT {gsel}{hash_sql(value, a, b)} AS h
+WITH mixed AS (
+  SELECT {gsel}{mixed_hash_sql(value, a, b)} AS hm
   FROM {table} WHERE {value} IS NOT NULL
 ),
-mixed AS (SELECT {gsel}{mix_sql('h')} AS hm FROM lin),
 regs AS (
   SELECT {gsel}hm % {m} AS idx, MAX({rho}) AS rho
   FROM mixed GROUP BY {gsel}idx
@@ -112,13 +103,13 @@ SELECT '__ALL__' AS {group}, est_m6, v_zero, checksum FROM ({glob})
 # CMS: heavy-hitter part keys
 # ---------------------------------------------------------------------------
 
-def _cms_lin_union(
+def _cms_cell_union(
     table: str, value: str, cfg: CMSConfig, width_expr: str | None = None
 ) -> str:
-    """UNION ALL of the d per-row hashed cell streams."""
+    """UNION ALL of the d per-row cell streams."""
     w = width_expr or str(cfg.width)
     parts = [
-        f"SELECT {i} AS row, {hash_sql(value, a, b)} % {w} AS col "
+        f"SELECT {i} AS row, {mixed_hash_sql(value, a, b)} % {w} AS col "
         f"FROM {table} WHERE {value} IS NOT NULL"
         for i, (a, b) in enumerate(cfg.hash_abs)
     ]
@@ -179,13 +170,13 @@ def _cms_hh_oracle_sql(
     return f"""
 WITH {wparam}counters AS (
   SELECT row, col, COUNT(*) AS cnt
-  FROM ({_cms_lin_union(table, value, cfg, width_expr=wexpr)}) GROUP BY row, col
+  FROM ({_cms_cell_union(table, value, cfg, width_expr=wexpr)}) GROUP BY row, col
 ),
 n AS (SELECT COUNT({value}) AS n, COUNT(DISTINCT {value}) AS nd FROM {table}),
 probes AS (SELECT DISTINCT {value} AS item FROM {table} WHERE {value} IS NOT NULL),
 pcells AS (
   {' UNION ALL '.join(
-      f"SELECT item, {i} AS row, {hash_sql('item', a, b)} % {pcol} AS col FROM probes"
+      f"SELECT item, {i} AS row, {mixed_hash_sql('item', a, b)} % {pcol} AS col FROM probes"
       for i, (a, b) in enumerate(cfg.hash_abs)
   )}
 ),
@@ -264,16 +255,16 @@ _N_BLOOM_PROBES = 3000
 
 def _bloom_oracle_sql(table: str, value: str, n_probes: int = _N_BLOOM_PROBES) -> str:
     cfg = BLOOM_CFG
-    exprs = ", ".join(hash_sql(value, a, b) for a, b in cfg.hash_abs)
-    pexprs = ", ".join(hash_sql("probe", a, b) for a, b in cfg.hash_abs)
+    exprs = ", ".join(mixed_hash_sql(value, a, b) for a, b in cfg.hash_abs)
+    pexprs = ", ".join(mixed_hash_sql("probe", a, b) for a, b in cfg.hash_abs)
     return f"""
-WITH lin AS (
+WITH hashed AS (
   SELECT UNNEST([{exprs}]) AS h FROM {table} WHERE {value} IS NOT NULL
 ),
-bits AS (SELECT DISTINCT {mix_sql('h')} % {cfg.m_bits} AS bit FROM lin),
+bits AS (SELECT DISTINCT h % {cfg.m_bits} AS bit FROM hashed),
 probes AS (SELECT UNNEST(range(0, {n_probes})) AS probe),
-plin AS (SELECT probe, UNNEST([{pexprs}]) AS h FROM probes),
-pbits AS (SELECT probe, {mix_sql('h')} % {cfg.m_bits} AS bit FROM plin)
+phashed AS (SELECT probe, UNNEST([{pexprs}]) AS h FROM probes),
+pbits AS (SELECT probe, h % {cfg.m_bits} AS bit FROM phashed)
 SELECT p.probe AS probe, COUNT(*) = COUNT(b.bit) AS might_contain
 FROM pbits p LEFT JOIN bits b ON p.bit = b.bit
 GROUP BY p.probe

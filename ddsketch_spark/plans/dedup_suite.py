@@ -16,7 +16,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ddsketch_spark.functions.hashing import FOLD31, hash_params, hash_sql, mix_sql
+from ddsketch_spark.functions.hashing import FOLD31, hash_params, mixed_hash_sql
 from ddsketch_spark.operators import dedup as dd
 from ddsketch_spark.operators.text_ops import FP_BASE, FP_MOD, tokenize
 from ddsketch_spark.plans.tokens_suite import VOCAB_SQL
@@ -82,17 +82,13 @@ def _minhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_oracle_sql() -> str:
-    lin_cols = ", ".join(
-        f"{hash_sql('shingle', a, b)} AS h{j}"
+    mins = ", ".join(
+        f"MIN({mixed_hash_sql('shingle', a, b)}) AS m{j}"
         for j, (a, b) in enumerate(hash_params(NUM_HASHES, 42))
     )
-    mins = ", ".join(
-        f"MIN({mix_sql(f'h{j}')}) AS m{j}" for j in range(NUM_HASHES)
-    )
     return f"""
-WITH {_TOKS_SQL},
-lin AS (SELECT doc_id, {lin_cols} FROM shingles)
-SELECT doc_id, {mins} FROM lin GROUP BY doc_id
+WITH {_TOKS_SQL}
+SELECT doc_id, {mins} FROM shingles GROUP BY doc_id
 """
 
 
@@ -216,7 +212,7 @@ WITH {_TOKS_SQL},
 stream AS (SELECT doc_id, UNNEST(tokens) AS token FROM toks),
 counted AS (SELECT doc_id, token, COUNT(*) AS cnt FROM stream GROUP BY 1, 2),
 hashed AS (
-  SELECT doc_id, cnt, {mix_sql(hash_sql('token', a, b))} AS hm FROM counted
+  SELECT doc_id, cnt, {mixed_hash_sql('token', a, b)} AS hm FROM counted
 ),
 sums AS (SELECT doc_id, {bit_sums} FROM hashed GROUP BY doc_id)
 SELECT doc_id, {fp} AS simhash FROM sums

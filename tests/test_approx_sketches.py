@@ -108,14 +108,15 @@ def test_hll_spark_state_grouped(spark, sf_correct):
 # ---------------------------------------------------------------------------
 
 def _hash_preimage(target: int, a: int, b: int) -> int | None:
-    """An int64 ``x`` with ``hash_np(x, a, b) == target``, or None.
+    """An int64 ``x`` whose linear limb hash ``_hash_np(x, a, b)`` is
+    ``target``, or None.
 
     The hash is ``a*lo + a2*mid + a3*hi + b (mod P)`` over the limbs of x.
     For each ``hi``, the (lo, mid) solutions form a coset of the lattice
     {(u, v): a*u + a2*v = 0 (mod P)}; a Lagrange-reduced basis and Babai
     rounding toward the centre of the 31-bit box find a member inside it
     when one is near."""
-    from ddsketch_spark.functions.hashing import _limb_params, hash_np
+    from ddsketch_spark.functions.hashing import _hash_np, _limb_params
 
     P, half = MERSENNE61, 1 << 30
     a2, a3 = _limb_params(a, b)
@@ -141,7 +142,7 @@ def _hash_preimage(target: int, a: int, b: int) -> int | None:
                 if 0 <= lo < 1 << 31 and 0 <= mid < 1 << 31:
                     x = lo | mid << 31 | hi << 62
                     x = x - (1 << 64) if x >= 1 << 63 else x
-                    if int(hash_np(np.array([x], np.int64), a, b)[0]) == target:
+                    if int(_hash_np(np.array([x], np.int64), a, b)[0]) == target:
                         return x
     return None
 

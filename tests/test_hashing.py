@@ -1,10 +1,11 @@
-"""Cross-engine hash-family tests (VERDICT r1 items 2 / ADVICE).
+"""Cross-engine hash tests (VERDICT r1 items 2 / ADVICE).
 
-The multilinear limb hash must (a) agree bit-for-bit across Spark Column,
-numpy, and DuckDB SQL on the FULL int64 domain (negatives included), and
-(b) distinguish keys that are congruent mod 2^31-1 -- the round-1 fold
-made every such pair collide under the entire family, breaking HLL /
-Bloom / CMS / MinHash guarantees for 64-bit ids.
+The mixed hash, the one sketch address, must (a) agree bit-for-bit across
+Spark Column, the two-projection Spark helper, numpy, and DuckDB SQL on the
+FULL int64 domain (negatives included), and (b) distinguish keys that are
+congruent mod 2^31-1 -- the round-1 fold made every such pair collide under
+the entire family, breaking HLL / Bloom / CMS / MinHash guarantees for
+64-bit ids.  The sketch bounds themselves are checked in test_bounds.py.
 """
 
 from __future__ import annotations
@@ -18,13 +19,11 @@ from ddsketch_spark.functions.hashing import (
     FOLD31,
     bitlen_col,
     bitlen_np,
-    hash_col,
-    hash_np,
     hash_params,
-    hash_sql,
     mixed_hash_col,
     mixed_hash_np,
     mixed_hash_sql,
+    with_mixed_hashes,
 )
 
 # full-domain exercise: 0, small, fold-aliases, 31/32-bit edges, 62-bit
@@ -54,27 +53,23 @@ PROBE_KEYS = [
 
 @pytest.mark.parametrize("which", [0, 1, 2])
 def test_three_engine_agreement(spark, which):
-    a, b = hash_params(3)[which]
-    np_lin = hash_np(np.array(PROBE_KEYS, np.int64), a, b)
+    params = hash_params(3)
+    a, b = params[which]
     np_mix = mixed_hash_np(np.array(PROBE_KEYS, np.int64), a, b)
 
     df = spark.createDataFrame([(int(k),) for k in PROBE_KEYS], "x long")
     got = (
-        df.select(
-            hash_col(F.col("x"), a, b).alias("h"),
-            mixed_hash_col(F.col("x"), a, b).alias("hm"),
-        )
+        with_mixed_hashes(df, "x", params, ["x"])
+        .select(f"__h{which}", mixed_hash_col(F.col("x"), a, b).alias("hm"))
         .toPandas()
     )
-    assert got["h"].tolist() == np_lin.tolist()
+    assert got[f"__h{which}"].tolist() == np_mix.tolist()
     assert got["hm"].tolist() == np_mix.tolist()
 
     con = duckdb.connect()
-    for k, hl, hm in zip(PROBE_KEYS, np_lin, np_mix):
-        row = con.execute(
-            f"SELECT {hash_sql(str(k), a, b)}, {mixed_hash_sql(str(k), a, b)}"
-        ).fetchone()
-        assert row == (int(hl), int(hm)), f"duckdb mismatch at {k}"
+    for k, hm in zip(PROBE_KEYS, np_mix):
+        row = con.execute(f"SELECT {mixed_hash_sql(str(k), a, b)}").fetchone()
+        assert row == (int(hm),), f"duckdb mismatch at {k}"
 
 
 def test_fold_aliases_distinguished():
@@ -84,7 +79,7 @@ def test_fold_aliases_distinguished():
     for base in (7, 1 << 40, -(1 << 45)):
         xs = np.array([base, base + FOLD31], np.int64)
         distinct = sum(
-            hash_np(xs, a, b)[0] != hash_np(xs, a, b)[1] for a, b in a_b
+            mixed_hash_np(xs, a, b)[0] != mixed_hash_np(xs, a, b)[1] for a, b in a_b
         )
         assert distinct == len(a_b), f"alias collision for base {base}"
 
