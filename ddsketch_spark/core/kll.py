@@ -4,22 +4,34 @@ Karnin-Lang-Liberty streaming quantile sketch (FOCS 2016). State: a list of
 level buffers; items at level i carry weight 2^i. Capacity of level i is
 max(ceil(k * c^(H-i)), MIN_CAP) with c = 2/3 -- the standard geometric decay.
 When a level overflows it is *compacted*: sorted, then every other item is
-promoted to the next level (the survivors' parity alternates per level via a
-deterministic counter kept in the state -- no RNG, so a given input order
-always produces the same state; across different partition orders estimates
+promoted to the next level, starting at an offset of 0 or 1 -- the
+compaction's coin.
+
+One compaction path: ``add`` appends the whole batch to level 0 and
+``merge_many`` concatenates the inputs level by level; both then compact
+top-down until every capacity holds (``_compact_to_fit``).
+
+The coin is the top bit of splitmix64 of the ``parity`` counter (the
+number of compactions so far), so successive compactions get independent-
+looking coins while a given input order still always produces the same
+state -- no RNG.  The counter's own low bit is no coin: the compactions of
+one level need not alternate under it, so their errors add up instead of
+cancelling and grow with n.  Across different partition orders estimates
 vary within the rank bound, which is inherent to KLL, hence the rows-only
-driver check with accuracy gated in pytest).
+driver check with accuracy gated in pytest.
 
 Rank guarantee: |est_rank(x) - true_rank(x)| <= eps * n with
-eps ~= 2.9 / k (random-parity analysis; the deterministic alternating parity
-used here behaves the same empirically -- the pytest gate asserts the bound
-with a 2x margin at k=200 over the reference harness distributions).
+eps ~= 2.9 / k (random-coin analysis).  tests/test_bounds.py asserts
+2 * 2.9 / k at k = 200 on 1M normal and lognormal values, fed in 100- and
+1,000-value batches, in one batch and through an 8-way merge_many (worst
+0.009 measured).
 
-Merge: levels are concatenated pairwise, then compacted top-down until all
-capacities hold. Compaction order is deterministic, so merging the same
-partials in any order gives byte-identical states (canonical merge:
-merge_many concatenates ALL inputs before compacting, making the result
-independent of merge order).
+Merge: levels are concatenated, then compacted top-down until all
+capacities hold, and the inputs' ``parity`` counters are summed.
+Compaction order is deterministic, so merging the same partials in any
+order gives byte-identical states (canonical merge: merge_many
+concatenates ALL inputs before compacting, making the result independent
+of merge order).
 """
 
 from __future__ import annotations
@@ -28,6 +40,8 @@ import math
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from ddsketch_spark.functions.hashing import splitmix_uniform
 
 DEFAULT_K = 200
 _DECAY = 2.0 / 3.0
@@ -48,7 +62,7 @@ class KLL:
     cfg: KLLConfig
     levels: list[np.ndarray] = field(default_factory=list)  # level i buffer
     n: int = 0
-    parity: int = 0  # deterministic alternating compaction parity counter
+    parity: int = 0  # compactions so far; seeds each compaction's coin
 
 
 def empty(cfg: KLLConfig | None = None) -> KLL:
@@ -73,7 +87,7 @@ def _compact_level(sk: KLL, level: int) -> None:
     leftover = buf[-1:] if buf.size & 1 else np.empty(0, np.float64)
     if buf.size & 1:
         buf = buf[:-1]
-    keep_parity = sk.parity & 1
+    keep_parity = int(splitmix_uniform(1, sk.parity)[0] >= 0.5)  # top bit
     sk.parity += 1
     promoted = buf[keep_parity::2]
     if len(sk.levels) <= level + 1:
@@ -95,24 +109,17 @@ def _compact_to_fit(sk: KLL) -> None:
 
 
 def add(sk: KLL, values: np.ndarray) -> KLL:
+    """Append the batch to level 0 and compact to fit, the step
+    :func:`merge_many` ends with."""
     vals = np.asarray(values, np.float64)
     vals = vals[~np.isnan(vals)]
     if vals.size == 0:
         return sk
     if not sk.levels:
         sk.levels.append(np.empty(0, np.float64))
-    # batch insert: feed level 0 in capacity-sized chunks (vectorized concat;
-    # compaction cost is O(cap log cap) per chunk)
-    cap0 = _capacity(sk.cfg, 0, len(sk.levels))
-    pos = 0
-    while pos < vals.size:
-        room = max(cap0 - sk.levels[0].size, cap0)
-        chunk = vals[pos : pos + room]
-        pos += len(chunk)
-        sk.levels[0] = np.concatenate([sk.levels[0], chunk])
-        _compact_to_fit(sk)
-        cap0 = _capacity(sk.cfg, 0, len(sk.levels))
+    sk.levels[0] = np.concatenate([sk.levels[0], vals])
     sk.n += int(vals.size)
+    _compact_to_fit(sk)
     return sk
 
 

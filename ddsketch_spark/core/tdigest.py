@@ -137,18 +137,7 @@ def add(sk: TDigest, values: np.ndarray) -> TDigest:
 
 
 def merge(a: TDigest, b: TDigest) -> TDigest:
-    if a.cfg != b.cfg:
-        raise ValueError(f"incompatible t-digest configs: {a.cfg} vs {b.cfg}")
-    out = empty(a.cfg)
-    out.means, out.weights = _compress(
-        np.concatenate([a.means, b.means]),
-        np.concatenate([a.weights, b.weights]),
-        a.cfg,
-    )
-    out.n = a.n + b.n
-    out.min = min(a.min, b.min)
-    out.max = max(a.max, b.max)
-    return out
+    return merge_many([a, b])
 
 
 def merge_many(sketches: list[TDigest]) -> TDigest:
@@ -157,6 +146,9 @@ def merge_many(sketches: list[TDigest]) -> TDigest:
     if not sketches:
         raise ValueError("merge_many of zero sketches")
     cfg = sketches[0].cfg
+    for s in sketches[1:]:
+        if s.cfg != cfg:
+            raise ValueError(f"incompatible t-digest configs: {cfg} vs {s.cfg}")
     out = empty(cfg)
     out.means, out.weights = _compress(
         np.concatenate([s.means for s in sketches]),

@@ -395,59 +395,6 @@ def ivf_ann(
     return _rerank(c, p, k, id_col, vec_col, probe_id_col, on="__cell")
 
 
-def _cell_score_exprs(vec: Column, cents) -> list[Column]:
-    """One score column per centroid: dot(vec, c_i) - |c_i|^2/2 (argmax of
-    this over i == argmin L2). Sequential float64 folds, so DuckDB
-    list_reduce reproduces every score bit-for-bit; |c_i|^2/2 is computed
-    once in numpy and embedded as the SAME literal in both engines, so its
-    summation order never matters."""
-    c = np.asarray(cents, np.float64)
-    c2 = (c * c).sum(axis=1) / 2.0
-    out = []
-    for i in range(c.shape[0]):
-        lit = F.array(*[F.lit(float(v)) for v in c[i]])
-        out.append(dot_expr(vec, lit) - F.lit(float(c2[i])))
-    return out
-
-
-def ivf_ann_exact(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    cents,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    n_probe_cells: int = 4,
-) -> DataFrame:
-    """IVF ANN with centroid-literal fold scoring: same semantics and same
-    candidate sets as ivf_ann, but every cell score is a sequential float64
-    fold (SQL-parity tier -> value-level oracle). The Arrow-matmul ivf_ann
-    remains the 100 TB assignment path; tests pin that both variants return
-    identical rows on the fixture, which transitively verifies the matmul.
-
-    Corpus cell = argmax over the score array (first max, via
-    array_position) -- a pure projection, no shuffle. Probe cells = top
-    n_probe_cells scores (ties to the lower cell id) via posexplode +
-    window over the tiny probe set."""
-    arr = F.array(*_cell_score_exprs(F.col(vec_col), cents))
-    c = corpus.withColumn(
-        "__cell", (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
-    )
-    p0 = _probe_side(
-        probes, probe_id_col, vec_col, F.posexplode(arr).alias("__cell", "__score")
-    )
-    w0 = Window.partitionBy(probe_id_col).orderBy(
-        F.col("__score").desc(), F.col("__cell")
-    )
-    p = (
-        p0.withColumn("__cr", F.row_number().over(w0))
-        .where(F.col("__cr") <= n_probe_cells)
-        .select(probe_id_col, "__pvec", "__pnorm", F.col("__cell").cast("int").alias("__cell"))
-    )
-    return _rerank(c, p, k, id_col, vec_col, probe_id_col, on="__cell")
-
-
 def lsh_band_buckets(
     df: DataFrame,
     planes,

@@ -224,7 +224,7 @@ def _cms_hh_spark(
         return ops.cms_heavy_hitters(df, value, rel / nd, cfg, candidates=cands)
     cands.unpersist()
     return ops.cms_heavy_hitters(
-        df, value, rel / nd, cfg, candidate_source="local_topk"
+        df, value, rel / nd, cfg, candidates=ops.local_topk_candidates(df, value)
     )
 
 
@@ -242,7 +242,7 @@ def _cms_hh_local_topk_spark(
     nd = df.agg(F.countDistinct(value).alias("nd")).first()["nd"]
     cfg = replace(CMS_CFG, width=_hh_width(nd))
     return ops.cms_heavy_hitters(
-        df, value, rel / nd, cfg, candidate_source="local_topk", k_local=1 << 17
+        df, value, rel / nd, cfg, candidates=ops.local_topk_candidates(df, value, 1 << 17)
     )
 
 

@@ -23,7 +23,10 @@ from ddsketch_spark.sources.tables import read_table
 _TOPK = 5
 _N_PROBES = 10
 _COS_TAU = 0.4  # synthetic-corpus calibration (~300 pairs @ sf0.01)
-_N_PLANES = 8
+# one LSH table of 4 planes: 16 buckets for the 500 sf0.01 vectors, so every
+# probe's bucket holds its top-k (at 8 planes most of the 256 buckets hold
+# fewer than k others and the row returned 24 of its 50 rows)
+_N_PLANES = 4
 
 
 # SQL: sequential float64 dot product / norm over FLOAT[] columns.
@@ -134,8 +137,8 @@ FROM ranked WHERE rank <= {_TOPK}
 
 _IVF_CELLS = 16
 _IVF_PROBE_CELLS = 4
-_IVF_SAMPLE = 512
-_IVF_ITERS = 10
+_IVF_SAMPLE = 512  # the k-means sample and iterations of sim.ivf_centroids,
+_IVF_ITERS = 10  # which ivf_ann trains with; the oracle trains the same
 
 
 def _ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,17 +148,15 @@ def _ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines can train it identically and embed the resulting centroids
     as literals: the SQL oracle then independently verifies everything the
     CLUSTER does (cell assignment, probe-cell selection, candidate
-    membership, cosine rerank, top-k). Scores use sequential-fold math for
-    cross-engine bit parity; the Arrow-matmul assignment (sim.ivf_ann)
-    stays the 100 TB path, pinned equal to this variant in pytest."""
+    membership, cosine rerank, top-k). The cluster assigns cells with the
+    Arrow matmul of the 100 TB path; the oracle scores them with sequential
+    folds, and the two pick the same cells on this corpus (the rerank
+    cosine is the fold on both sides)."""
     emb = read_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    cents = sim.ivf_centroids(emb, _IVF_CELLS, sample=_IVF_SAMPLE, iters=_IVF_ITERS)
-    out = sim.ivf_ann_exact(
-        emb, probes, _TOPK, cents, n_probe_cells=_IVF_PROBE_CELLS
-    )
+    out = sim.ivf_ann(emb, probes, _TOPK, n_cells=_IVF_CELLS, n_probe_cells=_IVF_PROBE_CELLS)
     return out.select(
         "probe_id", "rank", "neighbor", sig6_mantissa(F.col("cosine")).alias("cos_m6")
     )

@@ -19,10 +19,15 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from ddsketch_spark.config import Q_GRID
 from ddsketch_spark.core import cms as cms_core
+from ddsketch_spark.core import kll as kll_core
+from ddsketch_spark.core import tdigest as td_core
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
+from ddsketch_spark.core.kll import KLLConfig
+from ddsketch_spark.core.tdigest import TDigestConfig
 from ddsketch_spark.operators import approx_agg as aa
 from ddsketch_spark.operators import dedup as dd
 from ddsketch_spark.operators import similarity as sim
@@ -168,3 +173,57 @@ def test_lsh_cosine_pairs_candidate_share(spark, sf_correct):
     n = emb.count()
     cand = sim.lsh_cosine_pairs(emb, -1.0, n_planes=16, bands=4).count()
     assert cand <= 0.25 * n * (n - 1) / 2, (cand, n)
+
+
+# ---------------------------------------------------------------------------
+# quantile sketches: rank error on the Q grid
+# ---------------------------------------------------------------------------
+
+N_VALUES = 1_000_000
+FEEDS = ("batches-100", "batches-1000", "one-batch", "merge-8")
+
+
+def _values(dist: str) -> np.ndarray:
+    rng = np.random.default_rng(11)
+    return rng.normal(10, 3, N_VALUES) if dist == "normal" else rng.lognormal(6, 1, N_VALUES)
+
+
+def _feed(core, cfg, vals: np.ndarray, feed: str):
+    """A sketch of ``vals`` built the way ``feed`` names."""
+    if feed == "merge-8":
+        return core.merge_many([core.add(core.empty(cfg), p) for p in np.array_split(vals, 8)])
+    step = int(feed.split("-")[1]) if feed.startswith("batches") else len(vals)
+    sk = core.empty(cfg)
+    for i in range(0, len(vals), step):
+        core.add(sk, vals[i : i + step])
+    return sk
+
+
+def _worst_rank_error(vals: np.ndarray, estimates) -> float:
+    """max |rank(estimate) - q n| / n over the Q grid, by exact ranks."""
+    ranks = np.searchsorted(np.sort(vals), estimates, side="right")
+    return float(np.max(np.abs(ranks - np.asarray(Q_GRID) * len(vals))) / len(vals))
+
+
+@pytest.mark.parametrize("feed", FEEDS)
+@pytest.mark.parametrize("dist", ["normal", "lognormal"])
+def test_kll_rank_error_within_bound(dist, feed):
+    """KLL (Karnin, Lang & Liberty 2016): rank error eps ~ 2.9 / k, asserted
+    with a 2x margin.  A compaction coin that is not independent across a
+    level's compactions lets the error grow with n (0.04-0.06 here when it
+    was the low bit of the compaction counter)."""
+    cfg = KLLConfig(k=200)
+    vals = _values(dist)
+    sk = _feed(kll_core, cfg, vals, feed)
+    assert sk.n == N_VALUES
+    err = _worst_rank_error(vals, kll_core.quantiles(sk, Q_GRID))
+    assert err <= 2 * 2.9 / cfg.k, err
+
+
+@pytest.mark.parametrize("feed", ["batches-1000", "one-batch", "merge-8"])
+def test_tdigest_rank_error_within_bound(feed):
+    """t-digest (Dunning & Ertl): rank error within 6 / delta."""
+    cfg = TDigestConfig(delta=200)
+    vals = _values("lognormal")
+    err = _worst_rank_error(vals, td_core.quantiles(_feed(td_core, cfg, vals, feed), Q_GRID))
+    assert err <= 6 / cfg.delta, err

@@ -13,9 +13,11 @@ from pyspark.sql import functions as F
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
 from ddsketch_spark.core import kll as kll_core
+from ddsketch_spark.core import tdigest as td_core
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.kll import KLLConfig
+from ddsketch_spark.core.tdigest import TDigestConfig
 from ddsketch_spark.operators import _grouped
 from ddsketch_spark.operators import approx_agg as aops
 from ddsketch_spark.operators import ddsketch_agg as agg
@@ -186,6 +188,21 @@ def test_merge_rejects_mixed_configs(values, field, cfgs):
     assert f"mixed '{field}'" in str(ei.value)
     assert "MergeError" in str(ei.value)
 
+
+
+def test_tdigest_merge_many_rejects_mixed_delta():
+    a, b = (td_core.add(td_core.empty(TDigestConfig(d)), np.arange(50.0)) for d in (100, 200))
+    with pytest.raises(ValueError, match="incompatible t-digest configs"):
+        td_core.merge_many([a, b])
+
+
+def test_tdigest_distributed_merge_rejects_mixed_delta(values):
+    """The Spark merge goes through merge_many, so mixed deltas raise there
+    too instead of merging under the first partial's delta."""
+    df, _ = values
+    a, b = (qa.build_partials(df, "v", qa.tdigest_ops(TDigestConfig(d)), ("g",)) for d in (100, 200))
+    with pytest.raises(Exception, match="incompatible t-digest configs"):
+        _grouped.merge_partials(a.unionByName(b), qa.tdigest_ops(), ("g",)).collect()
 
 def test_fanout_merge_equals_one_level(values):
     df, _ = values

@@ -143,11 +143,9 @@ def test_cms_heavy_hitters_local_topk_matches_distinct(spark, sf_correct):
     want = sorted(
         aops.cms_heavy_hitters(li, "l_partkey", 0.0008, cfg).collect(), key=key
     )
+    cand = aops.local_topk_candidates(li, "l_partkey", 100_000)
     got = sorted(
-        aops.cms_heavy_hitters(
-            li, "l_partkey", 0.0008, cfg, candidate_source="local_topk",
-            k_local=100_000,
-        ).collect(),
+        aops.cms_heavy_hitters(li, "l_partkey", 0.0008, cfg, candidates=cand).collect(),
         key=key,
     )
     assert [(r["item"], r["est"]) for r in got] == [
@@ -156,19 +154,12 @@ def test_cms_heavy_hitters_local_topk_matches_distinct(spark, sf_correct):
     assert len(want) > 0
     # plan shape: candidates come from MapInPandas directly over the scan --
     # no Exchange may sit between the parquet scan and the MapInPandas node
-    cand = aops.local_topk_candidates(li, "l_partkey", 100_000)
     plan = _plan(cand)
     map_idx = plan.find("MapInPandas")
     assert map_idx != -1, plan
     # the subtree under MapInPandas (executedPlan prints children after it)
     # must be exchange-free -- candidates are computed partition-locally
     assert "Exchange" not in plan[map_idx:], plan
-
-
-def test_cms_heavy_hitters_unknown_source_raises(spark, sf_correct):
-    li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
-    with pytest.raises(ValueError, match="candidate_source"):
-        aops.cms_heavy_hitters(li, "l_partkey", 0.1, CMSConfig(), candidate_source="nope")
 
 
 def test_compacting_rank_pass_broadcasts(spark, sf_correct):
@@ -324,7 +315,6 @@ def test_probe_searches_broadcast_their_probes(spark, sf_correct):
     frames = {
         "lsh_ann": sim.lsh_ann(emb, probes, 5),
         "ivf_ann": sim.ivf_ann(emb, probes, 5),
-        "ivf_ann_exact": sim.ivf_ann_exact(emb, probes, 5, sim.ivf_centroids(emb, 16)),
     }
     for name, df in frames.items():
         plan = _executed(df)
