@@ -140,24 +140,26 @@ def compute_keys(values: np.ndarray, ln_gamma: float, offset: int) -> np.ndarray
     return keys
 
 
-def key_to_estimate(keys: np.ndarray, gamma: float, offset: int) -> np.ndarray:
-    """Bucket key -> relative-midpoint value estimate 2*gamma^k/(gamma+1)
-    (reference: DDS_GetRank, ddsketch.cc:105-126)."""
+def strip_offset(keys: np.ndarray, offset: int) -> np.ndarray:
+    """Stored key -> offset-stripped signed key (reference: DDS_RemoveOffset,
+    ddsketch.cc:967-981); key 0 stays 0."""
     k = np.asarray(keys, dtype=np.int64)
-    stripped = np.where(k > 0, k - offset, np.where(k < 0, k + offset, 0))
-    mag = np.where(k > 0, stripped, -stripped).astype(np.float64)
-    est = (2.0 * np.power(gamma, mag)) / (gamma + 1.0)
-    return np.where(k > 0, est, np.where(k < 0, -est, 0.0))
+    return np.where(k > 0, k - offset, np.where(k < 0, k + offset, 0))
 
 
 def key_to_bound(keys: np.ndarray, gamma: float, offset: int) -> np.ndarray:
     """Bucket key -> upper bound +-gamma^k (reference: DDS_GetValue,
     ddsketch.cc:128-149). value(0) := 0.0 (deviation Q4)."""
     k = np.asarray(keys, dtype=np.int64)
-    stripped = np.where(k > 0, k - offset, np.where(k < 0, k + offset, 0))
-    mag = np.where(k > 0, stripped, -stripped).astype(np.float64)
-    bound = np.power(gamma, mag)
+    stripped = strip_offset(k, offset)
+    bound = np.power(gamma, np.where(k > 0, stripped, -stripped).astype(np.float64))
     return np.where(k > 0, bound, np.where(k < 0, -bound, 0.0))
+
+
+def key_to_estimate(keys: np.ndarray, gamma: float, offset: int) -> np.ndarray:
+    """Bucket key -> relative-midpoint value estimate 2*gamma^k/(gamma+1)
+    (reference: DDS_GetRank, ddsketch.cc:105-126)."""
+    return (2.0 * key_to_bound(keys, gamma, offset)) / (gamma + 1.0)
 
 
 def collapse_keys(keys: np.ndarray, offset: int) -> np.ndarray:
@@ -173,31 +175,33 @@ def collapse_keys(keys: np.ndarray, offset: int) -> np.ndarray:
     ceil(s/2) == (s+1)//2, floor(s/2) == s//2.
     """
     k = np.asarray(keys, dtype=np.int64)
-    stripped = np.where(k > 0, k - offset, np.where(k < 0, k + offset, 0))
+    stripped = strip_offset(k, offset)
     new_stripped = np.where(k > 0, (stripped + 1) // 2, stripped // 2)
     return np.where(k > 0, new_stripped + offset, np.where(k < 0, new_stripped - offset, 0))
+
+
+def _lift_keys(keys: np.ndarray, offset: int, steps: int) -> np.ndarray:
+    """``keys`` remapped ``steps`` gamma^2 levels coarser."""
+    for _ in range(steps):
+        keys = collapse_keys(keys, offset)
+    return keys
 
 
 # ---------------------------------------------------------------------------
 # histogram primitives
 # ---------------------------------------------------------------------------
 
-def _combine(keys_a, counts_a, keys_b, counts_b):
-    """Sorted-key union with summed counts; drops zero/negative-count bins."""
-    allk = np.concatenate([keys_a, keys_b])
-    allc = np.concatenate([counts_a, counts_b])
+def _combine(*hists):
+    """Sorted-key union of ``(keys, counts)`` pairs with summed counts;
+    drops zero/negative-count bins."""
+    allk = np.concatenate([k for k, _ in hists])
+    allc = np.concatenate([c for _, c in hists])
     uk, inv = np.unique(allk, return_inverse=True)
     # counts fit exactly in float64 up to 2^53; we stay far below that per bin
     uc = np.bincount(inv, weights=allc.astype(np.float64), minlength=len(uk))
     uc = np.rint(uc).astype(np.int64)
     keep = uc > 0
     return uk[keep], uc[keep]
-
-
-def _values_to_histogram(sk: DDSketch, values: np.ndarray):
-    keys = compute_keys(values, sk.ln_gamma, sk.cfg.offset)
-    uk, uc = np.unique(keys, return_counts=True)
-    return uk, uc.astype(np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -207,11 +211,7 @@ def _values_to_histogram(sk: DDSketch, values: np.ndarray):
 def collapse_gamma2(sk: DDSketch) -> None:
     """Square gamma, remap every key, rebuild the histogram
     (reference: DDS_Collapse, ddsketch.cc:828-906)."""
-    new_keys = collapse_keys(sk.keys, sk.cfg.offset)
-    uk, inv = np.unique(new_keys, return_inverse=True)
-    uc = np.bincount(inv, weights=sk.counts.astype(np.float64), minlength=len(uk))
-    sk.keys = uk
-    sk.counts = np.rint(uc).astype(np.int64)
+    sk.keys, sk.counts = _combine((collapse_keys(sk.keys, sk.cfg.offset), sk.counts))
     sk.level += 1
 
 
@@ -248,28 +248,30 @@ def collapse_first(sk: DDSketch) -> None:
     sk.counts = np.delete(sk.counts, 1)
 
 
+_COLLAPSE = {GAMMA2: collapse_gamma2, LAST: collapse_last, FIRST: collapse_first}
+
+
 def _collapse_to_limit(sk: DDSketch) -> None:
     """``while size > bin_limit`` collapse loop (reference: ddsketch.cc:239-252
     for gamma2; for last/first this matches the reference's *merge* path
     ddsketch.cc:684-696, which folds repeatedly after a bulk addition)."""
-    if sk.cfg.collapse == GAMMA2:
-        while sk.size > sk.cfg.bin_limit:
-            collapse_gamma2(sk)
-    elif sk.cfg.collapse == LAST:
-        while sk.size > sk.cfg.bin_limit:
-            collapse_last(sk)
-    else:
-        while sk.size > sk.cfg.bin_limit:
-            collapse_first(sk)
+    collapse = _COLLAPSE[sk.cfg.collapse]
+    while sk.size > sk.cfg.bin_limit:
+        collapse(sk)
 
 
 # ---------------------------------------------------------------------------
 # insert / delete
 # ---------------------------------------------------------------------------
 
-def add(sk: DDSketch, values: np.ndarray) -> DDSketch:
-    """Batch insert (reference: DDS_AddCollapse{,LastBucket,FirstBucket},
-    ddsketch.cc:212-340, vectorized).
+_INT_FASTPATH_MAX = 1 << 22  # bincount table cap (~32 MB of int64)
+
+
+def add_keyed(sk: DDSketch, keys: np.ndarray, weights: np.ndarray) -> DDSketch:
+    """Insert ``weights[i]`` items into the bin of stored key ``keys[i]``
+    (keyed at the sketch's current level), then collapse until the sketch
+    fits ``bin_limit``. Every batch insert ends here: :func:`add`,
+    :func:`add_weighted` and the Spark finalize of JVM-built histograms.
 
     For the gamma2 strategy batch-then-collapse is *provably identical* to the
     reference's per-item eager collapse, because the gamma^2 key remap
@@ -279,51 +281,54 @@ def add(sk: DDSketch, values: np.ndarray) -> DDSketch:
     (bulk add then fold-until-fit); per-item parity for those is covered by
     :func:`add_one`.
     """
-    values = np.asarray(values, dtype=np.float64)
-    if values.size == 0:
+    keys = np.asarray(keys, dtype=np.int64)
+    weights = np.asarray(weights, dtype=np.int64)
+    if keys.size == 0:
         return sk
-    uk, uc = _values_to_histogram(sk, values)
-    sk.keys, sk.counts = _combine(sk.keys, sk.counts, uk, uc)
-    sk.n += int(values.size)
+    sk.keys, sk.counts = _combine((sk.keys, sk.counts), (keys, weights))
+    sk.n += int(weights.sum())
     _collapse_to_limit(sk)
     return sk
+
+
+def add(sk: DDSketch, values: np.ndarray) -> DDSketch:
+    """Batch insert (reference: DDS_AddCollapse{,LastBucket,FirstBucket},
+    ddsketch.cc:212-340, vectorized; see :func:`add_keyed`).
+
+    Small non-negative integers (token ids) are counted with ``np.bincount``
+    first, so ``log()`` runs once per DISTINCT value instead of per value.
+    ``minlength`` + int64 matter: ``np.bincount`` on int32 without
+    ``minlength`` falls off a fast path (~60x slower on skewed data).
+    """
+    values = np.asarray(values)
+    if values.size == 0:
+        return sk
+    if values.dtype.kind in "iu" and values.min() >= 0 and values.max() < _INT_FASTPATH_MAX:
+        counts = np.bincount(values.astype(np.int64, copy=False), minlength=int(values.max()) + 1)
+        distinct = np.nonzero(counts)[0]
+        return add_weighted(sk, distinct, counts[distinct])
+    keys, counts = np.unique(compute_keys(values, sk.ln_gamma, sk.cfg.offset), return_counts=True)
+    return add_keyed(sk, keys, counts)
 
 
 def add_weighted(sk: DDSketch, values: np.ndarray, weights: np.ndarray) -> DDSketch:
     """Insert ``weights[i]`` copies of ``values[i]`` (vectorized multiset
-    insert). Semantically identical to ``add`` on the expanded multiset; used
-    by the Spark operators to ingest pre-aggregated histograms (e.g. token
-    value counts) without materializing the expansion."""
-    values = np.asarray(values, dtype=np.float64)
-    weights = np.asarray(weights, dtype=np.int64)
-    if values.size == 0:
-        return sk
-    keys = compute_keys(values, sk.ln_gamma, sk.cfg.offset)
-    uk, inv = np.unique(keys, return_inverse=True)
-    uc = np.rint(
-        np.bincount(inv, weights=weights.astype(np.float64), minlength=len(uk))
-    ).astype(np.int64)
-    sk.keys, sk.counts = _combine(sk.keys, sk.counts, uk, uc)
-    sk.n += int(weights.sum())
-    _collapse_to_limit(sk)
-    return sk
+    insert): :func:`add` on the expanded multiset, without materializing
+    the expansion."""
+    return add_keyed(sk, compute_keys(values, sk.ln_gamma, sk.cfg.offset), weights)
 
 
 def add_one(sk: DDSketch, item: float) -> DDSketch:
     """Single-item insert with the reference's exact eager-collapse timing
     (one fold per overflowing insert for last/first: ddsketch.cc:285-294 is an
     ``if``, not a ``while``). Used by the parity test-suite."""
-    uk, uc = _values_to_histogram(sk, np.array([item], dtype=np.float64))
-    sk.keys, sk.counts = _combine(sk.keys, sk.counts, uk, uc)
+    keys = compute_keys(np.array([item], dtype=np.float64), sk.ln_gamma, sk.cfg.offset)
+    sk.keys, sk.counts = _combine((sk.keys, sk.counts), (keys, np.ones(1, np.int64)))
     sk.n += 1
-    if sk.size > sk.cfg.bin_limit:
-        if sk.cfg.collapse == GAMMA2:
-            while sk.size > sk.cfg.bin_limit:
-                collapse_gamma2(sk)
-        elif sk.cfg.collapse == LAST:
-            collapse_last(sk)
-        else:
-            collapse_first(sk)
+    if sk.cfg.collapse == GAMMA2:
+        _collapse_to_limit(sk)
+    elif sk.size > sk.cfg.bin_limit:
+        _COLLAPSE[sk.cfg.collapse](sk)
     return sk
 
 
@@ -365,8 +370,7 @@ def delete_keyed(
         return sk
     if keys_level > sk.level:
         raise SketchError("delete histogram keyed at finer level than sketch")
-    for _ in range(sk.level - keys_level):
-        keys = collapse_keys(keys, sk.cfg.offset)
+    keys = _lift_keys(keys, sk.cfg.offset, sk.level - keys_level)
 
     if sk.cfg.collapse in (LAST, FIRST) and sk.min_key <= sk.max_key:
         in_range = (keys >= sk.min_key) & (keys <= sk.max_key)
@@ -416,25 +420,21 @@ def _align_alphas(a: DDSketch, b: DDSketch) -> None:
     )
 
 
-def merge(a: DDSketch, b: DDSketch, in_place: bool = False) -> DDSketch:
-    """Pairwise merge (reference: DDS_MergeCollapse / ...LastBucket /
-    ...FirstBucket, ddsketch.cc:558-777). ``a`` absorbs ``b``.
+def _merge_pair(out: DDSketch, b: DDSketch) -> None:
+    """``out`` absorbs ``b`` by the reference's pairwise merge
+    (DDS_MergeCollapse / ...LastBucket / ...FirstBucket, ddsketch.cc:558-777).
 
-    gamma2, shared alpha0: align resolutions by collapsing the finer sketch
-    until integer levels match -- on the shared trajectory this is the same
-    alignment the reference's |alpha1-alpha2|<=1e-4 loop performs (levels
-    one apart differ by >= alpha0 in alpha), and it keeps the byte-identical
-    reorder property. gamma2, differing alpha0: the reference's tolerance
-    loop verbatim -- collapse the currently-finer sketch until alphas agree
-    within 1e-4, then add raw keys (the two keyspaces differ by < 1e-4 in
-    alpha, which the reference treats as the same keyspace). last/first:
-    current alphas must agree within the same tolerance (reference:
-    MERGE_ERROR -5, ddsketch.cc:658-661); min/max absorbed ranges widen to
-    the union (ddsketch.cc:676-682).
+    gamma2, shared alpha0: lift the finer sketch to the coarser level.
+    gamma2, differing alpha0: the reference's tolerance loop verbatim --
+    collapse the currently-finer sketch until alphas agree within 1e-4, then
+    add raw keys (the two keyspaces differ by < 1e-4 in alpha, which the
+    reference treats as the same keyspace). last/first: current alphas must
+    agree within the same tolerance (reference: MERGE_ERROR -5,
+    ddsketch.cc:658-661); min/max absorbed ranges widen to the union
+    (ddsketch.cc:676-682).
     """
-    if a.cfg.offset != b.cfg.offset or a.cfg.collapse != b.cfg.collapse:
+    if out.cfg.offset != b.cfg.offset or out.cfg.collapse != b.cfg.collapse:
         raise MergeError("sketches must share offset and collapse strategy")
-    out = a if in_place else a.copy()
     b = b.copy()
     if out.cfg.collapse == GAMMA2:
         if out.cfg.alpha == b.cfg.alpha:
@@ -445,47 +445,58 @@ def merge(a: DDSketch, b: DDSketch, in_place: bool = False) -> DDSketch:
             _align_alphas(out, b)
     elif abs(out.alpha - b.alpha) > ALPHA_MERGE_TOL:
         raise MergeError("last/first-bucket merge requires equal alpha (reference error -5)")
-    out.keys, out.counts = _combine(out.keys, out.counts, b.keys, b.counts)
+    out.keys, out.counts = _combine((out.keys, out.counts), (b.keys, b.counts))
     out.n += b.n
     out.min_key = min(out.min_key, b.min_key)
     out.max_key = max(out.max_key, b.max_key)
     _collapse_to_limit(out)
+
+
+def merge(a: DDSketch, b: DDSketch) -> DDSketch:
+    """Pairwise merge into a new sketch: :func:`merge_many` of ``[a, b]``
+    when their configs are equal, else the reference's cross-config merge
+    (see :func:`_merge_pair`), ``a`` absorbing ``b``."""
+    if a.cfg == b.cfg:
+        return merge_many([a, b])
+    out = a.copy()
+    _merge_pair(out, b)
     return out
 
 
 def merge_many(sketches: list[DDSketch]) -> DDSketch:
-    """Canonical N-way merge: lift every partial to the max level among
-    inputs, sum all histograms at once, then collapse-until-fit.
+    """Canonical N-way merge of sketches that share one config; mixed
+    ``alpha0``/``offset``/``bin_limit``/``collapse`` raise MergeError
+    (reference error -5).
 
-    For gamma2 this is provably identical to any pairwise merge order (prefix
-    histogram sizes are monotone in the total), which is what makes the
-    merged state byte-identical under reordering -- the north-star merge
-    algebra requirement, stronger than the reference's pairwise contract.
+    gamma2: lift every partial's keys to the max level among inputs, sum
+    all histograms at once, then collapse-until-fit. This is provably
+    identical to any pairwise merge order (prefix histogram sizes are
+    monotone in the total), which is what makes the merged state
+    byte-identical under reordering -- the north-star merge algebra
+    requirement, stronger than the reference's pairwise contract.
+    last/first fold pairwise in input order, as the reference does.
     """
     if not sketches:
         raise SketchError("merge_many of zero sketches")
-    out = sketches[0].copy()
-    if any(s.cfg.alpha != out.cfg.alpha for s in sketches[1:]):
-        # cross-config inputs: no shared level trajectory, so fall back to
-        # the reference's pairwise contract (order-dependent, like the
-        # reference itself -- canonical reordering only holds on-trajectory)
+    for name, attr in (("alpha0", "alpha"), ("offset", "offset"),
+                       ("bin_limit", "bin_limit"), ("collapse", "collapse")):
+        vals = sorted({getattr(s.cfg, attr) for s in sketches})
+        if len(vals) > 1:
+            raise MergeError(f"mixed '{name}' across merged sketches: {vals} (reference error -5)")
+    first = sketches[0]
+    if first.cfg.collapse != GAMMA2:
+        out = first.copy()
         for s in sketches[1:]:
-            merge(out, s, in_place=True)
+            _merge_pair(out, s)
         return out
-    if out.cfg.collapse == GAMMA2:
-        top = max(s.level for s in sketches)
-        _lift_to_level(out, top)
-        for s in sketches[1:]:
-            s = s.copy()
-            _lift_to_level(s, top)
-            out.keys, out.counts = _combine(out.keys, out.counts, s.keys, s.counts)
-            out.n += s.n
-            out.min_key = min(out.min_key, s.min_key)
-            out.max_key = max(out.max_key, s.max_key)
-        _collapse_to_limit(out)
-        return out
-    for s in sketches[1:]:
-        merge(out, s, in_place=True)
+    top = max(s.level for s in sketches)
+    keys, counts = _combine(*[(_lift_keys(s.keys, s.cfg.offset, top - s.level), s.counts)
+                              for s in sketches])
+    out = DDSketch(
+        cfg=first.cfg, keys=keys, counts=counts, n=sum(s.n for s in sketches), level=top,
+        min_key=min(s.min_key for s in sketches), max_key=max(s.max_key for s in sketches),
+    )
+    _collapse_to_limit(out)
     return out
 
 
@@ -493,36 +504,31 @@ def merge_many(sketches: list[DDSketch]) -> DDSketch:
 # quantile evaluation
 # ---------------------------------------------------------------------------
 
-def quantile(sk: DDSketch, q: float) -> float:
-    """q-quantile estimate: walk bins in key order until cumulative count
-    exceeds q*(n-1), return the midpoint estimate of that bin
-    (reference: DDS_GetQuantile, ddsketch.cc:519-556).
+def quantile_keys(sk: DDSketch, qs) -> np.ndarray:
+    """Stored key of the bin that answers each q: walk bins in key order
+    until the cumulative count exceeds q*(n-1) (reference: DDS_GetQuantile,
+    ddsketch.cc:519-556).
 
     The reference accepts q up to 1.01 (quirk Q2); we replicate the bound and
     clamp the walk at the last bin.
     """
-    if q < 0 or q > 1.01:
-        raise QuantileRangeError(f"q={q} outside [0, 1.01]")
+    qs = np.asarray(qs, dtype=np.float64)
+    if ((qs < 0) | (qs > 1.01)).any():
+        raise QuantileRangeError(f"q={qs.tolist()} outside [0, 1.01]")
     if sk.n <= 0 or sk.size == 0:
         raise SketchError("quantile of an empty sketch")
-    stop = q * float(sk.n - 1)
-    cum = np.cumsum(sk.counts)
-    idx = int(np.searchsorted(cum, stop, side="right"))
-    idx = min(idx, sk.size - 1)
-    return float(key_to_estimate(np.array([sk.keys[idx]]), sk.gamma, sk.cfg.offset)[0])
+    idx = np.searchsorted(np.cumsum(sk.counts), qs * float(sk.n - 1), side="right")
+    return sk.keys[np.minimum(idx, sk.size - 1)]
 
 
 def quantiles(sk: DDSketch, qs) -> np.ndarray:
-    """Vectorized multi-q evaluation (same rank rule as :func:`quantile`)."""
-    qs = np.asarray(qs, dtype=np.float64)
-    if ((qs < 0) | (qs > 1.01)).any():
-        raise QuantileRangeError("q outside [0, 1.01]")
-    if sk.n <= 0 or sk.size == 0:
-        raise SketchError("quantile of an empty sketch")
-    cum = np.cumsum(sk.counts)
-    stops = qs * float(sk.n - 1)
-    idx = np.minimum(np.searchsorted(cum, stops, side="right"), sk.size - 1)
-    return key_to_estimate(sk.keys[idx], sk.gamma, sk.cfg.offset)
+    """Midpoint estimates of the bins :func:`quantile_keys` selects."""
+    return key_to_estimate(quantile_keys(sk, qs), sk.gamma, sk.cfg.offset)
+
+
+def quantile(sk: DDSketch, q: float) -> float:
+    """Scalar form of :func:`quantiles`."""
+    return float(quantiles(sk, [q])[0])
 
 
 def error_bound(sk: DDSketch) -> tuple[float, float]:
@@ -582,25 +588,3 @@ def from_dict(d: dict) -> DDSketch:
         min_key=int(d["min_key"]),
         max_key=int(d["max_key"]),
     )
-
-
-def to_rows(sk: DDSketch) -> list[dict]:
-    """Bin dump: offset-stripped key, count, value bounds
-    (reference: DDS_PrintCSV, ddsketch.cc:908-949)."""
-    off = sk.cfg.offset
-    stripped = np.where(sk.keys > 0, sk.keys - off, np.where(sk.keys < 0, sk.keys + off, 0))
-    upper = key_to_bound(sk.keys, sk.gamma, off)
-    lower = key_to_bound(
-        np.where(sk.keys > 0, sk.keys - 1, np.where(sk.keys < 0, sk.keys + 1, 0)),
-        sk.gamma,
-        off,
-    )
-    return [
-        {
-            "key": int(stripped[i]),
-            "count": int(sk.counts[i]),
-            "lower": float(min(lower[i], upper[i])),
-            "upper": float(max(lower[i], upper[i])),
-        }
-        for i in range(sk.size)
-    ]

@@ -227,7 +227,8 @@ class SketchOps:
         return self.core.empty(self.cfg)
 
     def add(self, sk, values: np.ndarray) -> None:
-        self.core.add(sk, values)
+        """Insert a batch; NaNs (nulls reach here as NaN from Arrow) drop."""
+        self.core.add(sk, values[~np.isnan(values)] if values.dtype.kind == "f" else values)
 
     def merge(self, parts: Fields):
         """The canonical merge of a group's state rows."""

@@ -8,8 +8,9 @@ SURVEY.md §3.2-3.3):
      automatic map-side partial aggregation -- the only data-sized stage, and
      it shuffles at most (#groups x #bins) rows.
   3. ``collect_list`` gathers each group's tiny histogram into one row, and
-     one ``mapInArrow`` (operators._grouped) runs the numpy core's
-     collapse-to-limit + quantile walk over every group of a partition.
+     one ``mapInArrow`` (operators._grouped) runs the numpy core's keyed
+     insert (``core.add_keyed``: collapse-to-limit) + quantile walk over
+     every group of a partition.
      Fully distributed across groups; nothing data-sized ever reaches
      Python or the driver.
 
@@ -22,7 +23,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -46,18 +46,6 @@ SKETCH_STATE_FIELDS = (
 )
 STATE_COLS = field_names(SKETCH_STATE_FIELDS)
 QUANTILE_FIELDS = "q double, bucket_key long, estimate double, n long"
-
-
-def _sketch_from_hist(pdf_keys: np.ndarray, pdf_cnts: np.ndarray, cfg: DDSketchConfig) -> core.DDSketch:
-    order = np.argsort(pdf_keys)
-    sk = core.DDSketch(
-        cfg=cfg,
-        keys=pdf_keys[order].astype(np.int64),
-        counts=pdf_cnts[order].astype(np.int64),
-        n=int(pdf_cnts.sum()),
-    )
-    core._collapse_to_limit(sk)
-    return sk
 
 
 def histogram(
@@ -104,7 +92,7 @@ def sketch_from_histogram(
     cfg = cfg or DDSketchConfig()
 
     def finalize(bins) -> dict:
-        return core.to_dict(_sketch_from_hist(bins["key"], bins["cnt"], cfg))
+        return core.to_dict(core.add_keyed(core.empty(cfg), bins["key"], bins["cnt"]))
 
     return finalize_groups(hist, group_cols, ("key", "cnt"), finalize, SKETCH_STATE_FIELDS)
 
@@ -125,14 +113,13 @@ def sketch(
 
 def _quantile_rows(sk: core.DDSketch, qs: list[float]) -> dict:
     """The quantile-grid columns of one sketch (see :func:`quantiles`)."""
-    ests = core.quantiles(sk, qs)
-    cum = np.cumsum(sk.counts)
-    stops = np.asarray(qs) * float(sk.n - 1)
-    idx = np.minimum(np.searchsorted(cum, stops, side="right"), sk.size - 1)
-    sel = sk.keys[idx]
-    off = sk.cfg.offset
-    stripped = np.where(sel > 0, sel - off, np.where(sel < 0, sel + off, 0))
-    return {"q": qs, "bucket_key": stripped, "estimate": ests, "n": sk.n}
+    keys = core.quantile_keys(sk, qs)
+    return {
+        "q": qs,
+        "bucket_key": core.strip_offset(keys, sk.cfg.offset),
+        "estimate": core.key_to_estimate(keys, sk.gamma, sk.cfg.offset),
+        "n": sk.n,
+    }
 
 
 def quantiles(
@@ -155,7 +142,7 @@ def quantiles(
     hist = histogram(df, value, cfg, group_cols, explode_array, weight)
 
     def finalize(bins) -> dict:
-        return _quantile_rows(_sketch_from_hist(bins["key"], bins["cnt"], cfg), qs)
+        return _quantile_rows(core.add_keyed(core.empty(cfg), bins["key"], bins["cnt"]), qs)
 
     return finalize_groups(
         hist, group_cols, ("key", "cnt"), finalize, QUANTILE_FIELDS, len(qs)

@@ -16,80 +16,26 @@ Scale notes:
 - shuffle carries one ~KB sketch row per (partition x group), never data;
 - skewed groups are irrelevant here (partials are uniform); a two-level
   tree merge (``fanout``) bounds the rows any single merge task sees;
-- the token fast path turns array<int32> columns into value histograms with
-  ``np.bincount`` before keying -- one log() per *distinct* token value
-  rather than per token.
+- token arrays flatten zero-copy, and ``core.add`` counts small integers
+  with ``np.bincount`` before keying -- one log() per *distinct* token
+  value rather than per token.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame
 
 from ddsketch_spark.config import DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
 from ddsketch_spark.operators import _grouped
-from ddsketch_spark.operators._grouped import Fields, SketchOps
+from ddsketch_spark.operators._grouped import SketchOps
 from ddsketch_spark.operators.ddsketch_agg import SKETCH_STATE_FIELDS
-
-_INT_FASTPATH_MAX = 1 << 22  # bincount table cap (~32 MB of int64)
-
-
-def _require_uniform_config(parts: Fields) -> None:
-    """Reject mixed sketch configs inside a distributed merge task.
-
-    ``core.merge_many`` falls back to the reference's pairwise tolerance
-    loop for cross-alpha inputs (ddsketch.cc:583-595) -- an ORDER-DEPENDENT
-    result.  Shuffle delivery order is nondeterministic, so a mixed-config
-    merge here would be silently nondeterministic run-to-run.  Config is
-    fixed per job by construction (one DDSketchConfig flows into
-    build_partials); this guard pins that invariant with the reference's
-    MergeError (-5) instead of letting the fallback run distributed.
-    Cross-config merges remain available driver-side via core.merge/
-    merge_many, where the caller controls the order."""
-    for colname in ("alpha0", "offset", "bin_limit", "collapse"):
-        vals = np.unique(parts[colname])
-        if len(vals) > 1:
-            raise core.MergeError(
-                f"mixed '{colname}' across partials in distributed merge: "
-                f"{vals.tolist()} (reference error -5)"
-            )
-
-
-class _DDSketchOps(SketchOps):
-    """DDSketch: integer values take a bincount fast path; a merge first
-    rejects mixed configs."""
-
-    def add(self, sk: core.DDSketch, vals: np.ndarray) -> None:
-        if vals.size == 0:
-            return
-        if np.issubdtype(vals.dtype, np.integer):
-            vmin = vals.min()
-            vmax = int(vals.max())
-            if vmin >= 0 and vmax < _INT_FASTPATH_MAX:
-                # one log() per DISTINCT value instead of per value. minlength
-                # + int64 matter: np.bincount on int32 without minlength falls
-                # off a fast path (~60x slower on skewed data).
-                counts = np.bincount(
-                    vals.astype(np.int64, copy=False), minlength=vmax + 1
-                )
-                nz = np.nonzero(counts)[0]
-                core.add_weighted(sk, nz.astype(np.float64), counts[nz])
-                return
-            vals = vals.astype(np.float64)
-        else:
-            vals = vals[~np.isnan(vals)]
-        core.add(sk, vals)
-
-    def merge(self, parts: Fields) -> core.DDSketch:
-        _require_uniform_config(parts)
-        return super().merge(parts)
 
 
 def ddsketch_ops(cfg: DDSketchConfig | None = None) -> SketchOps:
-    return _DDSketchOps(core, cfg or DDSketchConfig(), SKETCH_STATE_FIELDS)
+    return SketchOps(core, cfg or DDSketchConfig(), SKETCH_STATE_FIELDS)
 
 
 def build_partials(
@@ -103,7 +49,7 @@ def build_partials(
     """One canonical sketch row per (input partition x group).
 
     Token arrays flatten zero-copy from the Arrow batch (no per-row Python
-    objects anywhere), and integer values take the bincount fast path.
+    objects anywhere), and integer values take core.add's bincount path.
     ``with_lineage`` adds ``partition_id`` and the distinct ``input_files``
     the partition consumed -- the resume key for plans.checkpoint.
     """

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ddsketch_spark.config import DDSketchConfig, gamma_at_level
+from ddsketch_spark.operators.ddsketch_agg import STATE_COLS
 
 
 def read_value_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -23,26 +23,21 @@ def read_value_csv(spark: SparkSession, path: str) -> DataFrame:
     return df.where(F.col("value").isNotNull())
 
 
-def bins_df(sketch_rows: DataFrame, cfg: DDSketchConfig | None = None) -> DataFrame:
+def bins_df(sketch_rows: DataFrame) -> DataFrame:
     """Sketch-state rows -> (group..., key, count, max, min, length) bin
-    dump, offset-stripped, bounds from the effective gamma at the state's
-    collapse level (reference: DDS_PrintCSV ddsketch.cc:918-943)."""
-    cfg = cfg or DDSketchConfig()
-    off = F.lit(cfg.offset)
+    dump, offset-stripped, bounds from the effective gamma of each row's
+    own alpha0 and collapse level (reference: DDS_PrintCSV
+    ddsketch.cc:918-943)."""
     exploded = sketch_rows.select(
-        *[c for c in sketch_rows.columns if c not in (
-            "alpha0", "level", "offset", "bin_limit", "collapse",
-            "n", "min_key", "max_key", "keys", "counts")],
-        "level",
+        *[c for c in sketch_rows.columns if c not in STATE_COLS],
+        "alpha0", "level", "offset",
         F.posexplode(F.arrays_zip(F.col("keys"), F.col("counts"))).alias("__p", "kc"),
     )
-    k = F.col("kc.keys")
+    k, off, a0 = F.col("kc.keys"), F.col("offset"), F.col("alpha0")
     stripped = F.when(k > 0, k - off).when(k < 0, k + off).otherwise(F.lit(0))
-    # gamma at level: levels are tiny ints; join-free via chained whens
-    gamma_cases = F.lit(gamma_at_level(cfg.alpha, 0))
-    for lv in range(1, 8):
-        gamma_cases = F.when(F.col("level") == lv, F.lit(gamma_at_level(cfg.alpha, lv))).otherwise(gamma_cases)
-    g = gamma_cases
+    # gamma0^(2^level), squared level times as config.gamma_at_level does
+    g = F.aggregate(F.array_repeat(F.lit(0), F.col("level")), (1.0 + a0) / (1.0 - a0),
+                    lambda acc, _: acc * acc)
     # bounds mirror DDS_PrintCSV's GetBounds(key-1, key) exactly: max from
     # the stored key, min from stored key - 1, each with its OWN sign test
     # (reference: ddsketch.cc:151-180, call site 930). For a negative key
@@ -56,11 +51,10 @@ def bins_df(sketch_rows: DataFrame, cfg: DDSketchConfig | None = None) -> DataFr
         -F.pow(g, (-(km + off)).cast("double"))
     )
     return exploded.select(
-        *[c for c in exploded.columns if c not in ("__p", "kc", "level")],
+        *[c for c in exploded.columns if c not in ("__p", "kc", "alpha0", "level", "offset")],
         stripped.alias("key"),
         F.col("kc.counts").alias("count"),
         upper.alias("max"),
         lower.alias("min"),
         (upper - lower).alias("length"),
     )
-

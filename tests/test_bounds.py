@@ -227,3 +227,57 @@ def test_tdigest_rank_error_within_bound(feed):
     vals = _values("lognormal")
     err = _worst_rank_error(vals, td_core.quantiles(_feed(td_core, cfg, vals, feed), Q_GRID))
     assert err <= 6 / cfg.delta, err
+
+
+# ---------------------------------------------------------------------------
+# DDSketch (Masson, Rim & Lee 2019): relative error alpha at every q
+# ---------------------------------------------------------------------------
+
+def _dds_frames(spark):
+    """``(df, {group: values})`` pairs, each row of ``df`` one group's chunk
+    of its values in the array column ``v``: Zipf tokens as longs (the
+    integer bincount path), then doubles -- one value repeated 100,000
+    times, and mixed signs where every 7th value is an exact zero."""
+    rng = np.random.default_rng(13)
+    mixed = rng.normal(0, 50, 60_000)
+    mixed[::7] = 0.0
+    frames = []
+    for ddl, groups in (("long", {"zipf": _zipf()}),
+                        ("double", {"repeated": np.full(100_000, 3.25), "mixed": mixed})):
+        chunks = [(g, v[i : i + 2000].tolist()) for g, v in groups.items() for i in range(0, len(v), 2000)]
+        frames.append((spark.createDataFrame(chunks, f"g string, v array<{ddl}>"), groups))
+    return frames
+
+
+@pytest.mark.parametrize("bin_limit", [500, 32])
+def test_ddsketch_within_alpha_of_exact(spark, bin_limit):
+    """Every Q_GRID estimate of both Spark builds (the Arrow partials and the
+    JVM histogram) and of an 8-way merge of partials lies within the state's
+    own alpha -- the collapsed level's, at bin_limit 32 -- of the exact order
+    statistic."""
+    from ddsketch_spark.config import DDSketchConfig
+    from ddsketch_spark.core import ddsketch as dds_core
+    from ddsketch_spark.operators import ddsketch_agg as agg
+    from ddsketch_spark.operators import sketch_agg as udaf
+    from tests.reference_oracle import exact_quantile
+
+    cfg = DDSketchConfig(bin_limit=bin_limit)
+    levels = []
+    for df, groups in _dds_frames(spark):
+        builds = {
+            "arrow": udaf.sketch_udaf(df, "v", cfg, ("g",), array_col=True),
+            "native": agg.sketch(df, "v", cfg, ("g",), explode_array=True),
+            "merge-8": udaf.merge_partials(
+                udaf.build_partials(df.repartition(8), "v", cfg, ("g",), array_col=True), ("g",)),
+        }
+        for build, states in builds.items():
+            rows = states.collect()
+            assert sorted(r["g"] for r in rows) == sorted(groups), build
+            for r in rows:
+                sk, vals = dds_core.from_dict(r.asDict()), groups[r["g"]]
+                assert sk.n == len(vals) and sk.size <= bin_limit
+                levels.append(sk.level)
+                for q, est in zip(Q_GRID, dds_core.quantiles(sk, Q_GRID)):
+                    true = exact_quantile(vals, q)
+                    assert abs(est - true) <= sk.alpha * abs(true) * (1 + 1e-12), (build, r["g"], q)
+    assert max(levels) >= (1 if bin_limit == 32 else 0)

@@ -340,12 +340,3 @@ def test_dict_roundtrip():
     back = dds.from_dict(d)
     assert dds.to_dict(back) == d
     assert back.alpha == sk.alpha
-
-
-def test_to_rows_bounds_contain_values():
-    sk = build([5.0, -5.0, 0.5])
-    rows = dds.to_rows(sk)
-    assert len(rows) == 3
-    for r in rows:
-        assert r["lower"] <= r["upper"]
-    assert sum(r["count"] for r in rows) == 3

@@ -3,13 +3,22 @@
 Builds /root/reference/ddsketch.cc (unmodified, linked by our own test
 driver tests/ref_oracle/driver.cpp) and compares: stored bins, n, adapted
 alpha, and the full quantile grid, for build / merge / delete across the six
-harness distributions and all three collapse strategies. Skipped cleanly if
-no C++ toolchain is available.
+harness distributions and all three collapse strategies.
+
+Without the reference sources or a C++ toolchain the suite does not skip:
+it replays ``tests/ref_oracle/goldens.json``, the driver output of every
+call below as recorded from a core that matched the reference bin for bin
+(the file names that snapshot).  With the reference present, each call
+also asserts that its golden still matches the reference.
 """
 
 from __future__ import annotations
 
+import csv as csv_mod
+import hashlib
+import json
 import math
+import os
 import shutil
 import subprocess
 from pathlib import Path
@@ -23,45 +32,113 @@ from tests.reference_oracle import reference_streams
 
 REF = Path("/root/reference")
 DRIVER = Path(__file__).parent / "ref_oracle" / "driver.cpp"
+GOLDENS = Path(__file__).parent / "ref_oracle" / "goldens.json"
 BIN = Path("/tmp/ddsketch_ref_oracle")
 
 COLLAPSE_ID = {GAMMA2: 1, LAST: 2, FIRST: 3}
 
 
-@pytest.fixture(scope="module")
-def oracle():
+def _compiled_reference():
+    """A runner for the compiled driver, or None without g++ or sources."""
     if shutil.which("g++") is None or not REF.exists():
-        pytest.skip("no g++ or reference sources; parity suite skipped")
+        return None
     if not BIN.exists() or BIN.stat().st_mtime < DRIVER.stat().st_mtime:
         subprocess.run(
             ["g++", "-O2", "-std=c++14", f"-I{REF}", str(DRIVER),
              str(REF / "ddsketch.cc"), str(REF / "error.cpp"), "-o", str(BIN)],
             check=True, capture_output=True,
         )
-    def run(collapse: str, bin_limit: int, alpha: float, values: np.ndarray, mode: str, *extra: str):
+
+    def run(collapse, bin_limit, alpha, values, mode, *extra) -> dict:
         vf = Path("/tmp/ref_oracle_vals.txt")
         np.savetxt(vf, values, fmt="%.17g")
-        out = subprocess.run(
+        csv_out = Path("/tmp/ref_oracle_golden.csv")
+        if mode == "csv":
+            extra = (str(csv_out),)
+        stdout = subprocess.run(
             [str(BIN), str(COLLAPSE_ID[collapse]), str(bin_limit), repr(alpha), str(vf), mode, *extra],
             check=True, capture_output=True, text=True,
         ).stdout
-        res = {"bins": {}, "quantiles": {}, "n": None, "alpha": None, "size": None}
-        for line in out.splitlines():
-            parts = line.split()
-            if not parts:
-                continue
-            if parts[0] == "N":
-                res["n"] = int(parts[1])
-            elif parts[0] == "ALPHA":
-                res["alpha"] = float(parts[1])
-            elif parts[0] == "BIN":
-                res["bins"][int(parts[1])] = int(parts[2])
-            elif parts[0] == "Q":
-                res["quantiles"][float(parts[1])] = float(parts[2])
-            elif parts[0] == "SIZE":
-                res["size"] = int(parts[1])
-        return res
+        return {"stdout": stdout, **({"csv": csv_out.read_text()} if mode == "csv" else {})}
+
     return run
+
+
+def _parse(stdout: str) -> dict:
+    res = {"bins": {}, "quantiles": {}, "n": None, "alpha": None, "size": None}
+    for line in stdout.splitlines():
+        parts = line.split()
+        if not parts:
+            continue
+        if parts[0] == "N":
+            res["n"] = int(parts[1])
+        elif parts[0] == "ALPHA":
+            res["alpha"] = float(parts[1])
+        elif parts[0] == "BIN":
+            res["bins"][int(parts[1])] = int(parts[2])
+        elif parts[0] == "Q":
+            res["quantiles"][float(parts[1])] = float(parts[2])
+        elif parts[0] == "SIZE":
+            res["size"] = int(parts[1])
+    return res
+
+
+def _csv_rows(text: str) -> list[tuple]:
+    """(key, count, max, min, length) rows of a DDS_PrintCSV dump, the
+    floats rounded to 7 decimals."""
+    rd = csv_mod.reader(text.splitlines())
+    next(rd)  # header
+    return [(int(r[0]),) + tuple(round(float(c), 7) for c in r[1:5]) for r in rd if len(r) >= 5]
+
+
+def _assert_golden_matches(golden: dict, live: dict) -> None:
+    g, r = _parse(golden["stdout"]), _parse(live["stdout"])
+    assert (g["n"], g["bins"], g["size"]) == (r["n"], r["bins"], r["size"])
+    assert (g["alpha"] is None) or math.isclose(g["alpha"], r["alpha"], rel_tol=1e-12)
+    for q, est in g["quantiles"].items():
+        assert est == pytest.approx(r["quantiles"][q], rel=1e-12), q
+    if "csv" in golden:
+        for got, want in zip(*(sorted(_csv_rows(x["csv"])) for x in (golden, live)), strict=True):
+            assert got[:2] == want[:2] and np.allclose(got[2:], want[2:], rtol=0, atol=2e-7)
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    """``oracle(collapse, bin_limit, alpha, values, mode, *extra)`` -> the
+    parsed driver output; csv mode writes the CSV dump to ``extra[0]``.
+
+    ``DDSKETCH_REF_RECORD=<path>`` records the goldens instead: every call
+    is computed by tests/ref_oracle/record.py with the importable core and
+    the collected outputs are written to ``<path>`` at module teardown,
+    with an empty ``snapshot`` field to fill in with the recorded commit."""
+    record = os.environ.get("DDSKETCH_REF_RECORD")
+    goldens = {} if record else json.loads(GOLDENS.read_text())["calls"]
+    live = None if record else _compiled_reference()
+
+    def run(collapse, bin_limit, alpha, values, mode, *extra):
+        csv_path = Path(extra[0]) if mode == "csv" else None
+        args = extra[1:] if csv_path else extra
+        digest = hashlib.sha256(np.ascontiguousarray(values, np.float64).tobytes()).hexdigest()
+        key = " ".join([collapse, str(bin_limit), repr(alpha), mode, *args, digest[:16]])
+        if record:
+            from tests.ref_oracle.record import driver_output
+
+            goldens[key] = driver_output(collapse, bin_limit, alpha, values, mode, *args)
+        golden = goldens.get(key)
+        if live is not None:
+            out = live(collapse, bin_limit, alpha, values, mode, *args)
+            if golden is not None:
+                _assert_golden_matches(golden, out)
+        else:
+            assert golden is not None, f"no golden for {key!r}: record them (see {GOLDENS.name})"
+            out = golden
+        if csv_path is not None:
+            csv_path.write_text(out["csv"])
+        return _parse(out["stdout"])
+
+    yield run
+    if record:
+        Path(record).write_text(json.dumps({"snapshot": "", "calls": goldens}, indent=1, sort_keys=True))
 
 
 def my_build(collapse, bin_limit, alpha, values, sequential=False):
@@ -157,8 +234,6 @@ def test_csv_bounds_parity_including_negatives(oracle, spark):
     """bins_df reproduces DDS_PrintCSV's (key, count, max, min, length)
     bin-for-bin on a MIXED-SIGN stream (ADVICE r1: negative-key min was
     one gamma step off, making min > max for every negative bucket)."""
-    import csv as csv_mod
-
     from ddsketch_spark.operators import ddsketch_agg as agg
     from ddsketch_spark.sources.csv_source import bins_df
 
@@ -172,23 +247,14 @@ def test_csv_bounds_parity_including_negatives(oracle, spark):
     # the CSV's key column is offset-STRIPPED, which is ambiguous (a tiny
     # positive value and a negative value can share a stripped key), so
     # compare the two outputs as sorted row multisets, not key-indexed
-    ref_rows = []
-    with out.open() as fh:
-        rd = csv_mod.reader(fh)
-        next(rd)  # header
-        for row in rd:
-            if len(row) < 5:
-                continue
-            ref_rows.append(
-                (int(row[0]),) + tuple(round(float(c), 7) for c in row[1:5])
-            )
+    ref_rows = _csv_rows(out.read_text())
 
     cfg = DDSketchConfig(bin_limit=4096, alpha=0.008)
     df = spark.createDataFrame([(float(v),) for v in vals], "v double")
     mine = [
         (r["key"], round(r["count"], 7), round(r["max"], 7),
          round(r["min"], 7), round(r["length"], 7))
-        for r in bins_df(agg.sketch(df, "v", cfg), cfg).collect()
+        for r in bins_df(agg.sketch(df, "v", cfg)).collect()
     ]
     assert len(mine) == len(ref_rows)
     for got, want in zip(sorted(mine), sorted(ref_rows)):

@@ -93,12 +93,12 @@ def test_partials_lineage(tokens):
 
 
 def test_merge_partials_rejects_mixed_alpha(spark, tokens):
-    """Distributed merges must never mix sketch configs: the cross-alpha
-    pairwise fallback in core.merge_many is order-dependent, and shuffle
-    delivery order is nondeterministic -- so merge_partials raises the
-    reference's MergeError (-5) instead of silently taking it.  Config is
-    fixed per job (one DDSketchConfig flows through sketch_udaf); this
-    pins that invariant at the merge boundary."""
+    """Distributed merges must never mix sketch configs: a cross-alpha
+    merge is order-dependent (the reference's pairwise tolerance loop), and
+    shuffle delivery order is nondeterministic -- so core.merge_many, which
+    merge_partials runs, raises the reference's MergeError (-5) instead.
+    Config is fixed per job (one DDSketchConfig flows through sketch_udaf);
+    this pins that invariant at the merge boundary."""
     a = udaf.build_partials(tokens, "n_tok", DDSketchConfig(alpha=0.008))
     b = udaf.build_partials(tokens, "n_tok", DDSketchConfig(alpha=0.02))
     mixed = a.unionByName(b)

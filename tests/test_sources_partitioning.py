@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,7 +24,7 @@ def test_read_value_csv(spark, tmp_path):
 def test_bins_csv_parity_with_core(spark, sf_correct):
     li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
     states = agg.sketch(li, "l_quantity", CFG)
-    rows = bins_df(states, CFG).collect()
+    rows = bins_df(states).collect()
     n = li.where(F.col("l_quantity").isNotNull()).count()
     assert sum(r["count"] for r in rows) == n
     for r in rows:
@@ -32,6 +33,23 @@ def test_bins_csv_parity_with_core(spark, sf_correct):
         assert r["length"] == pytest.approx(r["max"] - r["min"])
     keys = [r["key"] for r in rows]
     assert keys == sorted(keys)
+
+
+@pytest.mark.parametrize(
+    "cfg", [DDSketchConfig(bin_limit=8), DDSketchConfig(alpha=0.02, offset=4096, bin_limit=40)]
+)
+def test_bins_bound_their_values_at_any_level(spark, cfg):
+    """bins_df takes each state's gamma from its own alpha0, offset and
+    level: at bin_limit 8 this stream collapses to level 8, and a state built
+    under another alpha and offset keeps its own bounds."""
+    vals = np.geomspace(1e-6, 1e6, 5000)
+    states = agg.sketch(spark.createDataFrame([(float(v),) for v in vals], "v double"), "v", cfg)
+    if cfg.bin_limit == 8:
+        assert states.first()["level"] >= 8
+    rows = bins_df(states).collect()
+    lo, hi = np.array([r["min"] for r in rows]), np.array([r["max"] for r in rows])
+    inside = (lo[:, None] * (1 - 1e-9) < vals) & (vals <= hi[:, None] * (1 + 1e-9))
+    assert inside.sum(axis=1).tolist() == [r["count"] for r in rows]
 
 
 def test_salted_histogram_merges_exact(spark, sf_correct):
