@@ -2,6 +2,7 @@
 library (DDSketch core + HLL, count-min, t-digest, KLL, Bloom) built from
 scratch against the behavior of gmorleo/DDSketch (see SURVEY.md)."""
 
+from ddsketch_spark import _worker
 from ddsketch_spark.config import (
     DEFAULT_ALPHA,
     DEFAULT_BIN_LIMIT,
@@ -17,6 +18,8 @@ from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
 from ddsketch_spark.core.kll import KLLConfig
 from ddsketch_spark.core.tdigest import TDigestConfig
+
+_worker.install()
 
 __all__ = [
     "DDSketchConfig",

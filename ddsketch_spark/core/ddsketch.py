@@ -280,11 +280,16 @@ def add_keyed(sk: DDSketch, keys: np.ndarray, weights: np.ndarray) -> DDSketch:
     For last/first the batch fold order matches the reference's merge path
     (bulk add then fold-until-fit); per-item parity for those is covered by
     :func:`add_one`.
+
+    Every weight must be positive: raises ``ValueError`` otherwise (a zero
+    or negative bin would be dropped while ``n`` still counted it).
     """
     keys = np.asarray(keys, dtype=np.int64)
     weights = np.asarray(weights, dtype=np.int64)
     if keys.size == 0:
         return sk
+    if weights.min() <= 0:
+        raise ValueError(f"DDSketch weights must be positive, got {weights.min()}")
     sk.keys, sk.counts = _combine((sk.keys, sk.counts), (keys, weights))
     sk.n += int(weights.sum())
     _collapse_to_limit(sk)

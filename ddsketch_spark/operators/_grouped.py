@@ -17,7 +17,11 @@ group (one row over the whole input when there are no group columns).  One
 finalize function as numpy views sliced through the list offsets.  There is
 no pandas, no per-group DataFrame and no per-group call from Spark into
 Python, so the cost of a finalize is one Python task per partition whatever
-the number of groups.
+the number of groups.  Each task first pays PySpark's per-task
+``importlib.invalidate_caches()``, which on CPython 3.11 re-parsed
+pyspark.zip's 1,328-entry directory once per zip importer (0.2-0.4 s a
+task); ``ddsketch_spark._worker`` re-reads an archive only when it changed,
+and a no-op 8-partition ``mapInArrow`` on 4 cores fell from 0.66 to 0.25 s.
 
 The same walk serves operators whose rows already hold one group each
 (evaluating stored states, or a state row left-joined with its collected

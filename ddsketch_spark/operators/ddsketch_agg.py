@@ -63,7 +63,9 @@ def histogram(
     exploded rows never cross a shuffle.
 
     ``weight`` turns the count into an integer-weighted multiplicity (the
-    core's add_weighted semantics: each row contributes `weight` items).
+    core's add_weighted semantics: each row contributes `weight` items).  A
+    row whose weight is null, or zero or negative after the cast to long,
+    fails the query, before the sum could hide it.
     """
     cfg = cfg or DDSketchConfig()
     v = F.col(value) if isinstance(value, str) else value
@@ -79,7 +81,12 @@ def histogram(
     if w is not None:
         sel.append(w.cast("long").alias("__w"))
     keyed = df.select(*sel).where(F.col("key").isNotNull())
-    cnt = F.sum("__w") if w is not None else F.count(F.lit(1))
+    if w is not None:
+        got = F.coalesce(F.col("__w").cast("string"), F.lit("null"))
+        bad = F.raise_error(F.concat(F.lit("DDSketch weights must be positive, got "), got))
+        cnt = F.sum(F.when(F.col("__w") > 0, F.col("__w")).otherwise(bad))
+    else:
+        cnt = F.count(F.lit(1))
     return keyed.groupBy(*group_cols, "key").agg(cnt.alias("cnt"))
 
 

@@ -298,6 +298,15 @@ def test_delete_redirects_into_the_absorbed_range(collapse):
     assert sk.counts[end] == 2 and sk.sum_bins() == 5
 
 
+@pytest.mark.parametrize("weights", [[5, -2, 0], [5, 0, 1], [-1, 2, 3]])
+def test_add_weighted_rejects_non_positive_weights(weights):
+    # a dropped non-positive bin would leave n out of step with sum_bins()
+    with pytest.raises(ValueError, match="weights must be positive"):
+        dds.add_weighted(dds.empty(), np.array([1.0, 2.0, 3.0]), np.array(weights))
+    sk = dds.add_weighted(dds.empty(), np.array([1.0, 2.0, 3.0]), np.array([5, 2, 1]))
+    assert sk.n == sk.sum_bins() == 8
+
+
 # -- quantile edge cases -------------------------------------------------------
 
 def test_quantile_bounds_quirk_q2():

@@ -131,6 +131,16 @@ def test_quantiles_from_sketch_roundtrip(lineitem):
     )
 
 
+@pytest.mark.parametrize("bad", [-2, 0, None])
+def test_weighted_quantiles_reject_non_positive_weights(spark, bad):
+    # the bad row shares its bin with a weight-4 row, so the bin's sum stays positive
+    df = spark.createDataFrame([(1.0, 5), (2.0, 4), (2.0, bad), (3.0, 1)], "v double, w long")
+    with pytest.raises(Exception, match="DDSketch weights must be positive"):
+        agg.quantiles(df, "v", (0.5,), CFG, weight="w").collect()
+    ok = agg.quantiles(df.where(F.col("w") > 0), "v", (0.5,), CFG, weight="w").collect()
+    assert [r["n"] for r in ok] == [10]
+
+
 def test_value_streams_fixture_spark(spark):
     from ddsketch_spark.sources.fixtures import generate_value_streams
 
