@@ -9,13 +9,16 @@ Query families:
     generated once and cached under /tmp/ddsketch_fixtures)
 
 Extra keys beyond the driver contract: tokens_per_sec (north metric),
-values_per_sec, and per-query row counts.
+per-query row counts, and ``query_stats``: each query's best, median and
+number of timed runs (``queries`` and ``value`` stay best-of-N, so BENCH
+files remain comparable).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -143,14 +146,13 @@ def main() -> None:
     # it makes per-query numbers reproducible across sessions.
     repeats = int(os.environ.get("DDSKETCH_BENCH_REPEATS", "2"))
     results: dict[str, float] = {}
+    stats: dict[str, dict] = {}
     counts: dict[str, int] = {}
     for name, fn in queries.items():
         _, rows = timed(fn)  # untimed warm-up (also captures row count)
-        best = float("inf")
-        for _ in range(repeats):
-            secs, rows = timed(fn)
-            best = min(best, secs)
-        results[name] = round(best, 3)
+        secs = [timed(fn)[0] for _ in range(repeats)]
+        results[name] = round(min(secs), 3)
+        stats[name] = {"best": results[name], "median": round(statistics.median(secs), 3), "n": repeats}
         counts[name] = len(rows)
         # drop persisted intermediates between queries (several plan
         # functions persist a shared subtree that outlives their returned
@@ -168,6 +170,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": results,
+        "query_stats": stats,
         "sf": SF_DIR,
         "cpus": CPUS,
         "rows": counts,

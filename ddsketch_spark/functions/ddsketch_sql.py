@@ -1,9 +1,8 @@
 """JVM-native column expressions for DDSketch bucket math.
 
-The value->key transform (reference: DDS_GetKey, ddsketch.cc:83-103) and the
-key->estimate transform (DDS_GetRank, ddsketch.cc:105-126) are pure
-arithmetic, so they compile to whole-stage-codegen'd Catalyst expressions --
-no Python in the per-row hot path. The histogram aggregation is a plain
+The value->key transform (reference: DDS_GetKey, ddsketch.cc:83-103) is
+pure arithmetic, so it compiles to a whole-stage-codegen'd Catalyst
+expression -- no Python in the per-row hot path. The histogram aggregation is a plain
 ``groupBy(key).count()``: Spark's partial/final hash aggregation gives the
 map-side combine for free, and the shuffle carries at most
 (#groups x #bins) rows regardless of input size. That is the property that
@@ -39,26 +38,6 @@ def dds_key(value: Column | str, cfg: DDSketchConfig | None = None) -> Column:
         .when(v < 0, neg)
         .when(v == 0, F.lit(0).cast("long"))
         .otherwise(F.lit(None).cast("long"))
-    )
-
-
-def dds_estimate(key: Column | str, cfg: DDSketchConfig | None = None, level: int = 0) -> Column:
-    """stored key -> relative-midpoint value estimate 2*gamma^|k'|/(gamma+1),
-    sign-mirrored; gamma taken at the given collapse ``level``."""
-    from ddsketch_spark.config import gamma_at_level
-
-    cfg = cfg or DDSketchConfig()
-    g = gamma_at_level(cfg.alpha, level)
-    k = F.col(key) if isinstance(key, str) else key
-    off = F.lit(cfg.offset)
-    stripped_pos = (k - off).cast("double")
-    stripped_neg = (-(k + off)).cast("double")
-    est_pos = F.lit(2.0) * F.pow(F.lit(g), stripped_pos) / F.lit(g + 1.0)
-    est_neg = -F.lit(2.0) * F.pow(F.lit(g), stripped_neg) / F.lit(g + 1.0)
-    return (
-        F.when(k > 0, est_pos)
-        .when(k < 0, est_neg)
-        .otherwise(F.lit(0.0))
     )
 
 

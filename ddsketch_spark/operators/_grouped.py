@@ -1,9 +1,11 @@
 """The two-stage sketch engine shared by every sketch operator.
 
 A sketch family is a :class:`SketchOps` (numpy core, config, state schema,
-``empty``/``add``/``merge``).  :func:`build_partials` folds each partition
-into one state row per group in one ``mapInArrow``; :func:`merge_partials`
-and :func:`update_states` merge those rows with the per-group finalize.
+``empty``/``add``/``merge`` and the quantile ``grid``).  :func:`build_partials`
+folds each partition into one state row per group in one ``mapInArrow``;
+:func:`merge_partials` and :func:`update_states` merge those rows with the
+per-group finalize.  The stateful stream (streaming.sketch_stream) runs the
+same ``add`` and ``grid`` once per micro-batch on the group's stored row.
 
 The finalize is one Arrow pass too.  Each quantile operator (DDSketch,
 t-digest, KLL) ends the same way: the rows of one group -- partial sketch
@@ -218,10 +220,15 @@ def split_groups(
 
 
 class SketchOps:
-    """One sketch family's state and its build/merge surface: the numpy
-    ``core`` module (``empty``, ``add``, ``merge_many``, ``to_dict``,
-    ``from_dict``, ``quantiles``), its config, and ``state_fields``, the DDL
-    of its state row (``core.to_dict`` of a sketch)."""
+    """One sketch family's state and its build/merge/evaluate surface: the
+    numpy ``core`` module (``empty``, ``add``, ``merge_many``, ``to_dict``,
+    ``from_dict``, ``quantiles``), its config, ``state_fields``, the DDL of
+    its state row (``core.to_dict`` of a sketch), and its quantile grid,
+    :meth:`grid` with the DDL ``grid_fields`` -- the one evaluate step of
+    the family's batch quantiles, stored-state evaluation and stateful
+    stream."""
+
+    grid_fields = "q double, estimate double, n long"
 
     def __init__(self, core, cfg, state_fields: str):
         self.core, self.cfg, self.state_fields = core, cfg, state_fields
@@ -237,6 +244,10 @@ class SketchOps:
     def merge(self, parts: Fields):
         """The canonical merge of a group's state rows."""
         return self.core.merge_many([self.core.from_dict(parts.row(i)) for i in range(len(parts))])
+
+    def grid(self, sk, qs: list[float]) -> dict:
+        """The ``grid_fields`` columns of one sketch, an entry per ``qs``."""
+        return {"q": qs, "estimate": self.core.quantiles(sk, qs), "n": sk.n}
 
 
 def _batch_groups(batch: pa.RecordBatch, value: str, group_cols: list[str], array_col: bool):

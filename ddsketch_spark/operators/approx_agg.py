@@ -110,7 +110,13 @@ def hll_registers(
 ) -> DataFrame:
     """(group_cols..., idx, rho) non-zero register maxima -- the data-sized
     stage, reducing ``min(h >> p)`` per register; shuffles at most
-    (#groups x 2^p) rows."""
+    (#groups x 2^p) rows.
+
+    It runs on a streaming DataFrame as it is, with state bounded by
+    #groups x 2^p rows.  ``min`` is monotone, so a register's state only
+    ever improves: 'update' output mode emits the registers a micro-batch
+    touched, each with its running rank, and 'complete' mode equals the
+    batch build over the same rows."""
     cfg = cfg or HLLConfig()
     regs = (
         _hll_keyed(df, value, cfg, group_cols)

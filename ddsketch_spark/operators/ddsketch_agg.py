@@ -31,12 +31,14 @@ from ddsketch_spark.core import ddsketch as core
 from ddsketch_spark.functions.ddsketch_sql import dds_key
 from ddsketch_spark.operators._grouped import (
     ROWS,
+    SketchOps,
     collect,
     field_names,
     finalize_groups,
     join_groups,
     map_rows,
 )
+from ddsketch_spark.operators.quantile_agg import quantiles_from_states
 
 # Canonical sketch-state row schema (SURVEY.md §1.4): sorted parallel arrays,
 # not MapType, so equal sketches serialize identically (merge-algebra gate).
@@ -45,7 +47,26 @@ SKETCH_STATE_FIELDS = (
     "n long, min_key long, max_key long, keys array<long>, counts array<long>"
 )
 STATE_COLS = field_names(SKETCH_STATE_FIELDS)
-QUANTILE_FIELDS = "q double, bucket_key long, estimate double, n long"
+
+
+class _DDSketchOps(SketchOps):
+    grid_fields = "q double, bucket_key long, estimate double, n long"
+
+    def grid(self, sk: core.DDSketch, qs: list[float]) -> dict:
+        """``bucket_key`` is the offset-stripped key of the selected bucket
+        (an exact integer -- the strongest oracle-comparable signal);
+        ``estimate`` is the reference's midpoint estimator for that bucket."""
+        keys = core.quantile_keys(sk, qs)
+        return {
+            "q": qs,
+            "bucket_key": core.strip_offset(keys, sk.cfg.offset),
+            "estimate": core.key_to_estimate(keys, sk.gamma, sk.cfg.offset),
+            "n": sk.n,
+        }
+
+
+def ddsketch_ops(cfg: DDSketchConfig | None = None) -> SketchOps:
+    return _DDSketchOps(core, cfg or DDSketchConfig(), SKETCH_STATE_FIELDS)
 
 
 def histogram(
@@ -118,17 +139,6 @@ def sketch(
     )
 
 
-def _quantile_rows(sk: core.DDSketch, qs: list[float]) -> dict:
-    """The quantile-grid columns of one sketch (see :func:`quantiles`)."""
-    keys = core.quantile_keys(sk, qs)
-    return {
-        "q": qs,
-        "bucket_key": core.strip_offset(keys, sk.cfg.offset),
-        "estimate": core.key_to_estimate(keys, sk.gamma, sk.cfg.offset),
-        "n": sk.n,
-    }
-
-
 def quantiles(
     df: DataFrame,
     value: Column | str,
@@ -138,21 +148,17 @@ def quantiles(
     explode_array: bool = False,
     weight: Column | str | None = None,
 ) -> DataFrame:
-    """(group_cols..., q, bucket_key, estimate, n) quantile estimates.
-
-    ``bucket_key`` is the offset-stripped key of the selected bucket (an
-    exact integer -- the strongest oracle-comparable signal); ``estimate`` is
-    the reference's midpoint estimator for that bucket.
-    """
-    cfg = cfg or DDSketchConfig()
+    """(group_cols..., q, bucket_key, estimate, n) quantile estimates: the
+    DDSketch grid (``ddsketch_ops().grid``) of each group's histogram."""
+    ops = ddsketch_ops(cfg)
     qs = [float(q) for q in qs]
-    hist = histogram(df, value, cfg, group_cols, explode_array, weight)
+    hist = histogram(df, value, ops.cfg, group_cols, explode_array, weight)
 
     def finalize(bins) -> dict:
-        return _quantile_rows(core.add_keyed(core.empty(cfg), bins["key"], bins["cnt"]), qs)
+        return ops.grid(core.add_keyed(ops.empty(), bins["key"], bins["cnt"]), qs)
 
     return finalize_groups(
-        hist, group_cols, ("key", "cnt"), finalize, QUANTILE_FIELDS, len(qs)
+        hist, group_cols, ("key", "cnt"), finalize, ops.grid_fields, len(qs)
     )
 
 
@@ -186,11 +192,4 @@ def quantiles_from_sketch(
     sketch_df: DataFrame, qs: Sequence[float], group_cols: Sequence[str] = ()
 ) -> DataFrame:
     """Evaluate the quantile grid from persisted sketch-state rows."""
-    qs = [float(q) for q in qs]
-    return map_rows(
-        sketch_df.select(*group_cols, *STATE_COLS),
-        group_cols,
-        lambda row: _quantile_rows(core.from_dict(row), qs),
-        QUANTILE_FIELDS,
-        len(qs),
-    )
+    return quantiles_from_states(sketch_df, ddsketch_ops(), qs, group_cols)

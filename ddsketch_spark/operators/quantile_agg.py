@@ -6,7 +6,10 @@ per (partition x group) with vectorized batch inserts, the shuffle carries
 only KB-sized state rows, and ``collect_list`` gathers each group's
 partials into one row for a canonical ``merge_many`` in one ``mapInArrow``
 per partition.  ``quantiles`` merges and evaluates in that same pass;
-stored states are evaluated with one ``mapInArrow`` over their rows.
+stored states are evaluated with one ``mapInArrow`` over their rows.  Both
+end in the family's quantile grid (``SketchOps.grid``), and take any
+family's ``SketchOps``: ``quantiles_from_states`` also evaluates stored
+DDSketch states (ddsketch_agg.quantiles_from_sketch).
 
 In the compacting regime these sketches have no SQL-expressible oracle
 (compaction is partition-order dependent within the rank bound), so those
@@ -37,7 +40,6 @@ TDIGEST_STATE_FIELDS = (
 KLL_STATE_FIELDS = (
     "k int, n long, parity long, level_of array<long>, items array<double>"
 )
-QUANTILE_FIELDS = "q double, estimate double, n long"
 
 
 def tdigest_ops(cfg: TDigestConfig | None = None) -> SketchOps:
@@ -68,22 +70,20 @@ def sketch_agg(
     return _grouped.merge_partials(build_partials(df, value, ops, group_cols), ops, group_cols)
 
 
-def _quantile_rows(ops: SketchOps, sk, qs: list[float]) -> dict:
-    return {"q": qs, "estimate": ops.core.quantiles(sk, qs), "n": sk.n}
-
-
 def quantiles_from_states(
     states: DataFrame,
     ops: SketchOps,
     qs: Sequence[float],
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
+    """(group_cols..., ``ops.grid_fields``) of stored state rows of any
+    family, one ``mapInArrow`` over the rows."""
     qs = [float(q) for q in qs]
     return map_rows(
         states.select(*group_cols, *ops.state_cols),
         group_cols,
-        lambda row: _quantile_rows(ops, ops.core.from_dict(row), qs),
-        QUANTILE_FIELDS,
+        lambda row: ops.grid(ops.core.from_dict(row), qs),
+        ops.grid_fields,
         len(qs),
     )
 
@@ -95,10 +95,10 @@ def quantiles(
     qs: Sequence[float],
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(group_cols..., q, estimate, n): merge and evaluate in one pass."""
+    """(group_cols..., ``ops.grid_fields``): merge and evaluate in one pass."""
     qs = [float(q) for q in qs]
     parts = build_partials(df, value, ops, group_cols)
     return finalize_groups(
         parts, group_cols, ops.state_cols,
-        lambda p: _quantile_rows(ops, ops.merge(p), qs), QUANTILE_FIELDS, len(qs),
+        lambda p: ops.grid(ops.merge(p), qs), ops.grid_fields, len(qs),
     )

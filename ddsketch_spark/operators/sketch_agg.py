@@ -8,9 +8,9 @@ one row and one ``mapInArrow`` merges every group of a partition (the
 shared engine of operators._grouped, run with DDSketch's ``SketchOps``).
 Compared to the JVM-histogram path (operators.ddsketch_agg) this keeps
 *bounded per-partition state* (bin_limit applies during the build, like the
-reference's eager collapse) and emits per-partition lineage (partition id +
-input files) for checkpoint/resume, at the cost of moving raw values across
-the Arrow boundary once.
+reference's eager collapse), and plans.checkpoint tags the same build with
+per-partition lineage (partition id + input files) for resume, at the cost
+of moving raw values across the Arrow boundary once.
 
 Scale notes:
 - shuffle carries one ~KB sketch row per (partition x group), never data;
@@ -28,14 +28,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 
 from ddsketch_spark.config import DDSketchConfig
-from ddsketch_spark.core import ddsketch as core
 from ddsketch_spark.operators import _grouped
-from ddsketch_spark.operators._grouped import SketchOps
-from ddsketch_spark.operators.ddsketch_agg import SKETCH_STATE_FIELDS
-
-
-def ddsketch_ops(cfg: DDSketchConfig | None = None) -> SketchOps:
-    return SketchOps(core, cfg or DDSketchConfig(), SKETCH_STATE_FIELDS)
+from ddsketch_spark.operators.ddsketch_agg import ddsketch_ops
 
 
 def build_partials(
@@ -44,18 +38,14 @@ def build_partials(
     cfg: DDSketchConfig | None = None,
     group_cols: Sequence[str] = (),
     array_col: bool = False,
-    with_lineage: bool = False,
 ) -> DataFrame:
     """One canonical sketch row per (input partition x group).
 
     Token arrays flatten zero-copy from the Arrow batch (no per-row Python
     objects anywhere), and integer values take core.add's bincount path.
-    ``with_lineage`` adds ``partition_id`` and the distinct ``input_files``
-    the partition consumed -- the resume key for plans.checkpoint.
+    plans.checkpoint builds the same rows with their lineage.
     """
-    return _grouped.build_partials(
-        df, value, ddsketch_ops(cfg), group_cols, array_col, with_lineage
-    )
+    return _grouped.build_partials(df, value, ddsketch_ops(cfg), group_cols, array_col)
 
 
 def merge_partials(

@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ddsketch_spark.config import DDSketchConfig
 from ddsketch_spark.operators import _grouped
-from ddsketch_spark.operators.sketch_agg import ddsketch_ops, merge_partials
+from ddsketch_spark.operators.ddsketch_agg import ddsketch_ops
+from ddsketch_spark.operators.sketch_agg import merge_partials
 
 
 def _signature(df: DataFrame, value: str, cfg: DDSketchConfig, group_cols) -> dict:

@@ -1,26 +1,28 @@
-"""Structured Streaming DDSketch: the same mergeable state, incrementally.
+"""Structured Streaming sketches: the batch operators, fed one micro-batch
+at a time.
 
-Two paths, mirroring the batch architecture (SURVEY.md §2.2 'streaming'):
+Every sketch here is mergeable, so a streaming sketch is the batch sketch
+over the rows seen so far, and the batch operators already accept a
+streaming DataFrame (SURVEY.md §2.2 'streaming'):
 
-1. ``stream_histogram`` -- the JVM-native path: dds_key is an ordinary
-   Catalyst expression, so a streaming ``groupBy(key).count()`` IS the
-   sketch build; Spark's streaming state store keeps the (bounded,
-   <= #groups x #bins rows) histogram and the sink sees updates per
-   micro-batch. Optional event-time windowing + watermark for late data.
+- DDSketch histogram: :func:`stream_histogram` is ``ddsketch_agg.histogram``
+  on the stream, with an optional watermarked event-time ``window`` as its
+  first group column.  Spark's streaming state store keeps the (bounded,
+  <= #groups x #bins rows) histogram, and late rows merge into their window
+  until the watermark evicts it.
+- HLL registers: ``approx_agg.hll_registers`` on the stream (its docstring
+  gives the output modes).
+- Any quantile family (``SketchOps``: DDSketch, t-digest, KLL):
+  :func:`stream_quantile_sketch_states` keeps one canonical sketch row per
+  group in the state store with ``applyInPandasWithState`` (bin_limit /
+  delta / k bound it), absorbs each micro-batch with the family's ``add``
+  and emits its quantile grid, the columns the batch quantiles return --
+  the pattern for sketches that need collapse semantics (bounded bins)
+  rather than an unbounded exact histogram.
 
-2. ``stream_quantile_sketch_states`` -- the custom-stateful path, for any
-   sketch family (its ``SketchOps``: DDSketch, t-digest, KLL):
-   ``applyInPandasWithState`` keeps one canonical sketch row per group in
-   the state store (bin_limit / delta / k bounds it), absorbs each
-   micro-batch with the vectorized numpy core, and emits the refreshed
-   quantile grid -- the pattern for sketches that need collapse semantics
-   (bounded bins) rather than an unbounded exact histogram.
-   ``stream_sketch_states`` is its DDSketch form.
-
-Both DDSketch paths produce states identical to the batch build over the
-same rows (insertion order never matters for gamma^2-collapse-free
-configs, and the canonical merge covers the rest) -- asserted in
-tests/test_streaming.py.
+The DDSketch paths give the batch build's states over the same rows
+(insertion order never matters for gamma^2-collapse-free configs, and the
+canonical merge covers the rest) -- asserted in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -34,10 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ddsketch_spark.config import DDSketchConfig
-from ddsketch_spark.functions.ddsketch_sql import dds_key
 from ddsketch_spark.operators._grouped import SketchOps, schema_prefix
-from ddsketch_spark.operators.approx_agg import hll_registers
-from ddsketch_spark.operators.sketch_agg import ddsketch_ops
+from ddsketch_spark.operators.ddsketch_agg import histogram
 
 
 def stream_histogram(
@@ -49,53 +49,18 @@ def stream_histogram(
     ts_col: str = "ts",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Streaming (group..., [window], key, cnt) bucket histogram.
+    """Streaming ([window], group..., key, cnt) bucket histogram.
 
     ``window`` (e.g. "1 minute") adds event-time tumbling windows with a
     watermark so late data merges into the right window and state is
     evicted once the watermark passes."""
-    cfg = cfg or DDSketchConfig()
-    keyed = stream_df.withColumn("__key", dds_key(F.col(value), cfg))
-    keyed = keyed.where(F.col("__key").isNotNull())
-    groups = [F.col(g) for g in group_cols]
     if window:
         # watermarks require TIMESTAMP (parquet often yields TIMESTAMP_NTZ)
-        keyed = keyed.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        keyed = keyed.withWatermark(ts_col, watermark)
-        groups = [F.window(F.col(ts_col), window).alias("window"), *groups]
-    return keyed.groupBy(*groups, F.col("__key").alias("key")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-
-
-def stream_hll_registers(
-    stream_df: DataFrame,
-    value: str,
-    cfg=None,
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Streaming distinct-count sketch: the batch register build
-    (operators.approx_agg.hll_registers) over a stream.  Its streaming
-    ``groupBy(group..., idx)`` keeps ``min(h >> p)`` per register -- state
-    bounded by #groups x 2^p rows -- and the rank is derived from that
-    minimum on the aggregated rows.  ``min`` is monotone like ``max``, so a
-    register's state only ever improves: 'update' output mode emits the
-    registers a micro-batch touched, each with its running rank, and
-    'complete' mode equals the batch build over the same rows."""
-    return hll_registers(stream_df, value, cfg, group_cols)
-
-
-def stream_sketch_states(
-    stream_df: DataFrame,
-    value: str,
-    cfg: DDSketchConfig | None = None,
-    group_cols: Sequence[str] = ("source",),
-    qs: Sequence[float] = (0.5, 0.9, 0.99),
-) -> DataFrame:
-    """Custom stateful operator: one canonical DDSketch per group in the
-    streaming state store, updated per micro-batch, emitting the
-    refreshed quantile grid (group..., q, estimate, n)."""
-    return stream_quantile_sketch_states(stream_df, value, ddsketch_ops(cfg), group_cols, qs)
+        stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        stream_df = stream_df.withWatermark(ts_col, watermark)
+        stream_df = stream_df.withColumn("window", F.window(ts_col, window))
+        group_cols = ["window", *group_cols]
+    return histogram(stream_df, value, cfg, group_cols)
 
 
 def stream_quantile_sketch_states(
@@ -106,9 +71,9 @@ def stream_quantile_sketch_states(
     qs: Sequence[float] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """One bounded sketch per group in the streaming state store (``ops``
-    is a ``SketchOps`` -- sketch_agg.ddsketch_ops(), quantile_agg.tdigest_ops()
+    is a ``SketchOps`` -- ddsketch_agg.ddsketch_ops(), quantile_agg.tdigest_ops()
     or kll_ops()), absorbed per micro-batch with the vectorized numpy core,
-    emitting the refreshed quantile grid (group..., q, estimate, n).
+    emitting the refreshed quantile grid (group..., ``ops.grid_fields``).
 
     For t-digest and KLL, incremental absorption is NOT byte-identical
     to the one-shot batch build (both sketches compact as data arrives, so
@@ -119,7 +84,6 @@ def stream_quantile_sketch_states(
     regardless of stream length."""
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
-    out_schema = schema_prefix(stream_df, group_cols) + "q double, estimate double, n long"
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.exists:
@@ -130,13 +94,12 @@ def stream_quantile_sketch_states(
             ops.add(sk, pdf[value].to_numpy(dtype=np.float64, na_value=np.nan))
         d = ops.core.to_dict(sk)
         state.update(tuple(d[k] for k in ops.state_cols))
-        ests = ops.core.quantiles(sk, qs)
-        yield pd.DataFrame({**dict(zip(group_cols, key)), "q": qs, "estimate": ests, "n": sk.n})
+        yield pd.DataFrame({**dict(zip(group_cols, key)), **ops.grid(sk, qs)})
 
     src = stream_df.select(*group_cols, value)
     return src.groupBy(*group_cols).applyInPandasWithState(
         update,
-        outputStructType=out_schema,
+        outputStructType=schema_prefix(stream_df, group_cols) + ops.grid_fields,
         stateStructType=ops.state_fields,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -14,6 +14,7 @@ from ddsketch_spark.core.tdigest import TDigestConfig
 from ddsketch_spark.operators import ddsketch_agg as agg
 from ddsketch_spark.operators import quantile_agg as qa
 from ddsketch_spark.operators import sketch_agg as udaf
+from ddsketch_spark.plans.checkpoint import build_partials_resumable
 from ddsketch_spark.sources.fixtures import generate_tokens_table
 from tests.reference_oracle import exact_quantile
 
@@ -82,9 +83,9 @@ def test_udaf_repartition_invariance(tokens):
     assert list(a["counts"]) == list(b["counts"])
 
 
-def test_partials_lineage(tokens):
-    parts = udaf.build_partials(
-        tokens.repartition(4), "n_tok", CFG, group_cols=("source",), with_lineage=True
+def test_partials_lineage(spark, tokens):
+    parts = build_partials_resumable(
+        spark, tokens.repartition(4), "n_tok", CFG, group_cols=("source",), checkpoint_dir=None
     ).collect()
     assert all(r["partition_id"] >= 0 for r in parts)
     assert all(len(r["input_files"]) >= 1 for r in parts)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.core import ddsketch as core
-from ddsketch_spark.functions.ddsketch_sql import dds_key, dds_estimate
+from ddsketch_spark.functions.ddsketch_sql import dds_key
 from ddsketch_spark.operators import ddsketch_agg as agg
 from tests.reference_oracle import exact_quantile
 
@@ -33,14 +33,6 @@ def test_dds_key_null_propagates(spark):
     df = spark.createDataFrame([(None,), (2.0,)], "v double")
     got = df.select(dds_key("v", CFG).alias("k")).collect()
     assert got[0]["k"] is None and got[1]["k"] is not None
-
-
-def test_dds_estimate_matches_core(spark):
-    keys = [CFG.offset + 100, -CFG.offset - 50, 0, CFG.offset - 30]
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
-    got = np.array([r[0] for r in df.select(dds_estimate("k", CFG)).collect()])
-    want = core.key_to_estimate(np.array(keys), CFG.gamma, CFG.offset)
-    np.testing.assert_allclose(got, want, rtol=1e-14)
 
 
 def test_global_sketch_equals_core(lineitem):

@@ -4,7 +4,9 @@ rows (availableNow trigger over the events parquet as a file stream)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,7 +28,11 @@ def events_dir(sf_correct, tmp_path_factory):
     t = pq.read_table(f"{sf_correct}/events.parquet")
     n = t.num_rows
     for i, lo in enumerate(range(0, n, n // 4 + 1)):
-        pq.write_table(t.slice(lo, n // 4 + 1), str(d / f"part-{i}.parquet"))
+        path = str(d / f"part-{i}.parquet")
+        pq.write_table(t.slice(lo, n // 4 + 1), path)
+        # a file stream takes files in modification-time order: one second
+        # apart, the micro-batches follow the table's ts order
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
     return str(d)
 
 
@@ -51,6 +57,7 @@ def _run_to_memory(df, name: str, output_mode: str):
             .start()
         )
         q.awaitTermination(300)
+    return q
 
 
 def test_stream_histogram_equals_batch(spark, sf_correct, events_stream):
@@ -68,33 +75,44 @@ def test_stream_histogram_equals_batch(spark, sf_correct, events_stream):
     assert got == want
 
 
-def test_stream_windowed_histogram_runs(spark, events_stream):
+def test_stream_windowed_histogram_runs(spark, sf_correct, events_stream):
+    """Append mode emits each window once the watermark has closed it, and
+    then holds the batch histogram of that window's rows."""
     out = ss.stream_histogram(
         events_stream, "value", CFG, group_cols=("event_type",), window="1 hour"
     )
-    _run_to_memory(out, "win_stream", "append")
-    rows = spark.sql("SELECT * FROM win_stream").collect()
-    # watermark holds back only windows newer than (max_ts - watermark);
-    # availableNow emits all closed windows -- at least some must appear
-    assert {"window", "event_type", "key", "cnt"} <= set(rows[0].asDict()) if rows else True
+    q = _run_to_memory(out, "win_stream", "append")
+    got = {
+        (r["window"], r["event_type"], r["key"]): r["cnt"]
+        for r in spark.sql("SELECT * FROM win_stream").collect()
+    }
+    watermark = datetime.fromisoformat(q.lastProgress["eventTime"]["watermark"])
+    batch = spark.read.parquet(f"{sf_correct}/events.parquet")
+    batch = batch.withColumn("window", F.window(F.col("ts").cast("timestamp"), "1 hour"))
+    closed = batch.where(F.col("window.end").cast("double") <= watermark.timestamp())
+    want = {
+        (r["window"], r["event_type"], r["key"]): r["cnt"]
+        for r in agg.histogram(closed, "value", CFG, group_cols=("window", "event_type")).collect()
+    }
+    assert want and got == want
 
 
 def test_stream_stateful_sketch_equals_batch(spark, sf_correct, events_stream):
     qs = (0.5, 0.9, 0.99)
-    out = ss.stream_sketch_states(
-        events_stream, "value", CFG, group_cols=("event_type",), qs=qs
+    out = ss.stream_quantile_sketch_states(
+        events_stream, "value", agg.ddsketch_ops(CFG), group_cols=("event_type",), qs=qs
     )
     _run_to_memory(out, "state_stream", "update")
     # last update per (event_type, q) is the final converged estimate
     rows = spark.sql(
-        "SELECT event_type, q, estimate, n FROM ("
+        "SELECT event_type, q, bucket_key, estimate, n FROM ("
         " SELECT *, row_number() OVER (PARTITION BY event_type, q ORDER BY n DESC) AS rn"
         " FROM state_stream) WHERE rn = 1"
     ).collect()
-    got = {(r["event_type"], r["q"]): (r["estimate"], r["n"]) for r in rows}
+    got = {(r["event_type"], r["q"]): (r["bucket_key"], r["estimate"], r["n"]) for r in rows}
     batch = spark.read.parquet(f"{sf_correct}/events.parquet")
     want = {
-        (r["event_type"], r["q"]): (r["estimate"], r["n"])
+        (r["event_type"], r["q"]): (r["bucket_key"], r["estimate"], r["n"])
         for r in agg.quantiles(batch, "value", qs, CFG, group_cols=("event_type",)).collect()
     }
     assert got == want
@@ -105,7 +123,7 @@ def test_stream_hll_equals_batch(spark, sf_correct, events_stream):
     from ddsketch_spark.operators import approx_agg as aops
 
     cfg = HLLConfig(p=10)
-    out = ss.stream_hll_registers(events_stream, "user_id", cfg, group_cols=("event_type",))
+    out = aops.hll_registers(events_stream, "user_id", cfg, group_cols=("event_type",))
     _run_to_memory(out, "hll_stream", "complete")
     got = {
         (r["event_type"], r["idx"]): r["rho"]
