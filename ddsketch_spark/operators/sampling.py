@@ -35,7 +35,7 @@ from ddsketch_spark.functions.hashing import (
 SAMPLE_SEED = 101
 
 
-def _threshold(fraction: float) -> int:
+def threshold(fraction: float) -> int:
     """fraction in [0,1] -> integer cutoff on the hash range [0, P)."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
@@ -59,7 +59,7 @@ def hash_sample(
     """Deterministic Bernoulli sample: keep rows whose key hashes below
     ``fraction`` of the hash range.  Partition-layout independent."""
     return df.where(
-        _unit_hash(F.col(key_col), seed) < F.lit(_threshold(fraction))
+        _unit_hash(F.col(key_col), seed) < F.lit(threshold(fraction))
     )
 
 
@@ -77,10 +77,10 @@ def stratified_sample(
     CASE over the (small) fractions map -- no join, no shuffle; for a
     fractions table too large to inline, broadcast-join a threshold column
     instead (same filter)."""
-    thresh: Column = F.lit(_threshold(default_fraction))
+    thresh: Column = F.lit(threshold(default_fraction))
     for group, fraction in sorted(fractions.items()):
         thresh = (
-            F.when(F.col(group_col) == F.lit(group), F.lit(_threshold(fraction)))
+            F.when(F.col(group_col) == F.lit(group), F.lit(threshold(fraction)))
             .otherwise(thresh)
         )
     return df.where(_unit_hash(F.col(key_col), seed) < thresh)
@@ -101,15 +101,9 @@ def split_assign(
         raise ValueError("weights and names must be same nonzero length")
     if any(w < 0 for w in weights) or sum(weights) <= 0:
         raise ValueError("weights must be nonnegative with positive sum")
-    total = float(sum(weights))
     h = _unit_hash(F.col(key_col), seed)
     expr: Column = F.lit(names[-1])
-    cum = 0.0
-    cuts = []
-    for w in weights[:-1]:
-        cum += w / total
-        cuts.append(_threshold(cum))
-    for name, cut in zip(reversed(names[:-1]), reversed(cuts)):
+    for name, cut in zip(reversed(names[:-1]), reversed(split_cuts(weights))):
         expr = F.when(h < F.lit(cut), F.lit(name)).otherwise(expr)
     return df.withColumn(split_col, expr)
 
@@ -124,5 +118,5 @@ def split_cuts(
     out = []
     for w in weights[:-1]:
         cum += w / total
-        out.append(_threshold(cum))
+        out.append(threshold(cum))
     return out

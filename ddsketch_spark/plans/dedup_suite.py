@@ -11,15 +11,13 @@ banding, bucket-local joins -- are identical at any scale.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ddsketch_spark.functions.hashing import FOLD31, hash_params, mixed_hash_sql
 from ddsketch_spark.operators import dedup as dd
-from ddsketch_spark.operators.text_ops import FP_BASE, FP_MOD, tokenize
-from ddsketch_spark.plans.tokens_suite import VOCAB_SQL
+from ddsketch_spark.operators.text_ops import FP_BASE, FP_MOD
+from ddsketch_spark.plans.shared import VOCAB_SQL, docs_tokens
 from ddsketch_spark.sources.tables import read_table
 
 NUM_HASHES = dd.DEFAULT_NUM_HASHES  # 16
@@ -29,7 +27,7 @@ _LSH_VERIFY_TAU = 0.5  # bigram candidates: keeps the planted near-dup
 
 
 # SQL: per-doc ordered token arrays + bigram shingles, from the shared
-# vocabulary coding (see tokens_suite).
+# vocabulary coding (plans.shared).
 _TOKS_SQL = f"""
 toks AS (
   SELECT wp.doc_id, wp.source, list(v.token ORDER BY wp.pos) AS tokens
@@ -50,16 +48,8 @@ shingles AS (
 )"""
 
 
-def _docs_tokens(spark: SparkSession, sf_dir: str):
-    # tokenize auto-selects literal-map vs broadcast-join coding by vocab
-    # size (operators.text_ops); identical tokens either way
-    docs = read_table(spark, sf_dir, "documents")
-    toked, vsize = tokenize(docs)
-    return toked.select("doc_id", "source", "tokens"), vsize
-
-
 def _bigram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks, vsize = _docs_tokens(spark, sf_dir)
+    toks, vsize = docs_tokens(spark, sf_dir)
     return dd.doc_shingles(toks, "tokens", 2, vsize)
 
 
@@ -193,7 +183,7 @@ SELECT node AS doc_id, MIN(lbl) AS component FROM reach GROUP BY node
 # 5. SimHash fingerprints ----------------------------------------------------
 
 def _simhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks, _ = _docs_tokens(spark, sf_dir)
+    toks, _ = docs_tokens(spark, sf_dir)
     return dd.simhash(toks)
 
 
@@ -222,7 +212,7 @@ SELECT doc_id, {fp} AS simhash FROM sums
 # 6. exact unigram Jaccard pairs within source -------------------------------
 
 def _jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks, vsize = _docs_tokens(spark, sf_dir)
+    toks, vsize = docs_tokens(spark, sf_dir)
     sh = dd.doc_shingles(toks, "tokens", 1, vsize, extra_cols=("source",))
     return dd.jaccard_pairs(
         sh, group_col="source", threshold=_JACCARD_TAU, max_shingle_df=dd.DEFAULT_MAX_SHINGLE_DF
@@ -261,7 +251,7 @@ _DECON_MOD = 41
 
 
 def _decontam_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks, vsize = _docs_tokens(spark, sf_dir)
+    toks, vsize = docs_tokens(spark, sf_dir)
     # the trigram stream feeds two consumers (eval + corpus split): persist
     # so tokenization + explode run once.  Cache lifetime (ADVICE r4): `sh`
     # stays persisted after return (it feeds the returned lazy DataFrame);
@@ -296,27 +286,13 @@ SELECT doc_id, n_hits, n_hits >= 1 AS contaminated FROM hits
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "dedup_exact_content": _exact_spark,
-        "dedup_minhash_signatures": _minhash_spark,
-        "dedup_lsh_buckets": _lsh_buckets_spark,
-        "dedup_lsh_pairs_verified": _lsh_pairs_spark,
-        "dedup_duplicate_clusters": _clusters_spark,
-        "dedup_simhash": _simhash_spark,
-        "dedup_jaccard_pairs_by_source": _jaccard_spark,
-        "decontam_ngram_overlap": _decontam_spark,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "dedup_exact_content": _EXACT_SQL,
-        "dedup_minhash_signatures": _minhash_oracle_sql(),
-        "dedup_lsh_buckets": _lsh_buckets_oracle_sql(),
-        "dedup_lsh_pairs_verified": _lsh_pairs_oracle_sql(),
-        "dedup_duplicate_clusters": _clusters_oracle_sql(),
-        "dedup_simhash": _simhash_oracle_sql(),
-        "dedup_jaccard_pairs_by_source": _jaccard_oracle_sql(),
-        "decontam_ngram_overlap": _decontam_oracle_sql(),
-    }
+ROWS = (
+    ("dedup_exact_content", _exact_spark, lambda _: _EXACT_SQL),
+    ("dedup_minhash_signatures", _minhash_spark, lambda _: _minhash_oracle_sql()),
+    ("dedup_lsh_buckets", _lsh_buckets_spark, lambda _: _lsh_buckets_oracle_sql()),
+    ("dedup_lsh_pairs_verified", _lsh_pairs_spark, lambda _: _lsh_pairs_oracle_sql()),
+    ("dedup_duplicate_clusters", _clusters_spark, lambda _: _clusters_oracle_sql()),
+    ("dedup_simhash", _simhash_spark, lambda _: _simhash_oracle_sql()),
+    ("dedup_jaccard_pairs_by_source", _jaccard_spark, lambda _: _jaccard_oracle_sql()),
+    ("decontam_ngram_overlap", _decontam_spark, lambda _: _decontam_oracle_sql()),
+)

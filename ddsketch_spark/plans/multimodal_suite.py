@@ -8,8 +8,6 @@ height / frame slices = the same integer arithmetic.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ddsketch_spark.operators import multimodal as mm
@@ -77,17 +75,8 @@ FROM bounds
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "mm_binary_metadata": _metadata_spark,
-        "mm_decode_features": _decode_spark,
-        "mm_frame_sample": _frames_spark,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "mm_binary_metadata": _METADATA_SQL,
-        "mm_decode_features": _DECODE_SQL,
-        "mm_frame_sample": _FRAMES_SQL,
-    }
+ROWS = (
+    ("mm_binary_metadata", _metadata_spark, lambda _: _METADATA_SQL),
+    ("mm_decode_features", _decode_spark, lambda _: _DECODE_SQL),
+    ("mm_frame_sample", _frames_spark, lambda _: _FRAMES_SQL),
+)

@@ -14,13 +14,11 @@ per-source rollup is the only other aggregation.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ddsketch_spark.operators import sampling as smp
-from ddsketch_spark.operators.sampling import _threshold, unit_hash_sql
+from ddsketch_spark.operators.sampling import threshold, unit_hash_sql
 from ddsketch_spark.operators.text_ops import STOPWORDS, words_col
 from ddsketch_spark.sources.tables import read_table
 
@@ -86,16 +84,11 @@ retained AS (
 ),
 sampled AS (
   SELECT * FROM retained
-  WHERE {unit_hash_sql('doc_id')} < {_threshold(_SAMPLE_FRACTION)}
+  WHERE {unit_hash_sql('doc_id')} < {threshold(_SAMPLE_FRACTION)}
 )
 SELECT source, COUNT(*)::BIGINT AS n_docs, SUM(n_chars)::BIGINT AS sum_chars
 FROM sampled GROUP BY source
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {"pipeline_retained_corpus": _retained_spark}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {"pipeline_retained_corpus": _retained_sql()}
+ROWS = (("pipeline_retained_corpus", _retained_spark, lambda _: _retained_sql()),)

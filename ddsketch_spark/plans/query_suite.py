@@ -1,21 +1,16 @@
-"""The oracle-checked query suite.
+"""The oracle-checked DDSketch query suite.
 
-Each entry pairs a Spark DataFrame query (the product) with an ANSI-SQL
+Each row pairs a Spark DataFrame query (the product) with an ANSI-SQL
 reproduction runnable by DuckDB on the same parquet tables (the oracle).
 DDSketch is deterministic arithmetic, so even the sketch queries get
 value-level oracles: the SQL reproduces the gamma-bucket keying, histogram,
-rank walk, and midpoint estimator exactly. Float estimates are compared as
-6-significant-digit integer mantissas (see functions.ddsketch_sql.sig6).
-
-Config note: oracle-mode sketches use bin_limit=4096 so no collapse fires at
-the oracle scale (every table here keys into < 700 bins) -- collapse is
-separately exercised by `dds_price_hist_collapsed`, whose oracle applies the
-integer gamma^2 key remap a fixed number of times.
+rank walk, and midpoint estimator exactly (plans.shared, whose collapse-free
+OCFG every row here uses unless it tests a collapse). Float estimates are
+compared as 6-significant-digit integer mantissas (see
+functions.ddsketch_sql.sig6).
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,70 +18,8 @@ from pyspark.sql import functions as F
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL, sig6_mantissa
 from ddsketch_spark.operators import ddsketch_agg as agg
+from ddsketch_spark.plans.shared import OCFG, QS, estimate_sql, key_sql, quantile_oracle_sql
 from ddsketch_spark.sources.tables import read_table
-
-# oracle-mode config: collapse-free at test scale
-OCFG = DDSketchConfig(bin_limit=4096)
-# q literals cast to DOUBLE so the oracle's stop = q*(n-1) is IEEE-double
-# arithmetic exactly like the Spark/numpy side (DuckDB would otherwise parse
-# 0.01 as DECIMAL and compute an exact stop that can flip a boundary bucket)
-QS = ", ".join(f"CAST({q} AS DOUBLE)" for q in Q_GRID)
-
-
-def _key_sql(v: str = "v") -> str:
-    return (
-        f"CASE WHEN {v} > 0 THEN CAST(ceil(ln({v})/{OCFG.ln_gamma!r}) AS BIGINT) + {OCFG.offset} "
-        f"WHEN {v} < 0 THEN -CAST(ceil(ln(-{v})/{OCFG.ln_gamma!r}) AS BIGINT) - {OCFG.offset} "
-        f"ELSE 0 END"
-    )
-
-
-def _estimate_sql(k: str = "key", gamma: float | None = None) -> str:
-    g = repr(gamma if gamma is not None else OCFG.gamma)
-    off = OCFG.offset
-    return (
-        f"CASE WHEN {k} > 0 THEN 2*power({g}, CAST({k} - {off} AS DOUBLE))/({g}+1) "
-        f"WHEN {k} < 0 THEN -2*power({g}, CAST(-({k} + {off}) AS DOUBLE))/({g}+1) "
-        f"ELSE 0.0 END"
-    )
-
-
-def _quantile_oracle_sql(table: str, value_expr: str, group: str | None = None) -> str:
-    """Full DDSketch quantile pipeline in SQL: key -> histogram -> cumulative
-    walk with stop = q*(n-1) (reference: ddsketch.cc:538) -> midpoint
-    estimate, optionally per group."""
-    gsel = f"{group}, " if group else ""
-    gby = f"GROUP BY {group}, key" if group else "GROUP BY key"
-    gpart = f"PARTITION BY {group}" if group else ""
-    gjoin = f"AND c.{group} = qs.{group}" if group else ""
-    qs_src = (
-        f"(SELECT DISTINCT {group}, UNNEST([{QS}]) AS q FROM hist) "
-        if group
-        else f"(SELECT UNNEST([{QS}]) AS q) "
-    )
-    return f"""
-WITH keyed AS (
-  SELECT {gsel}{_key_sql('v')} AS key
-  FROM (SELECT {gsel}CAST({value_expr} AS DOUBLE) AS v FROM {table} WHERE {value_expr} IS NOT NULL)
-),
-hist AS (SELECT {gsel}key, COUNT(*) AS cnt FROM keyed {gby}),
-tot AS (SELECT {gsel}CAST(SUM(cnt) AS BIGINT) AS n FROM hist {('GROUP BY ' + group) if group else ''}),
-cum AS (SELECT {gsel}key, SUM(cnt) OVER ({gpart} ORDER BY key) AS cumc FROM hist),
-qs AS (SELECT * FROM {qs_src}),
-sel AS (
-  SELECT {('qs.' + group + ' AS ' + group + ',') if group else ''} qs.q AS q,
-         (SELECT MIN(c.key) FROM cum c, tot t
-           WHERE c.cumc > qs.q * (t.n - 1) {gjoin}
-                 {('AND t.' + group + ' = qs.' + group) if group else ''}) AS key,
-         (SELECT t.n FROM tot t {('WHERE t.' + group + ' = qs.' + group) if group else ''}) AS n
-  FROM qs
-)
-SELECT {gsel}q,
-  CASE WHEN key > 0 THEN key - {OCFG.offset} WHEN key < 0 THEN key + {OCFG.offset} ELSE 0 END AS bucket_key,
-  {SIG6_SQL.format(x=_estimate_sql('key'))} AS est_m6,
-  n
-FROM sel
-"""
 
 
 def _quantiles_spark(
@@ -118,7 +51,7 @@ def _hist_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HIST_SQL = f"""
 WITH keyed AS (
-  SELECT {_key_sql('v')} AS key
+  SELECT {key_sql('v')} AS key
   FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)
 )
 SELECT CASE WHEN key > 0 THEN key - {OCFG.offset} WHEN key < 0 THEN key + {OCFG.offset} ELSE 0 END AS bucket_key,
@@ -159,7 +92,7 @@ def _collapsed_oracle_sql() -> str:
         expr = f"CAST(floor((({expr}) - {off} + 1) / 2.0) AS BIGINT) + {off}"
     return f"""
 WITH keyed AS (
-  SELECT {_key_sql('v')} AS key
+  SELECT {key_sql('v')} AS key
   FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)
 )
 SELECT {_COLLAPSE_LEVELS} AS level,
@@ -189,7 +122,7 @@ def _delete_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # complement histogram (every deleted bin count <= inserted bin count)
 _DELETE_SQL = f"""
 WITH keyed AS (
-  SELECT {_key_sql('v')} AS key
+  SELECT {key_sql('v')} AS key
   FROM (SELECT CAST(l_quantity AS DOUBLE) AS v FROM lineitem
         WHERE l_quantity IS NOT NULL AND l_returnflag <> 'R')
 )
@@ -240,7 +173,7 @@ def _error_bound_oracle_sql() -> str:
     keep = _EB_LIMIT - 1
     return f"""
 WITH keyed AS (
-  SELECT {_key_sql('v')} AS key
+  SELECT {key_sql('v')} AS key
   FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)
 ),
 hist AS (SELECT key, COUNT(*) AS c FROM keyed GROUP BY key),
@@ -271,7 +204,7 @@ def _weighted_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WEIGHTED_SQL = f"""
 WITH keyed AS (
-  SELECT {_key_sql('v')} AS key, w
+  SELECT {key_sql('v')} AS key, w
   FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v, CAST(l_quantity AS BIGINT) AS w
         FROM lineitem WHERE l_extendedprice IS NOT NULL)
 ),
@@ -287,7 +220,7 @@ sel AS (
 )
 SELECT q,
   CASE WHEN key > 0 THEN key - {OCFG.offset} WHEN key < 0 THEN key + {OCFG.offset} ELSE 0 END AS bucket_key,
-  {SIG6_SQL.format(x=_estimate_sql('key'))} AS est_m6,
+  {SIG6_SQL.format(x=estimate_sql('key'))} AS est_m6,
   n
 FROM sel
 """
@@ -305,8 +238,8 @@ def _rollup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rollup_oracle_sql() -> str:
-    per = _quantile_oracle_sql("documents", "n_chars", "source")
-    glob = _quantile_oracle_sql("documents", "n_chars")
+    per = quantile_oracle_sql("documents", "n_chars", "source")
+    glob = quantile_oracle_sql("documents", "n_chars")
     return f"""
 SELECT * FROM ({per})
 UNION ALL
@@ -384,7 +317,7 @@ def _trim_oracle_sql() -> str:
 WITH keyed AS (
   SELECT source, n_chars, {strip} AS skey
   FROM (
-    SELECT source, n_chars, {_key_sql('v')} AS key
+    SELECT source, n_chars, {key_sql('v')} AS key
     FROM (SELECT source, n_chars, CAST(n_chars AS DOUBLE) AS v
           FROM documents WHERE n_chars IS NOT NULL)
   )
@@ -407,43 +340,28 @@ GROUP BY k.source
 """
 
 
-# ---------------------------------------------------------------------------
-# registry
-# ---------------------------------------------------------------------------
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "dds_quantiles_price": lambda s, d: _quantiles_spark(s, d, "lineitem", "l_extendedprice", None),
-        "dds_quantiles_price_by_returnflag": lambda s, d: _quantiles_spark(s, d, "lineitem", "l_extendedprice", "l_returnflag"),
-        "dds_quantiles_events_by_type": lambda s, d: _quantiles_spark(s, d, "events", "value", "event_type"),
-        "dds_quantiles_nchars_by_source": lambda s, d: _quantiles_spark(s, d, "documents", "n_chars", "source"),
-        "dds_histogram_price": _hist_spark,
-        "dds_error_bound_collapse": _error_bound_spark,
-        "dds_quantiles_rollup": _rollup_spark,
-        "dds_weighted_quantiles_price": _weighted_quantiles_spark,
-        "dds_histogram_price_collapsed": _collapsed_spark,
-        "dds_delete_quantity": _delete_spark,
-        "dds_trim_outliers_by_source": _trim_spark,
-        "dds_incremental_update_quantiles": _incremental_spark,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "dds_quantiles_price": _quantile_oracle_sql("lineitem", "l_extendedprice"),
-        "dds_quantiles_price_by_returnflag": _quantile_oracle_sql("lineitem", "l_extendedprice", "l_returnflag"),
-        "dds_quantiles_events_by_type": _quantile_oracle_sql("events", "value", "event_type"),
-        "dds_quantiles_nchars_by_source": _quantile_oracle_sql("documents", "n_chars", "source"),
-        "dds_histogram_price": _HIST_SQL,
-        "dds_error_bound_collapse": _error_bound_oracle_sql(),
-        "dds_quantiles_rollup": _rollup_oracle_sql(),
-        "dds_weighted_quantiles_price": _WEIGHTED_SQL,
-        "dds_histogram_price_collapsed": _collapsed_oracle_sql(),
-        "dds_delete_quantity": _DELETE_SQL,
-        "dds_trim_outliers_by_source": _trim_oracle_sql(),
-        # incremental update is byte-identical to the full build, so its
-        # oracle is the ordinary full-table per-group quantile SQL
-        "dds_incremental_update_quantiles": _quantile_oracle_sql(
-            "lineitem", "l_extendedprice", "l_returnflag"
-        ),
-    }
+ROWS = (
+    ("dds_quantiles_price",
+     lambda s, d: _quantiles_spark(s, d, "lineitem", "l_extendedprice", None),
+     lambda _: quantile_oracle_sql("lineitem", "l_extendedprice")),
+    ("dds_quantiles_price_by_returnflag",
+     lambda s, d: _quantiles_spark(s, d, "lineitem", "l_extendedprice", "l_returnflag"),
+     lambda _: quantile_oracle_sql("lineitem", "l_extendedprice", "l_returnflag")),
+    ("dds_quantiles_events_by_type",
+     lambda s, d: _quantiles_spark(s, d, "events", "value", "event_type"),
+     lambda _: quantile_oracle_sql("events", "value", "event_type")),
+    ("dds_quantiles_nchars_by_source",
+     lambda s, d: _quantiles_spark(s, d, "documents", "n_chars", "source"),
+     lambda _: quantile_oracle_sql("documents", "n_chars", "source")),
+    ("dds_histogram_price", _hist_spark, lambda _: _HIST_SQL),
+    ("dds_error_bound_collapse", _error_bound_spark, lambda _: _error_bound_oracle_sql()),
+    ("dds_quantiles_rollup", _rollup_spark, lambda _: _rollup_oracle_sql()),
+    ("dds_weighted_quantiles_price", _weighted_quantiles_spark, lambda _: _WEIGHTED_SQL),
+    ("dds_histogram_price_collapsed", _collapsed_spark, lambda _: _collapsed_oracle_sql()),
+    ("dds_delete_quantity", _delete_spark, lambda _: _DELETE_SQL),
+    ("dds_trim_outliers_by_source", _trim_spark, lambda _: _trim_oracle_sql()),
+    # incremental update is byte-identical to the full build, so its oracle
+    # is the ordinary full-table per-group quantile SQL
+    ("dds_incremental_update_quantiles", _incremental_spark,
+     lambda _: quantile_oracle_sql("lineitem", "l_extendedprice", "l_returnflag")),
+)

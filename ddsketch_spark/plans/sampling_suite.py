@@ -9,13 +9,11 @@ splits, bit-for-bit -- not statistical checks.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ddsketch_spark.operators import sampling as smp
-from ddsketch_spark.operators.sampling import _threshold, unit_hash_sql
+from ddsketch_spark.operators.sampling import threshold, unit_hash_sql
 from ddsketch_spark.sources.tables import read_table
 
 _BERNOULLI_FRACTION = 0.1
@@ -37,7 +35,7 @@ def _bernoulli_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bernoulli_sql() -> str:
     return f"""
-SELECT doc_id, source FROM documents WHERE {_H} < {_threshold(_BERNOULLI_FRACTION)}
+SELECT doc_id, source FROM documents WHERE {_H} < {threshold(_BERNOULLI_FRACTION)}
 """
 
 
@@ -50,12 +48,12 @@ def _stratified_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stratified_sql() -> str:
     whens = " ".join(
-        f"WHEN source = '{g}' THEN {_threshold(f)}"
+        f"WHEN source = '{g}' THEN {threshold(f)}"
         for g, f in sorted(_STRATA.items())
     )
     return f"""
 SELECT doc_id, source FROM documents
-WHERE {_H} < (CASE {whens} ELSE {_threshold(_STRATA_DEFAULT)} END)
+WHERE {_H} < (CASE {whens} ELSE {threshold(_STRATA_DEFAULT)} END)
 """
 
 
@@ -77,17 +75,8 @@ SELECT doc_id, (CASE {whens} ELSE '{_SPLIT_NAMES[-1]}' END) AS split FROM docume
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "sample_bernoulli_docs": _bernoulli_spark,
-        "sample_stratified_by_source": _stratified_spark,
-        "sample_split_assignment": _split_spark,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "sample_bernoulli_docs": _bernoulli_sql(),
-        "sample_stratified_by_source": _stratified_sql(),
-        "sample_split_assignment": _split_sql(),
-    }
+ROWS = (
+    ("sample_bernoulli_docs", _bernoulli_spark, lambda _: _bernoulli_sql()),
+    ("sample_stratified_by_source", _stratified_spark, lambda _: _stratified_sql()),
+    ("sample_split_assignment", _split_spark, lambda _: _split_sql()),
+)

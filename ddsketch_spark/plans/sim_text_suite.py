@@ -8,16 +8,14 @@ for libm-sqrt safety. Everything else is exact integer / rational math.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL, sig6_mantissa
 from ddsketch_spark.operators import similarity as sim
 from ddsketch_spark.operators import text_ops
-from ddsketch_spark.operators.text_ops import STOPWORDS, tokenize
-from ddsketch_spark.plans.tokens_suite import VOCAB_SQL
+from ddsketch_spark.operators.text_ops import STOPWORDS
+from ddsketch_spark.plans.shared import VOCAB_SQL, docs_tokens
 from ddsketch_spark.sources.tables import read_table
 
 _TOPK = 5
@@ -357,7 +355,7 @@ FROM s
 # 6. rolling-hash document fingerprint ---------------------------------------
 
 def _fp_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toked, _ = tokenize(read_table(spark, sf_dir, "documents"))
+    toked, _ = docs_tokens(spark, sf_dir)
     return toked.select(
         "doc_id", text_ops.fingerprint_col(F.col("tokens")).alias("fp")
     )
@@ -445,41 +443,17 @@ FROM documents
 """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "ann_cosine_topk": _topk_spark,
-        "ann_lsh_bucketed": _lsh_ann_spark,
-        "ann_ivf_bucketed": _ivf_spark,
-        "emb_cosine_pairs": _cos_pairs_spark,
-        "emb_dup_clusters": _emb_clusters_spark,
-        "text_quality_stats": _stats_spark,
-        "text_langid": _langid_spark,
-        "text_fingerprint": _fp_spark,
-        "text_token_count": _tokcount_spark,
-        "text_topk_quality_per_source": _topk_quality_spark,
-    }
-
-
-def oracle_sql(oracle_sf_dir: str | None = None) -> dict[str, str]:
-    """``oracle_sf_dir`` must be the sf_dir the comparison harness runs the
-    Spark side at (the driver compares at sf0.01, the default; override via
-    SPARK_GRAFT_ORACLE_SF_DIR or the parameter).  Only the IVF query embeds
-    scale-derived literals (k-means centroids trained from the first 512
-    vectors), so it is the only entry that would diverge on a mismatch."""
-    import os
-
-    oracle_sf_dir = oracle_sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    return {
-        "ann_cosine_topk": _TOPK_SQL,
-        "ann_lsh_bucketed": _lsh_ann_oracle_sql(),
-        "ann_ivf_bucketed": _ivf_oracle_sql(oracle_sf_dir),
-        "emb_cosine_pairs": _cos_pairs_oracle_sql(),
-        "emb_dup_clusters": _emb_clusters_oracle_sql(),
-        "text_quality_stats": _STATS_SQL,
-        "text_langid": _LANGID_SQL,
-        "text_fingerprint": _FP_SQL,
-        "text_token_count": _TOKCOUNT_SQL,
-        "text_topk_quality_per_source": _TOPK_QUALITY_SQL,
-    }
+ROWS = (
+    ("ann_cosine_topk", _topk_spark, lambda _: _TOPK_SQL),
+    ("ann_lsh_bucketed", _lsh_ann_spark, lambda _: _lsh_ann_oracle_sql()),
+    # the only row whose oracle embeds scale-derived literals (k-means
+    # centroids trained from the first 512 vectors at the sf dir given)
+    ("ann_ivf_bucketed", _ivf_spark, _ivf_oracle_sql),
+    ("emb_cosine_pairs", _cos_pairs_spark, lambda _: _cos_pairs_oracle_sql()),
+    ("emb_dup_clusters", _emb_clusters_spark, lambda _: _emb_clusters_oracle_sql()),
+    ("text_quality_stats", _stats_spark, lambda _: _STATS_SQL),
+    ("text_langid", _langid_spark, lambda _: _LANGID_SQL),
+    ("text_fingerprint", _fp_spark, lambda _: _FP_SQL),
+    ("text_token_count", _tokcount_spark, lambda _: _TOKCOUNT_SQL),
+    ("text_topk_quality_per_source", _topk_quality_spark, lambda _: _TOPK_QUALITY_SQL),
+)

@@ -2,7 +2,8 @@
 DuckDB oracles.
 
 The `input_hint` table shape (doc_id, tokens array<int>, n_tok, source) is
-derived deterministically from documents.text: tokens are vocabulary codes
+derived deterministically from documents.text (plans.shared.docs_tokens and
+its SQL twin TOKSTREAM_SQL): tokens are vocabulary codes
 where the vocabulary is `row_number() OVER (ORDER BY word)` over distinct
 words -- reproducible independently by both engines, so every downstream
 query (quantiles of n_tok, per-position distributions, distinct-token HLL,
@@ -15,51 +16,26 @@ relationally. See operators.text_ops for the 100 TB notes.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ddsketch_spark.config import Q_GRID, DDSketchConfig
+from ddsketch_spark.config import Q_GRID
 from ddsketch_spark.functions.ddsketch_sql import sig6_mantissa
 from ddsketch_spark.operators import approx_agg as aops
 from ddsketch_spark.operators import ddsketch_agg as agg
-from ddsketch_spark.operators.text_ops import tokenize
-from ddsketch_spark.plans.approx_suite import (
+from ddsketch_spark.plans.shared import (
     HLL_CFG,
-    _bloom_oracle_sql,
-    _cms_hh_oracle_sql,
-    _hll_oracle_sql,
+    OCFG,
+    TOKSTREAM_SQL,
+    bloom_oracle_sql,
+    cms_hh_oracle_sql,
+    docs_tokens,
+    hll_oracle_sql,
+    quantile_oracle_sql,
 )
-from ddsketch_spark.plans.query_suite import OCFG, _quantile_oracle_sql
 from ddsketch_spark.sources.tables import read_table
 
 _MAX_POS = 8  # per-position queries cover token positions 1.._MAX_POS
-
-# SQL fragments deriving the token stream (both engines share the
-# vocabulary definition: lexicographic row_number over distinct words).
-VOCAB_SQL = (
-    "SELECT word, row_number() OVER (ORDER BY word) AS token FROM "
-    "(SELECT DISTINCT UNNEST(string_split(text, ' ')) AS word FROM documents)"
-)
-
-# (source, pos, token) stream -- DuckDB zips parallel UNNESTs positionally.
-TOKSTREAM_SQL = f"""(
-  SELECT wp.source, wp.pos, v.token
-  FROM (
-    SELECT source,
-           UNNEST(string_split(text, ' ')) AS word,
-           UNNEST(generate_series(1, len(string_split(text, ' ')))) AS pos
-    FROM documents
-  ) wp JOIN ({VOCAB_SQL}) v USING (word)
-)"""
-
-
-def _docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # tokenize auto-selects literal-map vs broadcast-join coding by vocab
-    # size (operators.text_ops); identical tokens either way
-    toked, _ = tokenize(read_table(spark, sf_dir, "documents"))
-    return toked.select("doc_id", "source", "tokens")
 
 
 # 1. per-source + global quantiles of n_tok ----------------------------------
@@ -76,7 +52,7 @@ def _ntok_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2. per-position token-value distributions ----------------------------------
 
 def _position_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _docs_tokens(spark, sf_dir)
+    toks, _ = docs_tokens(spark, sf_dir)
     # slice BEFORE posexplode: exploding the full array then filtering
     # pos0 < _MAX_POS would multiply exploded rows by mean_doc_len/_MAX_POS
     # (~25x on the fixture) before the filter (VERDICT r1 item 4)
@@ -90,18 +66,10 @@ def _position_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _position_quantiles_oracle() -> str:
-    return _quantile_oracle_sql(
-        f"(SELECT pos, token FROM {TOKSTREAM_SQL} s WHERE pos <= {_MAX_POS}) tp",
-        "token",
-        "pos",
-    )
-
-
 # 3. distinct-token HLL per source -------------------------------------------
 
 def _hll_tokens_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _docs_tokens(spark, sf_dir)
+    toks, _ = docs_tokens(spark, sf_dir)
     stream = toks.select("source", F.explode("tokens").alias("token"))
     out = aops.hll_estimate(stream, "token", HLL_CFG, group_cols=("source",))
     return out.select(
@@ -112,7 +80,7 @@ def _hll_tokens_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 4. heavy-hitter tokens (CMS) -----------------------------------------------
 
 def _cms_tokens_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _docs_tokens(spark, sf_dir)
+    toks, _ = docs_tokens(spark, sf_dir)
     stream = toks.select(F.explode("tokens").alias("token"))
     return aops.cms_heavy_hitters(stream, "token", 0.02)
 
@@ -123,7 +91,7 @@ _BLOOM_PROBE_RANGE = 48
 
 
 def _bloom_tokens_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _docs_tokens(spark, sf_dir)
+    toks, _ = docs_tokens(spark, sf_dir)
     stream = toks.where(F.col("source") == "src0").select(
         F.explode("tokens").alias("token")
     )
@@ -131,31 +99,18 @@ def _bloom_tokens_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aops.bloom_might_contain(stream, "token", probes, "probe")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "tok_ntok_quantiles_by_source": _ntok_quantiles_spark,
-        "tok_position_quantiles": _position_quantiles_spark,
-        "tok_distinct_hll_by_source": _hll_tokens_spark,
-        "tok_heavy_hitters_cms": _cms_tokens_spark,
-        "tok_membership_bloom_src0": _bloom_tokens_spark,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "tok_ntok_quantiles_by_source": _quantile_oracle_sql(
-            "documents", "len(string_split(text, ' '))", "source"
-        ),
-        "tok_position_quantiles": _position_quantiles_oracle(),
-        "tok_distinct_hll_by_source": _hll_oracle_sql(
-            f"(SELECT source, token FROM {TOKSTREAM_SQL} s) ts", "token", "source"
-        ),
-        "tok_heavy_hitters_cms": _cms_hh_oracle_sql(
-            f"(SELECT token FROM {TOKSTREAM_SQL} s) ts", "token", 0.02
-        ),
-        "tok_membership_bloom_src0": _bloom_oracle_sql(
-            f"(SELECT token FROM {TOKSTREAM_SQL} s WHERE source = 'src0') ts",
-            "token",
-            n_probes=_BLOOM_PROBE_RANGE,
-        ),
-    }
+ROWS = (
+    ("tok_ntok_quantiles_by_source", _ntok_quantiles_spark,
+     lambda _: quantile_oracle_sql("documents", "len(string_split(text, ' '))", "source")),
+    ("tok_position_quantiles", _position_quantiles_spark,
+     lambda _: quantile_oracle_sql(
+         f"(SELECT pos, token FROM {TOKSTREAM_SQL} s WHERE pos <= {_MAX_POS}) tp", "token", "pos")),
+    ("tok_distinct_hll_by_source", _hll_tokens_spark,
+     lambda _: hll_oracle_sql(f"(SELECT source, token FROM {TOKSTREAM_SQL} s) ts", "token", "source")),
+    ("tok_heavy_hitters_cms", _cms_tokens_spark,
+     lambda _: cms_hh_oracle_sql(f"(SELECT token FROM {TOKSTREAM_SQL} s) ts", "token", 0.02)),
+    ("tok_membership_bloom_src0", _bloom_tokens_spark,
+     lambda _: bloom_oracle_sql(
+         f"(SELECT token FROM {TOKSTREAM_SQL} s WHERE source = 'src0') ts", "token",
+         _BLOOM_PROBE_RANGE)),
+)

@@ -37,7 +37,6 @@ def main() -> None:
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    oracles = entry.oracle_sql()
     timings: dict[str, float] = {}
     counts: dict[str, int] = {}
     failures: dict[str, str] = {}
@@ -56,8 +55,7 @@ def main() -> None:
         spark.catalog.clearCache()
         print(
             f"{name:38s} {timings.get(name, -1):8.3f}s "
-            f"{counts.get(name, -1):7d} rows "
-            f"{'oracle' if name in oracles else 'rows-only'}"
+            f"{counts.get(name, -1):7d} rows"
             + (f"  FAILED {failures[name]}" if name in failures else ""),
             flush=True,
         )
@@ -70,7 +68,6 @@ def main() -> None:
         "rows": counts,
         "failures": failures,
         "n_queries": len(timings),
-        "n_oracle": sum(1 for n in timings if n in oracles),
         "sf": args.sf_dir,
     }
 

@@ -100,10 +100,10 @@ def test_registered_lsh_row_fills_every_probe(spark, sf_correct):
     other vectors."""
     from collections import Counter
 
-    from ddsketch_spark.plans import sim_text_suite as sts
+    import __spark_entry__ as entry
 
-    rows = sts.queries()["ann_lsh_bucketed"](spark, sf_correct).collect()
-    assert Counter(r["probe_id"] for r in rows) == {p: sts._TOPK for p in range(sts._N_PROBES)}
+    rows = entry.queries()["ann_lsh_bucketed"](spark, sf_correct).collect()
+    assert Counter(r["probe_id"] for r in rows) == {p: 5 for p in range(10)}  # k = 5, 10 probes
 
 def test_fingerprint_order_sensitive(spark):
     df = spark.createDataFrame(

@@ -100,9 +100,9 @@ def test_emb_cosine_pairs_no_cartesian(spark, sf_correct):
     """The registered embedding near-dup query must be candidate-bounded:
     no CartesianProduct / BroadcastNestedLoopJoin anywhere in the executed
     plan (VERDICT r1 item 3 -- it used to be a global crossJoin)."""
-    from ddsketch_spark.plans.sim_text_suite import _cos_pairs_spark
+    import __spark_entry__ as entry
 
-    out = _cos_pairs_spark(spark, sf_correct)
+    out = entry.queries()["emb_cosine_pairs"](spark, sf_correct)
     plan = _plan(out)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -112,9 +112,11 @@ def test_sampling_queries_shuffle_free(spark, sf_correct):
     """Hash sampling / split assignment are pure codegen filters and
     projections -- a sample that shuffles 100 TB to drop 90% of it is the
     wrong plan, so no Exchange may appear."""
-    from ddsketch_spark.plans import sampling_suite
+    import __spark_entry__ as entry
 
-    for name, fn in sampling_suite.queries().items():
+    for name, fn in entry.queries().items():
+        if not name.startswith("sample_"):
+            continue
         plan = _plan(fn(spark, sf_correct))
         assert "Exchange" not in plan, f"{name} shuffles: {plan}"
         # codegen'd stages print with a "*(n)" prefix in executedPlan
@@ -166,11 +168,9 @@ def test_compacting_rank_pass_broadcasts(spark, sf_correct):
     """The rank-bound verification join (data x tiny estimate table) must be
     a broadcast hash join -- shuffling the fact table against a
     (#groups x #qs)-row estimate table would be the wrong plan at scale."""
-    from ddsketch_spark.plans import approx_suite
+    import __spark_entry__ as entry
 
-    out = approx_suite.queries()["kll_quantiles_events_compacting"](
-        spark, sf_correct
-    )
+    out = entry.queries()["kll_quantiles_events_compacting"](spark, sf_correct)
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
     assert "SortMergeJoin" not in plan, plan

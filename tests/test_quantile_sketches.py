@@ -171,9 +171,9 @@ def test_compacting_queries_bound_holds_at_sf01(spark):
     """The registered rank-bound queries (fixed delta=200 / k=200, real
     compaction) emit within_rank_bound == TRUE at sf0.1 too -- the scale the
     bench runs at, 10x the driver's oracle scale."""
-    from ddsketch_spark.plans import approx_suite
+    import __spark_entry__ as entry
 
-    qs = approx_suite.queries()
+    qs = entry.queries()
     for name in ("tdigest_quantiles_price_compacting", "kll_quantiles_events_compacting"):
         rows = qs[name](spark, "/root/testdata/sf0.1").collect()
         assert len(rows) >= len(Q_GRID)
