@@ -8,6 +8,11 @@ per-row path. Every operator here has an exact DuckDB oracle (the
 vocabulary is the deterministic `row_number() OVER (ORDER BY word)` coding
 both engines can derive independently).
 
+The per-document word features (word count, stopword ratio, distinct
+ratio) are defined once, in ``word_features``: ``text_stats``, ``langid``
+and the quality filters and scores of the query suites all build on it,
+and ``plans.shared.word_features_sql`` is its SQL twin.
+
 Scale notes: a vocabulary up to ``DEFAULT_MAX_LITERAL_VOCAB`` words is
 collected once on the driver and re-enters the plan as a map literal, so
 token coding is a pure projection: no explode, no join, no shuffle. Beyond
@@ -19,8 +24,6 @@ bounded ``limit(cap+1).collect()``.
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -135,13 +138,25 @@ def fingerprint_col(tokens: Column) -> Column:
     )
 
 
-def text_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, n_words, n_chars, avg_word_len, stopword_ratio, distinct_ratio)
-    quality-scoring features, all codegen'd column math."""
+def word_features(text: Column | str = "text") -> tuple[Column, Column, Column]:
+    """(n_words, stopword_ratio, distinct_ratio) of the space-split words of
+    ``text``: the word count, and the shares of its words that are
+    ``STOPWORDS`` and that are distinct, as exact rationals of counts."""
     w = words_col(text)
     n_words = F.size(w)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x)))
+    return (
+        n_words,
+        n_stop.cast("double") / n_words,
+        F.size(F.array_distinct(w)).cast("double") / n_words,
+    )
+
+
+def text_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, n_words, n_chars, avg_word_len, stopword_ratio, distinct_ratio)
+    quality-scoring features, all codegen'd column math."""
+    n_words, stop_ratio, distinct_ratio = word_features(text)
     n_chars = F.length(F.col(text))
     return df.select(
         F.col(id_col),
@@ -150,8 +165,8 @@ def text_stats(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Dat
         # avg word length = (chars - separators) / words, exact rational ->
         # compare as 6-digit mantissa
         ((n_chars - (n_words - 1)).cast("double") / n_words).alias("avg_word_len"),
-        (n_stop.cast("double") / n_words).alias("stopword_ratio"),
-        (F.size(F.array_distinct(w)).cast("double") / n_words).alias("distinct_ratio"),
+        stop_ratio.alias("stopword_ratio"),
+        distinct_ratio.alias("distinct_ratio"),
     )
 
 
@@ -160,11 +175,7 @@ def langid(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFra
     when >= 3% of words are English stopwords, else 'unk'. (A real pipeline
     would vote over per-language stopword tables; the operator shape --
     pure column expressions, one pass -- is what matters at scale.)"""
-    w = words_col(text)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    ratio = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))).cast(
-        "double"
-    ) / F.size(w)
+    _, ratio, _ = word_features(text)
     return df.select(
         F.col(id_col),
         ratio.alias("en_score"),

@@ -27,6 +27,7 @@ from ddsketch_spark.plans.shared import (
     bloom_oracle_sql,
     cms_hh_oracle_sql,
     hll_oracle_sql,
+    qs_sql,
 )
 from ddsketch_spark.sources.tables import read_table
 
@@ -179,7 +180,7 @@ def _bloom_spark(spark: SparkSession, sf_dir: str, table: str, value: str) -> Da
 # ---------------------------------------------------------------------------
 
 _EXACT_QS = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
-_EXACT_QS_SQL = ", ".join(f"CAST({q} AS DOUBLE)" for q in _EXACT_QS)
+_EXACT_QS_SQL = qs_sql(_EXACT_QS)
 
 
 def _max_group_n(df: DataFrame, value: str, group: str | None) -> int:

@@ -17,35 +17,13 @@ from pyspark.sql import functions as F
 from ddsketch_spark.functions.hashing import FOLD31, hash_params, mixed_hash_sql
 from ddsketch_spark.operators import dedup as dd
 from ddsketch_spark.operators.text_ops import FP_BASE, FP_MOD
-from ddsketch_spark.plans.shared import VOCAB_SQL, docs_tokens
+from ddsketch_spark.plans.shared import TOKSTREAM_SQL, components_sql, docs_tokens, shingles_sql
 from ddsketch_spark.sources.tables import read_table
 
 NUM_HASHES = dd.DEFAULT_NUM_HASHES  # 16
 BANDS = dd.DEFAULT_BANDS  # 4 bands x 4 rows
 _JACCARD_TAU = 0.9  # unigram within-source pairs (calibrated: ~800 @ sf0.01)
 _LSH_VERIFY_TAU = 0.5  # bigram candidates: keeps the planted near-dup
-
-
-# SQL: per-doc ordered token arrays + bigram shingles, from the shared
-# vocabulary coding (plans.shared).
-_TOKS_SQL = f"""
-toks AS (
-  SELECT wp.doc_id, wp.source, list(v.token ORDER BY wp.pos) AS tokens
-  FROM (
-    SELECT doc_id, source,
-           UNNEST(string_split(text, ' ')) AS word,
-           UNNEST(generate_series(1, len(string_split(text, ' ')))) AS pos
-    FROM documents
-  ) wp JOIN ({VOCAB_SQL}) v USING (word)
-  GROUP BY wp.doc_id, wp.source
-),
-vsz AS (SELECT COUNT(*) + 1 AS base FROM ({VOCAB_SQL})),
-shingles AS (
-  SELECT doc_id, UNNEST(list_distinct(
-    [tokens[i] * base + tokens[i+1] FOR i IN generate_series(1, len(tokens)-1)]
-  )) AS shingle
-  FROM toks, vsz
-)"""
 
 
 def _bigram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,7 +55,7 @@ def _minhash_oracle_sql() -> str:
         for j, (a, b) in enumerate(hash_params(NUM_HASHES, 42))
     )
     return f"""
-WITH {_TOKS_SQL}
+WITH shingles AS ({shingles_sql(2)})
 SELECT doc_id, {mins} FROM shingles GROUP BY doc_id
 """
 
@@ -111,6 +89,23 @@ def _lsh_buckets_oracle_sql() -> str:
 
 # 4. LSH candidates, verified by exact bigram Jaccard ------------------------
 
+def _jaccard_sql(tau: float, join: str) -> str:
+    """``sizes`` and ``inter`` CTEs and the select of the doc pairs of the
+    shingle CTE ``sh`` whose exact Jaccard is at least ``tau``; ``join``
+    narrows the self-join of ``sh a`` and ``sh b``."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id {join}
+  GROUP BY 1, 2
+)
+SELECT i.doc_a, i.doc_b, i.inter, sa.sz AS size_a, sb.sz AS size_b,
+       i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) AS jaccard
+FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
+WHERE i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) >= CAST({tau!r} AS DOUBLE)
+"""
+
+
 def _lsh_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle stream feeds three consumers (signatures, intersection,
     # sizes) -- persist it so the explode runs once, not per consumer.
@@ -136,19 +131,8 @@ cand AS (
   FROM buckets a JOIN buckets b
     ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
 ),
-{_TOKS_SQL.strip().lstrip()},
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT s1.doc_id AS doc_a, s2.doc_id AS doc_b, COUNT(*) AS inter
-  FROM shingles s1 JOIN shingles s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-  JOIN cand c ON c.doc_a = s1.doc_id AND c.doc_b = s2.doc_id
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b, i.inter, sa.sz AS size_a, sb.sz AS size_b,
-       i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) AS jaccard
-FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) >= CAST({_LSH_VERIFY_TAU!r} AS DOUBLE)
-"""
+sh AS ({shingles_sql(2)}),
+{_jaccard_sql(_LSH_VERIFY_TAU, "JOIN cand c ON c.doc_a = a.doc_id AND c.doc_b = b.doc_id")}"""
 
 
 # 4b. duplicate clusters (connected components over verified pairs) ----------
@@ -157,27 +141,6 @@ def _clusters_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     pairs = _lsh_pairs_spark(spark, sf_dir).select("doc_a", "doc_b")
     return dd.connected_components(docs, pairs)
-
-
-def _clusters_oracle_sql() -> str:
-    # transitive closure of min labels over the symmetric near-dup edge
-    # list; MIN per node == min doc id in the connected component, exactly
-    # what min-label propagation converges to
-    return f"""
-WITH RECURSIVE
-pairs AS ({_lsh_pairs_oracle_sql().strip()}),
-edges AS (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL
-  SELECT doc_b AS u, doc_a AS v FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-)
-SELECT node AS doc_id, MIN(lbl) AS component FROM reach GROUP BY node
-"""
 
 
 # 5. SimHash fingerprints ----------------------------------------------------
@@ -198,9 +161,7 @@ def _simhash_oracle_sql() -> str:
         for bit in range(dd.SIMHASH_BITS)
     )
     return f"""
-WITH {_TOKS_SQL},
-stream AS (SELECT doc_id, UNNEST(tokens) AS token FROM toks),
-counted AS (SELECT doc_id, token, COUNT(*) AS cnt FROM stream GROUP BY 1, 2),
+WITH counted AS (SELECT doc_id, token, COUNT(*) AS cnt FROM {TOKSTREAM_SQL} s GROUP BY 1, 2),
 hashed AS (
   SELECT doc_id, cnt, {mixed_hash_sql('token', a, b)} AS hm FROM counted
 ),
@@ -221,22 +182,8 @@ def _jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _jaccard_oracle_sql() -> str:
     return f"""
-WITH {_TOKS_SQL},
-uni AS (
-  SELECT doc_id, source, UNNEST(list_distinct(tokens)) AS shingle FROM toks
-),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM uni GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM uni a JOIN uni b
-    ON a.shingle = b.shingle AND a.source = b.source AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b, i.inter, sa.sz AS size_a, sb.sz AS size_b,
-       i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) AS jaccard
-FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE i.inter::DOUBLE / (sa.sz + sb.sz - i.inter) >= CAST({_JACCARD_TAU!r} AS DOUBLE)
-"""
+WITH sh AS ({shingles_sql(1)}),
+{_jaccard_sql(_JACCARD_TAU, "AND a.source = b.source")}"""
 
 
 # 7. benchmark decontamination ------------------------------------------------
@@ -266,15 +213,8 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontam_oracle_sql() -> str:
-    bigram = "[tokens[i] * base + tokens[i+1] FOR i IN generate_series(1, len(tokens)-1)]"
-    trigram = (
-        "[(tokens[i] * base + tokens[i+1]) * base + tokens[i+2] "
-        "FOR i IN generate_series(1, len(tokens)-2)]"
-    )
-    assert bigram in _TOKS_SQL, "shared toks CTE changed; update trigram rewrite"
-    toks3 = _TOKS_SQL.replace(bigram, trigram)
     return f"""
-WITH {toks3},
+WITH shingles AS ({shingles_sql(3)}),
 eval_sh AS (SELECT DISTINCT shingle FROM shingles WHERE doc_id % {_DECON_MOD} = 0),
 hits AS (
   SELECT s.doc_id, COUNT(*) AS n_hits
@@ -291,7 +231,8 @@ ROWS = (
     ("dedup_minhash_signatures", _minhash_spark, lambda _: _minhash_oracle_sql()),
     ("dedup_lsh_buckets", _lsh_buckets_spark, lambda _: _lsh_buckets_oracle_sql()),
     ("dedup_lsh_pairs_verified", _lsh_pairs_spark, lambda _: _lsh_pairs_oracle_sql()),
-    ("dedup_duplicate_clusters", _clusters_spark, lambda _: _clusters_oracle_sql()),
+    ("dedup_duplicate_clusters", _clusters_spark,
+     lambda _: components_sql(_lsh_pairs_oracle_sql(), "doc_a", "doc_b", "documents", "doc_id")),
     ("dedup_simhash", _simhash_spark, lambda _: _simhash_oracle_sql()),
     ("dedup_jaccard_pairs_by_source", _jaccard_spark, lambda _: _jaccard_oracle_sql()),
     ("decontam_ngram_overlap", _decontam_spark, lambda _: _decontam_oracle_sql()),

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.operators import sampling as smp
 from ddsketch_spark.operators.sampling import threshold, unit_hash_sql
-from ddsketch_spark.operators.text_ops import STOPWORDS, words_col
+from ddsketch_spark.operators.text_ops import word_features
+from ddsketch_spark.plans.shared import word_features_sql
 from ddsketch_spark.sources.tables import read_table
 
 _MIN_WORDS = 5
@@ -30,13 +31,7 @@ _SAMPLE_FRACTION = 0.5
 
 def _retained_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    w = words_col("text")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_words = F.size(w)
-    stop_ratio = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))).cast(
-        "double"
-    ) / n_words
-    dist_ratio = F.size(F.array_distinct(w)).cast("double") / n_words
+    n_words, stop_ratio, dist_ratio = word_features("text")
     filtered = docs.where(
         (n_words >= F.lit(_MIN_WORDS))
         & (stop_ratio >= F.lit(_MIN_STOPWORD_RATIO))
@@ -62,18 +57,16 @@ def _retained_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _retained_sql() -> str:
-    stops = list(STOPWORDS)
+    n_words, stop_ratio, dist_ratio = word_features_sql("ws")
     return f"""
 WITH s AS (
   SELECT *, string_split(text, ' ') AS ws FROM documents
 ),
 filtered AS (
   SELECT doc_id, source, text, n_chars FROM s
-  WHERE len(ws) >= {_MIN_WORDS}
-    AND len(list_filter(ws, x -> list_contains({stops!r}, x)))::DOUBLE / len(ws)
-        >= CAST({_MIN_STOPWORD_RATIO!r} AS DOUBLE)
-    AND len(list_distinct(ws))::DOUBLE / len(ws)
-        >= CAST({_MIN_DISTINCT_RATIO!r} AS DOUBLE)
+  WHERE {n_words} >= {_MIN_WORDS}
+    AND {stop_ratio} >= CAST({_MIN_STOPWORD_RATIO!r} AS DOUBLE)
+    AND {dist_ratio} >= CAST({_MIN_DISTINCT_RATIO!r} AS DOUBLE)
 ),
 retained AS (
   SELECT doc_id, source, text, n_chars FROM (

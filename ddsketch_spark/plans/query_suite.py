@@ -16,9 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
-from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL, sig6_mantissa
+from ddsketch_spark.functions.ddsketch_sql import dds_key, dds_strip_offset
 from ddsketch_spark.operators import ddsketch_agg as agg
-from ddsketch_spark.plans.shared import OCFG, QS, estimate_sql, key_sql, quantile_oracle_sql
+from ddsketch_spark.plans.shared import OCFG, graded, keyed_sql, quantile_oracle_sql, strip_sql
 from ddsketch_spark.sources.tables import read_table
 
 
@@ -27,11 +27,7 @@ def _quantiles_spark(
 ) -> DataFrame:
     df = read_table(spark, sf_dir, table)
     groups = (group,) if group else ()
-    out = agg.quantiles(df, value_col, Q_GRID, OCFG, group_cols=groups)
-    cols = ([group] if group else []) + ["q", "bucket_key"]
-    return out.select(
-        *cols, sig6_mantissa(F.col("estimate")).alias("est_m6"), "n"
-    )
+    return graded(agg.quantiles(df, value_col, Q_GRID, OCFG, group_cols=groups), *groups)
 
 
 # ---------------------------------------------------------------------------
@@ -41,23 +37,19 @@ def _quantiles_spark(
 def _hist_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = read_table(spark, sf_dir, "lineitem")
     hist = agg.histogram(df, "l_extendedprice", OCFG)
-    from ddsketch_spark.functions.ddsketch_sql import dds_strip_offset
-
     return hist.select(
         dds_strip_offset(F.col("key"), OCFG).alias("bucket_key"),
         F.col("cnt").alias("cnt"),
     )
 
 
-_HIST_SQL = f"""
-WITH keyed AS (
-  SELECT {key_sql('v')} AS key
-  FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)
-)
-SELECT CASE WHEN key > 0 THEN key - {OCFG.offset} WHEN key < 0 THEN key + {OCFG.offset} ELSE 0 END AS bucket_key,
-       COUNT(*) AS cnt
+def _hist_oracle_sql(value: str, where: str = "") -> str:
+    return f"""
+WITH {keyed_sql("lineitem", value, where=where)}
+SELECT {strip_sql('key')} AS bucket_key, COUNT(*) AS cnt
 FROM keyed GROUP BY key
 """
+
 
 # collapsed histogram: Spark runs the real bounded-memory operator
 # (bin_limit=80 -> exactly 2 gamma^2 collapses on this table); the oracle
@@ -71,34 +63,27 @@ def _collapsed_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = read_table(spark, sf_dir, "lineitem")
     cfg = DDSketchConfig(bin_limit=_COLLAPSE_LIMIT)
     sk = agg.sketch(df, "l_extendedprice", cfg)
-    out = sk.select(
+    return sk.select(
         F.col("level"),
         F.posexplode(F.arrays_zip(F.col("keys"), F.col("counts"))).alias("pos", "kc"),
     ).select(
         "level",
-        (F.col("kc.keys") - F.lit(cfg.offset)).alias("bucket_key"),
+        dds_strip_offset(F.col("kc.keys"), cfg).alias("bucket_key"),
         F.col("kc.counts").alias("cnt"),
     )
-    return out
 
 
 def _collapsed_oracle_sql() -> str:
     off = OCFG.offset
-    remap = "CASE WHEN k > 0 THEN CAST(floor((k - {off} + 1) / 2.0) AS BIGINT) + {off} ELSE k END"
     # all lineitem prices are positive -> stored keys positive; remap is
     # ceil(stripped/2) == floor((stripped+1)/2)
     expr = "key"
     for _ in range(_COLLAPSE_LEVELS):
         expr = f"CAST(floor((({expr}) - {off} + 1) / 2.0) AS BIGINT) + {off}"
     return f"""
-WITH keyed AS (
-  SELECT {key_sql('v')} AS key
-  FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)
-)
-SELECT {_COLLAPSE_LEVELS} AS level,
-       ({expr}) - {off} AS bucket_key,
-       COUNT(*) AS cnt
-FROM keyed GROUP BY 2
+WITH {keyed_sql("lineitem", "l_extendedprice")}
+SELECT {_COLLAPSE_LEVELS} AS level, {strip_sql('ckey')} AS bucket_key, COUNT(*) AS cnt
+FROM (SELECT {expr} AS ckey FROM keyed) GROUP BY 2
 """
 
 
@@ -108,27 +93,12 @@ def _delete_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted = agg.delete_from_sketch(
         sk, df.where(F.col("l_returnflag") == "R"), "l_quantity", OCFG
     )
-    from ddsketch_spark.functions.ddsketch_sql import dds_strip_offset
-
     return deleted.select(
         F.posexplode(F.arrays_zip(F.col("keys"), F.col("counts"))).alias("pos", "kc")
     ).select(
-        (F.col("kc.keys") - F.lit(OCFG.offset)).alias("bucket_key"),
+        dds_strip_offset(F.col("kc.keys"), OCFG).alias("bucket_key"),
         F.col("kc.counts").alias("cnt"),
     )
-
-
-# deleting the 'R' multiset from the full sketch leaves exactly the
-# complement histogram (every deleted bin count <= inserted bin count)
-_DELETE_SQL = f"""
-WITH keyed AS (
-  SELECT {key_sql('v')} AS key
-  FROM (SELECT CAST(l_quantity AS DOUBLE) AS v FROM lineitem
-        WHERE l_quantity IS NOT NULL AND l_returnflag <> 'R')
-)
-SELECT key - {OCFG.offset} AS bucket_key, COUNT(*) AS cnt
-FROM keyed GROUP BY key
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -172,10 +142,7 @@ def _error_bound_oracle_sql() -> str:
     # tail bin, so fat_count = n - sum(kept counts)
     keep = _EB_LIMIT - 1
     return f"""
-WITH keyed AS (
-  SELECT {key_sql('v')} AS key
-  FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)
-),
+WITH {keyed_sql("lineitem", "l_extendedprice")},
 hist AS (SELECT key, COUNT(*) AS c FROM keyed GROUP BY key),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM hist),
 keep_last AS (SELECT CAST(SUM(c) AS BIGINT) AS s FROM (SELECT c FROM hist ORDER BY key ASC LIMIT {keep})),
@@ -194,42 +161,14 @@ def _weighted_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantiles of price where each row counts l_quantity times (the
     core's add_weighted semantics through the JVM histogram path)."""
     df = read_table(spark, sf_dir, "lineitem")
-    out = agg.quantiles(
+    return graded(agg.quantiles(
         df, "l_extendedprice", Q_GRID, OCFG, weight=F.col("l_quantity").cast("long")
-    )
-    return out.select(
-        "q", "bucket_key", sig6_mantissa(F.col("estimate")).alias("est_m6"), "n"
-    )
-
-
-_WEIGHTED_SQL = f"""
-WITH keyed AS (
-  SELECT {key_sql('v')} AS key, w
-  FROM (SELECT CAST(l_extendedprice AS DOUBLE) AS v, CAST(l_quantity AS BIGINT) AS w
-        FROM lineitem WHERE l_extendedprice IS NOT NULL)
-),
-hist AS (SELECT key, CAST(SUM(w) AS BIGINT) AS cnt FROM keyed GROUP BY key),
-tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM hist),
-cum AS (SELECT key, SUM(cnt) OVER (ORDER BY key) AS cumc FROM hist),
-qs AS (SELECT UNNEST([{QS}]) AS q),
-sel AS (
-  SELECT qs.q AS q,
-         (SELECT MIN(c.key) FROM cum c, tot t WHERE c.cumc > qs.q * (t.n - 1)) AS key,
-         (SELECT t.n FROM tot t) AS n
-  FROM qs
-)
-SELECT q,
-  CASE WHEN key > 0 THEN key - {OCFG.offset} WHEN key < 0 THEN key + {OCFG.offset} ELSE 0 END AS bucket_key,
-  {SIG6_SQL.format(x=estimate_sql('key'))} AS est_m6,
-  n
-FROM sel
-"""
+    ))
 
 
 def _rollup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level rollup (per-source + global) in one result -- the manual
     grouping-sets pattern (SURVEY.md §2.2)."""
-    df = read_table(spark, sf_dir, "documents")
     per = _quantiles_spark(spark, sf_dir, "documents", "n_chars", "source")
     glob = _quantiles_spark(spark, sf_dir, "documents", "n_chars", None).withColumn(
         "source", F.lit("ALL")
@@ -276,15 +215,10 @@ def _incremental_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated = udaf.update_sketch_states(
         states, new, "l_extendedprice", OCFG, group_cols=groups
     )
-    out = agg.quantiles_from_sketch(updated, Q_GRID, group_cols=groups)
-    return out.select(
-        *groups, "q", "bucket_key", sig6_mantissa(F.col("estimate")).alias("est_m6"), "n"
-    )
+    return graded(agg.quantiles_from_sketch(updated, Q_GRID, group_cols=groups), *groups)
 
 
 def _trim_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ddsketch_spark.functions.ddsketch_sql import dds_key, dds_strip_offset
-
     df = read_table(spark, sf_dir, "documents")
     thr = agg.quantiles(
         df, "n_chars", (_TRIM_Q,), OCFG, group_cols=("source",)
@@ -311,31 +245,16 @@ def _trim_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trim_oracle_sql() -> str:
-    off = OCFG.offset
-    strip = f"CASE WHEN key > 0 THEN key - {off} WHEN key < 0 THEN key + {off} ELSE 0 END"
+    thr = quantile_oracle_sql("documents", "n_chars", "source", qs=(_TRIM_Q,))
     return f"""
-WITH keyed AS (
-  SELECT source, n_chars, {strip} AS skey
-  FROM (
-    SELECT source, n_chars, {key_sql('v')} AS key
-    FROM (SELECT source, n_chars, CAST(n_chars AS DOUBLE) AS v
-          FROM documents WHERE n_chars IS NOT NULL)
-  )
-),
-hist AS (SELECT source, skey, COUNT(*) AS cnt FROM keyed GROUP BY source, skey),
-tot AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n FROM hist GROUP BY source),
-cum AS (SELECT source, skey, SUM(cnt) OVER (PARTITION BY source ORDER BY skey) AS cumc FROM hist),
-thr AS (
-  SELECT t.source,
-         (SELECT MIN(c.skey) FROM cum c
-           WHERE c.source = t.source AND c.cumc > CAST({_TRIM_Q} AS DOUBLE) * (t.n - 1)) AS thr_key
-  FROM tot t
-)
+WITH {keyed_sql("documents", "n_chars", ("source", "n_chars"))},
+k AS (SELECT source, n_chars, {strip_sql('key')} AS skey FROM keyed),
+thr AS (SELECT source, bucket_key AS thr_key FROM ({thr}))
 SELECT k.source,
        CAST(SUM(CASE WHEN k.skey <= thr.thr_key THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
        CAST(SUM(CASE WHEN k.skey > thr.thr_key THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
        CAST(SUM(CASE WHEN k.skey <= thr.thr_key THEN k.n_chars ELSE 0 END) AS BIGINT) AS chars_kept
-FROM keyed k JOIN thr ON k.source = thr.source
+FROM k JOIN thr ON k.source = thr.source
 GROUP BY k.source
 """
 
@@ -353,12 +272,16 @@ ROWS = (
     ("dds_quantiles_nchars_by_source",
      lambda s, d: _quantiles_spark(s, d, "documents", "n_chars", "source"),
      lambda _: quantile_oracle_sql("documents", "n_chars", "source")),
-    ("dds_histogram_price", _hist_spark, lambda _: _HIST_SQL),
+    ("dds_histogram_price", _hist_spark, lambda _: _hist_oracle_sql("l_extendedprice")),
     ("dds_error_bound_collapse", _error_bound_spark, lambda _: _error_bound_oracle_sql()),
     ("dds_quantiles_rollup", _rollup_spark, lambda _: _rollup_oracle_sql()),
-    ("dds_weighted_quantiles_price", _weighted_quantiles_spark, lambda _: _WEIGHTED_SQL),
+    ("dds_weighted_quantiles_price", _weighted_quantiles_spark,
+     lambda _: quantile_oracle_sql("lineitem", "l_extendedprice", weight="l_quantity")),
     ("dds_histogram_price_collapsed", _collapsed_spark, lambda _: _collapsed_oracle_sql()),
-    ("dds_delete_quantity", _delete_spark, lambda _: _DELETE_SQL),
+    # deleting the 'R' multiset from the full sketch leaves exactly the
+    # complement histogram (every deleted bin count <= inserted bin count)
+    ("dds_delete_quantity", _delete_spark,
+     lambda _: _hist_oracle_sql("l_quantity", where="l_returnflag <> 'R'")),
     ("dds_trim_outliers_by_source", _trim_spark, lambda _: _trim_oracle_sql()),
     # incremental update is byte-identical to the full build, so its oracle
     # is the ordinary full-table per-group quantile SQL

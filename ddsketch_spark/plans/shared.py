@@ -1,6 +1,17 @@
-"""What several query suites share: the token stream both engines derive
-from documents.text, and the DuckDB oracle builders for DDSketch
-quantiles, HLL, count-min heavy hitters and Bloom membership.
+"""What several query suites share, written once per engine.
+
+* The token stream both engines derive from documents.text: Spark's
+  ``docs_tokens``; in SQL the ``(doc_id, source, pos, token)`` stream
+  ``TOKSTREAM_SQL``, the per-doc ordered arrays ``TOKS_SQL`` built from it,
+  and ``shingles_sql(n)``, the distinct n-gram shingles built from those.
+* The SQL twin of ``operators.text_ops.word_features``:
+  ``word_features_sql`` (word count, stopword ratio, distinct ratio).
+* DDSketch, in Spark the graded quantile projection ``graded``; in SQL the
+  ``keyed`` CTE (``keyed_sql``), the offset strip (``strip_sql``), the
+  quantile literals (``qs_sql``) and the rank walk
+  (``quantile_oracle_sql``, optionally weighted, over any quantile grid).
+* The DuckDB oracle builders for HLL, count-min heavy hitters and Bloom
+  membership.
 
 Oracle-mode DDSketch config: bin_limit=4096, so no collapse fires at the
 oracle scale (every table here keys into < 700 bins) -- collapse is
@@ -10,25 +21,32 @@ applies the integer gamma^2 key remap a fixed number of times.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ddsketch_spark.config import Q_GRID, DDSketchConfig
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
-from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL
+from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL, sig6_mantissa
 from ddsketch_spark.functions.hashing import HASH_BITS, bitlen_sql, mixed_hash_sql
-from ddsketch_spark.operators.text_ops import tokenize
+from ddsketch_spark.operators.text_ops import STOPWORDS, tokenize
 from ddsketch_spark.sources.tables import read_table
 
 OCFG = DDSketchConfig(bin_limit=4096)
 HLL_CFG = HLLConfig(p=12)
 CMS_CFG = CMSConfig(depth=4, width=2048)
 BLOOM_CFG = BloomConfig(m_bits=1 << 16, k=5)
-# q literals cast to DOUBLE so the oracle's stop = q*(n-1) is IEEE-double
-# arithmetic exactly like the Spark/numpy side (DuckDB would otherwise parse
-# 0.01 as DECIMAL and compute an exact stop that can flip a boundary bucket)
-QS = ", ".join(f"CAST({q} AS DOUBLE)" for q in Q_GRID)
+
+
+def qs_sql(qs: Sequence[float]) -> str:
+    """Quantile literals cast to DOUBLE, so the oracle's stop = q*(n-1) is
+    IEEE-double arithmetic exactly like the Spark/numpy side (DuckDB would
+    otherwise parse 0.01 as DECIMAL and compute an exact stop that can flip
+    a boundary bucket)."""
+    return ", ".join(f"CAST({q} AS DOUBLE)" for q in qs)
 
 
 # ---------------------------------------------------------------------------
@@ -42,16 +60,37 @@ VOCAB_SQL = (
     "(SELECT DISTINCT UNNEST(string_split(text, ' ')) AS word FROM documents)"
 )
 
-# (source, pos, token) stream -- DuckDB zips parallel UNNESTs positionally.
+# (doc_id, source, pos, token) stream -- DuckDB zips parallel UNNESTs positionally.
 TOKSTREAM_SQL = f"""(
-  SELECT wp.source, wp.pos, v.token
+  SELECT wp.doc_id, wp.source, wp.pos, v.token
   FROM (
-    SELECT source,
+    SELECT doc_id, source,
            UNNEST(string_split(text, ' ')) AS word,
            UNNEST(generate_series(1, len(string_split(text, ' ')))) AS pos
     FROM documents
   ) wp JOIN ({VOCAB_SQL}) v USING (word)
 )"""
+
+# (doc_id, source, tokens): the stream re-assembled in position order, the
+# twin of docs_tokens
+TOKS_SQL = f"""(
+  SELECT doc_id, source, list(token ORDER BY pos) AS tokens
+  FROM {TOKSTREAM_SQL} s GROUP BY doc_id, source
+)"""
+
+
+def shingles_sql(n: int) -> str:
+    """(doc_id, source, shingle): each doc's distinct n-gram codes, the twin
+    of operators.dedup.doc_shingles over docs_tokens (base = vocab size + 1;
+    a doc shorter than n tokens has none)."""
+    gram = "tokens[i]"
+    for j in range(1, n):
+        gram = f"({gram}) * base + tokens[i+{j}]"
+    return f"""
+SELECT doc_id, source, UNNEST(list_distinct(
+  [{gram} FOR i IN generate_series(1, len(tokens) - {n - 1})]
+)) AS shingle
+FROM {TOKS_SQL} toks, (SELECT COUNT(*) + 1 AS base FROM ({VOCAB_SQL})) vsz"""
 
 
 def docs_tokens(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
@@ -62,9 +101,50 @@ def docs_tokens(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     return toked.select("doc_id", "source", "tokens"), vsize
 
 
+def word_features_sql(ws: str = "ws") -> tuple[str, str, str]:
+    """(n_words, stopword_ratio, distinct_ratio) of the word list ``ws``:
+    the SQL twin of operators.text_ops.word_features."""
+    return (
+        f"len({ws})",
+        f"len(list_filter({ws}, x -> list_contains({list(STOPWORDS)!r}, x)))::DOUBLE / len({ws})",
+        f"len(list_distinct({ws}))::DOUBLE / len({ws})",
+    )
+
+
+def components_sql(pairs: str, a: str, b: str, nodes: str, node: str) -> str:
+    """Connected components of the edge list ``pairs`` (columns ``a``, ``b``)
+    over the ``node`` ids of ``nodes``: the transitive closure of min labels
+    over the symmetric edges, so each node gets the least id of its
+    component -- what min-label propagation (operators.dedup.
+    connected_components) converges to."""
+    return f"""
+WITH RECURSIVE
+pairs AS ({pairs.strip()}),
+edges AS (
+  SELECT {a} AS u, {b} AS v FROM pairs
+  UNION ALL
+  SELECT {b} AS u, {a} AS v FROM pairs
+),
+reach(node, lbl) AS (
+  SELECT {node}, {node} FROM {nodes}
+  UNION
+  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
+)
+SELECT node AS {node}, MIN(lbl) AS component FROM reach GROUP BY node
+"""
+
+
 # ---------------------------------------------------------------------------
 # DDSketch: gamma-bucket keying, histogram, rank walk, midpoint estimator
 # ---------------------------------------------------------------------------
+
+def graded(out: DataFrame, *groups: str) -> DataFrame:
+    """The graded projection of a quantile table: (groups..., q, bucket_key,
+    est_m6, n), the estimate as its 6-digit mantissa."""
+    return out.select(
+        *groups, "q", "bucket_key", sig6_mantissa(F.col("estimate")).alias("est_m6"), "n"
+    )
+
 
 def key_sql(v: str = "v") -> str:
     return (
@@ -72,6 +152,24 @@ def key_sql(v: str = "v") -> str:
         f"WHEN {v} < 0 THEN -CAST(ceil(ln(-{v})/{OCFG.ln_gamma!r}) AS BIGINT) - {OCFG.offset} "
         f"ELSE 0 END"
     )
+
+
+def strip_sql(k: str = "key") -> str:
+    """stored key -> offset-stripped key (the twin of dds_strip_offset)."""
+    off = OCFG.offset
+    return f"CASE WHEN {k} > 0 THEN {k} - {off} WHEN {k} < 0 THEN {k} + {off} ELSE 0 END"
+
+
+def keyed_sql(table: str, value: str, cols: Sequence[str] = (), where: str = "") -> str:
+    """The ``keyed`` CTE: the stored key of every non-null ``value`` of
+    ``table`` (rows also meeting ``where``), after the select-list items
+    ``cols``, which may name any column of ``table``."""
+    sel = "".join(f"{c}, " for c in cols)
+    cond = f" AND {where}" if where else ""
+    return f"""keyed AS (
+  SELECT {sel}{key_sql('v')} AS key
+  FROM (SELECT *, CAST({value} AS DOUBLE) AS v FROM {table} WHERE {value} IS NOT NULL{cond})
+)"""
 
 
 def estimate_sql(k: str = "key") -> str:
@@ -84,25 +182,31 @@ def estimate_sql(k: str = "key") -> str:
     )
 
 
-def quantile_oracle_sql(table: str, value_expr: str, group: str | None = None) -> str:
+def quantile_oracle_sql(
+    table: str,
+    value_expr: str,
+    group: str | None = None,
+    weight: str | None = None,
+    qs: Sequence[float] = Q_GRID,
+) -> str:
     """Full DDSketch quantile pipeline in SQL: key -> histogram -> cumulative
     walk with stop = q*(n-1) (reference: ddsketch.cc:538) -> midpoint
-    estimate, optionally per group."""
+    estimate, optionally per group. With ``weight`` each row counts that
+    integer expression times (add_weighted), else once."""
     gsel = f"{group}, " if group else ""
     gby = f"GROUP BY {group}, key" if group else "GROUP BY key"
     gpart = f"PARTITION BY {group}" if group else ""
     gjoin = f"AND c.{group} = qs.{group}" if group else ""
+    cols = ([group] if group else []) + ([f"CAST({weight} AS BIGINT) AS w"] if weight else [])
+    cnt = "CAST(SUM(w) AS BIGINT)" if weight else "COUNT(*)"
     qs_src = (
-        f"(SELECT DISTINCT {group}, UNNEST([{QS}]) AS q FROM hist) "
+        f"(SELECT DISTINCT {group}, UNNEST([{qs_sql(qs)}]) AS q FROM hist) "
         if group
-        else f"(SELECT UNNEST([{QS}]) AS q) "
+        else f"(SELECT UNNEST([{qs_sql(qs)}]) AS q) "
     )
     return f"""
-WITH keyed AS (
-  SELECT {gsel}{key_sql('v')} AS key
-  FROM (SELECT {gsel}CAST({value_expr} AS DOUBLE) AS v FROM {table} WHERE {value_expr} IS NOT NULL)
-),
-hist AS (SELECT {gsel}key, COUNT(*) AS cnt FROM keyed {gby}),
+WITH {keyed_sql(table, value_expr, cols)},
+hist AS (SELECT {gsel}key, {cnt} AS cnt FROM keyed {gby}),
 tot AS (SELECT {gsel}CAST(SUM(cnt) AS BIGINT) AS n FROM hist {('GROUP BY ' + group) if group else ''}),
 cum AS (SELECT {gsel}key, SUM(cnt) OVER ({gpart} ORDER BY key) AS cumc FROM hist),
 qs AS (SELECT * FROM {qs_src}),
@@ -115,7 +219,7 @@ sel AS (
   FROM qs
 )
 SELECT {gsel}q,
-  CASE WHEN key > 0 THEN key - {OCFG.offset} WHEN key < 0 THEN key + {OCFG.offset} ELSE 0 END AS bucket_key,
+  {strip_sql('key')} AS bucket_key,
   {SIG6_SQL.format(x=estimate_sql('key'))} AS est_m6,
   n
 FROM sel

@@ -14,8 +14,7 @@ from pyspark.sql import functions as F
 from ddsketch_spark.functions.ddsketch_sql import SIG6_SQL, sig6_mantissa
 from ddsketch_spark.operators import similarity as sim
 from ddsketch_spark.operators import text_ops
-from ddsketch_spark.operators.text_ops import STOPWORDS
-from ddsketch_spark.plans.shared import VOCAB_SQL, docs_tokens
+from ddsketch_spark.plans.shared import TOKS_SQL, components_sql, docs_tokens, word_features_sql
 from ddsketch_spark.sources.tables import read_table
 
 _TOPK = 5
@@ -51,84 +50,89 @@ def _cos_sql(a: str, b: str) -> str:
     return f"({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
-# 1. brute-force cosine top-k ------------------------------------------------
+def _vec_sql(vec) -> str:
+    """A DOUBLE[] literal (hyperplane or centroid)."""
+    return "([" + ", ".join(repr(float(c)) for c in vec) + "]::DOUBLE[])"
 
-def _topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < _N_PROBES).select(
+
+def _plane_bucket_sql(vec: str, planes) -> str:
+    """Hyperplane-LSH bucket of ``vec``: bit j is set when its dot product
+    with ``planes[j]`` is positive (sim.lsh_ann / sim.lsh_band_buckets)."""
+    return "(" + " + ".join(
+        f"(CASE WHEN {_dot_sql(vec, _vec_sql(plane))} > 0 THEN {1 << j} ELSE 0 END)"
+        for j, plane in enumerate(planes)
+    ) + ")"
+
+
+# The ANN rows share their probes (the first _N_PROBES vectors) and their
+# exact rerank: every candidate of a probe scored by the sequential cosine,
+# the top _TOPK kept, ties to the lower neighbor id.
+
+def _probes(emb: DataFrame) -> DataFrame:
+    return emb.where(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), "embedding"
     )
-    # the Arrow-matmul scale path: its cosines differ from the sequential
-    # fold (and DuckDB's list_reduce) in the last ulp, so the row is graded
-    # on the ranking alone
-    out = sim.cosine_topk_fast(emb, probes, _TOPK)
-    return out.select("probe_id", "rank", "neighbor")
 
 
-_TOPK_SQL = f"""
-WITH probes AS (
-  SELECT vec_id AS probe_id, embedding AS pvec FROM embeddings WHERE vec_id < {_N_PROBES}
-),
-scored AS (
-  SELECT p.probe_id, e.vec_id AS neighbor,
-         {_cos_sql('p.pvec', 'e.embedding')} AS cosine
-  FROM embeddings e, probes p WHERE e.vec_id <> p.probe_id
+def _probes_sql(extra: str = "") -> str:
+    return (
+        f"SELECT vec_id AS probe_id, embedding AS pvec{extra} "
+        f"FROM embeddings WHERE vec_id < {_N_PROBES}"
+    )
+
+
+def _rerank_sql(cands: str, on: str, cos_m6: bool = True) -> str:
+    """``scored`` and ``ranked`` CTEs and the top-k select over the
+    candidates ``cands`` (vec_id, embedding) matched to the probes ``p`` on
+    ``on``."""
+    m6 = f", {SIG6_SQL.format(x='cosine')} AS cos_m6" if cos_m6 else ""
+    return f"""scored AS (
+  SELECT p.probe_id, c.vec_id AS neighbor,
+         {_cos_sql('p.pvec', 'c.embedding')} AS cosine
+  FROM {cands} c JOIN p ON {on} AND c.vec_id <> p.probe_id
 ),
 ranked AS (
   SELECT probe_id, neighbor, cosine,
          row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor) AS rank
   FROM scored
 )
-SELECT probe_id, rank, neighbor FROM ranked WHERE rank <= {_TOPK}
+SELECT probe_id, rank, neighbor{m6}
+FROM ranked WHERE rank <= {_TOPK}
 """
+
+
+# 1. brute-force cosine top-k ------------------------------------------------
+
+def _topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = read_table(spark, sf_dir, "embeddings")
+    # the Arrow-matmul scale path: its cosines differ from the sequential
+    # fold (and DuckDB's list_reduce) in the last ulp, so the row is graded
+    # on the ranking alone
+    out = sim.cosine_topk_fast(emb, _probes(emb), _TOPK)
+    return out.select("probe_id", "rank", "neighbor")
+
+
+_TOPK_SQL = f"""
+WITH p AS ({_probes_sql()}),
+{_rerank_sql("embeddings", "TRUE", cos_m6=False)}"""
 
 
 # 2. hyperplane-LSH bucketed ANN ---------------------------------------------
 
 def _lsh_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    out = sim.lsh_ann(emb, probes, _TOPK, n_planes=_N_PLANES)
+    out = sim.lsh_ann(emb, _probes(emb), _TOPK, n_planes=_N_PLANES)
     return out.select(
         "probe_id", "rank", "neighbor", sig6_mantissa(F.col("cosine")).alias("cos_m6")
     )
 
 
 def _lsh_ann_oracle_sql() -> str:
-    planes = sim.hyperplanes(_N_PLANES, sim.EMB_DIM)
-    plane_lits = [
-        "([" + ", ".join(repr(float(c)) for c in plane) + "]::DOUBLE[])"
-        for plane in planes
-    ]
-    bucket_terms = " + ".join(
-        "(CASE WHEN " + _dot_sql("%s", lit) + " > 0 THEN " + str(1 << j) + " ELSE 0 END)"
-        for j, lit in enumerate(plane_lits)
-    )
-
-    def bucket(vec: str) -> str:
-        return "(" + bucket_terms.replace("%s", vec) + ")"
-
+    bucket = _plane_bucket_sql("embedding", sim.hyperplanes(_N_PLANES, sim.EMB_DIM))
     return f"""
-WITH c AS (SELECT vec_id, embedding, {bucket('embedding')} AS bucket FROM embeddings),
-probes AS (
-  SELECT vec_id AS probe_id, embedding AS pvec, {bucket('embedding')} AS bucket
-  FROM embeddings WHERE vec_id < {_N_PROBES}
-),
-scored AS (
-  SELECT p.probe_id, c.vec_id AS neighbor,
-         {_cos_sql('p.pvec', 'c.embedding')} AS cosine
-  FROM c JOIN probes p ON c.bucket = p.bucket AND c.vec_id <> p.probe_id
-),
-ranked AS (
-  SELECT probe_id, neighbor, cosine,
-         row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor) AS rank
-  FROM scored
-)
-SELECT probe_id, rank, neighbor, {SIG6_SQL.format(x='cosine')} AS cos_m6
-FROM ranked WHERE rank <= {_TOPK}
-"""
+WITH c AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
+p AS ({_probes_sql(f", {bucket} AS bucket")}),
+{_rerank_sql("c", "c.bucket = p.bucket")}"""
 
 
 # 3. embedding near-dup pairs ------------------------------------------------
@@ -151,10 +155,7 @@ def _ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds, and the two pick the same cells on this corpus (the rerank
     cosine is the fold on both sides)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    out = sim.ivf_ann(emb, probes, _TOPK, n_cells=_IVF_CELLS, n_probe_cells=_IVF_PROBE_CELLS)
+    out = sim.ivf_ann(emb, _probes(emb), _TOPK, n_cells=_IVF_CELLS, n_probe_cells=_IVF_PROBE_CELLS)
     return out.select(
         "probe_id", "rank", "neighbor", sig6_mantissa(F.col("cosine")).alias("cos_m6")
     )
@@ -186,8 +187,7 @@ def _ivf_oracle_sql(oracle_sf_dir: str) -> str:
     c2 = (cents * cents).sum(axis=1) / 2.0
 
     def score(vec: str, i: int) -> str:
-        lit = "([" + ", ".join(repr(float(v)) for v in cents[i]) + "]::DOUBLE[])"
-        return f"({_dot_sql(vec, lit)} - {float(c2[i])!r})"
+        return f"({_dot_sql(vec, _vec_sql(cents[i]))} - {float(c2[i])!r})"
 
     def score_list(vec: str) -> str:
         return "[" + ", ".join(score(vec, i) for i in range(len(cents))) + "]"
@@ -199,10 +199,7 @@ c AS (
          CAST(list_indexof(sc, list_aggregate(sc, 'max')) - 1 AS INTEGER) AS cell
   FROM ce
 ),
-pe AS (
-  SELECT vec_id AS probe_id, embedding AS pvec, {score_list('embedding')} AS sc
-  FROM embeddings WHERE vec_id < {_N_PROBES}
-),
+pe AS ({_probes_sql(f", {score_list('embedding')} AS sc")}),
 pc AS (
   SELECT probe_id, pvec,
          UNNEST(generate_series(0, {len(cents) - 1})) AS cell,
@@ -215,19 +212,7 @@ pr AS (
   FROM pc
 ),
 p AS (SELECT probe_id, pvec, CAST(cell AS INTEGER) AS cell FROM pr WHERE cr <= {_IVF_PROBE_CELLS}),
-scored AS (
-  SELECT p.probe_id, c.vec_id AS neighbor,
-         {_cos_sql('p.pvec', 'c.embedding')} AS cosine
-  FROM c JOIN p ON c.cell = p.cell AND c.vec_id <> p.probe_id
-),
-ranked AS (
-  SELECT probe_id, neighbor, cosine,
-         row_number() OVER (PARTITION BY probe_id ORDER BY cosine DESC, neighbor) AS rank
-  FROM scored
-)
-SELECT probe_id, rank, neighbor, {SIG6_SQL.format(x='cosine')} AS cos_m6
-FROM ranked WHERE rank <= {_TOPK}
-"""
+{_rerank_sql("c", "c.cell = p.cell")}"""
 
 
 _PAIR_PLANES = 16
@@ -251,20 +236,9 @@ def _cos_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cos_pairs_oracle_sql() -> str:
     planes = sim.hyperplanes(_PAIR_PLANES, sim.EMB_DIM)
     r = _PAIR_PLANES // _PAIR_BANDS
-    plane_lits = [
-        "([" + ", ".join(repr(float(c)) for c in plane) + "]::DOUBLE[])"
-        for plane in planes
-    ]
-
-    def band_bucket(vec: str, band: int) -> str:
-        return "(" + " + ".join(
-            "(CASE WHEN " + _dot_sql(vec, plane_lits[band * r + j]) + " > 0 "
-            f"THEN {1 << j} ELSE 0 END)"
-            for j in range(r)
-        ) + ")"
-
     bands_union = " UNION ALL ".join(
-        f"SELECT vec_id, {band} AS band, {band_bucket('embedding', band)} AS bucket "
+        f"SELECT vec_id, {band} AS band, "
+        f"{_plane_bucket_sql('embedding', planes[band * r:(band + 1) * r])} AS bucket "
         "FROM embeddings"
         for band in range(_PAIR_BANDS)
     )
@@ -297,38 +271,22 @@ def _emb_clusters_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(emb, pairs, id_col="vec_id")
 
 
-def _emb_clusters_oracle_sql() -> str:
-    return f"""
-WITH RECURSIVE
-pairs AS ({_cos_pairs_oracle_sql().strip()}),
-edges AS (
-  SELECT vec_a AS u, vec_b AS v FROM pairs
-  UNION ALL
-  SELECT vec_b AS u, vec_a AS v FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-)
-SELECT node AS vec_id, MIN(lbl) AS component FROM reach GROUP BY node
-"""
-
-
 # 4. text quality stats ------------------------------------------------------
 
 def _stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.text_stats(read_table(spark, sf_dir, "documents"))
 
 
+_N_WORDS, _STOP_RATIO, _DISTINCT_RATIO = word_features_sql("ws")
+
 _STATS_SQL = f"""
 WITH w AS (SELECT doc_id, length(text) AS n_chars, string_split(text, ' ') AS ws FROM documents)
 SELECT doc_id,
-       len(ws)::BIGINT AS n_words,
+       {_N_WORDS}::BIGINT AS n_words,
        n_chars::BIGINT AS n_chars,
-       (n_chars - (len(ws) - 1))::DOUBLE / len(ws) AS avg_word_len,
-       len(list_filter(ws, x -> list_contains({list(STOPWORDS)!r}, x)))::DOUBLE / len(ws) AS stopword_ratio,
-       len(list_distinct(ws))::DOUBLE / len(ws) AS distinct_ratio
+       (n_chars - ({_N_WORDS} - 1))::DOUBLE / {_N_WORDS} AS avg_word_len,
+       {_STOP_RATIO} AS stopword_ratio,
+       {_DISTINCT_RATIO} AS distinct_ratio
 FROM w
 """
 
@@ -342,9 +300,7 @@ def _langid_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LANGID_SQL = f"""
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 s AS (
-  SELECT doc_id,
-         len(list_filter(ws, x -> list_contains({list(STOPWORDS)!r}, x)))::DOUBLE / len(ws) AS en_score
-  FROM w
+  SELECT doc_id, {_STOP_RATIO} AS en_score FROM w
 )
 SELECT doc_id, en_score,
        CASE WHEN en_score >= 0.03 THEN 'en' ELSE 'unk' END AS lang_pred
@@ -362,20 +318,10 @@ def _fp_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FP_SQL = f"""
-WITH toks AS (
-  SELECT wp.doc_id, list(v.token ORDER BY wp.pos) AS tokens
-  FROM (
-    SELECT doc_id,
-           UNNEST(string_split(text, ' ')) AS word,
-           UNNEST(generate_series(1, len(string_split(text, ' ')))) AS pos
-    FROM documents
-  ) wp JOIN ({VOCAB_SQL}) v USING (word)
-  GROUP BY wp.doc_id
-)
 SELECT doc_id,
        list_reduce(list_prepend(0::BIGINT, tokens),
                    (acc, x) -> (acc * {text_ops.FP_BASE} + x) % {text_ops.FP_MOD}) AS fp
-FROM toks
+FROM {TOKS_SQL} toks
 """
 
 
@@ -394,15 +340,8 @@ def _topk_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = read_table(spark, sf_dir, "documents")
-    w = text_ops.words_col("text")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_words = F.size(w)
-    score = (
-        F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x))).cast("double")
-        / n_words
-        + F.size(F.array_distinct(w)).cast("double") / n_words
-    )
-    scored = docs.select("doc_id", "source", score.alias("score"))
+    _, stop_ratio, distinct_ratio = text_ops.word_features("text")
+    scored = docs.select("doc_id", "source", (stop_ratio + distinct_ratio).alias("score"))
     win = Window.partitionBy("source").orderBy(F.col("score").desc(), F.col("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(win))
@@ -414,10 +353,7 @@ def _topk_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TOPK_QUALITY_SQL = f"""
 WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
 s AS (
-  SELECT doc_id, source,
-         len(list_filter(ws, x -> list_contains({list(STOPWORDS)!r}, x)))::DOUBLE / len(ws)
-         + len(list_distinct(ws))::DOUBLE / len(ws) AS score
-  FROM w
+  SELECT doc_id, source, {_STOP_RATIO} + {_DISTINCT_RATIO} AS score FROM w
 ),
 r AS (
   SELECT source, doc_id, score,
@@ -450,7 +386,8 @@ ROWS = (
     # centroids trained from the first 512 vectors at the sf dir given)
     ("ann_ivf_bucketed", _ivf_spark, _ivf_oracle_sql),
     ("emb_cosine_pairs", _cos_pairs_spark, lambda _: _cos_pairs_oracle_sql()),
-    ("emb_dup_clusters", _emb_clusters_spark, lambda _: _emb_clusters_oracle_sql()),
+    ("emb_dup_clusters", _emb_clusters_spark,
+     lambda _: components_sql(_cos_pairs_oracle_sql(), "vec_a", "vec_b", "embeddings", "vec_id")),
     ("text_quality_stats", _stats_spark, lambda _: _STATS_SQL),
     ("text_langid", _langid_spark, lambda _: _LANGID_SQL),
     ("text_fingerprint", _fp_spark, lambda _: _FP_SQL),

@@ -30,6 +30,7 @@ from ddsketch_spark.plans.shared import (
     bloom_oracle_sql,
     cms_hh_oracle_sql,
     docs_tokens,
+    graded,
     hll_oracle_sql,
     quantile_oracle_sql,
 )
@@ -43,10 +44,7 @@ _MAX_POS = 8  # per-position queries cover token positions 1.._MAX_POS
 def _ntok_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     df = docs.withColumn("n_tok", F.size(F.split("text", " ")))
-    out = agg.quantiles(df, "n_tok", Q_GRID, OCFG, group_cols=("source",))
-    return out.select(
-        "source", "q", "bucket_key", sig6_mantissa(F.col("estimate")).alias("est_m6"), "n"
-    )
+    return graded(agg.quantiles(df, "n_tok", Q_GRID, OCFG, group_cols=("source",)), "source")
 
 
 # 2. per-position token-value distributions ----------------------------------
@@ -60,10 +58,7 @@ def _position_quantiles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.slice("tokens", 1, _MAX_POS)).alias("pos0", "token")
     )
     pos = pos.select((F.col("pos0") + 1).alias("pos"), "token")
-    out = agg.quantiles(pos, "token", Q_GRID, OCFG, group_cols=("pos",))
-    return out.select(
-        "pos", "q", "bucket_key", sig6_mantissa(F.col("estimate")).alias("est_m6"), "n"
-    )
+    return graded(agg.quantiles(pos, "token", Q_GRID, OCFG, group_cols=("pos",)), "pos")
 
 
 # 3. distinct-token HLL per source -------------------------------------------

@@ -43,13 +43,12 @@ from ddsketch_spark.plans.checkpoint import sketch_with_checkpoint
 
 
 def tokens_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derive a tokens-shaped table from testdata `documents`: words ->
-    vocabulary ids via the deterministic coding (auto-selected literal-map
-    projection or broadcast-join by vocab size; operators.text_ops)."""
-    from ddsketch_spark.operators.text_ops import tokenize
+    """Derive a tokens-shaped table from testdata `documents`: the token
+    arrays of plans.shared.docs_tokens (words -> vocabulary ids via the
+    deterministic coding), with a string doc_id and n_tok."""
+    from ddsketch_spark.plans.shared import docs_tokens
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    toked, _ = tokenize(docs)
+    toked, _ = docs_tokens(spark, sf_dir)
     return toked.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         "tokens",

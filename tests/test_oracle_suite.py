@@ -96,3 +96,23 @@ def test_query_vs_oracle(spark, sf_correct, name):
     g, w = _canon(got), _canon(want)
     mism = [i for i, (a, b) in enumerate(zip(g, w)) if a != b]
     assert not mism, f"{name}: first mismatch {g[mism[0]]} != {w[mism[0]]}"
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_shingles_sql_matches_doc_shingles(spark, sf_correct, n):
+    """The SQL shingle set every token-shingle oracle stands on equals the
+    Spark operator's, in full: every (doc_id, shingle) of n-grams over the
+    docs_tokens arrays."""
+    from ddsketch_spark.operators import dedup
+    from ddsketch_spark.plans.shared import docs_tokens, shingles_sql
+
+    toks, vsize = docs_tokens(spark, sf_correct)
+    got = sorted(
+        (r["doc_id"], r["shingle"])
+        for r in dedup.doc_shingles(toks, "tokens", n, vsize).collect()
+    )
+    want = sorted(
+        _duck(sf_correct).execute(f"SELECT doc_id, shingle FROM ({shingles_sql(n)})").fetchall()
+    )
+    assert len(got) > 0
+    assert got == want
