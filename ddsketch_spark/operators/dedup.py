@@ -160,7 +160,10 @@ def lsh_buckets(
     sharing any bucket are near-dup candidates (prob 1-(1-j^r)^b).
 
     One explode projection (NOT a union of per-band selects, which would
-    re-run the signature aggregation once per band)."""
+    re-run the signature aggregation once per band).  ``num_hashes`` must
+    divide evenly into ``bands``: a remainder would leave minhashes unread."""
+    if num_hashes % bands:
+        raise ValueError(f"num_hashes={num_hashes} must divide evenly into bands={bands}")
     r = num_hashes // bands
     bb = F.array(
         *[

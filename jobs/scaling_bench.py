@@ -1,37 +1,42 @@
 #!/usr/bin/env python
-"""Two-cluster-size scaling evidence (BASELINE.json north rule).
+"""Two-cluster-size scaling evidence (BASELINE.json north rule): strong
+and weak scaling of bench.py's two token queries, from the same rounds.
 
-No real cluster exists in this sandbox, so per the driver instruction the
-N -> 4N executor criterion is evidenced by running the identical job at two
-parallelism levels on the same input and reporting throughput at both plus
-    efficiency = throughput(4N) / (4 * throughput(N)).
+No real cluster exists in this sandbox, so the N -> 4N executor criterion
+is evidenced by running the identical job at two parallelism levels and
+reporting throughput at both.  Each round runs, for each workload,
 
-Methodology notes (both matter; see BASELINE.md §3):
+    (N CPUs, n_docs/4 docs), (N CPUs, n_docs docs), (4N CPUs, n_docs docs)
+
+and the shared 4N run gives both pairs:
+
+    strong efficiency = t(N, n_docs) / (4 * t(4N, n_docs))
+    weak efficiency   = t(N, n_docs/4) / t(4N, n_docs)   (same load per CPU)
+
+Methodology notes (see BASELINE.md §3):
 
 * Fresh session per measurement. A long-lived local session degrades run
   over run (Python-worker/JVM state accrual); a fresh `SparkSession` per
-  timed run is stable to ~10%. Each measurement runs in a subprocess.
+  timed run is stable to ~10%. Each measurement runs in a subprocess with
+  bench.py's session, query and warm-up-then-timed protocol.
 
-* The sandbox advertises 32 vCPUs but the Firecracker host grants only
-  ~8-10 cores of real CPU quota: a pure-numpy multiprocessing probe scales
-  1 -> 8 workers at ~0.93 efficiency and 8 -> 32 at only ~1.35x total. N=8
-  vs 4N=32 would therefore measure host overcommit, not the engine. The
-  default is N=2 -> 4N=8, which lies inside the machine's real capacity;
-  `--probe` prints the capacity curve used to justify this.
+* Granted cores. Each measurement's ENTIRE process tree (driver, JVM,
+  Python workers, Arrow feeder threads) is bound to its level's CPUs with
+  `taskset`, not just `local[N]` task slots: in local mode the JVM
+  parquet-scan/Arrow-feeder threads are not bounded by local[N], so an
+  unbound local[2] Arrow-UDAF job really uses ~3 host cores.  CPU affinity
+  is inherited by every child, so N granted cores vs 4N granted cores is
+  the sandbox analog of N vs 4N executor containers.  A level larger than
+  the CPUs this process may use is refused: taskset would accept it and
+  the run would measure overcommit.
 
-* `--affinity` (r4, VERDICT r3 item 7): bind each measurement's ENTIRE
-  process tree (driver, JVM, Python workers, Arrow feeder threads) to N
-  physical CPUs via `taskset`, not just `local[N]` task slots. In local
-  mode the JVM parquet-scan/Arrow-feeder threads are NOT bounded by
-  local[N], so a local[2] Arrow-UDAF job really uses ~3 host cores --
-  inflating the small-N baseline and deflating measured efficiency (the
-  structural caveat in BASELINE.md §3). CPU affinity is inherited by every
-  child, so N granted cores vs 4N granted cores is the faithful sandbox
-  analog of N vs 4N executor containers (which are cgroup-bounded on a
-  real cluster).
+* Interleaved rounds. Steal bursts on this microVM last minutes, so the
+  levels alternate within each round and both sample the same steal
+  regime; per-round pairs are reported beside the best-of-runs
+  efficiencies, with each round's host steal (/proc/stat).
 
 Run:  python jobs/scaling_bench.py [--n-docs 300000] [--n 2] [--runs 3]
-      [--probe] [--affinity] [--wait-quiet]
+      [--probe] [--wait-quiet]
 """
 
 from __future__ import annotations
@@ -47,7 +52,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-WORKLOADS = ("udaf_tokens", "native_tokens")
+import bench  # noqa: E402
+
+WORKLOADS = tuple(bench.TOKEN_QUERIES)
 
 
 def _spin(_):
@@ -76,69 +83,40 @@ def probe_capacity(points=(1, 2, 8, 32)) -> dict:
     return out
 
 
-def measure_once(cpus: int, tokens_path: str, workload: str) -> float:
-    """One timed run in THIS process (invoked as a subprocess)."""
-    from pyspark.sql import SparkSession
-
+def measure_once(cpus: int, tokens_path: str, workload: str) -> list[float]:
+    """Three timed runs after one warm-up, in THIS process (invoked as a
+    subprocess).  The table is re-scanned each run, not ``.cache()``d:
+    reading wide token-array rows back out of the block-manager cache
+    measured 41-212s at local[8] where the vectorized parquet re-scan
+    takes 7.7s, and executors at scale re-scan columnar storage too."""
     from ddsketch_spark.config import DDSketchConfig
-    from ddsketch_spark.operators import ddsketch_agg as agg
-    from ddsketch_spark.operators import sketch_agg as udaf
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"scaling-{workload}-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    cfg = DDSketchConfig()
-    # hot-data protocol: warm the OS page cache with one scan, but do NOT
-    # .cache() the DataFrame. Block-manager caching of wide token-array rows
-    # is actively pathological at this size: reading 600k deserialized
-    # array rows back out of the cache measured 41-212s at local[8] where
-    # the vectorized parquet re-scan takes 7.7s (r2 measurement) -- the
-    # columnar scan + codegen explode is the fast path, the object cache is
-    # GC churn. (This also mirrors the 100 TB reality: executors re-scan
-    # columnar storage; nobody caches the raw fact table.)
-    tokens = spark.read.parquet(tokens_path).select("source", "tokens")
-    tokens.count()
-
-    def once():
-        if workload == "udaf_tokens":
-            udaf.sketch_udaf(tokens, "tokens", cfg, array_col=True).collect()
-        else:
-            agg.sketch(
-                tokens, "tokens", cfg, group_cols=("source",), explode_array=True
-            ).collect()
-
-    once()  # warm-up: JIT/codegen/worker spawn excluded from timings
-    secs = []
-    for _ in range(3):
-        t0 = time.monotonic()
-        once()
-        secs.append(round(time.monotonic() - t0, 3))
+    spark = bench.session(cpus, split_size="8m")
+    tokens = spark.read.parquet(tokens_path)
+    query = bench.TOKEN_QUERIES[workload]
+    _, secs = bench.warm_then_timed(lambda: query(tokens, DDSketchConfig()).collect(), 3)
     spark.stop()
     return secs
 
 
-def steal_pct(window: float = 8.0) -> float:
-    """Host-steal percentage over ``window`` seconds (col 8 of /proc/stat's
-    cpu line). Firecracker steal storms inflate identical runs 3-10x, so
-    measurements taken above ~2% steal are untrustworthy."""
-    def snap():
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        return sum(vals), vals[7]  # total jiffies, steal jiffies
+def _cpu_ticks() -> tuple[int, int]:
+    """(total, steal) jiffies of /proc/stat's cpu line."""
+    with open("/proc/stat") as f:
+        vals = [int(x) for x in f.readline().split()[1:]]
+    return sum(vals), vals[7]
 
-    t0, s0 = snap()
+
+def _steal_between(start: tuple[int, int], end: tuple[int, int]) -> float:
+    return 100.0 * (end[1] - start[1]) / max(end[0] - start[0], 1)
+
+
+def steal_pct(window: float = 8.0) -> float:
+    """Host-steal percentage over ``window`` seconds. Firecracker steal
+    storms inflate identical runs 3-10x, so measurements taken above ~2%
+    steal are untrustworthy."""
+    t0 = _cpu_ticks()
     time.sleep(window)
-    t1, s1 = snap()
-    return 100.0 * (s1 - s0) / max(t1 - t0, 1)
+    return _steal_between(t0, _cpu_ticks())
 
 
 def wait_quiet(threshold: float = 2.0, max_wait: float = 1800.0) -> float:
@@ -154,55 +132,48 @@ def wait_quiet(threshold: float = 2.0, max_wait: float = 1800.0) -> float:
         time.sleep(22.0)
 
 
-def _one_subprocess(
-    cpus: int, tokens_path: str, workload: str, affinity: bool = False
-) -> list[float]:
-    cmd = [sys.executable, os.path.abspath(__file__), "--single",
-           "--cpus", str(cpus), "--tokens-path", tokens_path, "--workload", workload]
-    if affinity:
-        # bind the whole tree (JVM + python workers inherit it) to `cpus`
-        # physical CPUs -- the executor-container analog
-        cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
-    r = subprocess.run(
-        cmd, capture_output=True, text=True, cwd=REPO, timeout=1800,
-    )
-    line = r.stdout.strip().splitlines()[-1]
-    return json.loads(line)["secs"]
+def _one_subprocess(cpus: int, tokens_path: str, workload: str) -> list[float]:
+    """One measurement in a fresh process tree bound to the first ``cpus``
+    CPUs this process may use."""
+    granted = ",".join(map(str, sorted(os.sched_getaffinity(0))[:cpus]))
+    cmd = ["taskset", "-c", granted, sys.executable, os.path.abspath(__file__),
+           "--single", "--cpus", str(cpus), "--tokens-path", tokens_path,
+           "--workload", workload]
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=1800)
+    if r.returncode:
+        tail = "\n".join(r.stderr.splitlines()[-20:])
+        raise RuntimeError(f"{workload} at local[{cpus}] exited {r.returncode}:\n{tail}")
+    return json.loads(r.stdout.strip().splitlines()[-1])["secs"]
 
 
-def run_interleaved(
-    n: int, tokens_path: str, runs: int, affinity: bool = False
-) -> tuple[dict, dict]:
-    """Measure the two levels INTERLEAVED (lo, hi, lo, hi, ...) so both
-    sample the same host-steal regime: the microVM's multi-x steal bursts
-    last minutes, so batching all lo runs then all hi runs can hand one
-    level a quiet window and the other a stormy one, skewing the
-    efficiency ratio either way. Per-round pairs of adjacent runs give
-    burst-robust pairwise efficiencies."""
-    secs: dict = {n: {w: [] for w in WORKLOADS}, 4 * n: {w: [] for w in WORKLOADS}}
-    pair_eff: dict = {w: [] for w in WORKLOADS}
+def run_rounds(levels: tuple, paths: dict, runs: int) -> tuple[dict, list[dict], list[float]]:
+    """``runs`` rounds over every (cpus, n_docs) level and workload,
+    interleaved (lo, hi, lo, hi, ...) so all levels sample the same
+    host-steal regime.  Returns every timed run per (cpus, n_docs,
+    workload), each round's best per key, and each round's host steal
+    percentage."""
+    secs: dict = {(c, d, w): [] for c, d in levels for w in WORKLOADS}
+    round_best: list[dict] = []
+    steal: list[float] = []
     for _ in range(runs):
-        round_best: dict = {}
-        for cpus in (n, 4 * n):
+        start, best = _cpu_ticks(), {}
+        for c, d in levels:
             for w in WORKLOADS:
-                s = _one_subprocess(cpus, tokens_path, w, affinity=affinity)
-                secs[cpus][w].extend(s)
-                round_best[(cpus, w)] = min(s)
-        for w in WORKLOADS:
-            pair_eff[w].append(
-                round(round_best[(n, w)] / (4 * round_best[(4 * n, w)]), 3)
-            )
-    return secs, pair_eff
+                s = _one_subprocess(c, paths[d], w)
+                secs[c, d, w].extend(s)
+                best[c, d, w] = min(s)
+        steal.append(round(_steal_between(start, _cpu_ticks()), 2))
+        round_best.append(best)
+    return secs, round_best, steal
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--n-docs", type=int, default=300_000)
+    ap.add_argument("--n-docs", type=int, default=300_000,
+                    help="docs at the strong pair and at 4N; N also runs n_docs/4")
     ap.add_argument("--n", type=int, default=2, help="N; 4N is run too")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--probe", action="store_true")
-    ap.add_argument("--affinity", action="store_true",
-                    help="bind each measurement's whole process tree to N/4N CPUs")
     ap.add_argument("--wait-quiet", action="store_true",
                     help="block until host steal < 2%% before measuring")
     ap.add_argument("--single", action="store_true", help="internal: one measurement")
@@ -216,54 +187,65 @@ def main() -> None:
         print(json.dumps({"secs": secs}))
         return
 
-    from ddsketch_spark.sources.fixtures import generate_tokens_table
+    n, granted = args.n, len(os.sched_getaffinity(0))
+    if 4 * n > granted:
+        ap.error(f"--n {n} needs 4N = {4 * n} CPUs, but this process may use {granted}")
 
-    tokens_path = generate_tokens_table(args.n_docs)
     import pyarrow.parquet as pq
 
-    total_tokens = int(
-        pq.read_table(tokens_path, columns=["n_tok"])["n_tok"].to_numpy().sum()
-    )
+    from ddsketch_spark.sources.fixtures import generate_tokens_table
 
-    result: dict = {
-        "n": args.n, "n_docs": args.n_docs, "total_tokens": total_tokens,
-        "affinity": bool(args.affinity),
+    quarter, full = args.n_docs // 4, args.n_docs
+    paths = {d: generate_tokens_table(d) for d in (quarter, full)}
+    tokens = {
+        d: int(pq.read_table(p, columns=["n_tok"])["n_tok"].to_numpy().sum())
+        for d, p in paths.items()
     }
+    levels = ((n, quarter), (n, full), (4 * n, full))
+
+    result: dict = {"n": n, "n_docs": full, "total_tokens": tokens[full]}
     if args.wait_quiet:
         result["steal_pct_at_start"] = round(wait_quiet(), 2)
     if args.probe:
         result["cpu_capacity_probe_iters_per_sec"] = probe_capacity()
-    secs, pair_eff = run_interleaved(
-        args.n, tokens_path, args.runs, affinity=args.affinity
-    )
+    secs, round_best, steal = run_rounds(levels, paths, args.runs)
+    result["round_steal_pct"] = steal
     result["levels"] = [
         {
-            "cpus": cpus,
+            "cpus": c, "n_docs": d, "tokens": tokens[d],
             **{
                 w: {
-                    "runs_sec": [round(s, 3) for s in secs[cpus][w]],
-                    "median_sec": round(statistics.median(secs[cpus][w]), 3),
-                    "best_sec": round(min(secs[cpus][w]), 3),
+                    "runs_sec": [round(s, 3) for s in secs[c, d, w]],
+                    "median_sec": round(statistics.median(secs[c, d, w]), 3),
+                    "best_sec": round(min(secs[c, d, w]), 3),
                 }
                 for w in WORKLOADS
             },
         }
-        for cpus in (args.n, 4 * args.n)
+        for c, d in levels
     ]
+    best = {k: min(v) for k, v in secs.items()}
     result["summary"] = {}
     for w in WORKLOADS:
-        tp_lo = total_tokens / min(secs[args.n][w])
-        tp_hi = total_tokens / min(secs[4 * args.n][w])
-        result["summary"][w] = {
-            f"tokens_per_sec@local[{args.n}]": int(tp_lo),
-            f"tokens_per_sec@local[{4 * args.n}]": int(tp_hi),
-            "efficiency": round(tp_hi / (4 * tp_lo), 3),
-            # per-round adjacent pairs: robust to steal bursts that span a
-            # whole batched level
-            "pairwise_efficiencies": pair_eff[w],
-            "best_pair_efficiency": max(pair_eff[w]),
-            "median_pair_efficiency": round(statistics.median(pair_eff[w]), 3),
+        lo_q, lo, hi = ((c, d, w) for c, d in levels)
+        summary: dict = {
+            f"tokens_per_sec@local[{n}]": int(tokens[full] / best[lo]),
+            f"tokens_per_sec@local[{4 * n}]": int(tokens[full] / best[hi]),
         }
+        for kind, eff in (
+            ("strong", lambda t: t[lo] / (4 * t[hi])),
+            ("weak", lambda t: t[lo_q] / t[hi]),
+        ):
+            # best-of-runs efficiency, and per-round adjacent pairs: robust
+            # to steal bursts that span a whole level
+            pairs = [round(eff(b), 3) for b in round_best]
+            summary[kind] = {
+                "efficiency": round(eff(best), 3),
+                "pairs": pairs,
+                "best_pair": max(pairs),
+                "median_pair": round(statistics.median(pairs), 3),
+            }
+        result["summary"][w] = summary
     print(json.dumps(result))
 
 

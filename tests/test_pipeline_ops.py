@@ -327,6 +327,16 @@ def test_lsh_band_buckets_divisibility_raises(spark):
         sim.lsh_cosine_pairs(emb, 0.5, n_planes=15, bands=4)
 
 
+def test_minhash_lsh_buckets_divisibility_raises(spark):
+    """16 hashes in 5 bands of 3 would never read m15: refuse it, as the
+    embedding banding does."""
+    sig = spark.createDataFrame([("d", *range(16))], ", ".join(
+        ["doc_id string"] + [f"m{j} long" for j in range(16)]))
+    with pytest.raises(ValueError, match="divide evenly"):
+        dd.lsh_buckets(sig, num_hashes=16, bands=5)
+    assert dd.lsh_buckets(sig, num_hashes=16, bands=4).count() == 4
+
+
 def test_lsh_dim_mismatch_raises(spark):
     """A vector whose length differs from the configured dim fails LOUDLY at
     execution (ADVICE r2: zip_with null-padding used to send every vector to
